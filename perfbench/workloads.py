@@ -192,10 +192,10 @@ def _sort_key(row: tuple) -> tuple:
 
 def feature_batch(ctx: Ctx) -> Result:
     """Passes over five registry feature queries on generated ``events``
-    and ``embeddings`` tables. A pass writes the latest-per-key feature
-    table (the write) and drains the four other queries (the read): three
-    event features and the SQ8 nearest-neighbour feature, which runs
-    ``sq8_bounds`` on every call."""
+    and ``embeddings`` tables. A pass drains four queries (the read):
+    three event features and the SQ8 nearest-neighbour feature, which runs
+    ``sq8_bounds`` on every call; after every two of them it rewrites the
+    latest-per-key serving table (the write)."""
     from ralf_spark.operators.util import unpersist_cached
     from ralf_spark.queries import QUERIES
     from ralf_spark.store import FeatureStore
@@ -239,10 +239,14 @@ def feature_batch(ctx: Ctx) -> Result:
         _drain(df)
         unpersist_cached(df)
 
-    ops = [(FEATURE_WRITE, write_features, "write", sz["events"])] + [
-        (name, lambda name=name: drain(name), None,
-         sz["vectors"] if name == "sq8_adc_topk" else sz["events"])
-        for name in FEATURE_READS]
+    write = (FEATURE_WRITE, write_features, "write", sz["events"])
+    reads = [(name, lambda name=name: drain(name), None,
+              sz["vectors"] if name == "sq8_adc_topk" else sz["events"])
+             for name in FEATURE_READS]
+    # the serving table is refreshed after every two feature queries: with
+    # one refresh per ~4 s pass a run held three write samples, and their
+    # median spread by ~30% between runs
+    ops = [write, *reads[:2], write, *reads[2:]]
     per_query: dict[str, list[float]] = {}
     win = Window(ctx, 0.0)  # the checked first pass above warmed every query
     i = 0
@@ -269,7 +273,7 @@ def feature_batch(ctx: Ctx) -> Result:
               f"written {FEATURE_WRITE} table vs its oracle")
     con.close()
 
-    res.detail["batch_pass_s"] = (_median(res.writes_s) + res.reads_s[0], "s")
+    res.detail["batch_pass_s"] = (2 * _median(res.writes_s) + res.reads_s[0], "s")
     res.detail["queries_run"] = (sum(map(len, per_query.values())), "count")
     for name, xs in per_query.items():
         res.layer[f"query.{name}_s"] = _median(xs)
