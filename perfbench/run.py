@@ -2,12 +2,13 @@
 
     python3 perfbench/run.py --workload <name> --seed <n> --seconds <s> --trace <0|1>
 
-Starts one local Spark session (``local[<cpus> - 1]``), runs one workload as
-a closed loop, unrecorded for ``WARMUP_S`` and then measured for
-``--seconds``, and prints, as the last line of standard
-output, one JSON object with the keys ``correct``, ``attempted``,
-``failed`` and ``metrics``. The line before it holds the workload's
-named figures (``detail``, with the end-to-end metrics as ``e2e.*``).
+Starts one local Spark session (``local[<cpus> / 2]``, confined to those
+CPUs), runs one workload as a closed loop, unrecorded for its warm-up
+rounds and then measured for ``--seconds``, and prints, as the last line
+of standard output, one JSON object with the keys ``correct``,
+``attempted``, ``failed`` and ``metrics``. The line before it holds the
+workload's named figures (``detail``, with the end-to-end metrics as
+``e2e.*``).
 With ``--trace 0`` the metrics are the end-to-end metrics of
 ``BENCHMARK.json``; with ``--trace 1`` they are the per-layer metrics,
 and the spans are written to ``.perfbench/trace-<workload>-<seed>.json``.
@@ -31,9 +32,6 @@ import tempfile
 
 HERE = os.path.dirname(os.path.abspath(__file__))
 BENCHMARK_JSON = os.path.join(HERE, "..", "BENCHMARK.json")
-#: unrecorded seconds of the workload's own ops before the measured
-#: window (see the workloads module doc)
-WARMUP_S = 6.0
 
 
 def _parse(argv):
@@ -78,11 +76,14 @@ def start_spark(work: str):
     os.environ["TMPDIR"] = tmp
     tempfile.tempdir = None
     os.environ["SPARK_LOCAL_DIRS"] = local
-    # one CPU is left to the driver: with every CPU running tasks, the
-    # Python client, the driver JVM and its JIT/GC threads contend and
-    # run medians spread wider (and are slower) than with one CPU fewer
-    os.environ.setdefault(
-        "SPARK_GRAFT_CPUS", str(max(1, len(os.sched_getaffinity(0)) - 1)))
+    # the run (this process and the JVM it starts) is confined to half the
+    # CPUs: on a 4-CPU host shared with other tenants, a stage that waits
+    # for its slowest task made runs on three task threads spread by ~35%
+    # between runs, where runs on two CPUs spread by ~6-7%
+    cpus = sorted(os.sched_getaffinity(0))
+    cpus = cpus[:max(1, len(cpus) // 2)]
+    os.sched_setaffinity(0, cpus)
+    os.environ.setdefault("SPARK_GRAFT_CPUS", str(len(cpus)))
     from ralf_spark.session import get_spark
 
     spark = get_spark(
@@ -96,6 +97,12 @@ def start_spark(work: str):
             # varies between runs, and peak RSS with it by ~20%
             "spark.driver.extraJavaOptions": f"-Djava.io.tmpdir={tmp} -Xms2g",
             "spark.driver.memory": "2g",
+            # the status store keeps fewer finished jobs than the default
+            # 1000, so its size, and the heap with it, stops growing early
+            # in a run; the tracer reads an op's jobs right after the op
+            "spark.ui.retainedJobs": "200",
+            "spark.ui.retainedStages": "400",
+            "spark.sql.ui.retainedExecutions": "100",
         },
     )
     spark.sparkContext.setLogLevel("ERROR")
@@ -124,15 +131,11 @@ def stop_spark(spark) -> None:
             proc.wait()
 
 
-def end_to_end(res, tracer, pids) -> dict:
-    timed = [o for o in tracer.ops if o.measured]
-    wall = sum(o.wall_s for o in timed)
-    med = statistics.median
+def end_to_end(res, pids) -> dict:
     return {
-        "setup_s": (med(res.setup_s), "s"),
-        "read_p50_ms": (med(res.reads_s) * 1e3 if res.reads_s else 0.0, "ms"),
-        "write_p50_ms": (med(res.writes_s) * 1e3 if res.writes_s else 0.0, "ms"),
-        "rows_per_s": (res.rows / wall if wall else 0.0, "rows/s"),
+        "setup_s": (statistics.median(res.setup_s), "s"),
+        "read_ms": (res.read_s * 1e3, "ms"),
+        "write_ms": (res.write_s * 1e3, "ms"),
         "peak_rss_mb": (_peak_rss_mb(pids), "MB"),
     }
 
@@ -199,8 +202,8 @@ def per_layer(res, tracer, bench: dict) -> dict:
     return {name: (float(m.get(name, 0.0)), unit) for name, unit in units.items()}
 
 
-def run_workload(spark, name: str, seed: int, seconds: float, warmup: float,
-                 scale: str, trace: bool, work: str):
+def run_workload(spark, name: str, seed: int, seconds: float, scale: str,
+                 trace: bool, work: str):
     """Run one workload; returns its ``Result`` and the ``Tracer``."""
     import workloads
     from spans import Tracer
@@ -208,7 +211,7 @@ def run_workload(spark, name: str, seed: int, seconds: float, warmup: float,
     tracer = Tracer(spark, trace)
     tracer.install()
     try:
-        ctx = workloads.Ctx(spark, tracer, work, seed, seconds, warmup,
+        ctx = workloads.Ctx(spark, tracer, work, seed, seconds,
                             workloads.SIZES[scale])
         return workloads.WORKLOADS[name](ctx), tracer
     finally:
@@ -243,8 +246,8 @@ def main(argv=None) -> int:
         pids = [os.getpid(), jvm_pid()]
 
         res, tracer = run_workload(spark, args.workload, args.seed, args.seconds,
-                                   WARMUP_S, "full", bool(args.trace), work)
-        e2e = end_to_end(res, tracer, pids)
+                                   "full", bool(args.trace), work)
+        e2e = end_to_end(res, pids)
         res.detail.update({f"e2e.{k}": v for k, v in e2e.items()})
         if args.trace:
             metrics = per_layer(res, tracer, bench)

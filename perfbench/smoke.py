@@ -37,12 +37,12 @@ def main() -> int:
             for trace in (False, True):
                 name = w["name"]
                 res, tracer = run.run_workload(
-                    spark, name, 1, 3, 0, "tiny", trace,
+                    spark, name, 1, 3, "tiny", trace,
                     os.path.join(work, f"{name}-{int(trace)}"))
                 if trace:
                     metrics, kind = run.per_layer(res, tracer, bench), "per_layer"
                 else:
-                    metrics, kind = run.end_to_end(res, tracer, pids), "end_to_end"
+                    metrics, kind = run.end_to_end(res, pids), "end_to_end"
                 good = (
                     res.attempted > 0 and res.failed == 0
                     and set(metrics) == {m["name"] for m in bench[kind]}

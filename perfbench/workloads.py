@@ -1,16 +1,17 @@
 """The workloads. Each is a closed loop driven by one client thread.
 
 A workload function takes a :class:`Ctx` and returns a :class:`Result`:
-the set-up times, the latency of every measured read and write, the input
-rows handed to the engine, per-layer figures, and the count of ops
-attempted and failed (an op fails when it raises or its output differs
-from the expected output; outputs are checked outside the timed calls).
+the set-up times, the latency of every measured op, the workload's read
+and write figures, per-layer figures, and the count of ops attempted and
+failed (an op fails when it raises or its output differs from the
+expected output; outputs are checked outside the timed calls).
 
-The state and dedup loops first run ``Ctx.warmup`` seconds of their own
-ops unrecorded, and the feature loop starts after a checked pass over
-every query: a fresh JVM keeps getting faster for about 20 s (point reads
-go from ~220 ms to ~125 ms on a 4-CPU host), and timing that slope made
-run medians spread by 20-30% between runs.
+Each loop first runs its warm-up rounds unrecorded, then records every
+op that starts in the next ``Ctx.seconds``. The warm-up is counted in
+rounds, not seconds: a fresh JVM keeps getting faster as it compiles the
+ops' code paths, and a fixed amount of work puts every run at the same
+point of that curve whatever the host's speed, where a fixed time let a
+slow host start measuring earlier on it.
 """
 
 from __future__ import annotations
@@ -33,27 +34,26 @@ SETUPS = 3
 SIZES = {
     "full": {
         "events": 60_000, "users": 6_000, "zipf": 0.8, "vectors": 2_000,
+        "base_docs": 300, "doc_batch": 60, "dup_share": 0.3,
+        "auto_maintain": 1, "batch_warmup_rounds": 1,
         "state_keys": 100_000, "state_events": 200_000, "upsert_rows": 5_000,
-        "reads_per_round": 12, "read_zipf": 1.1,
-        "base_docs": 800, "doc_batch": 120, "dup_share": 0.3,
-        "auto_maintain": 2,
+        "reads_per_round": 6, "read_zipf": 1.1, "state_warmup_rounds": 1,
     },
     "tiny": {
         "events": 3_000, "users": 300, "zipf": 0.8, "vectors": 200,
-        "state_keys": 500, "state_events": 1_000, "upsert_rows": 100,
-        "reads_per_round": 4, "read_zipf": 1.1,
         "base_docs": 100, "doc_batch": 30, "dup_share": 0.3,
-        "auto_maintain": 2,
+        "auto_maintain": 1, "batch_warmup_rounds": 1,
+        "state_keys": 500, "state_events": 1_000, "upsert_rows": 100,
+        "reads_per_round": 4, "read_zipf": 1.1, "state_warmup_rounds": 1,
     },
 }
 
 FEATURE_WRITE = "latest_per_key"
 #: salted_sliding_window is left out: ~2.5 s of per-call job overhead at
-#: any skew made it half of every pass, so a run held one sample of it
-FEATURE_READS = (
-    "tumbling_count_window", "per_key_avg", "feature_pipeline_end2end",
-    "sq8_adc_topk",
-)
+#: any skew made it the largest share of every pass, with one sample of
+#: it per run; per_key_avg (one aggregation, like the latest_per_key
+#: rewrite) too, to fit more rounds in a run
+FEATURE_READS = ("feature_pipeline_end2end", "tumbling_count_window", "sq8_adc_topk")
 
 
 @dataclass
@@ -63,7 +63,6 @@ class Ctx:
     work: str  # private scratch directory inside the checkout
     seed: int
     seconds: float  # measured window
-    warmup: float  # unrecorded ops before it
     size: dict
 
     def dir(self, name: str) -> str:
@@ -75,9 +74,9 @@ class Ctx:
 @dataclass
 class Result:
     setup_s: list[float] = field(default_factory=list)
-    reads_s: list[float] = field(default_factory=list)
-    writes_s: list[float] = field(default_factory=list)
-    rows: int = 0  # input rows handed to the measured ops
+    op_s: dict = field(default_factory=dict)  # op name -> measured latencies
+    read_s: float = 0.0  # the workload's read figure
+    write_s: float = 0.0  # the workload's write figure
     attempted: int = 0
     failed: int = 0
     detail: dict = field(default_factory=dict)  # named end-to-end figures
@@ -89,27 +88,49 @@ class Result:
             self.failed += 1
             log(f"FAILED check: {what}")
 
+    def median(self, op: str) -> float:
+        return _median(self.op_s.get(op, []))
+
+    def figures(self, reads: list[str], writes: list[str]) -> None:
+        """The read and write figures: the sums of the medians of the
+        named ops."""
+        self.read_s = sum(self.median(n) for n in reads)
+        self.write_s = sum(self.median(n) for n in writes)
+
 
 def log(msg: str) -> None:
     print(f"perfbench {time.strftime('%H:%M:%S')} {msg}", file=sys.stderr, flush=True)
 
 
 class Window:
-    """The loop's clock: ops run until warm-up plus measured window have
-    passed; an op is recorded when it starts inside the measured window."""
+    """The loop's clock. The loop calls :meth:`round` at the start of
+    every round; the first ``warmup_rounds`` are the warm-up, and an op is
+    recorded when it starts in the ``ctx.seconds`` after them. The first
+    measured round always runs to its end, so every op of a round has a
+    sample even when a round outlasts the window."""
 
-    def __init__(self, ctx: Ctx, warmup: float):
+    def __init__(self, ctx: Ctx, warmup_rounds: int):
         self.ctx = ctx
-        self.measure_from = time.perf_counter() + warmup
-        self.end = self.measure_from + ctx.seconds
+        self.warmup_rounds = warmup_rounds
+        self.rounds = 0
+        self.measuring = False
+        self.end = None
+
+    def round(self) -> None:
+        if self.rounds == self.warmup_rounds:
+            log("warm-up done")
+            self.measuring = True
+            self.end = time.perf_counter() + self.ctx.seconds
+        self.rounds += 1
 
     def open(self) -> bool:
-        return time.perf_counter() < self.end
+        return (self.end is None or time.perf_counter() < self.end
+                or self.rounds == self.warmup_rounds + 1)
 
-    def op(self, res: Result, name: str, fn, kind: str | None = None, rows: int = 0):
+    def op(self, res: Result, name: str, fn):
         """Run ``fn`` as one op; returns ``(seconds, value, measured)``, or
         ``(None, None, measured)`` when it raised (counted as failed)."""
-        measured = time.perf_counter() >= self.measure_from
+        measured = self.measuring
         t0 = time.perf_counter()
         try:
             with self.ctx.tracer.op(name, measured=measured):
@@ -122,11 +143,7 @@ class Window:
             return None, None, measured
         t = time.perf_counter() - t0
         if measured:
-            if kind == "read":
-                res.reads_s.append(t)
-            elif kind == "write":
-                res.writes_s.append(t)
-            res.rows += rows
+            res.op_s.setdefault(name, []).append(t)
         return t, out, measured
 
 
@@ -187,15 +204,27 @@ def _sort_key(row: tuple) -> tuple:
 
 
 # =================================================================
-# feature_batch: the offline training-set build
+# batch_build: the offline training-set build
 # =================================================================
 
-def feature_batch(ctx: Ctx) -> Result:
-    """Passes over five registry feature queries on generated ``events``
-    and ``embeddings`` tables. A pass drains four queries (the read):
-    three event features and the SQ8 nearest-neighbour feature, which runs
-    ``sq8_bounds`` on every call; after every two of them it rewrites the
-    latest-per-key serving table (the write)."""
+def batch_build(ctx: Ctx) -> Result:
+    """The offline training-set build, as rounds over two inputs. Four
+    registry feature queries run on generated ``events`` and
+    ``embeddings`` tables: three are drained (two event features and the
+    SQ8 nearest-neighbour feature, which runs ``sq8_bounds`` on every
+    call) and ``latest_per_key`` is rewritten as the serving table. Each
+    round also filters two arriving document batches against a persistent
+    ``MinHashIndex`` built on a base corpus: one is added (``auto_maintain``
+    compacts the index before every add after the first), the other only
+    checked. The warm-up round collects the queries instead of draining
+    them and checks each against its DuckDB oracle.
+
+    The read figure is the sum of the medians of the four read ops (three
+    queries and ``check``), the write figure that of the two write ops
+    (the rewrite and ``add``): per-op medians, so a round cut by the
+    window's end still counts, and a mix of ops with seconds between them
+    cannot put a median between two of them."""
+    from ralf_spark.operators.dedup import MinHashIndex, incremental_minhash_oracle_sql
     from ralf_spark.operators.util import unpersist_cached
     from ralf_spark.queries import QUERIES
     from ralf_spark.store import FeatureStore
@@ -203,80 +232,160 @@ def feature_batch(ctx: Ctx) -> Result:
     sz, spark, res = ctx.size, ctx.spark, Result()
     events = gen.events_table(ctx.seed, sz["events"], sz["users"], sz["zipf"])
     vectors = gen.embeddings_table(ctx.seed, sz["vectors"])
+    docs = gen.DocumentSource(ctx.seed)
+    base = docs.batch(sz["base_docs"], 0.0)
     store = FeatureStore(spark)
+    builds = []
     for i in range(SETUPS):
-        data = ctx.dir(f"events{i}")
+        data = ctx.dir(f"data{i}")
         t0 = time.perf_counter()
         gen.write(events, f"{data}/events.parquet")
         gen.write(vectors, f"{data}/embeddings.parquet")
+        gen.write(base, f"{data}/documents.parquet")
         ev = store.read_parquet(f"{data}/events.parquet", key="user_id",
                                 ts="ts", seq="event_id")
         store.register("events", ev)
         res.check(ev.count() == sz["events"], "events row count")
+        idx = MinHashIndex(f"{data}/index", hash_fn="md5",
+                           auto_maintain=sz["auto_maintain"])
+        t1 = time.perf_counter()
+        with ctx.tracer.op("dedup.build"):
+            idx.build(store.read_parquet(f"{data}/documents.parquet", key="doc_id"))
+        builds.append(time.perf_counter() - t1)
         res.setup_s.append(time.perf_counter() - t0)
+    corpus = ctx.dir("corpus")
+    gen.write(base, f"{corpus}/base.parquet")
+    log("set-up done")
 
-    # first pass, checked against each query's DuckDB oracle
     con = duckdb.connect()
     for table in ("events", "embeddings"):
         con.execute(f"CREATE VIEW {table} AS SELECT * FROM '{data}/{table}.parquet'")
-    for name in (FEATURE_WRITE, *FEATURE_READS):
+    out = ctx.dir("features") + "/latest"
+    win = Window(ctx, sz["batch_warmup_rounds"])
+
+    def query(name: str) -> None:
+        """Drain the query; in the warm-up, collect it instead and check
+        the rows against the query's DuckDB oracle."""
         q = QUERIES[name]
-        df = q.fn(spark, data)
-        rows = [tuple(r) for r in df.collect()]
-        unpersist_cached(df)
+
+        def drain():
+            df = q.fn(spark, data)
+            _drain(df)
+            unpersist_cached(df)
+
+        def collect():
+            df = q.fn(spark, data)
+            rows = [tuple(r) for r in df.collect()]
+            unpersist_cached(df)
+            return df.columns, rows
+
+        t, got_rows, _ = win.op(res, f"query.{name}",
+                                drain if win.measuring else collect)
+        if t is None:
+            return
+        if got_rows is None:
+            res.check(True, name)
+            return
         rel = con.execute(q.oracle)
         ocols = [d[0] for d in rel.description]
-        res.check(same_rows(df.columns, rows, ocols, rel.fetchall()),
-                  f"{name} vs its oracle")
+        res.check(same_rows(*got_rows, ocols, rel.fetchall()), f"{name} vs its oracle")
 
-    out = ctx.dir("features") + "/latest"
+    def rewrite() -> None:
+        def write():
+            QUERIES[FEATURE_WRITE].fn(spark, data).write.mode("overwrite").parquet(out)
 
-    def write_features():
-        QUERIES[FEATURE_WRITE].fn(spark, data).write.mode("overwrite").parquet(out)
+        if win.op(res, f"query.{FEATURE_WRITE}", write)[0] is not None:
+            res.check(True, FEATURE_WRITE)
 
-    def drain(name):
-        df = QUERIES[name].fn(spark, data)
-        _drain(df)
-        unpersist_cached(df)
+    added_at = dict.fromkeys(range(sz["base_docs"]), -1)
+    checked_at: dict[int, int] = {}
+    got: dict[int, dict] = {}  # dedup step -> pairs that op returned
+    kind_at: dict[int, str] = {}  # dedup step -> "add" or "check"
+    pairs_per_add = []
 
-    write = (FEATURE_WRITE, write_features, "write", sz["events"])
-    reads = [(name, lambda name=name: drain(name), None,
-              sz["vectors"] if name == "sq8_adc_topk" else sz["events"])
-             for name in FEATURE_READS]
-    # the serving table is refreshed after every two feature queries: with
-    # one refresh per ~4 s pass a run held three write samples, and their
-    # median spread by ~30% between runs
-    ops = [write, *reads[:2], write, *reads[2:]]
-    per_query: dict[str, list[float]] = {}
-    win = Window(ctx, 0.0)  # the checked first pass above warmed every query
-    i = 0
-    while win.open():
-        name, fn, kind, rows = ops[i % len(ops)]
-        i += 1
-        t, _, measured = win.op(res, f"query.{name}", fn, kind, rows)
+    def dedup(kind: str) -> None:
+        step = len(kind_at) + 1
+        kind_at[step] = kind
+        batch = docs.batch(sz["doc_batch"], sz["dup_share"])
+        path = f"{corpus}/b{step}.parquet"
+        gen.write(batch, path)
+        ids = batch.column("doc_id").to_pylist()
+        tbl = store.read_parquet(path, key="doc_id")
+        call = idx.add if kind == "add" else idx.check
+        t, rows, measured = win.op(res, f"dedup.{kind}", lambda: call(tbl).collect())
         if t is None:
-            continue
-        res.check(True, name)
-        if measured:
-            per_query.setdefault(name, []).append(t)
-    # a pass's read is its four read queries: the sum of per-query
-    # medians, so a pass cut by the window's end still counts
-    res.reads_s = [sum(_median(per_query.get(n, [])) for n in FEATURE_READS)]
+            return
+        got[step] = {(r["id1"], r["id2"]): r["est_jaccard"] for r in rows}
+        for i in ids:
+            (added_at if kind == "add" else checked_at)[i] = step
+        if kind == "add" and measured:
+            pairs_per_add.append(len(rows))
 
+    ops = [
+        lambda: dedup("add"),
+        lambda: query("feature_pipeline_end2end"),
+        lambda: query("tumbling_count_window"),
+        rewrite,
+        lambda: dedup("check"),
+        lambda: query("sq8_adc_topk"),
+    ]
+    while win.open():
+        win.round()
+        for op in ops:
+            if not win.open():
+                break
+            op()
+
+    log(f"loop done after {win.rounds} rounds")
     # the last written feature table against the oracle
-    got = con.execute(f"SELECT * FROM '{out}/*.parquet'")
-    gcols = [d[0] for d in got.description]
-    grows = got.fetchall()
+    got_rel = con.execute(f"SELECT * FROM '{out}/*.parquet'")
+    gcols = [d[0] for d in got_rel.description]
+    grows = got_rel.fetchall()
     rel = con.execute(QUERIES[FEATURE_WRITE].oracle)
     ocols = [d[0] for d in rel.description]
     res.check(same_rows(gcols, grows, ocols, rel.fetchall()),
               f"written {FEATURE_WRITE} table vs its oracle")
-    con.close()
 
-    res.detail["batch_pass_s"] = (2 * _median(res.writes_s) + res.reads_s[0], "s")
-    res.detail["queries_run"] = (sum(map(len, per_query.values())), "count")
-    for name, xs in per_query.items():
-        res.layer[f"query.{name}_s"] = _median(xs)
+    # dedup oracle, one pass over every generated doc: an add returns the
+    # pairs whose later-added member it added; a check returns the pairs
+    # of one of its docs with a doc stored before it
+    con.execute(f"CREATE TABLE documents AS SELECT * FROM '{corpus}/*.parquet'")
+    want: dict[int, dict] = {s: {} for s in kind_at}
+    never = len(kind_at) + 1
+    for a, b, j in con.execute(incremental_minhash_oracle_sql(
+            new_pred=f"_id >= {sz['base_docs']}")).fetchall():
+        if a in checked_at and b in checked_at:
+            continue
+        if a in checked_at or b in checked_at:
+            c, o = (a, b) if a in checked_at else (b, a)
+            if added_at.get(o, never) < checked_at[c]:
+                want[checked_at[c]][(a, b)] = j
+        elif max(added_at.get(a, never), added_at.get(b, never)) < never:
+            want[max(added_at[a], added_at[b])][(a, b)] = j
+    con.close()
+    for s, pairs in got.items():
+        exp = want[s]
+        res.check(pairs.keys() == exp.keys() and all(
+            abs(pairs[k] - exp[k]) < 1e-3 for k in exp),
+            f"pairs of {kind_at[s]} #{s} vs the oracle")
+
+    log("outputs checked")
+    res.figures([f"query.{n}" for n in FEATURE_READS] + ["dedup.check"],
+                [f"query.{FEATURE_WRITE}", "dedup.add"])
+    dedup_s = sum(res.op_s.get("dedup.add", [])) + sum(res.op_s.get("dedup.check", []))
+    dedup_docs = sz["doc_batch"] * (len(res.op_s.get("dedup.add", []))
+                                    + len(res.op_s.get("dedup.check", [])))
+    res.detail["batch_pass_s"] = (sum(res.median(f"query.{n}")
+                                      for n in (FEATURE_WRITE, *FEATURE_READS)), "s")
+    res.detail["dedup_add_p50_s"] = (res.median("dedup.add"), "s")
+    res.detail["dedup_check_p50_s"] = (res.median("dedup.check"), "s")
+    res.detail["dedup_docs_per_s"] = (dedup_docs / dedup_s if dedup_s else 0.0, "1/s")
+    res.detail["rounds"] = (win.rounds, "count")
+    for name in (FEATURE_WRITE, *FEATURE_READS):
+        res.layer[f"query.{name}_s"] = res.median(f"query.{name}")
+    res.layer["dedup.build_s"] = _median(builds)
+    res.layer["dedup.pairs_per_add"] = _median(pairs_per_add)
+    res.layer["dedup.store_files"] = _files(idx.path)
     return res
 
 
@@ -299,7 +408,8 @@ def state_serve(ctx: Ctx) -> Result:
     """ralf's loop: each round upserts a micro-batch into the persisted
     latest-per-key state (``connectors.upsert_into``), re-registers the
     state, then serves ``FeatureStore.point_query`` reads. Read keys are
-    Zipf-drawn, half of them from the keys the round just wrote."""
+    Zipf-drawn, half of them from the keys the round just wrote. The read
+    figure is the median point read, the write figure the median upsert."""
     from ralf_spark.connectors import upsert_into
     from ralf_spark.store import FeatureStore
 
@@ -319,15 +429,17 @@ def state_serve(ctx: Ctx) -> Result:
         res.setup_s.append(time.perf_counter() - t0)
     expected = _latest_map(base)
     res.check(store.table("state").count() == len(expected), "state key count")
+    log("set-up done")
 
     hot = rng.permutation(n_keys)
     batches = ctx.dir("batches")
     next_id = sz["state_events"]
     t_end = gen.SPAN_US
     batch_bytes = state_bytes = 0
-    win = Window(ctx, ctx.warmup)
+    win = Window(ctx, sz["state_warmup_rounds"])
     rnd = 0
     while win.open():
+        win.round()
         batch = gen.events_table(ctx.seed + 100 + rnd, sz["upsert_rows"], n_keys,
                                  sz["read_zipf"], first_id=next_id, t0_us=t_end)
         next_id += sz["upsert_rows"]
@@ -337,8 +449,7 @@ def state_serve(ctx: Ctx) -> Result:
         rnd += 1
         w, _, measured = win.op(
             res, "connectors.upsert_into",
-            lambda: upsert_into(state, store.read_parquet(path, **meta)),
-            "write", sz["upsert_rows"])
+            lambda: upsert_into(state, store.read_parquet(path, **meta)))
         if w is None:
             continue
         res.check(True, "upsert")
@@ -357,7 +468,7 @@ def state_serve(ctx: Ctx) -> Result:
                 break
             key = int(key)
             r, rows, _ = win.op(res, "store.point_query",
-                                lambda: store.point_query("state", key), "read", 1)
+                                lambda: store.point_query("state", key))
             if r is None:
                 continue
             want = expected.get(key)
@@ -365,105 +476,18 @@ def state_serve(ctx: Ctx) -> Result:
                 len(rows) == 1 and rows[0]["event_id"] == want[1]
                 and rows[0]["value"] == want[2])
             res.check(ok, f"point_query({key}) vs the latest event of the key")
-    res.detail.update(_tail("upsert", res.writes_s))
-    res.detail.update(_tail("point_query", res.reads_s))
+    log(f"loop done after {win.rounds} rounds")
+    upserts = res.op_s.get("connectors.upsert_into", [])
+    reads = res.op_s.get("store.point_query", [])
+    res.figures(["store.point_query"], ["connectors.upsert_into"])
+    res.detail.update(_tail("upsert", upserts))
+    res.detail.update(_tail("point_query", reads))
     res.layer["connectors.write_amp"] = state_bytes / batch_bytes if batch_bytes else 0.0
     res.layer["connectors.state_files"] = _files(state)
     return res
 
 
-# =================================================================
-# dedup_ingest: persistent MinHash index, add and check batches
-# =================================================================
-
-def dedup_ingest(ctx: Ctx) -> Result:
-    """``MinHashIndex.build`` on a base corpus, then alternating ``add``
-    and read-only ``check`` batches with a known near-duplicate share.
-    ``auto_maintain`` is low enough that the index compacts several times
-    within a run."""
-    from ralf_spark.operators.dedup import MinHashIndex, incremental_minhash_oracle_sql
-    from ralf_spark.store import FeatureStore
-
-    sz, spark, res = ctx.size, ctx.spark, Result()
-    docs = gen.DocumentSource(ctx.seed)
-    base = docs.batch(sz["base_docs"], 0.0)
-    store = FeatureStore(spark)
-    corpus = ctx.dir("corpus")
-    for i in range(SETUPS):
-        d = ctx.dir(f"index{i}")
-        t0 = time.perf_counter()
-        gen.write(base, f"{d}/base.parquet")
-        idx = MinHashIndex(f"{d}/index", hash_fn="md5",
-                           auto_maintain=sz["auto_maintain"])
-        with ctx.tracer.op("dedup.build"):
-            idx.build(store.read_parquet(f"{d}/base.parquet", key="doc_id"))
-        res.setup_s.append(time.perf_counter() - t0)
-    gen.write(base, f"{corpus}/base.parquet")
-
-    added_at = dict.fromkeys(range(sz["base_docs"]), -1)
-    checked_at: dict[int, int] = {}
-    got: dict[int, dict] = {}  # step -> pairs that op returned
-    pairs_per_add = []
-    win = Window(ctx, ctx.warmup)
-    step = 0
-    while win.open():
-        step += 1
-        is_add = step % 2 == 1
-        batch = docs.batch(sz["doc_batch"], sz["dup_share"])
-        path = f"{corpus}/b{step}.parquet"
-        gen.write(batch, path)
-        ids = batch.column("doc_id").to_pylist()
-        tbl = store.read_parquet(path, key="doc_id")
-        if is_add:
-            t, rows, measured = win.op(res, "dedup.add", lambda: idx.add(tbl).collect(),
-                                       "write", len(ids))
-        else:
-            t, rows, measured = win.op(res, "dedup.check", lambda: idx.check(tbl).collect(),
-                                       "read", len(ids))
-        if t is None:
-            continue
-        got[step] = {(r["id1"], r["id2"]): r["est_jaccard"] for r in rows}
-        for i in ids:
-            (added_at if is_add else checked_at)[i] = step
-        if is_add and measured:
-            pairs_per_add.append(len(rows))
-
-    # oracle, one pass over every generated doc: an add returns the pairs
-    # whose later-added member it added; a check returns the pairs of one
-    # of its docs with a doc stored before it
-    con = duckdb.connect()
-    con.execute(f"CREATE TABLE documents AS SELECT * FROM '{corpus}/*.parquet'")
-    want: dict[int, dict] = {s: {} for s in got}
-    never = step + 1
-    for a, b, j in con.execute(incremental_minhash_oracle_sql(
-            new_pred=f"_id >= {sz['base_docs']}")).fetchall():
-        if a in checked_at and b in checked_at:
-            continue
-        if a in checked_at or b in checked_at:
-            c, o = (a, b) if a in checked_at else (b, a)
-            if added_at.get(o, never) < checked_at[c]:
-                want[checked_at[c]][(a, b)] = j
-        elif max(added_at.get(a, never), added_at.get(b, never)) < never:
-            want[max(added_at[a], added_at[b])][(a, b)] = j
-    con.close()
-    for s, pairs in got.items():
-        exp = want[s]
-        res.check(pairs.keys() == exp.keys() and all(
-            abs(pairs[k] - exp[k]) < 1e-3 for k in exp),
-            f"pairs of {'add' if s % 2 else 'check'} #{s} vs the oracle")
-
-    timed = sum(res.writes_s) + sum(res.reads_s)
-    res.detail["dedup_add_p50_s"] = (_median(res.writes_s), "s")
-    res.detail["dedup_check_p50_s"] = (_median(res.reads_s), "s")
-    res.detail["dedup_docs_per_s"] = (res.rows / timed if timed else 0.0, "1/s")
-    res.layer["dedup.build_s"] = _median(res.setup_s)
-    res.layer["dedup.pairs_per_add"] = _median(pairs_per_add)
-    res.layer["dedup.store_files"] = _files(idx.path)
-    return res
-
-
 WORKLOADS = {
-    "feature_batch": feature_batch,
+    "batch_build": batch_build,
     "state_serve": state_serve,
-    "dedup_ingest": dedup_ingest,
 }
