@@ -32,7 +32,13 @@ from ralf_spark.functions.hashing import (
     stable_hash64,
 )
 from ralf_spark.functions.text import distinct_shingles, hashed_shingles
-from ralf_spark.operators.util import attach_cached, ensure_parallelism
+from ralf_spark.operators.util import (
+    attach_cached,
+    ensure_parallelism,
+    observed_rows,
+    plan_row_estimate,
+)
+from ralf_spark.plans import sizing
 from ralf_spark.table import FeatureTable
 
 # ------------------------------------------------------------------ E1 exact
@@ -323,10 +329,10 @@ def near_dup_pairs(
     # corpus-proportional, not dup-structure-dependent. At 100 TB the
     # gate refuses and the measured Σ c·(c−1)/2 auto spelling runs
     # unchanged.
-    small = broadcast_candidates is None and _corpus_broadcastable(
-        table.df
+    small = broadcast_candidates is None and sizing.provably_small(
+        table.df, per_byte=sizing.EXPANSION["shingle"]
     )
-    hint = False if small else _choose_broadcast(
+    hint = False if small else sizing.choose_broadcast(
         broadcast_candidates,
         lambda: _pair_bound_from_buckets(buckets, "_band", "_key"),
     )
@@ -351,232 +357,6 @@ def near_dup_pairs(
     return attach_cached(verified, [docs, buckets, verified])
 
 
-#: Auto-spelling threshold for the verification joins (r9, VERDICT r8 #1):
-#: when the bucket-stats pair bound exceeds this, the chained-broadcast
-#: spelling is abandoned for plain joins so the planner can shuffle instead
-#: of driving a data-dependent broadcast into Spark's 8 GB hard cap (a
-#: hard FAILURE, not a slowdown). The half-joined broadcast payload is
-#: ~0.2-1 KB/pair (pair ids + one shingle/signature array), so the cap sits
-#: near 10-30 M pairs; 5 M leaves driver-memory headroom for concurrent
-#: queries. Module attribute so probes/operators can tighten it.
-BROADCAST_CANDIDATE_LIMIT = 5_000_000
-
-
-#: Byte cap for the docs-broadcast verification spelling (r16, VERDICT
-#: r15 #3): when the PROJECTED in-memory size of the shingle table —
-#: parquet footer uncompressed bytes × :data:`_SHINGLE_EXPANSION` —
-#: stays under this, broadcasting the corpus side is trivially
-#: driver-safe and the Σ c·(c−1)/2 stats job is skipped entirely. Same
-#: bound class as ``GramIndex._SMALL_STORE_BYTES``: at 100 TB the gate
-#: never fires and the count-based auto spelling is unchanged.
-_SMALL_CORPUS_BYTES = 64 * 1024 * 1024
-
-#: Safety factor from footer uncompressed bytes to the broadcast
-#: relation: string shingles triplicate each token (3-gram windows) and
-#: UnsafeRow arrays add per-element overhead (~2×). xxhash64-mode bigint
-#: shingles are smaller; the string-mode factor covers both.
-_SHINGLE_EXPANSION = 6
-
-
-def _corpus_broadcastable(
-    df: DataFrame, expansion: int = _SHINGLE_EXPANSION
-) -> bool:
-    """Zero-job admission test for the docs-broadcast verification
-    spelling (r16, VERDICT r15 #3 — the near_dup stats-barrier fold):
-    ``df.inputFiles()`` (driver-side plan metadata, no job) names the
-    parquet files feeding the corpus; their FOOTERS bound rows and
-    uncompressed bytes. Filters/joins in the plan only OVER-count
-    (a subset of the files' rows reaches the operator), so admission is
-    conservative. Returns False — keep the measured stats job — for
-    non-parquet / in-memory sources, unreadable footers, or any bound
-    breach; at 100 TB the byte gate refuses and behavior is unchanged.
-    ``SPARK_GRAFT_SMALL_CORPUS=0`` disables the shortcut (deployments
-    that prefer the measured per-corpus stats decision everywhere)."""
-    import os
-
-    if os.environ.get("SPARK_GRAFT_SMALL_CORPUS", "1") == "0":
-        return False
-    try:
-        files = _bounded_input_files(df)
-        if not files:
-            return False
-        stats = _footer_rows_unc(
-            files, df.sparkSession,
-            rows_cap=BROADCAST_CANDIDATE_LIMIT,
-            unc_cap=_SMALL_CORPUS_BYTES // expansion,
-        )
-        return (
-            stats is not None
-            and stats[0] <= BROADCAST_CANDIDATE_LIMIT
-            and stats[1] * expansion <= _SMALL_CORPUS_BYTES
-        )
-    except Exception:
-        return False
-
-
-#: Analyzed-plan nodes that can only FILTER or REORDER rows relative to
-#: their file inputs (never multiply them), so parquet footer totals
-#: remain an upper bound through them. Anything else — inner/outer
-#: joins, Generate (explode), grouping-set Expand, pandas/arrow maps,
-#: in-memory leaves — refuses the shortcut.
-_ROW_BOUNDED_NODES = frozenset({
-    "Project", "Filter", "Union", "Distinct", "Deduplicate",
-    "Aggregate", "Window", "Sort", "GlobalLimit", "LocalLimit",
-    "Limit", "Offset", "SubqueryAlias", "Repartition",
-    "RepartitionByExpression", "RebalancePartitions", "OneRowRelation",
-})  # NOT Expand (cube/rollup multiplies), NOT Generate, NOT inner
-# joins, NOT Sample (withReplacement + fraction > 1 multiplies rows)
-
-
-def _bounded_input_files(df) -> list | None:
-    """The parquet files under ``df``'s ANALYZED logical plan, or None
-    when the plan cannot prove its row count bounded by them (r16).
-
-    ``df.inputFiles()`` goes blank as soon as any upstream frame is
-    persisted (cache substitution hides the scans), which silently
-    disabled the small-corpus shortcut exactly where pipelines compose
-    operators (the curation build's semi-joined survivor sets). The
-    analyzed plan is PRE-substitution, so walking it recovers the file
-    relations — and the walk doubles as a soundness check the old
-    spelling lacked: only row-bounded nodes are admitted (a semi/anti
-    join keeps rows <= its left side; both sides' files only over-count
-    the bound), so a row-multiplying lineage (inner join, explode) can
-    never sneak an under-counted corpus past the byte gate."""
-    try:
-        out: list = []
-
-        def walk(p) -> bool:
-            cls = p.getClass().getSimpleName()
-            if cls == "LogicalRelation":
-                rel = p.relation()
-                if rel.getClass().getSimpleName() != "HadoopFsRelation":
-                    return False
-                # pre-gate on the relation's ON-DISK size (already on
-                # the driver, no listing materialized): parquet
-                # compressed <= uncompressed, so past the byte cap the
-                # uncompressed bound fails a fortiori — refuse WITHOUT
-                # pulling a 100 TB table's file list through py4j or
-                # reading any footer (r16 review)
-                if int(rel.sizeInBytes()) > _SMALL_CORPUS_BYTES:
-                    return False
-                out.extend(rel.location().inputFiles())
-                return True
-            if cls == "Join":
-                if p.joinType().toString() not in ("LeftSemi", "LeftAnti"):
-                    return False
-            elif cls not in _ROW_BOUNDED_NODES:
-                return False
-            it = p.children().iterator()
-            while it.hasNext():
-                if not walk(it.next()):
-                    return False
-            return True
-
-        if not walk(df._jdf.queryExecution().analyzed()):
-            return None
-        return out or None
-    except Exception:
-        return None
-
-
-def _footer_rows_unc(
-    files: list,
-    spark=None,
-    rows_cap: int | None = None,
-    unc_cap: int | None = None,
-) -> tuple | None:
-    """(total rows, total UNCOMPRESSED bytes) over parquet footers —
-    driver-side metadata, no Spark job. None when any footer is
-    unreadable (callers keep their measured/count-based path).
-
-    ``rows_cap``/``unc_cap`` (r16 review): admission callers only need
-    to know WHETHER a bound is exceeded — once the running sum passes a
-    cap, return immediately instead of paying a footer read per
-    remaining file (a large store would otherwise cost O(#files) serial
-    driver reads on the exact at-scale path the gates keep unchanged)."""
-    try:
-        rows = 0
-        unc = 0
-        for f in files:
-            meta = _footer_meta(f, spark)
-            if meta is None:
-                return None
-            rows += meta.num_rows
-            unc += sum(
-                meta.row_group(i).column(j).total_uncompressed_size
-                for i in range(meta.num_row_groups)
-                for j in range(meta.num_columns)
-            )
-            if (rows_cap is not None and rows > rows_cap) or (
-                unc_cap is not None and unc > unc_cap
-            ):
-                return rows, unc  # already past the bound: enough to refuse
-        return rows, unc
-    except Exception:
-        return None
-
-
-def _footer_meta(path: str, spark=None):
-    """pyarrow ``FileMetaData`` of one parquet file, read driver-side
-    (no Spark job): local paths open directly; remote schemes stream
-    just the footer tail through the Hadoop FS API (r16 — shared with
-    ``GramIndex._footer_rows``). Returns None when unreadable."""
-    try:
-        import pyarrow.parquet as pq
-
-        scheme = path.split("://", 1)[0] if "://" in path else ""
-        if scheme in ("", "file"):
-            local = path[7:] if path.startswith("file://") else (
-                path[5:] if path.startswith("file:") else path
-            )
-            return pq.ParquetFile(local).metadata
-        if spark is None:
-            return None
-        return _footer_meta_remote(spark, path)
-    except Exception:
-        return None
-
-
-def _footer_meta_remote(spark, path: str):
-    """FileMetaData of one parquet file on a remote Hadoop filesystem,
-    from a seek-to-tail footer read (no full-file transfer): the parquet
-    trailer is ``<footer thrift> <4-byte LE footer_len> PAR1``; a
-    synthetic ``PAR1 + footer + trailer`` buffer satisfies
-    ``pq.read_metadata`` exactly (it never dereferences row-group byte
-    offsets)."""
-    import io
-    import struct
-
-    import pyarrow.parquet as pq
-
-    from ralf_spark.connectors import _hadoop_fs
-
-    fs, jpath = _hadoop_fs(spark, path)
-    size = int(fs.getFileStatus(jpath).getLen())
-    if size < 12:
-        return None
-    io_utils = spark._jvm.org.apache.commons.io.IOUtils  # type: ignore[attr-defined]
-
-    def tail(n: int) -> bytes:
-        stream = fs.open(jpath)
-        try:
-            stream.seek(size - n)
-            return bytes(io_utils.toByteArray(stream))
-        finally:
-            stream.close()
-
-    t = tail(min(size, 64 * 1024))
-    if t[-4:] != b"PAR1":
-        return None
-    footer_len = struct.unpack("<I", t[-8:-4])[0]
-    if footer_len + 8 > size:
-        return None
-    if footer_len + 8 > len(t):
-        t = tail(footer_len + 8)
-    buf = b"PAR1" + t[-(footer_len + 8):]
-    return pq.read_metadata(io.BytesIO(buf))
-
-
 def _pair_bound_from_buckets(bucket_like: DataFrame, *group_cols: str) -> int:
     """Upper bound on distinct candidate pairs from bucket statistics:
     Σ over groups of c·(c−1)/2. One aggregation job over the (persisted)
@@ -594,19 +374,6 @@ def _pair_bound_from_buckets(bucket_like: DataFrame, *group_cols: str) -> int:
         .first()
     )
     return int(row["_pairs"] or 0)
-
-
-def _choose_broadcast(choice: bool | None, bound_fn) -> bool:
-    """Resolve the tri-state ``broadcast_candidates`` knob: explicit
-    True/False wins (no stats job); None = auto — run ``bound_fn`` and
-    broadcast only while the pair bound stays under
-    :data:`BROADCAST_CANDIDATE_LIMIT`. Auto turns the one documented scale
-    hazard (forced broadcast of a data-dependent candidate set) into
-    graceful degradation: above the limit the verification joins carry no
-    hints and the planner falls back to a shuffle join — slower, alive."""
-    if choice is not None:
-        return bool(choice)
-    return bound_fn() <= BROADCAST_CANDIDATE_LIMIT
 
 
 def _verify_join(
@@ -644,8 +411,8 @@ def _verify_join(
     ``hint_broadcast=False`` (r9): the SAME join tree with no hints — the
     planner shuffles the corpus (SMJ) instead of broadcasting a candidate
     set that would blow Spark's 8 GB broadcast cap. Callers resolve the
-    choice from bucket statistics via :func:`_choose_broadcast`; output is
-    identical either way (equality pinned in tests + the adversarial
+    choice from bucket statistics via ``sizing.choose_broadcast``; output
+    is identical either way (equality pinned in tests + the adversarial
     SCALEPROBE row).
 
     One-store-scan contract in the no-hint spelling (ADVICE r9,
@@ -661,7 +428,7 @@ def _verify_join(
 
     ``broadcast_docs=True`` (r16, VERDICT r15 #3): the THIRD spelling —
     broadcast the (whole) shingle table into the candidate stream,
-    chosen only when :func:`_corpus_broadcastable` PROVED the corpus
+    chosen only when ``sizing.provably_small`` PROVED the corpus
     side small from parquet footer metadata. Its safety bound is
     corpus-proportional and data-independent (an adversarial
     all-duplicates corpus inflates the candidate STREAM, never the
@@ -693,31 +460,22 @@ def _verify_join(
     )
 
 
-def jaccard_pairs_inverted(
+def _inverted_candidates_verified(
     table: FeatureTable,
-    text_col: str = "text",
-    threshold: float = 0.5,
-    max_df: int = 5,
-    shingle_n: int = 3,
-    broadcast_candidates: bool | None = None,
-    token_mode: str = "ascii",
-) -> DataFrame:
-    """n-gram Jaccard near-dup via INVERTED-INDEX blocking — the classic
-    alternative to MinHash/LSH: candidate pairs share at least one *rare*
-    shingle (document frequency <= ``max_df``), then exact Jaccard filters.
-
-    Pruning hot shingles bounds the posting self-join at Σ df² <= max_df ×
-    postings — never n². Recall caveat (same class as single-probe LSH): a
-    pair whose every shared shingle is hot is missed; near-dups share many
-    shingles, so in practice some shared shingle is rare.
-
-    ``broadcast_candidates``: verification-spelling knob, same tri-state
-    contract as :func:`near_dup_pairs` — auto (None) bounds candidates by
-    Σ df·(df−1)/2 over the persisted rare-posting table.
-    """
+    text_col: str,
+    max_df: int,
+    shingle_n: int,
+    broadcast_candidates: bool | None,
+    token_mode: str,
+    op_name: str,
+) -> tuple[DataFrame, list]:
+    """Candidate generation and verification join shared by
+    :func:`jaccard_pairs_inverted` and :func:`containment_pairs`:
+    (id1, id2, _sh1, _sh2) for every pair sharing a rare shingle, plus
+    the persisted intermediates the caller releases."""
     idc = table.key
     if idc is None:
-        raise ValueError("jaccard_pairs_inverted needs a keyed table")
+        raise ValueError(f"{op_name} needs a keyed table")
     ids = ensure_parallelism(
         table.df.select(F.col(idc).alias("_id"), F.col(text_col).alias("_text"))
     )
@@ -757,16 +515,47 @@ def jaccard_pairs_inverted(
     )
     # r16: footer-proved small corpus -> docs-broadcast spelling, no
     # stats job (see near_dup_pairs)
-    small = broadcast_candidates is None and _corpus_broadcastable(
-        table.df
+    small = broadcast_candidates is None and sizing.provably_small(
+        table.df, per_byte=sizing.EXPANSION["shingle"]
     )
-    hint = False if small else _choose_broadcast(
+    hint = False if small else sizing.choose_broadcast(
         broadcast_candidates,
         lambda: _pair_bound_from_buckets(posting_r, "_s"),
     )
+    return (
+        _verify_join(docs, cand, hint_broadcast=hint, broadcast_docs=small),
+        cached,
+    )
+
+
+def jaccard_pairs_inverted(
+    table: FeatureTable,
+    text_col: str = "text",
+    threshold: float = 0.5,
+    max_df: int = 5,
+    shingle_n: int = 3,
+    broadcast_candidates: bool | None = None,
+    token_mode: str = "ascii",
+) -> DataFrame:
+    """n-gram Jaccard near-dup via INVERTED-INDEX blocking — the classic
+    alternative to MinHash/LSH: candidate pairs share at least one *rare*
+    shingle (document frequency <= ``max_df``), then exact Jaccard filters.
+
+    Pruning hot shingles bounds the posting self-join at Σ df² <= max_df ×
+    postings — never n². Recall caveat (same class as single-probe LSH): a
+    pair whose every shared shingle is hot is missed; near-dups share many
+    shingles, so in practice some shared shingle is rare.
+
+    ``broadcast_candidates``: verification-spelling knob, same tri-state
+    contract as :func:`near_dup_pairs` — auto (None) bounds candidates by
+    Σ df·(df−1)/2 over the persisted rare-posting table.
+    """
+    verified, cached = _inverted_candidates_verified(
+        table, text_col, max_df, shingle_n, broadcast_candidates,
+        token_mode, "jaccard_pairs_inverted",
+    )
     out = (
-        _verify_join(docs, cand, hint_broadcast=hint, broadcast_docs=small)
-        .select(
+        verified.select(
             "id1",
             "id2",
             (
@@ -1022,23 +811,12 @@ def duplicated_spans(
 
 
 #: assumed on-disk bytes per document for the metadata-only corpus-size
-#: estimate (snappy parquet of ~55-token docs lands around 150-300 B) —
-#: only the ORDER of magnitude matters: the block-count crossovers sit
-#: 250x apart and the cost curve is flat near them, and any choice is
-#: output-identical (candidates are exact-verified).
+#: estimate (``plan_row_estimate``'s divisor; snappy parquet of
+#: ~55-token docs lands around 150-300 B) — only the ORDER of magnitude
+#: matters: the block-count crossovers sit 250x apart and the cost curve
+#: is flat near them, and any choice is output-identical (candidates are
+#: exact-verified).
 SIMHASH_EST_DOC_BYTES = 200
-
-
-def _corpus_row_estimate(df) -> int:
-    """Row estimate WITHOUT running a job (ADVICE r9): the optimizer's
-    rowCount when a catalog/CBO provides one, else plan sizeInBytes /
-    :data:`SIMHASH_EST_DOC_BYTES`. Returns -1 when neither is usable
-    (unknown-size sentinel) — the caller falls back to one eager
-    ``count()``. (r11: delegated to the generic
-    ``operators.util.plan_row_estimate``.)"""
-    from ralf_spark.operators.util import plan_row_estimate
-
-    return plan_row_estimate(df, est_row_bytes=SIMHASH_EST_DOC_BYTES)
 
 
 def choose_simhash_blocks(
@@ -1141,7 +919,9 @@ def simhash_near_dup_pairs(
         raise ValueError("bits must be in (0, 60] (stable_hash64 width)")
     bands = max_hamming + 1
     if blocks is None:
-        n = n_docs if n_docs is not None else _corpus_row_estimate(table.df)
+        n = n_docs if n_docs is not None else plan_row_estimate(
+            table.df, est_row_bytes=SIMHASH_EST_DOC_BYTES
+        )
         if n < 0:
             n = table.df.count()  # documented last resort: one eager scan
         blocks = choose_simhash_blocks(n, bits, max_hamming)
@@ -1308,53 +1088,12 @@ def containment_pairs(
     is the SOURCE's shingle set, not the union. ``broadcast_candidates``:
     same tri-state verification-spelling knob as the other pair operators.
     """
-    idc = table.key
-    if idc is None:
-        raise ValueError("containment_pairs needs a keyed table")
-    ids = ensure_parallelism(
-        table.df.select(F.col(idc).alias("_id"), F.col(text_col).alias("_text"))
-    )
-    docs = (
-        ids.select(
-            "_id",
-            distinct_shingles(
-                F.col("_text"), shingle_n, token_mode
-            ).alias("_sh"),
-        )
-        .where(F.size("_sh") > 0)
-        .persist()
-    )
-    posting = docs.select("_id", F.explode("_sh").alias("_s"))
-    rare = (
-        posting.groupBy("_s")
-        .agg(F.count(F.lit(1)).alias("_df"))
-        .where(F.col("_df") <= max_df)
-        .select("_s")
-    )
-    posting_r = posting.join(rare, "_s").persist()
-    cached = [docs, posting_r]
-    a, b = posting_r.alias("a"), posting_r.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a._s") == F.col("b._s"))
-            & (F.col("a._id") < F.col("b._id")),
-        )
-        .select(F.col("a._id").alias("id1"), F.col("b._id").alias("id2"))
-        .distinct()
-    )
-    # r16: footer-proved small corpus -> docs-broadcast spelling, no
-    # stats job (see near_dup_pairs)
-    small = broadcast_candidates is None and _corpus_broadcastable(
-        table.df
-    )
-    hint = False if small else _choose_broadcast(
-        broadcast_candidates,
-        lambda: _pair_bound_from_buckets(posting_r, "_s"),
+    verified, cached = _inverted_candidates_verified(
+        table, text_col, max_df, shingle_n, broadcast_candidates,
+        token_mode, "containment_pairs",
     )
     scored = (
-        _verify_join(docs, cand, hint_broadcast=hint, broadcast_docs=small)
-        .select(
+        verified.select(
             "id1",
             "id2",
             F.size(F.array_intersect("_sh1", "_sh2")).alias("_i"),
@@ -1573,54 +1312,6 @@ class MinHashIndex:
             release_writer_lease(spark, self.path)
 
     # ------------------------------------------------------------ internals
-    def _small_serving_sides(self, spark, table: FeatureTable) -> bool:
-        """Zero-job admission test for the sigs-broadcast scoring
-        spelling (r16, the near_dup small-corpus class): the batch must
-        pass :func:`_corpus_broadcastable` (parquet-backed, footer-
-        bounded) AND its ROW count must bound the payloads this path
-        actually broadcasts — the batch bucket table (rows × bands) and
-        the signature rows (rows × num_perm longs), which scale with
-        row count, not text bytes (r16 review: many tiny docs would
-        pass the text gate while inflating the bucket broadcast) — AND
-        the stored signature table's footers must bound its payload
-        (fixed-width sig arrays, so uncompressed × 2 covers UnsafeRow
-        overhead; on-disk bytes pre-gate the footer reads). Past any
-        bound the measured Σₖ nₖ·aₖ stats decision runs unchanged (the
-        100 TB regime: the store side never broadcasts)."""
-        if not _corpus_broadcastable(table.df):
-            return False
-        try:
-            # batch row payloads: ~(num_perm*8 + 40) B per sig row and
-            # ~28 B per bucket row framed
-            files = _bounded_input_files(table.df)
-            stats = _footer_rows_unc(
-                files, spark, rows_cap=BROADCAST_CANDIDATE_LIMIT
-            )
-            if stats is None:
-                return False
-            per_row = max(
-                self.num_perm * 8 + 40, self.bands * 28
-            )
-            if stats[0] * per_row > _SMALL_CORPUS_BYTES:
-                return False
-            from ralf_spark.connectors import _list_parquet_files_sized
-
-            sized = _list_parquet_files_sized(spark, f"{self.path}/sigs")
-            if sum(b for _, b in sized) * 2 > _SMALL_CORPUS_BYTES:
-                return False  # compressed <= uncompressed: refuse early
-            stats = _footer_rows_unc(
-                [f for f, _ in sized], spark,
-                rows_cap=BROADCAST_CANDIDATE_LIMIT,
-                unc_cap=_SMALL_CORPUS_BYTES // 2,
-            )
-            return (
-                stats is not None
-                and stats[0] <= BROADCAST_CANDIDATE_LIMIT
-                and stats[1] * 2 <= _SMALL_CORPUS_BYTES
-            )
-        except Exception:
-            return False
-
     def _project(self, table: FeatureTable, text_col: str, count_obs=None):
         """(sigs, buckets) DataFrames for a batch — same pipeline as
         near_dup_pairs (shared helpers, identical hashing).
@@ -2107,57 +1798,9 @@ class MinHashIndex:
             if stored_s is not None
             else new_sigs
         )
-        # r16 (VERDICT r15 #3 class): when footers prove BOTH sides of
-        # the scoring small, broadcast the signature table into the
-        # candidate stream instead of measuring the candidate bound —
-        # zero plan-construction jobs (the Σₖ nₖ·aₖ stats action alone
-        # spanned ~6 AQE jobs per add). Past the gate the measured
-        # chained-broadcast/shuffle decision below is unchanged.
-        small = broadcast_candidates is None and self._small_serving_sides(
-            spark, table
+        pairs, small = self._scored_pairs(
+            table, new_buckets, all_b, all_s, threshold, broadcast_candidates
         )
-        cand = (
-            # batch side provably small under the shortcut: hint it so
-            # the bucket join never falls to a frozen-estimate SMJ
-            (F.broadcast(new_buckets) if small else new_buckets).alias("n")
-            .join(
-                all_b.alias("o"),
-                (F.col("n._band") == F.col("o._band"))
-                & (F.col("n._key") == F.col("o._key"))
-                & (F.col("n._id") != F.col("o._id")),
-            )
-            .select(
-                F.least("n._id", "o._id").alias("id1"),
-                F.greatest("n._id", "o._id").alias("id2"),
-            )
-            .distinct()
-        )
-        def _add_pair_bound() -> int:
-            # Σₖ nₖ·aₖ: per-key counts of the NEW buckets (batch-sized,
-            # persisted → cheap, broadcast) against one streaming pass
-            # over stored∪new buckets; each matching store row contributes
-            # its key's new-count. Upper-bounds |cand| (includes self
-            # matches and double-counts the within-batch n² pairs).
-            new_counts = new_buckets.groupBy("_band", "_key").agg(
-                F.count(F.lit(1)).alias("_nc")
-            )
-            row = (
-                all_b.join(F.broadcast(new_counts), ["_band", "_key"])
-                .select(F.sum("_nc").alias("_pairs"))
-                .first()
-            )
-            return int(row["_pairs"] or 0)
-
-        hint = False if small else _choose_broadcast(
-            broadcast_candidates, _add_pair_bound
-        )
-        # chained-broadcast verification (r8, same shape as
-        # dedup._verify_join): candidates ∝ batch dups broadcast into the
-        # signature scans, so the stored (corpus-sized) signature table
-        # never shuffles for scoring — it streams map-side through two
-        # BHJs from its parquet snapshot. r9: hints dropped when the
-        # bucket-stats bound says candidates would blow the broadcast cap.
-        pairs = self._score_candidates(all_s, cand, hint, small, threshold)
         out = attach_cached(pairs, [new_sigs, new_buckets])
         # Fold the batch in AFTER the candidate join is defined: the writes
         # below execute eagerly, but the returned plan reads the persisted
@@ -2171,7 +1814,7 @@ class MinHashIndex:
         # small-shortcut adds (no stats job) keep the count, which
         # doubles as the cache materialization.
         if broadcast_candidates is None and not small:
-            n = int(sigs_obs.get["rows"])
+            n = observed_rows(sigs_obs, new_sigs)
         else:
             n = new_sigs.count()  # materializes the cache; sizes the files
         self._write(
@@ -2226,12 +1869,56 @@ class MinHashIndex:
             else stored_b
         )
         all_s = stored_s.unionByName(new_sigs)
-        # r16: footer-proved small sides -> sigs-broadcast scoring, no
-        # stats job (see _add_guarded)
-        small = broadcast_candidates is None and self._small_serving_sides(
-            spark, table
+        pairs, _ = self._scored_pairs(
+            table, new_buckets, other_b, all_s, threshold,
+            broadcast_candidates,
+        )
+        return attach_cached(pairs, [new_sigs, new_buckets])
+
+    def _scored_pairs(
+        self,
+        table: FeatureTable,
+        new_buckets: DataFrame,
+        other_b: DataFrame,
+        all_s: DataFrame,
+        threshold: float,
+        broadcast_candidates: bool | None,
+    ) -> tuple[DataFrame, bool]:
+        """Candidate join, spelling choice and scoring shared by
+        :meth:`add` and :meth:`check`: the batch buckets joined against
+        ``other_b``, scored against ``all_s``. Returns (pairs, small).
+
+        ``small`` (r16, VERDICT r15 #3 class): the size gate PROVED both
+        broadcast sides small — the batch (its bucket and signature rows
+        scale with row count, not text bytes) and the stored signature
+        table — so the signature table broadcasts into the candidate
+        stream and no plan-construction job runs (the Σₖ nₖ·aₖ stats
+        action alone spanned ~6 AQE jobs per call). Past the gate the
+        measured chained-broadcast/shuffle decision runs (the 100 TB
+        regime: the store side never broadcasts)."""
+        from ralf_spark.connectors import _list_parquet_files_sized
+
+        spark = table.df.sparkSession
+        x = sizing.EXPANSION
+        small = (
+            broadcast_candidates is None
+            and sizing.provably_small(
+                table.df,
+                per_byte=x["shingle"],
+                per_row=max(
+                    self.num_perm * x["sig_perm"] + x["sig_frame"],
+                    self.bands * x["bucket_row"],
+                ),
+            )
+            and sizing.provably_small(
+                _list_parquet_files_sized(spark, f"{self.path}/sigs"),
+                spark,
+                per_byte=x["stored_sig"],
+            )
         )
         cand = (
+            # batch side provably small under the shortcut: hint it so
+            # the bucket join never falls to a frozen-estimate SMJ
             (F.broadcast(new_buckets) if small else new_buckets).alias("n")
             .join(
                 other_b.alias("o"),
@@ -2246,7 +1933,12 @@ class MinHashIndex:
             .distinct()
         )
 
-        def _check_pair_bound() -> int:
+        def pair_bound() -> int:
+            # Σₖ nₖ·aₖ: per-key counts of the NEW buckets (batch-sized,
+            # persisted → cheap, broadcast) against one streaming pass
+            # over the other buckets; each matching row contributes its
+            # key's new-count. Upper-bounds |cand| (includes self matches
+            # and double-counts the within-batch n² pairs).
             new_counts = new_buckets.groupBy("_band", "_key").agg(
                 F.count(F.lit(1)).alias("_nc")
             )
@@ -2257,34 +1949,25 @@ class MinHashIndex:
             )
             return int(row["_pairs"] or 0)
 
-        hint = False if small else _choose_broadcast(
-            broadcast_candidates, _check_pair_bound
+        hint = False if small else sizing.choose_broadcast(
+            broadcast_candidates, pair_bound
         )
-        pairs = self._score_candidates(all_s, cand, hint, small, threshold)
-        return attach_cached(pairs, [new_sigs, new_buckets])
-
-    def _score_candidates(
-        self,
-        all_s: DataFrame,
-        cand: DataFrame,
-        hint: bool,
-        broadcast_sigs: bool,
-        threshold: float,
-    ) -> DataFrame:
-        """Exact-estimate scoring of candidate pairs against the
-        signature table — three spellings, identical output (r16):
-        chained-broadcast of candidates (``hint=True``), plain joins
-        (``hint=False``), or — when the caller PROVED the signature
-        table small from footers — the sigs side broadcast into the
-        candidate stream (``broadcast_sigs=True``), the spelling whose
-        safety bound is store-proportional and needs no stats job."""
+        # Exact-estimate scoring, three spellings with identical output
+        # (r16): the PROVED-small signature table broadcast into the
+        # candidate stream (store-proportional bound, no stats job); or
+        # chained-broadcast verification (r8, same shape as
+        # dedup._verify_join): candidates ∝ batch dups broadcast into the
+        # signature scans, so the stored (corpus-sized) signature table
+        # never shuffles for scoring — it streams map-side through two
+        # BHJs from its parquet snapshot; or (r9) plain joins when the
+        # bucket-stats bound says candidates would blow the broadcast cap.
         s1 = all_s.select(
             F.col("_id").alias("id1"), F.col("_sig").alias("_sig1")
         )
         s2 = all_s.select(
             F.col("_id").alias("id2"), F.col("_sig").alias("_sig2")
         )
-        if broadcast_sigs:
+        if small:
             half = cand.join(F.broadcast(s1), "id1").select(
                 "id1", "id2", "_sig1"
             )
@@ -2296,13 +1979,14 @@ class MinHashIndex:
                 .select("id1", "id2", "_sig1")
             )
             scored = (F.broadcast(half) if hint else half).join(s2, "id2")
-        return scored.select(
+        pairs = scored.select(
             "id1",
             "id2",
             self._est_jaccard(
                 F.col("_sig1"), F.col("_sig2"), self.num_perm
             ).alias("est_jaccard"),
         ).where(F.col("est_jaccard") >= threshold)
+        return pairs, small
 
 
 def incremental_minhash_oracle_sql(
@@ -2616,16 +2300,14 @@ def cross_corpus_duplicate_spans(
         .persist()
     )
     # r16 (the near_dup small-corpus class): when the EVAL side's parquet
-    # footers prove its digest set broadcast-safe, skip the count job.
-    # Expansion 28: one md5 digest string (~56 B framed) per token
-    # position, and positions <= tokens <= uncompressed bytes / 2 (the
-    # 1-char-token worst case — r16 review) — an upper bound BEFORE
-    # distinct shrinks it; xxhash64 digests are smaller still. Past the
-    # gate (or on unbounded lineages) the measured count decides.
-    small = broadcast_other is None and _corpus_broadcastable(
-        odf, expansion=28
+    # footers prove its digest set broadcast-safe, skip the count job
+    # (the "digest" expansion: an upper bound BEFORE distinct shrinks
+    # it). Past the gate (or on unbounded lineages) the measured count
+    # decides.
+    small = broadcast_other is None and sizing.provably_small(
+        odf, per_byte=sizing.EXPANSION["digest"]
     )
-    hint = True if small else _choose_broadcast(
+    hint = True if small else sizing.choose_broadcast(
         broadcast_other, lambda: eval_dg.count()
     )
     probe = F.broadcast(eval_dg) if hint else eval_dg
@@ -3431,7 +3113,7 @@ class GramIndex:
             if stored is None:
                 seen = batch_dup
             else:
-                hint = _choose_broadcast(broadcast_digests, lambda: n_dg)
+                hint = sizing.choose_broadcast(broadcast_digests, lambda: n_dg)
                 probe = F.broadcast(batch_dg) if hint else batch_dg
                 seen_in_store = (
                     stored.join(probe, "_dg").select("_dg").distinct()
@@ -3447,7 +3129,7 @@ class GramIndex:
                 # rows from the observation the n_dg job fired — not a
                 # second count job (r16); identical value by construction
                 self._write(
-                    pos, tag, rows=int(pos_obs.get["rows"]),
+                    pos, tag, rows=observed_rows(pos_obs, pos),
                     lease_path=lease_path, writer_id=writer_id,
                     expect_epoch=expect_epoch,
                 )
@@ -3489,7 +3171,7 @@ class GramIndex:
         pos = self._positions(table, text_col).persist()
         batch_dg = pos.select("_dg").distinct().persist()
         n_dg = batch_dg.count()
-        hint = _choose_broadcast(broadcast_digests, lambda: n_dg)
+        hint = sizing.choose_broadcast(broadcast_digests, lambda: n_dg)
         probe = F.broadcast(batch_dg) if hint else batch_dg
         seen = stored.join(probe, "_dg").select("_dg").distinct()
         if within_batch:
@@ -3539,7 +3221,7 @@ class GramIndex:
         # map-side partial aggregation shuffles distinct digests, far
         # less than the window's full-row shuffle, so past the gate the
         # join spelling stays.
-        if self._store_small(spark, sized):
+        if sizing.provably_small(sized, spark):
             dup_pos = (
                 store.select(
                     "_id",
@@ -3562,58 +3244,6 @@ class GramIndex:
         return _positions_to_spans(dup_pos, self.min_tokens)
 
     # ------------------------------------------------- delta retro (r13)
-    #: stores whose position log is under this many ON-DISK bytes take
-    #: the r14 small-store shortcut in :meth:`retro_delta`: every probe
-    #: broadcast is trivially driver-safe (derived sets ⊆ store rows;
-    #: 64 MB of snappy parquet ≈ 2-5M (id,pos,digest) rows ≈ well under
-    #: the 5M-row broadcast bound even at ~4× in-memory expansion), so
-    #: the per-stage stats counts are skipped — the MB-scale cadence
-    #: drops its fixed job overhead to near the full-retro floor.
-    _SMALL_STORE_BYTES = 64 * 1024 * 1024
-
-    def _store_small(self, spark, sized: list) -> bool:
-        """The r14/r15 small-store gate, spelled once for retro() and
-        retro_delta(): on-disk bytes (free from the driver listing)
-        under :data:`_SMALL_STORE_BYTES`, then footer rows (driver-side
-        metadata, early-exit past the cap) under the broadcast bound."""
-        if sum(b for _, b in sized) > self._SMALL_STORE_BYTES:
-            return False
-        stats = _footer_rows_unc(
-            [f for f, _ in sized], spark,
-            rows_cap=BROADCAST_CANDIDATE_LIMIT,
-        )
-        return stats is not None and stats[0] <= BROADCAST_CANDIDATE_LIMIT
-
-    @staticmethod
-    def _footer_rows(files: list[str], spark=None) -> int | None:
-        """Total row count from the parquet FOOTERS — driver-side
-        metadata reads, no Spark job (r15, ADVICE r14 low): the on-disk
-        byte gate alone under-counts rows on well-compressed position
-        logs (sorted ``_id``/``_pos`` delta-encode, repeated digests
-        dictionary-encode, far better than the ~4x the byte gate
-        assumed), so a sub-64 MB store can decompress past the 5M-row
-        broadcast bound the count-based path enforces. Returns None when
-        any footer is unreadable — callers fall back to the measured
-        per-stage counts.
-
-        r16 (VERDICT r15 / ADVICE r15 low): non-local schemes (hdfs://,
-        s3a://, ...) — the deployments the broadcast cap actually
-        protects — now stream the footer TAIL through the same Hadoop
-        ``FileSystem.open`` the sidecar readers use instead of throwing
-        on a local ``pq.ParquetFile`` open (which silently disabled the
-        shortcut off local disk). Only the last ``footer_len + 8`` bytes
-        cross the wire, not the file."""
-        try:
-            total = 0
-            for f in files:
-                meta = _footer_meta(f, spark)
-                if meta is None:
-                    return None
-                total += meta.num_rows
-            return total
-        except Exception:
-            return None
-
     @staticmethod
     def _tag_of(file_path: str) -> str:
         return file_path.split("/_batch=", 1)[1].split("/", 1)[0]
@@ -3735,7 +3365,6 @@ class GramIndex:
         broadcast_digests: bool | None = None,
         durability: str = "deferred",
         output_path: str | None = None,
-        fuse_store_scan: bool = True,
     ) -> DataFrame:
         """Incremental retro-flagging (r13, VERDICT r12 #4): the spans of
         every document TOUCHED by data ingested since the last
@@ -3763,9 +3392,9 @@ class GramIndex:
            their digests, counted corpus-wide the same way) merges into
            maximal spans — O(touched), not O(store).
 
-        Store IO is still a handful of column-pruned scans (only
-        ``_dg``/``_id``/``_pos`` ever leave the parquet reader), but the
-        SHUFFLED and EMITTED volume — the part that dominated retro()'s
+        Store IO is one column-pruned scan (only ``_dg``/``_id``/``_pos``
+        leave the parquet reader) into a cache the four stages share,
+        and the SHUFFLED and EMITTED volume — the part that dominated retro()'s
         cadence at a growing store — scales with the batch and its
         touched neighborhood (probe-measured in SCALEPROBE.md).
         ``broadcast_digests``: same tri-state as :meth:`add`, decided
@@ -3798,14 +3427,6 @@ class GramIndex:
           :meth:`retro`). At-most-once; only for callers that prefer
           never re-emitting over never losing.
 
-        ``fuse_store_scan`` (r14, VERDICT r13 #4): the cadence's four
-        store-wide probe joins read ONE persisted (memory-and-disk)
-        ``(_id, _pos, _dg)`` projection of the store instead of four
-        column-pruned parquet scans — trading 3 redundant store reads
-        for one cache materialization (the probe sets were already
-        persisted; the store scan was the remaining repeated work).
-        ``False`` restores the scan-per-stage spelling for deployments
-        where executor spill space is scarcer than scan IO.
         :meth:`maintain` keeps both watermark halves valid across
         compaction renames (see :meth:`_advance_retro_watermark`)."""
         if not self.count_mode:
@@ -3865,20 +3486,11 @@ class GramIndex:
             "/",
         ).getItem(0).isin(*new_tags)
 
-        # r14 small-store shortcut (gate shared by both spellings below):
-        # every derived probe set is a subset of the store's rows, so the
-        # store's ON-DISK byte size — free metadata from the driver
-        # listing above, zero jobs — bounds all four stage decisions at
-        # once while it stays under _SMALL_STORE_BYTES (sized so even
-        # the whole store broadcast is driver-safe). r15 (ADVICE r14
-        # low): ALSO cap by the footer row count (driver-side metadata,
-        # still zero jobs) — delta/dictionary-encoded position logs
-        # compress far better than the ~4x the byte gate assumed.
-        all_small = broadcast_digests is None and self._store_small(
-            spark, sized
-        )
-
-        if all_small and fuse_store_scan:
+        # small-store shortcut (r14-r16): the size gate proves the
+        # position log small from the listing's on-disk bytes and the
+        # footer rows, zero jobs — every derived probe set is a subset of
+        # its rows.
+        if broadcast_digests is None and sizing.provably_small(sized, spark):
             # r16 (VERDICT r15 #1/#6 — the cadence's job count): a store
             # the gate just PROVED tiny (<= 64 MB on disk, <= 5M rows)
             # does not need the four-stage probe-broadcast protocol —
@@ -3927,29 +3539,26 @@ class GramIndex:
                 durability, output_path,
             )
 
-        new_src = None
-        if fuse_store_scan:
-            # one store read feeds all four probe joins; memory-and-disk
-            # so a store larger than executor memory spills, never OOMs.
-            # r16 (VERDICT r15 #1): the fused projection also carries a
-            # 1-byte newness flag derived from the scanned file path, so
-            # the new-digest stage below reads THIS cache instead of
-            # paying a second parquet scan (+ decode) of the new tags —
-            # the store pass the cadence must do anyway covers both.
-            from pyspark import StorageLevel
+        # one store read feeds all four probe joins (r14, VERDICT r13
+        # #4); memory-and-disk so a store larger than executor memory
+        # spills, never OOMs. r16 (VERDICT r15 #1): the fused projection
+        # also carries a 1-byte newness flag derived from the scanned file
+        # path, so the new-digest stage below reads THIS cache instead of
+        # paying a second parquet scan (+ decode) of the new tags — the
+        # store pass the cadence must do anyway covers both.
+        from pyspark import StorageLevel
 
-            # parallelize the CACHE, not just the scan (r16): the four
-            # probe stages each re-read this projection, and a store
-            # compacted into few files would pin every one of them to a
-            # near-single-task stage — serialized back to back under
-            # AQE. ensure_parallelism is metadata-only and a no-op at
-            # cluster scale (a 100 TB store already yields ~10^5 splits).
-            fused = ensure_parallelism(
-                store.select("_id", "_pos", "_dg", is_new.alias("_new"))
-            ).persist(StorageLevel.MEMORY_AND_DISK)
-            new_src = fused.where("_new").select("_dg")
-            store = fused.select("_id", "_pos", "_dg")
-            cached.append(fused)
+        # parallelize the CACHE, not just the scan (r16): the four probe
+        # stages each re-read this projection, and a store compacted into
+        # few files would pin every one of them to a near-single-task
+        # stage — serialized back to back under AQE. ensure_parallelism
+        # is metadata-only and a no-op at cluster scale (a 100 TB store
+        # already yields ~10^5 splits).
+        fused = ensure_parallelism(
+            store.select("_id", "_pos", "_dg", is_new.alias("_new"))
+        ).persist(StorageLevel.MEMORY_AND_DISK)
+        store = fused.select("_id", "_pos", "_dg")
+        cached.append(fused)
 
         def counted(probe: DataFrame, hint: bool) -> DataFrame:
             """Corpus-wide occurrence count restricted to ``probe``'s
@@ -3972,29 +3581,15 @@ class GramIndex:
         # one count per stage (each probe is persisted and reused by the
         # final plan, so the stats pass materializes work the plan needs
         # anyway); True/False skip the counts and force one spelling.
-        # (The fused small-store regime returned above via the window
-        # spelling; all_small still short-circuits the per-stage counts
-        # for the unfused spelling — the r14 shortcut.)
-        def stage_hint(probe: DataFrame) -> bool:
-            if all_small:
-                return True
-            return _choose_broadcast(broadcast_digests, probe.count)
-
-        new_dg = (
-            (
-                new_src
-                if new_src is not None
-                else spark.read.parquet(*new_files).select("_dg")
-            )
-            .distinct()
-            .persist()
-        )
-        hint_n = stage_hint(new_dg)
+        new_dg = fused.where("_new").select("_dg").distinct().persist()
+        hint_n = sizing.choose_broadcast(broadcast_digests, new_dg.count)
         changed_dg = counted(new_dg, hint_n).persist()
         # changed_dg ⊆ new_dg's digests (it is new_dg filtered by corpus
         # count), so a broadcast-safe stage 1 proves stage 2 safe — no
         # second count job in the at-scale (non-small-store) regime (r16)
-        hint_c = True if hint_n else stage_hint(changed_dg)
+        hint_c = hint_n or sizing.choose_broadcast(
+            broadcast_digests, changed_dg.count
+        )
         touched = (
             store.join(
                 F.broadcast(changed_dg) if hint_c else changed_dg, "_dg"
@@ -4003,12 +3598,12 @@ class GramIndex:
             .distinct()
             .persist()
         )
-        hint_t = stage_hint(touched)
+        hint_t = sizing.choose_broadcast(broadcast_digests, touched.count)
         touched_pos = store.join(
             F.broadcast(touched) if hint_t else touched, "_id"
         ).persist()
         tdg = touched_pos.select("_dg").distinct().persist()
-        hint_g = stage_hint(tdg)
+        hint_g = sizing.choose_broadcast(broadcast_digests, tdg.count)
         dup_tdg = counted(tdg, hint_g)
         dup_pos = touched_pos.join(
             F.broadcast(dup_tdg) if hint_g else dup_tdg, "_dg"

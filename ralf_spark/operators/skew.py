@@ -67,8 +67,9 @@ def choose_salt_buckets(
     avoid replicating the right side of a much heavier join. Callers who
     already know their skew pass an int instead (every oracle gate pins).
 
-    Stats-first (r11, VERDICT r10 #6 — the ``_corpus_row_estimate``
-    recipe): when the PLAN's row estimate proves the input is at most
+    Stats-first (r11, VERDICT r10 #6 — the
+    :func:`~ralf_spark.operators.util.plan_row_estimate` recipe): when
+    the PLAN's row estimate proves the input is at most
     ``stats_skip_rows`` rows, return 1 with NO Spark job at all — below
     that floor even total skew is one small task, and salting would
     only pay replication. ``stats_skip_rows=0`` disables the skip

@@ -20,8 +20,8 @@ def _parse_bytes(raw: str) -> int:
 
 
 def plan_row_estimate(df: DataFrame, est_row_bytes: int = 8) -> int:
-    """Row estimate WITHOUT running a job (r11, VERDICT r10 #6 — the
-    generic spelling of dedup's ``_corpus_row_estimate``): the
+    """Row estimate WITHOUT running a job (r11, VERDICT r10 #6 — first
+    spelled for ``simhash_near_dup_pairs``' block choice): the
     optimizer's rowCount when a catalog/CBO provides one, else plan
     sizeInBytes / ``est_row_bytes``. Returns -1 when neither is usable
     (unknown-size sentinel — e.g. a LocalRelation reports
@@ -42,6 +42,24 @@ def plan_row_estimate(df: DataFrame, est_row_bytes: int = 8) -> int:
     except Exception:
         pass
     return -1
+
+
+def observed_rows(obs, df: DataFrame) -> int:
+    """The ``rows`` metric of ``obs`` (observed on ``df``) once a job
+    that already ran has delivered it; ``df.count()`` instead when it has
+    not arrived within 10 s. The metrics reach the driver only after the
+    observed job ends, and ``Observation.get`` waits for them without a
+    bound — so a refactor that reorders the materializing action costs
+    one count job here, never a hang."""
+    import time
+
+    future = obs._jo.future()
+    deadline = time.monotonic() + 10.0
+    while not future.isCompleted():
+        if time.monotonic() > deadline:
+            return df.count()
+        time.sleep(0.005)
+    return int(obs.get["rows"])
 
 
 def ensure_parallelism(df: DataFrame, min_partitions: int | None = None) -> DataFrame:

@@ -1118,6 +1118,7 @@ def adversarial_probe(mults: list[int]) -> dict:
     bound stays under FORCED_CAP — a forced-broadcast twin run proving
     the two spellings emit the same rows."""
     import ralf_spark.operators.dedup as dd
+    import ralf_spark.plans.sizing as sz
     from ralf_spark.table import FeatureTable
 
     PROBE_LIMIT = 200_000
@@ -1126,8 +1127,8 @@ def adversarial_probe(mults: list[int]) -> dict:
     spark = _session()
     spark.sparkContext.setLogLevel("ERROR")
     out: dict[str, dict] = {}
-    orig_limit = dd.BROADCAST_CANDIDATE_LIMIT
-    orig_choose = dd._choose_broadcast
+    orig_limit = sz.BROADCAST_CANDIDATE_LIMIT
+    orig_choose = sz.choose_broadcast
     rec: dict = {}
 
     def spy(choice, bound_fn):
@@ -1135,11 +1136,11 @@ def adversarial_probe(mults: list[int]) -> dict:
             return bool(choice)
         bound = bound_fn()
         rec["bound"] = bound
-        rec["broadcast"] = bound <= dd.BROADCAST_CANDIDATE_LIMIT
+        rec["broadcast"] = bound <= sz.BROADCAST_CANDIDATE_LIMIT
         return rec["broadcast"]
 
-    dd.BROADCAST_CANDIDATE_LIMIT = PROBE_LIMIT
-    dd._choose_broadcast = spy
+    sz.BROADCAST_CANDIDATE_LIMIT = PROBE_LIMIT
+    sz.choose_broadcast = spy
     try:
         for m in mults:
             path = gen_documents_adversarial(m)
@@ -1179,8 +1180,8 @@ def adversarial_probe(mults: list[int]) -> dict:
                       flush=True)
             out[str(m)] = r
     finally:
-        dd.BROADCAST_CANDIDATE_LIMIT = orig_limit
-        dd._choose_broadcast = orig_choose
+        sz.BROADCAST_CANDIDATE_LIMIT = orig_limit
+        sz.choose_broadcast = orig_choose
         spark.stop()
     return {"probe_limit": PROBE_LIMIT, "runs": out}
 
@@ -2055,6 +2056,7 @@ def adversarial_add_probe(mults: list[int]) -> dict:
     from pyspark.sql import functions as F
 
     import ralf_spark.operators.dedup as dd
+    import ralf_spark.plans.sizing as sz
     from ralf_spark.table import FeatureTable
 
     PROBE_LIMIT = 200_000
@@ -2063,8 +2065,8 @@ def adversarial_add_probe(mults: list[int]) -> dict:
     spark = _session()
     spark.sparkContext.setLogLevel("ERROR")
     out: dict[str, dict] = {}
-    orig_limit = dd.BROADCAST_CANDIDATE_LIMIT
-    orig_choose = dd._choose_broadcast
+    orig_limit = sz.BROADCAST_CANDIDATE_LIMIT
+    orig_choose = sz.choose_broadcast
     rec: dict = {}
 
     def spy(choice, bound_fn):
@@ -2072,7 +2074,7 @@ def adversarial_add_probe(mults: list[int]) -> dict:
             return bool(choice)
         bound = bound_fn()
         rec["bound"] = bound
-        rec["broadcast"] = bound <= dd.BROADCAST_CANDIDATE_LIMIT
+        rec["broadcast"] = bound <= sz.BROADCAST_CANDIDATE_LIMIT
         return rec["broadcast"]
 
     def pair_stats(pairs_df):
@@ -2089,8 +2091,8 @@ def adversarial_add_probe(mults: list[int]) -> dict:
         ).first()
         return int(row["n"]), int(row["chk"] or 0)
 
-    dd.BROADCAST_CANDIDATE_LIMIT = PROBE_LIMIT
-    dd._choose_broadcast = spy
+    sz.BROADCAST_CANDIDATE_LIMIT = PROBE_LIMIT
+    sz.choose_broadcast = spy
     try:
         for m in mults:
             path = gen_documents_adversarial(m)
@@ -2144,8 +2146,8 @@ def adversarial_add_probe(mults: list[int]) -> dict:
             out[str(m)] = r
             shutil.rmtree(work, ignore_errors=True)
     finally:
-        dd.BROADCAST_CANDIDATE_LIMIT = orig_limit
-        dd._choose_broadcast = orig_choose
+        sz.BROADCAST_CANDIDATE_LIMIT = orig_limit
+        sz.choose_broadcast = orig_choose
         spark.stop()
     return {"probe_limit": PROBE_LIMIT, "runs": out}
 

@@ -409,12 +409,15 @@ def test_exclusive_ops_bump_store_epoch(spark, tmp_path):
     assert read_store_epoch(spark, p) == 2
 
 
-def test_footer_rows_via_file_scheme_hadoop_path(spark, tmp_path):
-    """r16 (VERDICT r15 #5): the parquet footer row count must be
-    readable through the Hadoop FS API under an explicit scheme (the
+def test_footer_rows_via_file_scheme_hadoop_path(
+    spark, tmp_path, monkeypatch
+):
+    """r16 (VERDICT r15 #5): the size gate must read parquet footer rows
+    through the Hadoop FS API under an explicit scheme (the
     remote-filesystem code path), not only from a bare local path, and
-    both paths must agree."""
-    from ralf_spark.operators.dedup import GramIndex
+    both paths must agree — a row bound of 1234 admits the file, 1233
+    refuses it."""
+    import ralf_spark.plans.sizing as sizing
 
     p = str(tmp_path / "t.parquet")
     spark.range(0, 1234).coalesce(1).write.parquet(p)
@@ -422,11 +425,16 @@ def test_footer_rows_via_file_scheme_hadoop_path(spark, tmp_path):
         f for f in __import__("os").listdir(p) if f.endswith(".parquet")
     ]
     local = f"{p}/{files[0]}"
-    # bare local path (fast path)
-    assert GramIndex._footer_rows([local], spark) == 1234
-    # file:// scheme without spark -> local fast path still works
-    assert GramIndex._footer_rows([f"file://{local}"], spark) == 1234
+    size = __import__("os").path.getsize(local)
+    for limit, admitted in ((1234, True), (1233, False)):
+        monkeypatch.setattr(sizing, "BROADCAST_CANDIDATE_LIMIT", limit)
+        # bare local path (fast path)
+        assert sizing.provably_small([(local, size)], spark) is admitted
+        # file:// scheme -> local fast path still works
+        assert sizing.provably_small(
+            [(f"file://{local}", size)], spark
+        ) is admitted
     # force the remote (seek-to-tail Hadoop stream) path directly
-    from ralf_spark.operators.dedup import _footer_meta_remote
-
-    assert _footer_meta_remote(spark, f"file://{local}").num_rows == 1234
+    assert sizing._footer_meta_remote(
+        spark, f"file://{local}"
+    ).num_rows == 1234

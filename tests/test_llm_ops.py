@@ -105,7 +105,7 @@ def test_verify_spelling_knob_output_identical(spark, monkeypatch):
     forced chained-broadcast, forced shuffle join, and auto under a limit
     so tight auto MUST pick the shuffle spelling — all emit identical
     verified pairs. The hints change the physical join strategy only."""
-    import ralf_spark.operators.dedup as dd
+    import ralf_spark.plans.sizing as sizing
     from ralf_spark.operators.dedup import (
         containment_pairs,
         jaccard_pairs_inverted,
@@ -128,7 +128,7 @@ def test_verify_spelling_knob_output_identical(spark, monkeypatch):
             outs.append(sorted(map(tuple, df.collect())))
         return outs
 
-    monkeypatch.setattr(dd, "BROADCAST_CANDIDATE_LIMIT", 0)
+    monkeypatch.setattr(sizing, "BROADCAST_CANDIDATE_LIMIT", 0)
     for op in (near_dup_pairs, jaccard_pairs_inverted, containment_pairs):
         forced_b, forced_s, auto = run(op)
         assert forced_b == forced_s == auto and len(auto) > 0, op.__name__
@@ -142,11 +142,14 @@ def test_small_corpus_docs_broadcast_spelling(spark, tmp_path, monkeypatch):
     forced spellings. In-memory tables (no input files) must refuse the
     shortcut and keep the measured stats decision."""
     from ralf_spark.operators.dedup import (
-        _corpus_broadcastable,
         containment_pairs,
         jaccard_pairs_inverted,
     )
+    from ralf_spark.plans.sizing import EXPANSION, provably_small
     from ralf_spark.table import FeatureTable
+
+    def gate(df):
+        return provably_small(df, per_byte=EXPANSION["shingle"])
 
     base = "the quick brown fox jumps over the lazy dog again and again"
     rows = [
@@ -162,8 +165,8 @@ def test_small_corpus_docs_broadcast_spelling(spark, tmp_path, monkeypatch):
     t = FeatureTable(spark.read.parquet(p), key="doc_id")
 
     # admission: parquet-backed small corpus yes, in-memory no
-    assert _corpus_broadcastable(t.df) is True
-    assert _corpus_broadcastable(mem) is False
+    assert gate(t.df) is True
+    assert gate(mem) is False
     # r16: the analyzed-plan walk sees THROUGH persisted upstream frames
     # (inputFiles() goes blank on them) and admits row-BOUNDED lineages
     # (filters, semi joins) while refusing row-multiplying ones
@@ -172,13 +175,13 @@ def test_small_corpus_docs_broadcast_spelling(spark, tmp_path, monkeypatch):
     st = t.df.where("doc_id > 1").persist()
     semi = st.join(st.select("doc_id"), "doc_id", "left_semi")
     assert semi.inputFiles() == []  # the blind spot the walk fixes
-    assert _corpus_broadcastable(semi) is True
+    assert gate(semi) is True
     inner = t.df.join(t.df.select("doc_id"), "doc_id")
-    assert _corpus_broadcastable(inner) is False
+    assert gate(inner) is False
     expl = t.df.select(
         "doc_id", SF.explode(SF.split("text", " ")).alias("text")
     )
-    assert _corpus_broadcastable(expl) is False
+    assert gate(expl) is False
     st.unpersist()
 
     tracker = spark.sparkContext.statusTracker
@@ -196,7 +199,7 @@ def test_small_corpus_docs_broadcast_spelling(spark, tmp_path, monkeypatch):
 
     # the env kill switch restores the stats-job path
     monkeypatch.setenv("SPARK_GRAFT_SMALL_CORPUS", "0")
-    assert _corpus_broadcastable(t.df) is False
+    assert gate(t.df) is False
 
 
 @pytest.mark.slow
@@ -205,7 +208,10 @@ def test_minhash_index_small_sides_scoring(spark, tmp_path):
     take the sigs-broadcast scoring with ZERO plan-construction jobs
     beyond the documented lifecycle actions, and emit pairs identical
     to both forced spellings."""
+    from ralf_spark.connectors import _list_parquet_files_sized
     from ralf_spark.operators.dedup import MinHashIndex
+    from ralf_spark.plans.sizing import EXPANSION as X
+    from ralf_spark.plans.sizing import provably_small
     from ralf_spark.table import FeatureTable
 
     base = "the quick brown fox jumps over the lazy dog again and again"
@@ -237,26 +243,191 @@ def test_minhash_index_small_sides_scoring(spark, tmp_path):
                 idx.check(second, threshold=0.4, within_batch=True,
                           broadcast_candidates=bc).collect())
         )
-        assert idx._small_serving_sides(spark, second) is True
+        # both serving sides pass the gate: the batch (text and row
+        # payloads) and the stored signature table
+        assert provably_small(
+            second.df,
+            per_byte=X["shingle"],
+            per_row=max(
+                idx.num_perm * X["sig_perm"] + X["sig_frame"],
+                idx.bands * X["bucket_row"],
+            ),
+        )
+        assert provably_small(
+            _list_parquet_files_sized(spark, f"{idx.path}/sigs"), spark,
+            per_byte=X["stored_sig"],
+        )
         outs[bc] = (add_pairs, chk_pairs)
     assert outs[None] == outs[True] == outs[False]
     assert outs[None][0]  # the sphinx pair crosses the batches
 
 
+def _broadcast_payloads(df) -> list[tuple[str, int]]:
+    """(output columns, serialized bytes) of every broadcast relation the
+    executed plan of ``df`` built, cached subplans included. Serialized
+    bytes are what each executor receives; the exchange's ``dataSize``
+    metric counts whole allocator pages instead (>= 32 MB for any
+    string-keyed relation, however few its rows)."""
+    jvm = df.sparkSession._jvm
+    out = []
+
+    def walk(p):
+        cls = p.getClass().getSimpleName()
+        if cls == "AdaptiveSparkPlanExec":
+            return walk(p.executedPlan())
+        if cls.endswith("QueryStageExec"):
+            return walk(p.plan())
+        if cls == "InMemoryTableScanExec":
+            walk(p.relation().cachedPlan())
+        if cls == "BroadcastExchangeExec":
+            buf = jvm.java.io.ByteArrayOutputStream()
+            oos = jvm.java.io.ObjectOutputStream(buf)
+            p.relationFuture().get().value().writeExternal(oos)
+            oos.flush()
+            out.append((p.output().toString(), buf.size()))
+        it = p.children().iterator()
+        while it.hasNext():
+            walk(it.next())
+
+    walk(df._jdf.queryExecution().executedPlan())
+    return out
+
+
+def _footer_rows_unc(paths) -> tuple[int, int]:
+    import glob
+
+    import pyarrow.parquet as pq
+
+    rows = unc = 0
+    for path in paths:
+        for f in glob.glob(f"{path}/**/*.parquet", recursive=True):
+            m = pq.ParquetFile(f).metadata
+            rows += m.num_rows
+            unc += sum(
+                m.row_group(i).column(j).total_uncompressed_size
+                for i in range(m.num_row_groups)
+                for j in range(m.num_columns)
+            )
+    return rows, unc
+
+
+@pytest.mark.parametrize("hash_fn", ["md5", "xxhash64"])
+def test_expansion_table_bounds_broadcasts(spark, tmp_path, hash_fn):
+    """Every small spelling, built on the worst case of the expansion
+    table (1-char tokens, all shingles and digests distinct), broadcasts
+    no more than the byte bound the size gate computes for its input
+    from footers: the docs broadcast of the pair operators, the digest
+    broadcast of cross_corpus_duplicate_spans, and the bucket and
+    signature broadcasts of MinHashIndex.add."""
+    import random
+
+    from ralf_spark.operators.dedup import (
+        MinHashIndex,
+        cross_corpus_duplicate_spans,
+    )
+    from ralf_spark.operators.util import unpersist_cached
+    from ralf_spark.plans.sizing import EXPANSION as X
+    from ralf_spark.plans.sizing import provably_small
+
+    rnd = random.Random(7)
+    letters = "abcdefghijklmnopqrstuvwxyz"
+    paths = []
+    for half in range(2):
+        rows = [
+            (i, " ".join(rnd.choice(letters) for _ in range(400)))
+            for i in range(half * 150, half * 150 + 150)
+        ]
+        paths.append(str(tmp_path / f"docs{half}"))
+        spark.createDataFrame(rows, "doc_id long, text string").coalesce(
+            1
+        ).write.parquet(paths[-1])
+    first, second = (
+        FeatureTable(spark.read.parquet(p), key="doc_id") for p in paths
+    )
+    corpus = FeatureTable(spark.read.parquet(*paths), key="doc_id")
+    _, unc = _footer_rows_unc(paths)
+
+    def measured(df, col):
+        df.collect()
+        sizes = [b for cols, b in _broadcast_payloads(df) if col in cols]
+        unpersist_cached(df)
+        assert sizes, f"no broadcast of {col}: small spelling not taken"
+        return max(sizes)
+
+    # pair operators: the docs (shingle table) broadcast
+    assert provably_small(corpus.df, per_byte=X["shingle"])
+    got = measured(near_dup_pairs(corpus, hash_fn=hash_fn), "_sh")
+    assert got <= unc * X["shingle"], (got, unc)
+
+    # cross-corpus spans: the eval side's digest broadcast
+    assert provably_small(corpus.df, per_byte=X["digest"])
+    got = measured(
+        cross_corpus_duplicate_spans(corpus, corpus, hash_fn=hash_fn), "_dg"
+    )
+    assert got <= unc * X["digest"], (got, unc)
+
+    # MinHashIndex.add: batch buckets and (stored + batch) signatures
+    idx = MinHashIndex(str(tmp_path / "mh"), hash_fn=hash_fn)
+    idx.build(first)
+    _, store_unc = _footer_rows_unc([f"{idx.path}/sigs"])
+    batch_rows, _ = _footer_rows_unc(paths[1:])
+    batch_bound = batch_rows * max(
+        idx.num_perm * X["sig_perm"] + X["sig_frame"],
+        idx.bands * X["bucket_row"],
+    )
+    pairs = idx.add(second)
+    pairs.collect()
+    sizes = _broadcast_payloads(pairs)
+    unpersist_cached(pairs)
+    buckets = [b for cols, b in sizes if "_band" in cols]
+    sigs = [b for cols, b in sizes if "_sig" in cols]
+    assert buckets and sigs, sizes
+    assert max(buckets) <= batch_bound, (buckets, batch_bound)
+    sig_bound = batch_bound + store_unc * X["stored_sig"]
+    assert max(sigs) <= sig_bound, (sigs, sig_bound)
+
+
+def test_observed_rows_falls_back_to_count(spark):
+    """The bounded Observation read: a metric whose job already ran is
+    read with no job; one whose dataset never ran an action is not
+    waited on forever — the row count comes from a count job instead."""
+    from pyspark.sql import Observation
+
+    from ralf_spark.operators.util import observed_rows
+
+    tracker = spark.sparkContext.statusTracker
+
+    def jobs():
+        return len(tracker().getJobIdsForGroup(None))
+
+    fired = Observation()
+    df = spark.range(7).observe(fired, F.count(F.lit(1)).alias("rows"))
+    df.collect()
+    j0 = jobs()
+    assert observed_rows(fired, df) == 7
+    assert jobs() == j0  # read from the observation
+
+    never = Observation()
+    df = spark.range(5).observe(never, F.count(F.lit(1)).alias("rows"))
+    j0 = jobs()
+    assert observed_rows(never, df) == 5
+    assert jobs() > j0  # the fallback count ran
+
+
 def test_choose_broadcast_tristate():
     """Explicit True/False never runs the stats job; auto compares the
     bound against the module limit."""
-    import ralf_spark.operators.dedup as dd
+    import ralf_spark.plans.sizing as sz
 
     def boom():
         raise AssertionError("stats job must not run on explicit choice")
 
-    assert dd._choose_broadcast(True, boom) is True
-    assert dd._choose_broadcast(False, boom) is False
-    assert dd._choose_broadcast(None, lambda: dd.BROADCAST_CANDIDATE_LIMIT) \
+    assert sz.choose_broadcast(True, boom) is True
+    assert sz.choose_broadcast(False, boom) is False
+    assert sz.choose_broadcast(None, lambda: sz.BROADCAST_CANDIDATE_LIMIT) \
         is True
-    assert dd._choose_broadcast(
-        None, lambda: dd.BROADCAST_CANDIDATE_LIMIT + 1
+    assert sz.choose_broadcast(
+        None, lambda: sz.BROADCAST_CANDIDATE_LIMIT + 1
     ) is False
 
 
@@ -265,6 +436,7 @@ def test_minhash_index_add_spelling_knob_identical(spark, tmp_path):
     """r9: MinHashIndex.add under forced-broadcast, forced-shuffle and
     auto-with-zero-limit returns the same pair set as the default."""
     import ralf_spark.operators.dedup as dd
+    import ralf_spark.plans.sizing as sz
 
     base = "the quick brown fox jumps over the lazy dog again and again"
     first = _docs(spark, [(1, base), (3, "alpha beta gamma delta epsilon "
@@ -274,9 +446,9 @@ def test_minhash_index_add_spelling_knob_identical(spark, tmp_path):
     for name, bc in (("bcast", True), ("smj", False), ("auto0", None)):
         idx = dd.MinHashIndex(str(tmp_path / name))
         idx.build(first)
-        old = dd.BROADCAST_CANDIDATE_LIMIT
+        old = sz.BROADCAST_CANDIDATE_LIMIT
         if bc is None:
-            dd.BROADCAST_CANDIDATE_LIMIT = 0
+            sz.BROADCAST_CANDIDATE_LIMIT = 0
         try:
             pairs = idx.add(second, broadcast_candidates=bc)
             got[name] = sorted(
@@ -284,7 +456,7 @@ def test_minhash_index_add_spelling_knob_identical(spark, tmp_path):
                 for r in pairs.collect()
             )
         finally:
-            dd.BROADCAST_CANDIDATE_LIMIT = old
+            sz.BROADCAST_CANDIDATE_LIMIT = old
     assert got["bcast"] == got["smj"] == got["auto0"]
     assert [(p[0], p[1]) for p in got["bcast"]] == [(1, 2)]
 
@@ -839,7 +1011,9 @@ def test_simhash_near_dup_pairs_pigeonhole_recall_and_plan(spark):
             "arrow batches in a distributed engine running somewhere else"),
     ]
     t = _docs(spark, rows)
-    out = simhash_near_dup_pairs(t, bits=48, max_hamming=3)
+    # md5, like add_simhash's ground-truth fingerprints, whatever
+    # SPARK_GRAFT_HASH_FN the suite runs under
+    out = simhash_near_dup_pairs(t, bits=48, max_hamming=3, hash_fn="md5")
     pairs = {(r.id1, r.id2): r.hamming for r in out.collect()}
     # ground truth from the fingerprints themselves
     fps = {
@@ -984,6 +1158,7 @@ def test_hash_mode_env_default(spark, monkeypatch):
         plan = explain_str(df)
         return "xxhash64" in plan, "md5(" in plan
 
+    monkeypatch.delenv("SPARK_GRAFT_HASH_FN", raising=False)
     assert default_hash_fn() == "md5"
     sig = docs.df.select(minhash_signature(F.col("text"), num_perm=2))
     has_xx, has_md5 = modes(sig)
@@ -1017,6 +1192,7 @@ def test_minhash_index_pins_hash_config(spark, tmp_path, monkeypatch):
     against xxhash64 ones (zero collisions = empty pairs)."""
     from ralf_spark.operators.dedup import MinHashIndex
 
+    monkeypatch.delenv("SPARK_GRAFT_HASH_FN", raising=False)  # md5 build
     docs = _docs(spark, [(1, "a b c d e f"), (2, "a b c d e g")])
     path = str(tmp_path / "idx")
     MinHashIndex(path, num_perm=4, bands=2).build(docs)
@@ -3057,17 +3233,19 @@ def test_unicode_mode_span_removal_cuts_normalized_stream(spark):
     assert asc[2].n_removed == 0
 
 
-def test_retro_delta_scans_are_column_pruned(spark, tmp_path):
-    """Scale contract of the UNFUSED spelling (r13; r14 keeps it behind
-    ``fuse_store_scan=False``): the per-stage store scans are COLUMN
-    PRUNED at the parquet reader — the digest probes read only _dg, the
-    touched-doc scan (_id, _dg); only the final touched-position scan
-    reads the full (_id, _pos, _dg) log."""
+def test_retro_delta_scans_are_column_pruned(spark, tmp_path, monkeypatch):
+    """Scale contract of the at-scale (fused) spelling, forced with the
+    size gate off: the position log is scanned ONCE, column-pruned to
+    (_id, _pos, _dg) plus the file path behind the newness flag, and
+    every probe stage reads the shared cache instead of the parquet
+    files."""
     import re
 
     from ralf_spark.operators.dedup import GramIndex
+    from ralf_spark.operators.util import unpersist_cached
     from ralf_spark.plans.explain import explain_str
 
+    monkeypatch.setenv("SPARK_GRAFT_SMALL_CORPUS", "0")
     docs = _docs(
         spark,
         [
@@ -3080,71 +3258,64 @@ def test_retro_delta_scans_are_column_pruned(spark, tmp_path):
         auto_maintain=0,
     )
     idx.build(docs)
-    plan = explain_str(idx.retro_delta(spark, fuse_store_scan=False))
-    schemas = sorted(re.findall(r"ReadSchema: (struct<[^\n]*>)", plan))
-    full = [s for s in schemas if "_pos" in s]
-    digest_only = [s for s in schemas if s == "struct<_dg:string>"]
-    assert len(full) == 1  # exactly one scan pays the position column
-    assert len(digest_only) >= 3  # every probe scan pruned to the digest
+    d = idx.retro_delta(spark)
+    plan = explain_str(d)
+    schemas = re.findall(r"ReadSchema: (struct<[^\n]*>)", plan)
+    assert len(schemas) == 1  # one scan of the position log
+    assert schemas[0].startswith("struct<_id:bigint,_pos:int,_dg:")
+    # the four probe stages read the fused cache
+    assert plan.count("InMemoryTableScan") >= 4
+    unpersist_cached(d)
 
 
-@pytest.mark.slow
 def test_retro_delta_fused_store_scan(spark, tmp_path, monkeypatch):
     """r14 (VERDICT r13 #4) updated for r16 (VERDICT r15 #1): the
     default cadence on a footer-proved small store is the ONE-PASS
     window spelling — a single full-log scan, no probe joins, no
-    broadcasts, no cache; with the small-store gate refused (the 100 TB
-    regime) the fused probe chain persists ONE (_id, _pos, _dg) store
-    projection and routes all four probe joins through it. All three
-    spellings emit identical spans."""
+    broadcasts, no cache — and retro() counts through a window. With
+    ``SPARK_GRAFT_SMALL_CORPUS=0`` (the 100 TB regime) the size gate
+    refuses GramIndex too: retro_delta takes the fused probe chain,
+    which persists ONE (_id, _pos, _dg) store projection and routes all
+    four probe joins through it, and retro() the groupBy + rejoin. Both
+    regimes emit identical spans."""
     import re
 
     from ralf_spark.operators.dedup import GramIndex
+    from ralf_spark.operators.util import unpersist_cached
     from ralf_spark.plans.explain import explain_str
 
     b1, b2, _ = _gram_batches()
     spans = {}
-    for mode, flag in (("window", True), ("fused", True), ("scans", False)):
+    for mode in ("window", "fused"):
         if mode == "fused":
-            # refuse the small-store gate -> probe-chain spelling
-            monkeypatch.setattr(GramIndex, "_SMALL_STORE_BYTES", 0)
-        else:
-            monkeypatch.setattr(
-                GramIndex, "_SMALL_STORE_BYTES", 64 * 1024 * 1024
-            )
+            monkeypatch.setenv("SPARK_GRAFT_SMALL_CORPUS", "0")
         idx = GramIndex(
             str(tmp_path / mode), min_tokens=8, count_mode=True,
             auto_maintain=0,
         )
         idx.build(_docs(spark, list(b1.items())))
         idx.add(_docs(spark, list(b2.items()))).collect()
-        if mode == "scans":
-            d = idx.retro_delta(spark, fuse_store_scan=False)
-        else:
-            d = idx.retro_delta(spark)
-        plan = explain_str(d)
+        d = idx.retro_delta(spark)
+        r = idx.retro(spark)
+        plan, retro_plan = explain_str(d), explain_str(r)
         schemas = re.findall(r"ReadSchema: (struct<[^\n]*>)", plan)
         if mode == "window":
             # one-pass: a single scan pays the position log, and the
             # plan carries no joins and no broadcasts at all
             assert len([s for s in schemas if "_pos" in s]) == 1
             assert "Join" not in plan and "Broadcast" not in plan
+            assert "Join" not in retro_plan
         if mode == "fused":
             # the store is read through the cache: at most the one
             # fused projection scan pays the position column, and the
-            # cadence plan carries cache nodes
+            # cadence plan carries cache nodes and probe joins
             assert len([s for s in schemas if "_pos" in s]) <= 1
-            assert "InMemory" in plan
-        spans[mode] = sorted(tuple(r) for r in d.collect())
-        # retro() shares the gate (r16): window spelling under it,
-        # groupBy + rejoin past it — identical corpus-wide spans
-        spans[mode + "_retro"] = sorted(
-            tuple(r) for r in idx.retro(spark).collect()
-        )
-        from ralf_spark.operators.util import unpersist_cached
-
+            assert "InMemoryTableScan" in plan and "Join" in plan
+            assert "Join" in retro_plan and "HashAggregate" in retro_plan
+        spans[mode] = sorted(tuple(x) for x in d.collect())
+        spans[mode + "_retro"] = sorted(tuple(x) for x in r.collect())
         unpersist_cached(d)
-    assert spans["window"] == spans["fused"] == spans["scans"]
+    assert spans["window"] == spans["fused"]
     assert spans["window"]
     assert spans["window_retro"] == spans["fused_retro"]
     assert spans["window_retro"]
