@@ -45,12 +45,60 @@ def _hadoop_fs(spark: SparkSession, path: str):
     return fs, jpath
 
 
+#: sibling directories of a staged publish (:func:`_staged_overwrite`):
+#: the new state is written to ``<path>.__staging__``; the old one is
+#: parked at ``<path>.__retired__`` between the two publish renames.
+STAGING_SUFFIX = ".__staging__"
+RETIRED_SUFFIX = ".__retired__"
+
+
+def _publish_paths(spark: SparkSession, path: str):
+    """(FileSystem, path, staging, retired) Hadoop paths of a staged
+    publish onto ``path``."""
+    fs, jpath = _hadoop_fs(spark, path)
+    Path = spark._jvm.org.apache.hadoop.fs.Path  # type: ignore[attr-defined]
+    base = path.rstrip("/")
+    return (
+        fs, jpath, Path(base + STAGING_SUFFIX), Path(base + RETIRED_SUFFIX)
+    )
+
+
+def _rename(fs, src, dst) -> None:
+    """``FileSystem.rename`` that raises instead of returning false."""
+    if not fs.rename(src, dst):
+        raise IOError(f"staged publish: rename {src} -> {dst} failed")
+
+
+def _recover_staged_publish(spark: SparkSession, path: str) -> bool:
+    """Finish or undo a staged publish that a crash cut between its two
+    renames, and return whether ``path`` exists afterwards.
+
+    Only a missing ``path`` is repaired: it rolls forward from a staging
+    directory holding ``_SUCCESS`` (the new state was fully written), or
+    else rolls back from ``__retired__`` (the old state). So a crash
+    mid-publish reads as the pre- or post-crash state, never as "no
+    state". A present ``path`` is left alone; a stale staging or retired
+    sibling next to it is cleared by the next publish."""
+    fs, jpath, jstage, jretired = _publish_paths(spark, path)
+    if fs.exists(jpath):
+        return True
+    Path = spark._jvm.org.apache.hadoop.fs.Path  # type: ignore[attr-defined]
+    if fs.exists(Path(jstage, "_SUCCESS")):
+        _rename(fs, jstage, jpath)
+        fs.delete(jretired, True)
+        return True
+    if fs.exists(jretired):
+        _rename(fs, jretired, jpath)
+        return True
+    return False
+
+
 def _try_read_parquet(spark: SparkSession, path: str) -> DataFrame | None:
     """Read parquet state if it exists on the table's (possibly remote)
     filesystem, else None. os.path.exists would be a driver-local check
-    that silently discards remote state (ADVICE r2)."""
-    fs, jpath = _hadoop_fs(spark, path)
-    if not fs.exists(jpath):
+    that silently discards remote state (ADVICE r2). An interrupted
+    staged publish is recovered first (:func:`_recover_staged_publish`)."""
+    if not _recover_staged_publish(spark, path):
         return None
     return spark.read.parquet(path)
 
@@ -826,14 +874,16 @@ def upsert_into(
     ``ralf/v2/table_state.py:29-46``, amortized over a batch). Idempotent
     for replays (re-upserting the same batch is a no-op).
 
-    ``table_format="parquet"`` (default): reduce the batch to
-    latest-per-key first (only per-key winners shuffle), union with
-    current state, keep per-key winners, replace. The replace is staged
-    (write to ``.__staging__``, rewrite ``path``, drop staging) so a
-    mid-write failure never corrupts *staging and current at once*, but
-    the final rewrite itself is NOT atomic on plain parquet — a concurrent
-    reader can observe a partial ``path``, and the WHOLE state rewrites
-    every batch, which at 100 TB of state is the dominant cost.
+    ``table_format="parquet"`` (default): one ``latest()`` over current
+    state ∪ batch keeps the per-key winners (``max_by``'s partial
+    aggregation already reduces the batch map-side, so no separate batch
+    reduction runs), then :func:`_staged_overwrite` writes the result
+    once to ``.__staging__`` and publishes it by directory rename. A
+    crash mid-write leaves ``path`` untouched; a crash between the
+    publish renames is rolled forward (or back) by the next read. The
+    WHOLE state still rewrites every batch, which at 100 TB of state is
+    the dominant cost, and on object stores (S3A) a directory rename is
+    a copy, not atomic.
 
     ``table_format="delta"``: the production spelling — a real
     ``MERGE INTO`` against a Delta table at ``path``. Atomic (readers see
@@ -854,19 +904,18 @@ def upsert_into(
     spark = batch.df.sparkSession
     # single-writer guard (r12): fail loudly before the staged replace
     acquire_writer_lease(spark, path)
-    batch_latest = batch.latest().df
     current = _try_read_parquet(spark, path)
     if current is not None:
         merged = (
             FeatureTable(
-                current.unionByName(batch_latest),
+                current.unionByName(batch.df),
                 key=batch.key, ts=batch.ts, seq=batch.seq,
             )
             .latest()
             .df
         )
     else:
-        merged = batch_latest
+        merged = batch.latest().df
     _staged_overwrite(spark, merged, path)
 
 
@@ -969,24 +1018,35 @@ def _delta_merge_upsert(path: str, batch: FeatureTable) -> None:
 def _staged_overwrite(
     spark: SparkSession, df: DataFrame, path: str, partition_by: str | None = None
 ) -> None:
-    """Write ``df`` over ``path`` via a staging directory (the output may
-    derive from ``path``'s current contents, so a direct overwrite would
-    read and clobber the same files), then remove the staging dir."""
-    tmp = f"{path}.__staging__"
+    """Write ``df`` once to ``<path>.__staging__`` (the output may derive
+    from ``path``'s current contents, so a direct overwrite would read
+    and clobber the same files), then publish it by Hadoop FS renames
+    under the writer lease: drop a stale ``__retired__``, rename ``path``
+    to ``__retired__``, rename staging to ``path``, drop the retired copy.
+
+    A crash during the write leaves ``path`` untouched. A crash between
+    the two renames leaves no ``path``; :func:`_recover_staged_publish`
+    (run here first and by :func:`_try_read_parquet`) rolls it forward
+    from the complete staging directory or back from ``__retired__``.
+    On local and HDFS filesystems each rename is atomic; on object
+    stores (S3A) a directory rename is a copy and is not —
+    ``upsert_into(table_format="delta")`` is the atomic spelling there."""
+    _recover_staged_publish(spark, path)
+    fs, jpath, jstage, jretired = _publish_paths(spark, path)
     writer = df.write.mode("overwrite")
     if partition_by:
         writer = writer.partitionBy(partition_by)
-    writer.parquet(tmp)
+    writer.parquet(path.rstrip("/") + STAGING_SUFFIX)
     # fence + heartbeat keeper (r13): the staging write above is the long
-    # step; publish over ``path`` only while still the owner, renewing
-    # through the final rewrite
+    # step; publish over ``path`` only while still the owner. Neither
+    # rename may target an existing directory: Hadoop would move the
+    # source INTO it.
     with hold_writer_lease(spark, path):
-        reread = spark.read.parquet(tmp).write.mode("overwrite")
-        if partition_by:
-            reread = reread.partitionBy(partition_by)
-        reread.parquet(path)
-    fs, jtmp = _hadoop_fs(spark, tmp)
-    fs.delete(jtmp, True)
+        fs.delete(jretired, True)
+        if fs.exists(jpath):
+            _rename(fs, jpath, jretired)
+        _rename(fs, jstage, jpath)
+        fs.delete(jretired, True)
 
 
 class StateConnector(ABC):
@@ -1027,11 +1087,12 @@ class StateConnector(ABC):
         key, num_buckets)`` handle.
 
         Published via :func:`_staged_overwrite` (r14, ADVICE r13): the
-        full export lands in a staging directory first, and the target
-        is rewritten only under the writer lease — a crash during the
-        long distributed write leaves the target untouched instead of a
-        partial tree a fresh connector handle would happily load, and a
-        second concurrent exporter to the same target fails loudly."""
+        full export lands in a staging directory first, and replaces the
+        target by rename only under the writer lease — a crash during
+        the long distributed write leaves the target untouched instead
+        of a partial tree a fresh connector handle would happily load,
+        and a second concurrent exporter to the same target fails
+        loudly."""
         t = self.load(spark)
         if t.key is None:
             raise ValueError("bulk_export needs a keyed state table")
@@ -1098,11 +1159,11 @@ class ParquetStateConnector(StateConnector):
 
     def save(self, table: FeatureTable) -> None:
         state = table.latest() if (table.ts or table.seq) else table
-        (
-            state.df.withColumn("bucket", self._bucket())
-            .write.mode("overwrite")
-            .partitionBy("bucket")
-            .parquet(self.path)
+        _staged_overwrite(
+            state.df.sparkSession,
+            state.df.withColumn("bucket", self._bucket()),
+            self.path,
+            partition_by="bucket",
         )
 
     def load(self, spark: SparkSession) -> FeatureTable:

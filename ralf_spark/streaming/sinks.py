@@ -110,12 +110,13 @@ def foreach_batch_kv_upsert(
 #: that produced this table version) means the marker commits with the
 #: data in the same write — it can never disagree with the data it
 #: describes (VERDICT r6 #4; the previous driver-local
-#: ``.__last_batch__`` file could). Note the residual crash window:
-#: ``_staged_overwrite``'s final publish is a parquet overwrite (delete
-#: + rewrite), not a filesystem rename, so a crash mid-publish can
-#: leave a partial state table; recovery is "restart the stream from
-#: the checkpoint" (the staging copy re-derives the same batch), not
-#: marker/data divergence.
+#: ``.__last_batch__`` file could). ``_staged_overwrite`` publishes the
+#: staged table by filesystem rename; a crash between its two renames
+#: leaves no state directory, and the next ``_load_state`` rolls forward
+#: from the complete staging copy (or back to the retired one), so the
+#: marker read is always the pre- or post-crash batch. On object stores
+#: (S3A) a directory rename is a copy, not atomic; a transactional table
+#: format is the atomic spelling there.
 LAST_BATCH_COL = "_last_batch_id"
 
 
@@ -855,8 +856,9 @@ def _store_state(
     spark: SparkSession, merged: DataFrame, path: str, batch_id: int
 ) -> None:
     """Stamp every row with ``batch_id`` and replace the state directory
-    — data and exactly-once marker commit in the same write (see the
-    ``LAST_BATCH_COL`` note for the residual non-atomic-publish window)."""
+    — data and exactly-once marker commit in the same write and the same
+    rename publish (see the ``LAST_BATCH_COL`` note for crash recovery
+    and object stores)."""
     from ralf_spark.connectors import _staged_overwrite
 
     _staged_overwrite(
@@ -883,12 +885,14 @@ def foreach_batch_moments_upsert(
     exactly-once here relies on the checkpointed batch id — skip batches
     whose id is not greater than the last applied, recorded IN the state
     table (``LAST_BATCH_COL``, every row stamped) so data and marker
-    commit atomically in ``_staged_overwrite``'s directory swap on any
-    filesystem. A transactional table format's (appId, version) txn API
-    is the equivalent lakehouse spelling. ``buckets=N``: hash-bucketed
-    state layout — per-batch cost ∝ touched buckets, not key count, with
-    the marker (and replay skip) per bucket (see
-    :func:`_bucketed_fold_upsert`)."""
+    commit together in ``_staged_overwrite``'s rename publish; a crash
+    between its renames is rolled forward from the complete staging copy
+    (or back to the retired one) by the next read. On object stores
+    (S3A) the directory rename is a copy, not atomic — a transactional
+    table format's (appId, version) txn API is the atomic spelling.
+    ``buckets=N``: hash-bucketed state layout — per-batch cost ∝ touched
+    buckets, not key count, with the marker (and replay skip) per bucket
+    (see :func:`_bucketed_fold_upsert`)."""
 
     return df.writeStream.foreachBatch(
         moments_upsert_batch(path, key, value_col, buckets)
@@ -1479,7 +1483,7 @@ def foreach_batch_cms_upsert(
     (``operators.sketches.cms_counter_update``) and merges by
     counter-wise sum. Sums DO double-count on replay (unlike the HLL
     register max), so exactly-once rides the in-table batch marker —
-    data and marker commit atomically in the staged overwrite.
+    data and marker commit together in the staged rename publish.
     ``buckets=N``: hash-bucketed layout on the (r, bucket) cell key —
     uniformity with the other sinks (and the per-bucket replay marker);
     the CMS matrix itself is bounded, so this is never a scale need."""

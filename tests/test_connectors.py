@@ -246,6 +246,7 @@ def test_upsert_into_cleans_staging_dir(spark, tmp_path):
     upsert_into(path, _events(spark, [(1, 10, 1, 1.0)]))
     upsert_into(path, _events(spark, [(2, 10, 2, 2.0)]))
     assert not os.path.exists(path + ".__staging__")
+    assert not os.path.exists(path + ".__retired__")
     got = {r.user_id: r.value for r in spark.read.parquet(path).collect()}
     assert got == {1: 1.0, 2: 2.0}
 
@@ -253,11 +254,186 @@ def test_upsert_into_cleans_staging_dir(spark, tmp_path):
 def test_parquet_delete_cleans_staging_dir(spark, tmp_path):
     import os
 
-    con = ParquetStateConnector(str(tmp_path / "st"), key="user_id", num_buckets=4)
+    path = str(tmp_path / "st")
+    con = ParquetStateConnector(path, key="user_id", num_buckets=4)
     con.save(_events(spark, [(1, 10, 1, 1.0), (2, 10, 2, 2.0)]))
     con.delete(spark, [1])
-    assert not os.path.exists(str(tmp_path / "st") + ".__staging__")
+    assert not os.path.exists(path + ".__staging__")
+    assert not os.path.exists(path + ".__retired__")
     assert con.count(spark) == 1
+    # the renamed publish keeps the bucket= layout the point read prunes on
+    plan = explain_str(con.pruned_point_plan(spark, 2))
+    assert "PartitionFilters" in plan and "bucket" in plan
+    [row] = con.point_query(spark, 2)
+    assert row.value == 2.0
+
+
+def test_upsert_into_existing_state_job_budget(spark, tmp_path):
+    """An upsert into existing state writes it once: one ``latest()``
+    over state ∪ batch and one staged write published by rename — at
+    most 4 Spark jobs (the old staging re-read and rewrite plus the
+    separate batch reduction made it 7)."""
+    from ralf_spark.connectors import upsert_into
+
+    path = str(tmp_path / "state")
+    upsert_into(path, _events(spark, [(i, 10, i, float(i)) for i in range(50)]))
+    batch = _events(spark, [(i, 20, 100 + i, -float(i)) for i in range(0, 80, 2)])
+    sc = spark.sparkContext
+    sc.setJobGroup("upsert_budget", "upsert_into into existing state")
+    try:
+        upsert_into(path, batch)
+    finally:
+        sc.setJobGroup(None, None)
+    jobs = list(sc.statusTracker().getJobIdsForGroup("upsert_budget"))
+    assert 0 < len(jobs) <= 4, f"upsert_into ran {len(jobs)} jobs: {jobs}"
+    want = {i: float(i) for i in range(50)}
+    want.update({i: -float(i) for i in range(0, 80, 2)})
+    got = {r.user_id: r.value for r in spark.read.parquet(path).collect()}
+    assert got == want
+
+
+class _Crash(RuntimeError):
+    """Stands in for a writer killed mid-publish."""
+
+
+def _crash_before_staging_rename(real_rename):
+    """``connectors._rename`` that dies instead of moving staging onto
+    ``path``: the writer stops between the two publish renames, with
+    ``path`` already parked at ``__retired__``."""
+    from ralf_spark.connectors import STAGING_SUFFIX
+
+    def rename(fs, src, dst):
+        if src.getName().endswith(STAGING_SUFFIX):
+            raise _Crash("killed between the publish renames")
+        real_rename(fs, src, dst)
+
+    return rename
+
+
+def _crash_second_publish(spark, tmp_path, monkeypatch, case, write):
+    """Publish batch 1 with ``write(path, 1)``, then kill the publish of
+    batch 2 between its renames and leave the disk in the state ``case``
+    names:
+
+    - ``staging_complete``: ``path`` parked at ``__retired__``, the full
+      new state in staging (roll forward to batch 2);
+    - ``staging_gone``: as above, staging lost too (roll back to batch 1);
+    - ``stale_retired``: a ``__retired__`` from an earlier run sat next to
+      ``path`` before the crash and staging is lost — the rollback must
+      restore batch 1, not the stale copy.
+    """
+    import os
+    import shutil
+
+    import ralf_spark.connectors as conn
+
+    path = str(tmp_path / "state")
+    write(path, 1)
+    if case == "stale_retired":
+        stale = str(tmp_path / "stale")
+        write(stale, 1)
+        write(stale, 3)
+        shutil.copytree(stale, path + conn.RETIRED_SUFFIX)
+    with monkeypatch.context() as m:
+        m.setattr(conn, "_rename", _crash_before_staging_rename(conn._rename))
+        with pytest.raises(_Crash):
+            write(path, 2)
+    assert not os.path.exists(path)
+    assert os.path.exists(path + conn.RETIRED_SUFFIX)
+    if case != "staging_complete":
+        shutil.rmtree(path + conn.STAGING_SUFFIX)
+    return path
+
+
+_CRASH_CASES = ["staging_complete", "staging_gone", "stale_retired"]
+
+_UPSERT_BATCHES = {
+    1: [(1, 10, 1, 1.0), (2, 10, 2, 2.0)],
+    2: [(1, 20, 3, 9.0), (3, 10, 4, 3.0)],
+    3: [(2, 30, 5, 7.0), (4, 10, 6, 4.0)],
+}
+
+
+@pytest.mark.parametrize("case", _CRASH_CASES)
+def test_upsert_crash_between_publish_renames_recovers(
+    spark, tmp_path, monkeypatch, case
+):
+    """A writer killed between the publish renames leaves no ``path``;
+    the next read rolls forward from a complete staging directory or
+    back from ``__retired__`` — never "no state" — and the replayed and
+    next upserts equal an uninterrupted run."""
+    import os
+
+    from ralf_spark.connectors import (
+        RETIRED_SUFFIX,
+        STAGING_SUFFIX,
+        _try_read_parquet,
+        upsert_into,
+    )
+
+    def write(path, i):
+        upsert_into(path, _events(spark, _UPSERT_BATCHES[i]))
+
+    def rows(path):
+        return sorted(map(tuple, spark.read.parquet(path).collect()))
+
+    ref = str(tmp_path / "ref")
+    want = {}
+    for i in (1, 2, 3):
+        write(ref, i)
+        want[i] = rows(ref)
+
+    path = _crash_second_publish(spark, tmp_path, monkeypatch, case, write)
+    recovered = _try_read_parquet(spark, path)
+    assert recovered is not None
+    got = sorted(map(tuple, recovered.collect()))
+    assert got == (want[2] if case == "staging_complete" else want[1])
+    write(path, 2)  # the stream replays the batch it never saw committed
+    assert rows(path) == want[2]
+    write(path, 3)
+    assert rows(path) == want[3]
+    assert not os.path.exists(path + STAGING_SUFFIX)
+    assert not os.path.exists(path + RETIRED_SUFFIX)
+
+
+@pytest.mark.parametrize("case", _CRASH_CASES)
+def test_fold_sink_load_state_survives_publish_crash(
+    spark, tmp_path, monkeypatch, case
+):
+    """The fold sinks' replay marker lives in the state table, so after a
+    crash between the publish renames ``_load_state`` must return the
+    pre- or post-crash table (marker 1 or 2), never ``None`` — which would
+    re-fold every batch from the start — and the replay converges."""
+    from ralf_spark.streaming.sinks import _load_state, moments_upsert_batch
+
+    batches = {
+        i: spark.createDataFrame(
+            [(k, float(k * i + j)) for k in (1, 2, 3) for j in range(i + 1)],
+            "k long, v double",
+        )
+        for i in (1, 2, 3)
+    }
+
+    def write(path, i):
+        moments_upsert_batch(path, "k", "v")(batches[i], i)
+
+    def rows(path):
+        state, last = _load_state(spark, path)
+        return last, sorted(
+            (r.k, r.n, round(r.mean, 9), round(r.m2, 9))
+            for r in state.collect()
+        )
+
+    ref = str(tmp_path / "ref")
+    want = {}
+    for i in (1, 2):
+        write(ref, i)
+        want[i] = rows(ref)
+
+    path = _crash_second_publish(spark, tmp_path, monkeypatch, case, write)
+    assert rows(path) == (want[2] if case == "staging_complete" else want[1])
+    write(path, 2)  # replayed: skipped if rolled forward, folded if back
+    assert rows(path) == want[2]
 
 
 # ------------------------------------------------------------ snapshot diff

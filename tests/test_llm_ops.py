@@ -395,23 +395,29 @@ def test_observed_rows_falls_back_to_count(spark):
 
     from ralf_spark.operators.util import observed_rows
 
-    tracker = spark.sparkContext.statusTracker
+    sc = spark.sparkContext
 
-    def jobs():
-        return len(tracker().getJobIdsForGroup(None))
+    def rows_and_jobs(group, obs, df):
+        # a group of its own: the ungrouped job list is capped by
+        # spark.ui.retainedJobs, so its length stops growing in a long
+        # session
+        sc.setJobGroup(group, "observed_rows")
+        try:
+            rows = observed_rows(obs, df)
+        finally:
+            sc.setJobGroup(None, None)
+        return rows, len(sc.statusTracker().getJobIdsForGroup(group))
 
     fired = Observation()
     df = spark.range(7).observe(fired, F.count(F.lit(1)).alias("rows"))
     df.collect()
-    j0 = jobs()
-    assert observed_rows(fired, df) == 7
-    assert jobs() == j0  # read from the observation
+    # read from the observation
+    assert rows_and_jobs("observed_fired", fired, df) == (7, 0)
 
     never = Observation()
     df = spark.range(5).observe(never, F.count(F.lit(1)).alias("rows"))
-    j0 = jobs()
-    assert observed_rows(never, df) == 5
-    assert jobs() > j0  # the fallback count ran
+    rows, jobs = rows_and_jobs("observed_never", never, df)
+    assert rows == 5 and jobs > 0  # the fallback count ran
 
 
 def test_choose_broadcast_tristate():

@@ -140,7 +140,6 @@ def test_salted_join_equals_plain_join(spark):
         salted_join(left, right, key="user_id", salt_on="event_id", how="full")
 
 
-@pytest.mark.slow
 def test_merge_plan_matches_parquet_upsert_branch(spark, tmp_path):
     """Both upsert_into branches implement merge_upsert_plan: folding the
     same batch sequence through the parquet branch and through the MERGE
