@@ -1062,10 +1062,12 @@ def point_query_latest_state_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     half of the reference's table contract (``ralf/table.py:179-191``,
     ``ralf/client.py:8-11``) phrased as an oracle-checked registry query —
     ``FeatureTable.point_query_df`` over the events state, key 7 (present
-    at every fixture SF). The key predicate is applied below the
-    ``max_by`` state aggregate, so it reaches the parquet scan's
-    ``PushedFilters`` (plan-asserted in tests/test_core_surface.py):
-    a point read scans one key's rows, never the full state."""
+    at every fixture SF). The read is a key filter and a top-1
+    sort-limit (``TakeOrderedAndProject``): one Spark job and no shuffle,
+    with ``latest()``'s winner (NULL ts/seq order last). The key
+    predicate reaches the parquet scan's ``PushedFilters``
+    (plan-asserted in tests/test_core_surface.py): a point read scans
+    one key's rows, never the full state."""
     ev = _t(spark, sf_dir, "events")
     return ev.point_query_df(7).select(
         "event_id", "user_id", "event_type",

@@ -288,25 +288,33 @@ class FeatureTable:
 
     # ------------------------------------------------------------- queries
     def point_query_df(self, key_value: Any) -> DataFrame:
-        """The point-lookup PLAN: latest-per-key state filtered to one key.
+        """The point-lookup PLAN: the key's newest row by (ts, seq), read
+        as a filter and a top-1 sort-limit.
 
-        The key predicate is applied BEFORE the ``max_by`` aggregate — a
-        post-``latest()`` filter would sit on the aggregated payload
-        struct's field (``latest`` re-emits columns via ``_rec.*``), which
-        Catalyst cannot push through the agg; filtering the keyed input
-        first is equivalent (the payload's key field equals the grouping
-        key by construction) and lands in the scan's ``PushedFilters``
-        (plan-asserted in tests): only the key's own rows are read and
-        aggregated, never the full state. This is the oracle-checkable
-        serving read (driver-gated r7, VERDICT r6 #2)."""
-        filtered = self._with(
+        Spark plans the sort-limit as ``TakeOrderedAndProject``: on
+        ``collect`` each scan partition keeps its top row and the driver
+        merges them — one Spark job, no shuffle, no AQE re-plan (a
+        ``latest()`` aggregate would shuffle the key's rows only to choose
+        one of them). The key predicate lands in the scan's
+        ``PushedFilters`` (plan-asserted in tests): only the key's own
+        rows are read, never the full state. The winner is ``latest()``'s:
+        ``max_by`` over ``struct(ts, seq)`` orders a NULL field below
+        every value, which ``desc_nulls_last`` on each ordering column
+        reproduces. This is the oracle-checkable serving read
+        (driver-gated r7, VERDICT r6 #2)."""
+        if self.key is None:
+            raise ValueError("point_query requires a keyed table")
+        order = [c.desc_nulls_last() for c in self.order_cols()]
+        return (
             self.df.where(F.col(self.key) == F.lit(key_value))
+            .orderBy(*order)
+            .limit(1)
         )
-        return filtered.latest().df
 
     def point_query(self, key_value: Any) -> list[Row]:
         """Point lookup on the latest-per-key state (``ralf/table.py:179-191``,
-        ``ralf/client.py:8-11``). Convenience form — computes the state view
+        ``ralf/client.py:8-11``): :meth:`point_query_df` collected — one
+        Spark job, no shuffle. Convenience form — it reads the key's rows
         inline; for repeated serving-path lookups, persist the state with
         ``ralf_spark.connectors.ParquetStateConnector`` (key-bucketed layout,
         partition-pruned point reads) or ``SqliteStateConnector`` (indexed)."""

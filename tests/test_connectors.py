@@ -292,6 +292,34 @@ def test_upsert_into_existing_state_job_budget(spark, tmp_path):
     assert got == want
 
 
+def test_point_query_on_upserted_state_is_one_job(spark, tmp_path):
+    """A point read of persisted state is a key filter and a top-1
+    sort-limit: exactly 1 Spark job (a grouped ``max_by`` aggregate ran
+    2, with a shuffle and an AQE re-plan between them), planned as
+    ``TakeOrderedAndProject`` with no ``Exchange`` or ``HashAggregate``."""
+    from ralf_spark.connectors import upsert_into
+
+    path = str(tmp_path / "state")
+    upsert_into(path, _events(spark, [(i, 10, i, float(i)) for i in range(50)]))
+    batch = [(i, 20, 100 + i, -float(i)) for i in range(0, 80, 2)]
+    upsert_into(path, _events(spark, batch))
+    t = FeatureTable(spark.read.parquet(path), key="user_id", ts="ts", seq="seq")
+    sc = spark.sparkContext
+    sc.setJobGroup("point_budget", "FeatureTable.point_query on parquet state")
+    try:
+        [row] = t.point_query(4)
+    finally:
+        sc.setJobGroup(None, None)
+    jobs = list(sc.statusTracker().getJobIdsForGroup("point_budget"))
+    assert len(jobs) == 1, f"point_query ran {len(jobs)} jobs: {jobs}"
+    assert row.value == -4.0
+    df = t.point_query_df(4)
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "TakeOrderedAndProject" in plan, plan
+    assert "Exchange" not in plan and "HashAggregate" not in plan, plan
+
+
 class _Crash(RuntimeError):
     """Stands in for a writer killed mid-publish."""
 

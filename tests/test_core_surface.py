@@ -196,12 +196,55 @@ def test_point_query_returns_latest(spark):
     assert t.point_query("zzz") == []
 
 
+@pytest.mark.parametrize("key_type", ["long", "string"])
+def test_point_query_matches_latest(spark, key_type):
+    """The sort-limit point read picks ``latest()``'s row for every key,
+    on a multi-partition frame: NULL ts and NULL seq order below every
+    value (as in ``max_by`` over ``struct(ts, seq)``), and ties on ts
+    fall to seq. Absent keys read as no rows."""
+    def key(i):
+        return i if key_type == "long" else f"k{i}"
+
+    rows = []
+    for i in range(12):
+        rows += [
+            (key(i), 10, 1, 1.0 + i),
+            (key(i), 10, 2 + i % 3, 2.0 + i),  # same ts: seq decides
+        ]
+        if i % 3 == 0:
+            rows.append((key(i), None, 99, -1.0))  # NULL ts loses
+        if i % 4 == 0:
+            rows += [(key(i), 20, None, 5.0), (key(i), 20, 0, 6.0)]
+        if i % 5 == 0:
+            rows.append((key(i), 20, None, 7.0))  # NULL seq only
+    rows += [(key(50), None, None, 8.0), (key(50), None, 4, 9.0)]
+    rows.append((key(51), None, None, 10.0))
+    df = spark.createDataFrame(
+        rows, f"k {key_type}, ts long, seq long, v double"
+    ).repartition(4)
+    assert df.rdd.getNumPartitions() >= 4
+    t = FeatureTable(df, key="k", ts="ts", seq="seq")
+    state = t.latest().df
+    for k in [key(i) for i in range(12)] + [key(50), key(51), key(77)]:
+        want = state.where(F.col("k") == F.lit(k)).collect()
+        assert t.point_query(k) == want, k
+    assert t.point_query(key(77)) == []
+
+
+def test_point_query_errors_match_latest(spark):
+    df = spark.createDataFrame(
+        [("a", 1, 1, 1.0)], "k string, ts long, seq long, v double"
+    )
+    with pytest.raises(ValueError):
+        FeatureTable(df, ts="ts", seq="seq").point_query("a")
+    with pytest.raises(ValueError):
+        FeatureTable(df, key="k").point_query("a")
+
+
 def test_point_query_pushes_key_filter_to_scan(spark, tmp_path):
     """The point-read plan (r7 driver gate): the key predicate must land
-    in the parquet scan's PushedFilters — i.e. BELOW the max_by state
-    aggregate, where a filter on latest()'s output (a struct field of
-    the aggregated payload) could never be pushed. A point read scans
-    one key's rows, never the full state."""
+    in the parquet scan's PushedFilters, below the top-1 sort-limit, so
+    a point read scans one key's rows, never the full state."""
     from ralf_spark.plans.explain import pushed_filters
     from ralf_spark.table import FeatureTable
 

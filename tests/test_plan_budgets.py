@@ -29,6 +29,8 @@ BUDGETS = {
     # single-pass per-key aggregates: 1 scan, agg shuffle + output sort
     "per_key_avg": (1, 2, 0),
     "latest_per_key": (1, 2, 0),
+    # the serving read: key filter + top-1 sort-limit, never a shuffle
+    "point_query_latest_state": (1, 0, 0),
     "event_type_counts": (1, 3, 0),
     # count windows: one key shuffle + output sort (agg reuses partitioning)
     "tumbling_count_window": (1, 2, 0),
