@@ -21,6 +21,11 @@ the engine:
   streaming/foreachBatch small-file accretion.
 - :func:`file_stats` — per-file row counts + bytes, the observability
   view that tells you compaction is due.
+- :class:`BatchStore` — the store protocol of the persistent indexes
+  over ``_batch=<tag>`` trees: root lease for exclusive operations,
+  tag-scoped add leases, store epoch, fenced publish, ``_meta`` pin;
+  plus the folded-tag record of every log that refuses replays of
+  compacted tags (:func:`folded_tags`, :func:`compact_tiered`).
 
 The reference persists state as whole tables per connector
 (`ralf/v2/connectors/parquet_connector.py`); layout management beyond
@@ -30,11 +35,15 @@ Spark-first 100 TB design (SCALE.md §storage).
 
 from __future__ import annotations
 
+from contextlib import contextmanager
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+# the lease/epoch primitives are looked up on the module at call time,
+# so a wrapper installed on ``connectors`` (tracing) sees every call
+from ralf_spark import connectors
 from ralf_spark.connectors import _hadoop_fs
 
 
@@ -480,6 +489,339 @@ def compact_batch_partitions(
         "files_after_total": files_after,
         "bytes": total_bytes,
     }
+
+
+# ------------------------------------------------- the folded-tag record
+
+#: replay-guard sidecar of a batch-partitioned log: the cumulative set of
+#: raw ``_batch`` tags compaction has folded away. A replay of a folded
+#: tag would recreate its partition on top of the compacted rows — CMS
+#: counter sums and the pairs/spans logs double-count, and a GramIndex
+#: replay finds its own digests "seen" and misreports every position as
+#: duplicated — so writers skip or refuse such tags. The sidecar grows
+#: O(folded raw tags), ~40 bytes per batch: pruning by age would re-open
+#: the silent replay window for genuinely folded old tags.
+FOLDED_TAGS_NAME = ".compacted_tags.json"
+
+
+def folded_tags(spark: SparkSession, root: str) -> set[str]:
+    """Raw tags already folded by a compaction of ``root``."""
+    sidecar = f"{root}/{FOLDED_TAGS_NAME}"
+    fs, jpath = _hadoop_fs(spark, sidecar)
+    if not fs.exists(jpath):
+        return set()
+    return set(connectors.read_json_sidecar(spark, sidecar).get("tags", []))
+
+
+def _mark_folded(
+    spark: SparkSession, root: str, tags: list[str], folded: bool
+) -> None:
+    """Record (``folded=True``) or un-record raw ``tags`` in the sidecar;
+    ``compacted-*`` tags are never replayed, so never recorded."""
+    raw = {t for t in tags if not t.startswith("compacted-")}
+    cur = folded_tags(spark, root)
+    new = cur | raw if folded else cur - raw
+    if new != cur:
+        connectors.write_json_sidecar(
+            spark, f"{root}/{FOLDED_TAGS_NAME}", {"tags": sorted(new)}
+        )
+
+
+def _unmark_rolled_back(spark: SparkSession, root: str):
+    """``on_rollback`` hook: a crash between the record and the done
+    marker rolls the fold back with the source partitions intact, so
+    their replays are safe again — without the undo they would be
+    refused forever."""
+    return lambda tags: _mark_folded(spark, root, tags, folded=False)
+
+
+def compact_tiered(
+    spark: SparkSession,
+    root: str,
+    keep_last: int = 1,
+    tiered: bool = True,
+    record_folds: bool = False,
+    transform=None,
+    target_file_bytes: int = 128 * 1024 * 1024,
+) -> dict | None:
+    """One maintenance fold of ``root``: ``tiered`` picks the sources
+    with :func:`tiered_compaction_sources` (None when nothing useful
+    would fold); otherwise all but the newest ``keep_last`` tags fold.
+
+    ``record_folds`` (logs that guard replays): the folded raw tags are
+    recorded in :data:`FOLDED_TAGS_NAME` INSIDE the transaction (before
+    the done marker, so a crash after done cannot lose the record), and
+    a rolled-back earlier attempt's sources are un-recorded."""
+    sources = None
+    if tiered:
+        sources = tiered_compaction_sources(spark, root, keep_last=keep_last)
+        if sources is None:
+            return None
+    hooks = {}
+    if record_folds:
+        hooks = dict(
+            on_before_done=lambda tags: _mark_folded(spark, root, tags, True),
+            on_rollback=_unmark_rolled_back(spark, root),
+        )
+    return compact_batch_partitions(
+        spark, root, keep_last=keep_last, sources=sources,
+        transform=transform, target_file_bytes=target_file_bytes, **hooks,
+    )
+
+
+def recover_recording_folds(spark: SparkSession, root: str) -> None:
+    """:func:`recover_compaction` that un-records a rolled-back attempt's
+    sources (see :func:`compact_tiered`)."""
+    recover_compaction(
+        spark, root, on_rollback=_unmark_rolled_back(spark, root)
+    )
+
+
+def auto_compact_log(
+    spark: SparkSession, root: str, threshold: int
+) -> dict | None:
+    """Self-compaction of an append-only log (the streaming pairs/spans
+    logs): once more than ``threshold`` batch partitions exist (0
+    disables), a tiered fold — the log grows with the corpus — with the
+    folds recorded. keep_last=1 keeps the newest tag replayable."""
+    if not threshold or batch_tag_count(spark, root) <= threshold:
+        return None
+    return compact_tiered(spark, root, record_folds=True)
+
+
+# ------------------------------------------------- the batch-store protocol
+
+
+@dataclass(frozen=True)
+class AddFence:
+    """What a publish re-checks (:meth:`BatchStore.publish`): the lease
+    the writer holds — an add's tag lease and its writer id, or None for
+    the store root — and the store epoch read at the add's announce
+    (None: no epoch check)."""
+
+    lease_path: str | None = None
+    writer_id: str | None = None
+    epoch: int | None = None
+
+
+class _Exclusive:
+    """One :meth:`BatchStore.exclusive` block: the pre-flight's value,
+    and whether the body rebuilt or folded the store."""
+
+    def __init__(self, preflight) -> None:
+        self.preflight = preflight
+        self.rewritten = False
+
+
+#: pin fields older stores lack, read as what those stores were built
+#: under: pre-r12 stores carry no tokenizer field (single-space
+#: tokenizer — its digests differ from the whitespace tokenizer's on any
+#: multi-line text, so they must mismatch LOUDLY) and no count_mode field
+#: (membership GramIndex)
+_LEGACY_PIN = {"tokenizer": "space-r1", "count_mode": False}
+
+
+class BatchStore:
+    """The store protocol of a persistent index at ``path`` whose data
+    lives in ``<sub>/_batch=<tag>`` partitions (MinHashIndex, GramIndex,
+    IvfIndex) — the one place it is written down.
+
+    - **Exclusive operations** (build, maintain, the retro cadence) run
+      in :meth:`exclusive`: the store ROOT lease, a refusal while
+      foreign adds are in flight, an epoch bump when the store was
+      rebuilt or folded, and the root handed back on every normal exit.
+    - **Adds** run in :meth:`add_session`. With ``concurrent_adds`` an
+      add announces a tag-scoped lease (``<store>/_addleases/<tag>``),
+      so N workers fold disjoint batches in parallel — the bucket,
+      digest and cell unions commute, so the folded store is
+      serialization-independent. Single-writer adds hold the root.
+    - Every batch lands through the fenced :meth:`publish`.
+    - :meth:`snapshot` reads a frozen file list; :meth:`pin_meta`
+      guards the hashing config in ``_meta``.
+
+    The leases are filesystem sidecars: the contract is FAIL LOUDLY, not
+    mutual exclusion (see ``connectors.acquire_writer_lease``)."""
+
+    def __init__(
+        self,
+        path: str,
+        concurrent_adds: bool = False,
+        kind: str = "index",
+        pin: dict | None = None,
+        pin_schema: str | None = None,
+    ) -> None:
+        self.path = path
+        self.concurrent_adds = concurrent_adds
+        self.kind = kind
+        self.pin = pin
+        self.pin_schema = pin_schema
+
+    def _handoff(self, spark: SparkSession) -> None:
+        """Concurrent mode releases the root so waiting tag-scoped adders
+        resume at once instead of after the TTL. A single-writer handle
+        keeps it: its process identity renews it on every call."""
+        if self.concurrent_adds:
+            connectors.release_writer_lease(spark, self.path)
+
+    @contextmanager
+    def exclusive(
+        self, spark: SparkSession, preflight=None, check_adds: bool = True
+    ):
+        """Run an exclusive operation under the store root lease; yields
+        an op whose ``preflight`` holds ``preflight()``'s value.
+
+        The pre-flight — the in-flight-add check (``check_adds``: a
+        rebuild, fold or watermark write must not run under a foreign
+        add's frozen snapshot), then ``preflight()`` — mutates nothing,
+        so a refusal hands the root back: a refused op would otherwise
+        block every foreign adder for the full TTL. A failure in the
+        body KEEPS the lease: from the first store mutation on, the
+        holder may own partial state the next exclusive call must heal.
+        On every normal exit, early returns included, the body's
+        ``op.rewritten = True`` bumps the store epoch (a concurrent add
+        whose announce lapsed meanwhile then fails its publish fence
+        instead of publishing into the rewritten store), and the root
+        is handed back."""
+        connectors.acquire_writer_lease(spark, self.path)
+        try:
+            if check_adds:
+                connectors.assert_no_concurrent_adds(spark, self.path)
+            op = _Exclusive(preflight() if preflight else None)
+        except Exception:
+            self._handoff(spark)
+            raise
+        yield op
+        if op.rewritten:
+            connectors.bump_store_epoch(spark, self.path)
+        self._handoff(spark)
+
+    @contextmanager
+    def add_session(
+        self, spark: SparkSession, tag: str, writer_id: str | None = None
+    ):
+        """Hold the lease one add runs under; yields its :class:`AddFence`.
+
+        Concurrent mode announces the tag lease and keeps it heartbeated
+        through the publish, under a per-add-unique writer id, and reads
+        the store epoch at the announce. Single-writer mode takes the
+        root under the process identity and reads no epoch (the root is
+        held for the handle's whole lifecycle). It ignores ``writer_id``:
+        honoring it on this acquire alone made the publish's re-acquire,
+        and any nested auto-maintain, self-conflict on every batch."""
+        if not self.concurrent_adds:
+            connectors.acquire_writer_lease(spark, self.path)
+            yield AddFence()
+            return
+        with connectors.held_add_lease(
+            spark, self.path, tag, writer_id=writer_id
+        ) as (lease_path, wid):
+            yield AddFence(
+                lease_path, wid, connectors.read_store_epoch(spark, self.path)
+            )
+
+    def publish(
+        self,
+        df: DataFrame,
+        sub: str,
+        tag: str,
+        fence: AddFence = AddFence(),
+        partition_by: tuple[str, ...] = ("_batch",),
+    ) -> None:
+        """Fold ``df`` into its ``_batch=<tag>`` partition under
+        ``path/sub`` by DYNAMIC overwrite: a replayed tag rewrites its
+        own directories in place (idempotent), other batches' partitions
+        are untouched. Callers shape the file count first (``coalesce``,
+        ``repartition``).
+
+        Fenced: ``hold_writer_lease`` re-reads the lease this writer
+        holds — the work since the operation started can outlive the
+        TTL — and renews it during the write, so a long fold is never
+        stolen mid-publish. An add under a tag lease also re-checks the
+        ROOT (nobody contends the tag lease: a TTL-overrun add must fail
+        loudly, not publish into a store an exclusive op rebuilt or
+        folded meanwhile) and the epoch read at announce (a COMPLETED
+        exclusive op has released the root, so the lease check alone
+        passes vacuously after the fact)."""
+        spark = df.sparkSession
+        with connectors.hold_writer_lease(
+            spark, fence.lease_path or self.path, writer_id=fence.writer_id
+        ):
+            if fence.lease_path is not None:
+                connectors.check_no_foreign_root_lease(
+                    spark, self.path, writer_id=fence.writer_id
+                )
+                connectors.check_store_epoch(spark, self.path, fence.epoch)
+            (
+                df.withColumn("_batch", F.lit(tag))
+                .write.mode("overwrite")
+                .option("partitionOverwriteMode", "dynamic")
+                .partitionBy(*partition_by)
+                .parquet(f"{self.path}/{sub}")
+            )
+
+    def snapshot(
+        self, spark: SparkSession, sub: str, exclude_tag: str | None = None
+    ) -> DataFrame | None:
+        """Frozen snapshot of ``path/sub``: an explicit file list, so the
+        plan cannot pick up files written after this call. The
+        ``_batch`` value lives only in directory names, so the schema is
+        the bare projection. ``exclude_tag`` drops that batch: on a
+        replay its stored rows are the FAILED previous attempt of the
+        batch being re-added, about to be overwritten — not "stored"."""
+        files = connectors._list_parquet_files(spark, f"{self.path}/{sub}")
+        if exclude_tag is not None:
+            files = [f for f in files if f"/_batch={exclude_tag}/" not in f]
+        return spark.read.parquet(*files) if files else None
+
+    def pin_meta(
+        self, spark: SparkSession, write_if_missing: bool = True
+    ) -> None:
+        """Pin the hashing configuration (``pin``) in ``_meta``.
+
+        Digests or signatures hashed under another mode, shape or
+        tokenizer never match the stored ones — a silent zero-matches
+        failure, reachable whenever ``hash_fn=None`` resolves a flipped
+        ``SPARK_GRAFT_HASH_FN``. The first writer records the pin; every
+        later open validates it and raises on mismatch.
+        ``write_if_missing=False`` (read-only paths) verifies without
+        ever creating the sidecar: a reader must not stamp its config
+        onto a store it never built.
+
+        Tri-state, via the driver-side sidecar helpers (no Spark job):
+        absent or a crashed writer's empty ``_meta`` → (re)write;
+        committed but unreadable → raise. First-time creation is not
+        coordinated: two handles racing to create one store both write,
+        last write wins — benign for identical configs, the only sane
+        concurrent use."""
+        meta_path = f"{self.path}/_meta"
+        names = tuple(self.pin)
+        mine = tuple(self.pin.values())
+        rows = connectors.read_parquet_sidecar(spark, meta_path) or []
+        if rows:
+            stored = tuple(
+                _LEGACY_PIN.get(n) if rows[0].get(n) is None else rows[0][n]
+                for n in names
+            )
+            if stored != mine:
+                raise ValueError(
+                    f"{self.kind} at {self.path} stores "
+                    f"({', '.join(names)})={stored} but this handle has "
+                    f"{mine}; mixing hashing or tokenization configs "
+                    "silently yields zero matches. Match the stored config "
+                    "(hash_fn=None resolves SPARK_GRAFT_HASH_FN) or "
+                    "rebuild the index."
+                )
+            return
+        if not write_if_missing:
+            raise ValueError(
+                f"{self.kind} at {self.path} has no _meta sidecar (never "
+                "built, or a build crashed before the pin committed); "
+                "read-only access cannot stamp a config — build() or "
+                "add() first."
+            )
+        connectors.write_parquet_sidecar(
+            spark, meta_path, [mine], self.pin_schema
+        )
 
 
 @dataclass

@@ -31,7 +31,20 @@ from ralf_spark.functions.hashing import (
     default_hash_fn,
     stable_hash64,
 )
-from ralf_spark.functions.text import distinct_shingles, hashed_shingles
+from ralf_spark.functions.text import (
+    distinct_shingles,
+    hashed_shingles,
+    tokenizer_version,
+)
+from ralf_spark.layout import (
+    AUTO_MAINTAIN_BATCHES,
+    AddFence,
+    BatchStore,
+    batch_tag_count,
+    compact_tiered,
+    folded_tags,
+    recover_recording_folds,
+)
 from ralf_spark.operators.util import (
     attach_cached,
     ensure_parallelism,
@@ -1268,8 +1281,6 @@ class MinHashIndex:
     ):
         if num_perm % bands:
             raise ValueError("num_perm must be divisible by bands")
-        from ralf_spark.functions.text import tokenizer_version
-
         tokenizer_version(token_mode)  # validate early (raises on unknown)
         self.path = path
         self.num_perm = num_perm
@@ -1283,8 +1294,6 @@ class MinHashIndex:
         #: other mode fails loudly instead of reporting zero duplicates
         self.token_mode = token_mode
         if auto_maintain is None:
-            from ralf_spark.layout import AUTO_MAINTAIN_BATCHES
-
             auto_maintain = AUTO_MAINTAIN_BATCHES
         #: auto-maintenance cadence (r11, VERDICT r10 #1): ``add()``
         #: self-compacts via :meth:`maintain` once more than this many
@@ -1304,12 +1313,21 @@ class MinHashIndex:
         #: surface in the next add/check against the settled store).
         self.concurrent_adds = concurrent_adds
 
-    def _handoff_root(self, spark) -> None:
-        """See ``GramIndex._handoff_root`` (r14 clean handoff)."""
-        if self.concurrent_adds:
-            from ralf_spark.connectors import release_writer_lease
-
-            release_writer_lease(spark, self.path)
+    @property
+    def _store(self) -> BatchStore:
+        """The store protocol at ``path`` (leases, fenced publish, epoch)
+        with the hashing-config pin: signatures hashed under another
+        mode/shape/tokenizer produce ZERO bucket collisions."""
+        return BatchStore(
+            self.path, self.concurrent_adds, "MinHashIndex",
+            pin={
+                "hash_fn": self.hash_fn, "num_perm": self.num_perm,
+                "bands": self.bands, "shingle_n": self.shingle_n,
+                "tokenizer": tokenizer_version(self.token_mode),
+            },
+            pin_schema="hash_fn string, num_perm int, bands int, "
+            "shingle_n int, tokenizer string",
+        )
 
     # ------------------------------------------------------------ internals
     def _project(self, table: FeatureTable, text_col: str, count_obs=None):
@@ -1371,27 +1389,6 @@ class MinHashIndex:
         )
         return sigs, buckets
 
-    def _read(
-        self, spark, sub: str, exclude_tag: str | None = None
-    ) -> DataFrame | None:
-        """Frozen snapshot of a stored projection: explicit file list, so
-        the plan cannot pick up files written after this call. The
-        ``_batch`` partition value lives only in directory names, never in
-        the data files, so the schema is the bare projection.
-
-        ``exclude_tag`` drops that batch's partition from the snapshot —
-        on a replay, the tag's stored rows are the FAILED previous attempt
-        of the very batch being re-added (and its files are about to be
-        overwritten), so they must not count as "stored"."""
-        from ralf_spark.connectors import _list_parquet_files
-
-        files = _list_parquet_files(spark, f"{self.path}/{sub}")
-        if exclude_tag is not None:
-            files = [f for f in files if f"/_batch={exclude_tag}/" not in f]
-        if not files:
-            return None
-        return spark.read.parquet(*files)
-
     #: target rows per file of a batch write: ~40 MB signature files
     #: (id + num_perm longs ≈ 160 B/row) resp. ~60 MB bucket files
     #: (≈ 60 B/row). Keyed by projection name.
@@ -1403,14 +1400,10 @@ class MinHashIndex:
         sub: str,
         tag: str,
         rows: int | None = None,
-        lease_path: str | None = None,
-        writer_id: str | None = None,
-        expect_epoch: int | None = None,
+        fence: AddFence = AddFence(),
     ) -> None:
-        """Fold a projection into its ``_batch=<tag>`` partition. Dynamic
-        overwrite touches ONLY the partitions present in ``df`` — replaying
-        the same tag rewrites that directory in place (idempotent); other
-        batches' partitions are untouched.
+        """Fold a projection into its ``_batch=<tag>`` partition
+        (:meth:`BatchStore.publish`: dynamic overwrite, fenced).
 
         ``rows`` (r11, the lifecycle probe's file-amplification fix):
         the projection's known row count sizes the file count — a plain
@@ -1422,50 +1415,13 @@ class MinHashIndex:
         `build()`` materialize the persisted projection FIRST — the
         hash pipeline keeps its full parallelism, only the cached rows
         funnel into the writers."""
-        from ralf_spark.connectors import (
-            check_no_foreign_root_lease,
-            check_store_epoch,
-            hold_writer_lease,
-        )
-
         out = df
         if rows is not None:
-            n_files = max(1, -(-rows // self._ROWS_PER_FILE[sub]))
-            # coalesce never INCREASES partition count, so the guard that
-            # compared n_files to df.rdd.getNumPartitions() was redundant
-            # — and the .rdd probe forced a full physical translation on
-            # the driver per write (r16; the VERDICT r4 class)
-            out = df.coalesce(n_files)
-        # fencing read + heartbeat keeper (r13, ADVICE r12): the acquire
-        # inside hold_writer_lease is the fence (the projection pipeline
-        # between the operation-start acquire and this publish can
-        # outlive the TTL), and the keeper renews DURING the write so a
-        # long fold is never stolen from a live writer mid-publish.
-        # Concurrent adds (r14) hold their TAG lease here, not the root.
-        with hold_writer_lease(
-            df.sparkSession, lease_path or self.path, writer_id=writer_id
-        ):
-            if lease_path is not None:
-                # concurrent-mode publish fence (r15, ADVICE r14 medium):
-                # nobody contends the tag lease, so re-check the ROOT —
-                # if this add's announce ever lapsed and an exclusive op
-                # took over, fail loudly instead of publishing into its
-                # rebuilt/compacted store. r16 (ADVICE r15 low): plus the
-                # epoch compare — a COMPLETED exclusive op releases the
-                # root, so the lease check alone passes vacuously after.
-                check_no_foreign_root_lease(
-                    df.sparkSession, self.path, writer_id=writer_id
-                )
-                check_store_epoch(
-                    df.sparkSession, self.path, expect_epoch
-                )
-            (
-                out.withColumn("_batch", F.lit(tag))
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("_batch")
-                .parquet(f"{self.path}/{sub}")
-            )
+            # coalesce never INCREASES partition count, so no .rdd
+            # partition probe guards it (the probe forced a full physical
+            # translation on the driver per write — r16)
+            out = df.coalesce(max(1, -(-rows // self._ROWS_PER_FILE[sub])))
+        self._store.publish(out, sub, tag, fence)
 
     @staticmethod
     def _est_jaccard(s1: Column, s2: Column, num_perm: int) -> Column:
@@ -1475,84 +1431,6 @@ class MinHashIndex:
         return F.round(agree / F.lit(float(num_perm)), 4)
 
     # ------------------------------------------------------------- lifecycle
-    def _check_or_write_meta(
-        self, spark, write_if_missing: bool = True
-    ) -> None:
-        """Pin the index's hashing configuration next to its data.
-
-        Signatures hashed under a different mode/shape produce ZERO
-        bucket collisions against the stored ones — a silent empty-pairs
-        failure, newly reachable since ``hash_fn=None`` resolves the
-        ambient ``SPARK_GRAFT_HASH_FN`` (a handle opened under a flipped
-        env var would otherwise disagree with the store without any
-        error). First writer records (hash_fn, num_perm, bands,
-        shingle_n) in ``_meta/``; every later open validates and raises
-        on mismatch instead of returning empty joins.
-
-        SINGLE-WRITER assumption (ADVICE r6): first-time creation is not
-        coordinated — two handles racing to create the same index can
-        both write ``_meta`` (last write wins; identical configs make
-        the race benign, which is the only sane concurrent use anyway).
-        A crash between directory creation and the parquet commit leaves
-        an empty/partial ``_meta``; that is treated as ABSENT and
-        rewritten rather than surfacing an opaque read error on every
-        later open.
-
-        r15: the one-row pin moves through the driver-side sidecar
-        helpers (guide §5) — the old ``spark.read.parquet(...).collect``
-        spelling paid a full Spark job per open (~2 s of the lifecycle
-        gates' driver gap), and ``read_parquet_sidecar`` keeps the exact
-        tri-state semantics (absent / crashed-empty → rewrite /
-        committed-corrupt → raise)."""
-        from ralf_spark.connectors import (
-            read_parquet_sidecar,
-            write_parquet_sidecar,
-        )
-
-        meta_path = f"{self.path}/_meta"
-        from ralf_spark.functions.text import tokenizer_version
-
-        mine = (
-            self.hash_fn, self.num_perm, self.bands, self.shingle_n,
-            tokenizer_version(self.token_mode),
-        )
-        rows = read_parquet_sidecar(spark, meta_path) or []
-        if rows:
-            row = rows[0]
-            stored = (
-                row["hash_fn"], row["num_perm"], row["bands"],
-                row["shingle_n"],
-                # pre-r12 stores carry no tokenizer field: they were
-                # built under the single-space tokenizer ("space-r1") —
-                # their shingle digests differ from the r12 whitespace
-                # tokenizer's on any multi-line text, so they must fail
-                # LOUDLY here instead of silently colliding on nothing
-                row.get("tokenizer") or "space-r1",
-            )
-            if stored != mine:
-                raise ValueError(
-                    f"MinHashIndex at {self.path} stores (hash_fn, "
-                    f"num_perm, bands, shingle_n, tokenizer)={stored} "
-                    f"but this handle has {mine}; mixing hashing or "
-                    "tokenization configs silently yields zero "
-                    "cross-batch collisions. Match the stored config "
-                    "(hash_fn=None resolves SPARK_GRAFT_HASH_FN) or "
-                    "rebuild the index."
-                )
-            return
-        if not write_if_missing:
-            raise ValueError(
-                f"MinHashIndex at {self.path} has no _meta sidecar "
-                "(never built, or a build crashed before the pin "
-                "committed); read-only access cannot stamp a config — "
-                "build() or add() first."
-            )
-        write_parquet_sidecar(
-            spark, meta_path, [mine],
-            "hash_fn string, num_perm int, bands int, shingle_n int, "
-            "tokenizer string",
-        )
-
     def build(self, table: FeatureTable, text_col: str = "text") -> None:
         """Full (re)build: index every document of ``table``."""
         from ralf_spark.connectors import _hadoop_fs
@@ -1568,41 +1446,21 @@ class MinHashIndex:
         # the sigs write IS, so the cache only bridges the two writes of
         # one job)
         sigs = sigs.persist()
-        # a rebuild must not inherit stale batch partitions
         spark = table.df.sparkSession
-        from ralf_spark.connectors import (
-            acquire_writer_lease,
-            assert_no_concurrent_adds,
-        )
-
-        acquire_writer_lease(spark, self.path)  # single-writer guard (r12)
-        # non-destructive pre-flight releases the root on refusal (r16,
-        # the r15 retro_delta pattern — found by the cross-process
-        # lifecycle test: a refused exclusive op otherwise blocks every
-        # FOREIGN-process adder for the full TTL; same-process reentry
-        # masked it)
-        try:
-            assert_no_concurrent_adds(spark, self.path)  # r14
-        except Exception:
-            self._handoff_root(spark)
-            raise
-        fs, jpath = _hadoop_fs(spark, self.path)
-        if fs.exists(jpath):
-            fs.delete(jpath, True)
-        self._check_or_write_meta(spark)
-        try:
-            n = sigs.count()  # materializes the cache; sizes the files
-            self._write(sigs, "sigs", "base", rows=n)
-            self._write(buckets, "buckets", "base", rows=n * self.bands)
-        finally:
-            sigs.unpersist()
-        # generation bump at rebuild commit (r16, ADVICE r15 low): a
-        # concurrent add whose announce lapsed while this ran now fails
-        # its epoch fence instead of publishing into the rebuilt store
-        from ralf_spark.connectors import bump_store_epoch
-
-        bump_store_epoch(spark, self.path)
-        self._handoff_root(spark)
+        store = self._store
+        with store.exclusive(spark) as op:
+            # a rebuild must not inherit stale batch partitions
+            fs, jpath = _hadoop_fs(spark, self.path)
+            if fs.exists(jpath):
+                fs.delete(jpath, True)
+            store.pin_meta(spark)
+            try:
+                n = sigs.count()  # materializes the cache; sizes the files
+                self._write(sigs, "sigs", "base", rows=n)
+                self._write(buckets, "buckets", "base", rows=n * self.bands)
+            finally:
+                sigs.unpersist()
+            op.rewritten = True
 
     def maintain(
         self,
@@ -1636,47 +1494,17 @@ class MinHashIndex:
         write amplification ~8× (the full-store rewrite happens every
         ~threshold × tier_limit batches, not every threshold);
         ``tiered=False`` forces the pre-r11 full fold."""
-        from ralf_spark.connectors import (
-            acquire_writer_lease,
-            assert_no_concurrent_adds,
-        )
-        from ralf_spark.layout import (
-            compact_batch_partitions,
-            tiered_compaction_sources,
-        )
-
         # root lease first (r12 review): contend with add()/build() on
-        # the store root, not only per-subtree inside the compaction;
-        # r14: refuse while tag-scoped adds are in flight. r16: a
-        # refusal releases the root (see build()).
-        acquire_writer_lease(spark, self.path)
-        try:
-            assert_no_concurrent_adds(spark, self.path)
-        except Exception:
-            self._handoff_root(spark)
-            raise
-        out = {}
-        for sub in ("sigs", "buckets"):
-            root = f"{self.path}/{sub}"
-            sources = (
-                tiered_compaction_sources(spark, root, keep_last=keep_last)
-                if tiered
-                else None
-            )
-            if tiered and sources is None:
-                out[sub] = None
-                continue
-            out[sub] = compact_batch_partitions(
-                spark, root, keep_last=keep_last,
-                target_file_bytes=target_file_bytes, sources=sources,
-            )
-        if any(out.get(s) for s in ("sigs", "buckets")):
-            # a fold happened: bump the store generation so a lapsed
-            # concurrent add's publish fence observes it (r16)
-            from ralf_spark.connectors import bump_store_epoch
-
-            bump_store_epoch(spark, self.path)
-        self._handoff_root(spark)
+        # the store root, not only per-subtree inside the compaction
+        with self._store.exclusive(spark) as op:
+            out = {
+                sub: compact_tiered(
+                    spark, f"{self.path}/{sub}", keep_last=keep_last,
+                    tiered=tiered, target_file_bytes=target_file_bytes,
+                )
+                for sub in ("sigs", "buckets")
+            }
+            op.rewritten = any(out.values())
         return out
 
     def add(
@@ -1711,123 +1539,68 @@ class MinHashIndex:
         lease instead of the root, auto-maintenance skipped (the
         coordinator owns the cadence); see ``GramIndex.add``."""
         import uuid
-        from contextlib import ExitStack
 
-        spark = table.df.sparkSession
-        from ralf_spark.connectors import (
-            acquire_writer_lease,
-            held_add_lease,
-        )
-
-        tag = batch_tag if batch_tag is not None else f"u{uuid.uuid4().hex}"
-        lease_path: str | None = None
-        expect_epoch: int | None = None
-        with ExitStack() as stack:
-            if self.concurrent_adds:
-                # announce + KEEP the tag lease heartbeated through the
-                # publish (r15, ADVICE r14 medium) under a per-add-unique
-                # writer id (ADVICE r14 low)
-                lease_path, writer_id = stack.enter_context(
-                    held_add_lease(
-                        spark, self.path, tag, writer_id=writer_id
-                    )
-                )
-                # record the store generation AT ANNOUNCE (r16, ADVICE
-                # r15 low): the publish fence compares it, closing the
-                # window where an exclusive op completes (and releases
-                # the root) during an announce-lease lapse
-                from ralf_spark.connectors import read_store_epoch
-
-                expect_epoch = read_store_epoch(spark, self.path)
-            else:
-                # single-writer mode IGNORES writer_id (r15, ADVICE r14
-                # low): the handle's whole lifecycle (this acquire, the
-                # publish-time hold, a nested auto-maintain) runs under
-                # the process identity — honoring a caller id on just
-                # this acquire made the publish's re-acquire (and any
-                # nested maintain) self-conflict on every batch
-                writer_id = None
-                acquire_writer_lease(spark, self.path)  # single-writer (r12)
-            return self._add_guarded(
-                table, text_col, threshold, tag, broadcast_candidates,
-                lease_path, writer_id, expect_epoch,
-            )
-
-    def _add_guarded(
-        self,
-        table: FeatureTable,
-        text_col: str,
-        threshold: float,
-        tag: str,
-        broadcast_candidates: bool | None,
-        lease_path: str | None,
-        writer_id: str | None,
-        expect_epoch: int | None = None,
-    ) -> DataFrame:
         from pyspark.sql import Observation
 
         spark = table.df.sparkSession
-        self._check_or_write_meta(spark)
-        if self.auto_maintain and not self.concurrent_adds:
-            from ralf_spark.layout import batch_tag_count
-
-            # cadence check BEFORE the snapshot: compaction here can
-            # never invalidate the pair plan this call returns, and the
-            # newest existing tag (the only one an in-flight replay can
-            # target) survives keep_last=1
-            if (
-                batch_tag_count(spark, f"{self.path}/buckets")
-                > self.auto_maintain
-            ):
-                self.maintain(spark)
-        sigs_obs = Observation()
-        new_sigs, new_buckets = self._project(
-            table, text_col, count_obs=sigs_obs
-        )
-        new_sigs = new_sigs.persist()
-        new_buckets = new_buckets.persist()
-        stored_b = self._read(spark, "buckets", exclude_tag=tag)
-        stored_s = self._read(spark, "sigs", exclude_tag=tag)
-        all_b = (
-            stored_b.unionByName(new_buckets)
-            if stored_b is not None
-            else new_buckets
-        )
-        all_s = (
-            stored_s.unionByName(new_sigs)
-            if stored_s is not None
-            else new_sigs
-        )
-        pairs, small = self._scored_pairs(
-            table, new_buckets, all_b, all_s, threshold, broadcast_candidates
-        )
-        out = attach_cached(pairs, [new_sigs, new_buckets])
-        # Fold the batch in AFTER the candidate join is defined: the writes
-        # below execute eagerly, but the returned plan reads the persisted
-        # batch projections plus an explicit pre-add file snapshot of the
-        # store (_read), so it can never observe its own append.
-        #
-        # File-sizing rows (r16, VERDICT r15 #3): in measured-auto mode
-        # the bucket-stats bound job above already materialized both
-        # caches, firing the _project observation — read it instead of
-        # paying a second count job per add. Explicit-hint and
-        # small-shortcut adds (no stats job) keep the count, which
-        # doubles as the cache materialization.
-        if broadcast_candidates is None and not small:
-            n = observed_rows(sigs_obs, new_sigs)
-        else:
-            n = new_sigs.count()  # materializes the cache; sizes the files
-        self._write(
-            new_sigs, "sigs", tag, rows=n,
-            lease_path=lease_path, writer_id=writer_id,
-            expect_epoch=expect_epoch,
-        )
-        self._write(
-            new_buckets, "buckets", tag, rows=n * self.bands,
-            lease_path=lease_path, writer_id=writer_id,
-            expect_epoch=expect_epoch,
-        )
-        return out
+        store = self._store
+        tag = batch_tag if batch_tag is not None else f"u{uuid.uuid4().hex}"
+        with store.add_session(spark, tag, writer_id) as fence:
+            store.pin_meta(spark)
+            if self.auto_maintain and not self.concurrent_adds:
+                # cadence check BEFORE the snapshot: compaction here
+                # can never invalidate the pair plan this call returns,
+                # and the newest existing tag (the only one an in-flight
+                # replay can target) survives keep_last=1
+                if (
+                    batch_tag_count(spark, f"{self.path}/buckets")
+                    > self.auto_maintain
+                ):
+                    self.maintain(spark)
+            sigs_obs = Observation()
+            new_sigs, new_buckets = self._project(
+                table, text_col, count_obs=sigs_obs
+            )
+            new_sigs = new_sigs.persist()
+            new_buckets = new_buckets.persist()
+            stored_b = store.snapshot(spark, "buckets", exclude_tag=tag)
+            stored_s = store.snapshot(spark, "sigs", exclude_tag=tag)
+            all_b = (
+                stored_b.unionByName(new_buckets)
+                if stored_b is not None
+                else new_buckets
+            )
+            all_s = (
+                stored_s.unionByName(new_sigs)
+                if stored_s is not None
+                else new_sigs
+            )
+            pairs, small = self._scored_pairs(
+                table, new_buckets, all_b, all_s, threshold,
+                broadcast_candidates,
+            )
+            out = attach_cached(pairs, [new_sigs, new_buckets])
+            # Fold the batch in AFTER the candidate join is defined: the
+            # writes below execute eagerly, but the returned plan reads
+            # the persisted batch projections plus an explicit pre-add
+            # file snapshot of the store, so it can never observe its own
+            # append.
+            #
+            # File-sizing rows (r16, VERDICT r15 #3): in measured-auto
+            # mode the bucket-stats bound job above already materialized
+            # both caches, firing the _project observation — read it
+            # instead of paying a second count job per add. Explicit-hint
+            # and small-shortcut adds (no stats job) keep the count,
+            # which doubles as the cache materialization.
+            if broadcast_candidates is None and not small:
+                n = observed_rows(sigs_obs, new_sigs)
+            else:
+                n = new_sigs.count()  # materializes the cache; sizes files
+            self._write(new_sigs, "sigs", tag, rows=n, fence=fence)
+            self._write(
+                new_buckets, "buckets", tag, rows=n * self.bands, fence=fence
+            )
+            return out
 
     def check(
         self,
@@ -1855,9 +1628,10 @@ class MinHashIndex:
 
         Returns (id1, id2, est_jaccard) with id1 < id2."""
         spark = table.df.sparkSession
-        self._check_or_write_meta(spark, write_if_missing=False)
-        stored_b = self._read(spark, "buckets")
-        stored_s = self._read(spark, "sigs")
+        store = self._store
+        store.pin_meta(spark, write_if_missing=False)
+        stored_b = store.snapshot(spark, "buckets")
+        stored_s = store.snapshot(spark, "sigs")
         if stored_b is None or stored_s is None:
             raise ValueError(f"MinHashIndex at {self.path} is empty")
         new_sigs, new_buckets = self._project(table, text_col)
@@ -2618,8 +2392,6 @@ class GramIndex:
         token_mode: str = "ascii",
         concurrent_adds: bool = False,
     ):
-        from ralf_spark.functions.text import tokenizer_version
-
         tokenizer_version(token_mode)  # validate early (raises on unknown)
         self.path = path
         self.min_tokens = min_tokens
@@ -2630,8 +2402,6 @@ class GramIndex:
         if self.hash_fn not in ("md5", "xxhash64"):
             raise ValueError(f"unknown hash_fn: {self.hash_fn!r}")
         if auto_maintain is None:
-            from ralf_spark.layout import AUTO_MAINTAIN_BATCHES
-
             auto_maintain = AUTO_MAINTAIN_BATCHES
         self.auto_maintain = auto_maintain
         #: r14 (VERDICT r13 #1) — multi-writer ingest: ``add()`` takes a
@@ -2662,139 +2432,34 @@ class GramIndex:
             self.token_mode,
         )
 
-    def _read(self, spark, exclude_tag: str | None = None) -> DataFrame | None:
-        """Frozen pre-add snapshot (explicit file list; a replayed tag's
-        stored rows are the failed attempt of the batch being re-added
-        and must not count as seen)."""
-        from ralf_spark.connectors import _list_parquet_files
-
-        files = _list_parquet_files(spark, f"{self.path}/grams")
-        if exclude_tag is not None:
-            files = [f for f in files if f"/_batch={exclude_tag}/" not in f]
-        if not files:
-            return None
-        return spark.read.parquet(*files)
+    @property
+    def _store(self) -> BatchStore:
+        """The store protocol at ``path`` with the config pin: digests
+        hashed under another mode, gram length or tokenizer never match
+        the stored set, and a membership handle reading a position store
+        (or vice versa) would mis-shape every probe."""
+        return BatchStore(
+            self.path, self.concurrent_adds, "GramIndex",
+            pin={
+                "hash_fn": self.hash_fn, "min_tokens": self.min_tokens,
+                "count_mode": self.count_mode,
+                "tokenizer": tokenizer_version(self.token_mode),
+            },
+            pin_schema="hash_fn string, min_tokens int, "
+            "count_mode boolean, tokenizer string",
+        )
 
     #: ~2M digest rows per file (32-char md5 strings ≈ 64 MB; longs less)
     _ROWS_PER_FILE = 2_000_000
 
     def _write(
-        self,
-        dg: DataFrame,
-        tag: str,
-        rows: int,
-        lease_path: str | None = None,
-        writer_id: str | None = None,
-        expect_epoch: int | None = None,
+        self, dg: DataFrame, tag: str, rows: int, fence: AddFence = AddFence()
     ) -> None:
-        from ralf_spark.connectors import (
-            check_no_foreign_root_lease,
-            check_store_epoch,
-            hold_writer_lease,
-        )
-
         # coalesce never INCREASES partition count, so no .rdd partition
         # probe is needed to guard it (the probe forced a full physical
         # translation on the driver per write — r16, the VERDICT r4 class)
         n_files = max(1, -(-rows // self._ROWS_PER_FILE))
-        out = dg.coalesce(n_files)
-        # fence + heartbeat keeper (r13, ADVICE r12): abort if the lease
-        # was stolen while the span plan ran; renew during the fold write.
-        # Concurrent adds (r14) hold their TAG lease here, not the root.
-        with hold_writer_lease(
-            dg.sparkSession, lease_path or self.path, writer_id=writer_id
-        ):
-            if lease_path is not None:
-                # concurrent-mode publish fence (r15, ADVICE r14 medium):
-                # nobody contends the tag lease, so re-check the ROOT —
-                # a TTL-overrun add must fail loudly here, not publish
-                # into a store an exclusive op rebuilt/compacted meanwhile.
-                # r16 (ADVICE r15 low): plus the epoch compare — a
-                # COMPLETED exclusive op releases the root, so the lease
-                # check alone passes vacuously after the fact.
-                check_no_foreign_root_lease(
-                    dg.sparkSession, self.path, writer_id=writer_id
-                )
-                check_store_epoch(
-                    dg.sparkSession, self.path, expect_epoch
-                )
-            (
-                out.withColumn("_batch", F.lit(tag))
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("_batch")
-                .parquet(f"{self.path}/grams")
-            )
-
-    def _check_or_write_meta(
-        self, spark, write_if_missing: bool = True
-    ) -> None:
-        """Pin (hash_fn, min_tokens, count_mode, tokenizer): digests
-        hashed under a different mode, gram length, or tokenizer never
-        match the stored set — a silent zero-duplicates failure (same
-        contract as MinHashIndex's pin) — and a membership handle
-        reading a position store (or vice versa) would mis-shape every
-        probe. ``write_if_missing=False`` (the READ-ONLY paths: check,
-        retro) verifies without ever creating the sidecar — a reader
-        must not stamp its own config onto a store it never built.
-
-        r15: driver-side sidecar read/write (guide §5) — see
-        ``MinHashIndex._check_or_write_meta``."""
-        from ralf_spark.connectors import (
-            read_parquet_sidecar,
-            write_parquet_sidecar,
-        )
-        from ralf_spark.functions.text import tokenizer_version
-
-        meta_path = f"{self.path}/_meta"
-        mine = (
-            self.hash_fn, self.min_tokens, self.count_mode,
-            tokenizer_version(self.token_mode),
-        )
-        rows = read_parquet_sidecar(spark, meta_path) or []
-        if rows:
-            # pre-r12 stores lack the count_mode column (membership
-            # mode) and the tokenizer column (single-space tokenizer) —
-            # the latter MUST mismatch loudly: its gram digests differ
-            # on any multi-line text under the r12 whitespace tokenizer
-            stored = (
-                rows[0]["hash_fn"],
-                rows[0]["min_tokens"],
-                bool(rows[0].get("count_mode") or False),
-                rows[0].get("tokenizer") or "space-r1",
-            )
-            if stored != mine:
-                raise ValueError(
-                    f"GramIndex at {self.path} stores (hash_fn, "
-                    f"min_tokens, count_mode, tokenizer)={stored} but "
-                    f"this handle has {mine}; mixed configs silently "
-                    "report zero duplicates. Match the stored config or "
-                    "rebuild."
-                )
-            return
-        if not write_if_missing:
-            raise ValueError(
-                f"GramIndex at {self.path} has no _meta sidecar (never "
-                "built, or a build crashed before the pin committed); "
-                "read-only access cannot stamp a config — build() or "
-                "add() first."
-            )
-        write_parquet_sidecar(
-            spark, meta_path, [mine],
-            "hash_fn string, min_tokens int, count_mode boolean, "
-            "tokenizer string",
-        )
-
-    def _handoff_root(self, spark) -> None:
-        """In concurrent-adds mode (r14), exclusive operations RELEASE
-        the store-root lease on completion: waiting tag-scoped adders
-        resume immediately instead of seeing a live foreign root lease
-        until the TTL. Exclusive-mode handles keep the root (the
-        process identity renews it on every call, pre-r14 behavior)."""
-        if self.concurrent_adds:
-            from ralf_spark.connectors import release_writer_lease
-
-            release_writer_lease(spark, self.path)
+        self._store.publish(dg.coalesce(n_files), "grams", tag, fence)
 
     # ------------------------------------------------------------ lifecycle
     def build(self, table: FeatureTable, text_col: str = "text") -> None:
@@ -2803,74 +2468,25 @@ class GramIndex:
         from ralf_spark.connectors import _hadoop_fs
 
         spark = table.df.sparkSession
-        from ralf_spark.connectors import (
-            acquire_writer_lease,
-            assert_no_concurrent_adds,
-        )
-
-        acquire_writer_lease(spark, self.path)  # single-writer guard (r12)
-        # a rebuild deletes every batch partition — refuse while foreign
-        # tag-scoped adds are in flight (r14); a refusal releases the
-        # root (r16, see MinHashIndex.build)
-        try:
-            assert_no_concurrent_adds(spark, self.path)
-        except Exception:
-            self._handoff_root(spark)
-            raise
-        fs, jpath = _hadoop_fs(spark, self.path)
-        if fs.exists(jpath):
-            fs.delete(jpath, True)
-        self._check_or_write_meta(spark)
-        pos = self._positions(table, text_col)
-        dg = (
-            pos if self.count_mode
-            else pos.select("_dg").distinct()
-        )
-        dg = dg.persist()
-        try:
-            n = dg.count()
-            self._write(dg, "base", rows=n)
-        finally:
-            dg.unpersist()
-        # generation bump at rebuild commit (r16, ADVICE r15 low): any
-        # concurrent add whose announce lapsed while this ran now fails
-        # its epoch fence instead of publishing into the rebuilt store
-        from ralf_spark.connectors import bump_store_epoch
-
-        bump_store_epoch(spark, self.path)
-        self._handoff_root(spark)
-
-    def _folded_tags(self, spark) -> set[str]:
-        """Tags already folded by :meth:`maintain` — the replay-refusal
-        record (sidecar shared-format with the streaming sketch logs)."""
-        from ralf_spark.connectors import _hadoop_fs, read_json_sidecar
-
-        sidecar = f"{self.path}/grams/.compacted_tags.json"
-        fs, jpath = _hadoop_fs(spark, sidecar)
-        if not fs.exists(jpath):
-            return set()
-        return set(read_json_sidecar(spark, sidecar).get("tags", []))
-
-    def _unrecord_folded_tags(self, spark, rolled_back: list[str]) -> None:
-        """Remove ``rolled_back`` source tags from the replay-refusal
-        sidecar (r13, ADVICE r12): a crash between :meth:`maintain`'s
-        record callback and the compaction's done marker rolls the fold
-        back — the tags' source partitions are restored intact — but
-        the sidecar still names them folded, so :meth:`add` would refuse
-        their replays FOREVER with no remedy short of a rebuild. The
-        recovery path calls this with the rolled-back manifest sources
-        so a replay of those (never actually folded) tags is accepted
-        again."""
-        from ralf_spark.connectors import write_json_sidecar
-
-        tags = self._folded_tags(spark)
-        drop = {t for t in rolled_back if not t.startswith("compacted-")}
-        if not (tags & drop):
-            return
-        write_json_sidecar(
-            spark, f"{self.path}/grams/.compacted_tags.json",
-            {"tags": sorted(tags - drop)},
-        )
+        store = self._store
+        # a rebuild deletes every batch partition
+        with store.exclusive(spark) as op:
+            fs, jpath = _hadoop_fs(spark, self.path)
+            if fs.exists(jpath):
+                fs.delete(jpath, True)
+            store.pin_meta(spark)
+            pos = self._positions(table, text_col)
+            dg = (
+                pos if self.count_mode
+                else pos.select("_dg").distinct()
+            )
+            dg = dg.persist()
+            try:
+                n = dg.count()
+                self._write(dg, "base", rows=n)
+            finally:
+                dg.unpersist()
+            op.rewritten = True
 
     def maintain(self, spark, keep_last: int = 1, tiered: bool = True) -> dict:
         """Fold batch partitions with a ``distinct()`` MERGING compaction
@@ -2878,94 +2494,42 @@ class GramIndex:
         same manifest transaction, crash recovery, and write-amp
         discipline as the other indexes.
 
-        Folded tags are durably recorded in a ``.compacted_tags.json``
-        sidecar INSIDE the compaction transaction (before the done
-        marker) so :meth:`add` can refuse a replay of a folded tag
-        loudly instead of misreporting every batch position as
-        duplicated (r12, closes the documented replay window: a crash
-        between the record and the done marker rolls the fold back
-        while leaving the tag recorded — the refusal is then overly
-        strict, never silently wrong; r13 heals even that: the
-        rollback's ``on_rollback`` un-records the never-folded tags,
-        both here and in :meth:`add`'s recovery pass). The sidecar
-        grows O(folded raw tags) — ~40 bytes per crawl batch, ~400 KB
-        at the 10⁴-batch crawl-loop horizon — an accepted bound:
-        pruning by age would re-open the silent-misreport window for
-        replays of genuinely folded old tags."""
-        from ralf_spark.connectors import (
-            acquire_writer_lease,
-            assert_no_concurrent_adds,
-            write_json_sidecar,
-        )
-        from ralf_spark.layout import (
-            compact_batch_partitions,
-            tiered_compaction_sources,
-        )
-
+        Folded tags are durably recorded in the folded-tags sidecar
+        (:func:`~ralf_spark.layout.compact_tiered`) INSIDE the
+        compaction transaction, so :meth:`add` can refuse a replay of a
+        folded tag loudly instead of misreporting every batch position
+        as duplicated (r12); a crash between the record and the done
+        marker rolls the fold back and un-records the never-folded tags
+        (r13), both here and in :meth:`add`'s recovery pass."""
         # root-lease FIRST (r12 review): compaction holds the subtree
         # lease, but a second PROCESS's maintain() must contend with
-        # this process's add()/build() on the STORE root — without this
-        # acquire, a foreign maintain could fold and delete a batch dir
-        # out from under an in-flight add's frozen file list. r14: then
-        # check the announce dir — tag-scoped adds in flight hold tag
-        # leases, and folding their partitions away mid-add would break
-        # their frozen snapshots.
-        acquire_writer_lease(spark, self.path)
-        # r16: a refusal releases the root (see MinHashIndex.build)
-        try:
-            assert_no_concurrent_adds(spark, self.path)
-        except Exception:
-            self._handoff_root(spark)
-            raise
-        root = f"{self.path}/grams"
-        sources = (
-            tiered_compaction_sources(spark, root, keep_last=keep_last)
-            if tiered
-            else None
-        )
-        if tiered and sources is None:
-            return {"grams": None}
-
-        def record(folded: list[str]) -> None:
-            tags = self._folded_tags(spark)
-            tags.update(t for t in folded if not t.startswith("compacted-"))
-            write_json_sidecar(
-                spark, f"{root}/.compacted_tags.json",
-                {"tags": sorted(tags)},
-            )
-
-        out = {
-            "grams": compact_batch_partitions(
-                spark, root, keep_last=keep_last, sources=sources,
-                # membership algebra folds by distinct(); the count-mode
-                # position log is already row-unique per (doc, pos) — a
-                # plain concatenation fold, no extra shuffle
-                transform=(
-                    None if self.count_mode
-                    else (lambda df: df.distinct())
-                ),
-                on_before_done=record,
-                # undo the record if an interrupted earlier attempt is
-                # rolled back here (r13, ADVICE r12)
-                on_rollback=lambda rb: self._unrecord_folded_tags(spark, rb),
-            )
-        }
-        if self.count_mode and out["grams"]:
-            # keep the retro_delta watermark valid across the tag rename;
-            # surface covered=False in the summary (r14, ADVICE r13: the
-            # next retro_delta then re-treats the whole compacted
-            # partition as new — a one-time O(store) cadence the
-            # operator should see coming, not diagnose as a regression)
-            out["retro_watermark"] = self._advance_retro_watermark(
-                spark, out["grams"]
-            )
-        if out["grams"]:
-            # a fold happened: bump the store generation so a lapsed
-            # concurrent add's publish fence observes it (r16)
-            from ralf_spark.connectors import bump_store_epoch
-
-            bump_store_epoch(spark, self.path)
-        self._handoff_root(spark)
+        # this process's add()/build() on the STORE root — without it, a
+        # foreign maintain could fold and delete a batch dir out from
+        # under an in-flight add's frozen file list
+        with self._store.exclusive(spark) as op:
+            out = {
+                "grams": compact_tiered(
+                    spark, f"{self.path}/grams", keep_last=keep_last,
+                    tiered=tiered, record_folds=True,
+                    # membership algebra folds by distinct(); the
+                    # count-mode position log is already row-unique per
+                    # (doc, pos) — a plain concatenation fold
+                    transform=(
+                        None if self.count_mode
+                        else (lambda df: df.distinct())
+                    ),
+                )
+            }
+            if self.count_mode and out["grams"]:
+                # keep the retro_delta watermark valid across the tag
+                # rename; surface covered=False in the summary (r14,
+                # ADVICE r13: the next retro_delta then re-treats the
+                # whole compacted partition as new — a one-time O(store)
+                # cadence the operator should see coming)
+                out["retro_watermark"] = self._advance_retro_watermark(
+                    spark, out["grams"]
+                )
+            op.rewritten = bool(out["grams"])
         return out
 
     def add(
@@ -3014,45 +2578,13 @@ class GramIndex:
         mid-add) fails one side loudly via the announce-first/
         root-first ordering in ``acquire_add_lease``."""
         import uuid
-        from contextlib import ExitStack
 
         spark = table.df.sparkSession
-        from ralf_spark.connectors import (
-            acquire_writer_lease,
-            held_add_lease,
-        )
-        from ralf_spark.layout import recover_compaction
-
+        store = self._store
+        grams = f"{self.path}/grams"
         tag = batch_tag if batch_tag is not None else f"u{uuid.uuid4().hex}"
-        lease_path: str | None = None
-        expect_epoch: int | None = None
-        with ExitStack() as stack:
-            if self.concurrent_adds:
-                # announce + KEEP the tag lease heartbeated through the
-                # publish (r15, ADVICE r14 medium) under a per-add-unique
-                # writer id (ADVICE r14 low)
-                lease_path, writer_id = stack.enter_context(
-                    held_add_lease(
-                        spark, self.path, tag, writer_id=writer_id
-                    )
-                )
-                # record the store generation AT ANNOUNCE (r16, ADVICE
-                # r15 low): the publish fence compares it, closing the
-                # window where an exclusive op completes (and releases
-                # the root) during an announce-lease lapse
-                from ralf_spark.connectors import read_store_epoch
-
-                expect_epoch = read_store_epoch(spark, self.path)
-            else:
-                # single-writer mode IGNORES writer_id (r15, ADVICE r14
-                # low): the handle's whole lifecycle (this acquire, the
-                # publish-time hold, a nested auto-maintain) runs under
-                # the process identity — honoring a caller id on just
-                # this acquire made the publish's re-acquire (and any
-                # nested maintain) self-conflict on every batch
-                writer_id = None
-                acquire_writer_lease(spark, self.path)  # single-writer (r12)
-            self._check_or_write_meta(spark)
+        with store.add_session(spark, tag, writer_id) as fence:
+            store.pin_meta(spark)
             if not self.concurrent_adds:
                 # heal an interrupted maintain() BEFORE the replay check
                 # (r13, ADVICE r12): a rollback un-records tags the
@@ -3061,15 +2593,9 @@ class GramIndex:
                 # recovery rewrites shared state under peers; the
                 # membership union tolerates an interrupted fold's
                 # double-listed rows until the coordinator heals it.
-                recover_compaction(
-                    spark, f"{self.path}/grams",
-                    on_rollback=lambda rb: self._unrecord_folded_tags(
-                        spark, rb
-                    ),
-                )
-            if (
-                batch_tag is not None
-                and batch_tag in self._folded_tags(spark)
+                recover_recording_folds(spark, grams)
+            if batch_tag is not None and batch_tag in folded_tags(
+                spark, grams
             ):
                 raise ValueError(
                     f"GramIndex at {self.path}: batch_tag {batch_tag!r} "
@@ -3080,12 +2606,7 @@ class GramIndex:
                     "spares them), or rebuild the index."
                 )
             if self.auto_maintain and not self.concurrent_adds:
-                from ralf_spark.layout import batch_tag_count
-
-                if (
-                    batch_tag_count(spark, f"{self.path}/grams")
-                    > self.auto_maintain
-                ):
+                if batch_tag_count(spark, grams) > self.auto_maintain:
                     self.maintain(spark)
             from pyspark.sql import Observation
 
@@ -3109,7 +2630,7 @@ class GramIndex:
                 .where(F.col("_c") >= 2)
                 .select("_dg")
             )
-            stored = self._read(spark, exclude_tag=tag)
+            stored = store.snapshot(spark, "grams", exclude_tag=tag)
             if stored is None:
                 seen = batch_dup
             else:
@@ -3129,16 +2650,10 @@ class GramIndex:
                 # rows from the observation the n_dg job fired — not a
                 # second count job (r16); identical value by construction
                 self._write(
-                    pos, tag, rows=observed_rows(pos_obs, pos),
-                    lease_path=lease_path, writer_id=writer_id,
-                    expect_epoch=expect_epoch,
+                    pos, tag, rows=observed_rows(pos_obs, pos), fence=fence
                 )
             else:
-                self._write(
-                    batch_dg, tag, rows=n_dg,
-                    lease_path=lease_path, writer_id=writer_id,
-                    expect_epoch=expect_epoch,
-                )
+                self._write(batch_dg, tag, rows=n_dg, fence=fence)
         return out
 
     def check(
@@ -3164,8 +2679,9 @@ class GramIndex:
 
         Returns (doc_id, span_start, span_end, span_tokens)."""
         spark = table.df.sparkSession
-        self._check_or_write_meta(spark, write_if_missing=False)
-        stored = self._read(spark)
+        store = self._store
+        store.pin_meta(spark, write_if_missing=False)
+        stored = store.snapshot(spark, "grams")
         if stored is None:
             raise ValueError(f"GramIndex at {self.path} is empty")
         pos = self._positions(table, text_col).persist()
@@ -3205,7 +2721,7 @@ class GramIndex:
                 "retro-flagging is impossible. Rebuild with "
                 "count_mode=True for the retro pass."
             )
-        self._check_or_write_meta(spark, write_if_missing=False)
+        self._store.pin_meta(spark, write_if_missing=False)
         from ralf_spark.connectors import _list_parquet_files_sized
 
         sized = _list_parquet_files_sized(spark, f"{self.path}/grams")
@@ -3289,25 +2805,24 @@ class GramIndex:
         persisted the output the commit acknowledges."""
         from ralf_spark.connectors import (
             _hadoop_fs,
-            acquire_writer_lease,
             read_json_sidecar,
             write_json_sidecar,
         )
 
-        acquire_writer_lease(spark, self.path)
-        pend_path = f"{self.path}/grams/.retro_watermark_pending.json"
-        fs, jpend = _hadoop_fs(spark, pend_path)
-        if not fs.exists(jpend):
-            self._handoff_root(spark)
-            return []
-        pend = set(read_json_sidecar(spark, pend_path).get("tags", []))
-        done = self._retro_done_tags(spark)
-        write_json_sidecar(
-            spark, f"{self.path}/grams/.retro_watermark.json",
-            {"tags": sorted(done | pend)},
-        )
-        fs.delete(jpend, False)
-        self._handoff_root(spark)
+        # the root without the in-flight-add check: promoting the pending
+        # half touches no batch partition an add's snapshot reads
+        with self._store.exclusive(spark, check_adds=False):
+            pend_path = f"{self.path}/grams/.retro_watermark_pending.json"
+            fs, jpend = _hadoop_fs(spark, pend_path)
+            if not fs.exists(jpend):
+                return []
+            pend = set(read_json_sidecar(spark, pend_path).get("tags", []))
+            done = self._retro_done_tags(spark)
+            write_json_sidecar(
+                spark, f"{self.path}/grams/.retro_watermark.json",
+                {"tags": sorted(done | pend)},
+            )
+            fs.delete(jpend, False)
         return sorted(pend - done)
 
     def _advance_retro_watermark(self, spark, summary: dict) -> dict | None:
@@ -3441,43 +2956,52 @@ class GramIndex:
                 f"unknown durability: {durability!r} "
                 "(expected 'deferred' or 'at_call')"
             )
-        from ralf_spark.connectors import (
-            _list_parquet_files_sized,
-            acquire_writer_lease,
-        )
+        from ralf_spark.connectors import _list_parquet_files_sized
+
+        store = self._store
+
+        def preflight() -> list[tuple[str, int]]:
+            store.pin_meta(spark, write_if_missing=False)
+            sized = _list_parquet_files_sized(spark, f"{self.path}/grams")
+            if not sized:
+                raise ValueError(f"GramIndex at {self.path} is empty")
+            return sized
 
         # writes the watermark sidecar, and must not interleave with a
         # maintain() renaming tags out from under the tag arithmetic;
         # r14: nor with in-flight tag-scoped adds — a partially visible
-        # in-flight tag would be marked covered while missing rows
-        acquire_writer_lease(spark, self.path)
-        from ralf_spark.connectors import assert_no_concurrent_adds
-
-        # non-destructive pre-flight (r15, ADVICE r14 low): these checks
-        # mutate nothing, so a failure here releases the root in
-        # concurrent mode — otherwise every waiting adder is blocked for
-        # the full TTL after a transient refusal (in-flight adds, a meta
-        # mismatch, an empty store). Failures AFTER this block keep the
-        # lease: from the sidecar writes on, the coordinator may own
-        # partial state that the next exclusive call must heal.
-        try:
-            assert_no_concurrent_adds(spark, self.path)
-            self._check_or_write_meta(spark, write_if_missing=False)
-            sized = _list_parquet_files_sized(spark, f"{self.path}/grams")
+        # in-flight tag would be marked covered while missing rows. A
+        # meta mismatch or an empty store refuses before any mutation.
+        with store.exclusive(spark, preflight=preflight) as op:
+            sized = op.preflight
             files = [f for f, _ in sized]
-            if not files:
-                raise ValueError(f"GramIndex at {self.path} is empty")
-        except Exception:
-            self._handoff_root(spark)
-            raise
-        store = spark.read.parquet(*files)
-        done = self._retro_done_tags(spark)
-        all_tags = {self._tag_of(f) for f in files}
-        new_files = [f for f in files if self._tag_of(f) not in done]
-        if not new_files:
-            self._handoff_root(spark)
-            dup_pos = store.select("_id", "_pos").where(F.lit(False))
-            return _positions_to_spans(dup_pos, self.min_tokens)
+            grams = spark.read.parquet(*files)
+            done = self._retro_done_tags(spark)
+            new_files = [f for f in files if self._tag_of(f) not in done]
+            if not new_files:
+                dup_pos = grams.select("_id", "_pos").where(F.lit(False))
+                return _positions_to_spans(dup_pos, self.min_tokens)
+            dup_pos, cached = self._retro_delta_positions(
+                spark, grams, sized, new_files, broadcast_digests
+            )
+            return self._finish_retro_delta(
+                spark, dup_pos, cached,
+                {"tags": sorted(done | {self._tag_of(f) for f in files})},
+                durability, output_path,
+            )
+
+    def _retro_delta_positions(
+        self,
+        spark,
+        store: DataFrame,
+        sized: list[tuple[str, int]],
+        new_files: list[str],
+        broadcast_digests: bool | None,
+    ) -> tuple[DataFrame, list]:
+        """The duplicated ``(_id, _pos)`` set of every document touched by
+        ``new_files``, plus the caches it reads — :meth:`retro_delta`'s
+        two spellings (small store: one windowed pass; at scale: the
+        four-stage probe protocol)."""
         cached: list = []
         new_tags = {self._tag_of(f) for f in new_files}
         is_new = F.split(
@@ -3534,10 +3058,7 @@ class GramIndex:
             dup_pos = flagged.where(
                 (F.col("_touched") == 1) & (F.col("_cnt") >= 2)
             ).select("_id", "_pos")
-            return self._finish_retro_delta(
-                spark, dup_pos, cached, done, all_tags,
-                durability, output_path,
-            )
+            return dup_pos, cached
 
         # one store read feeds all four probe joins (r14, VERDICT r13
         # #4); memory-and-disk so a store larger than executor memory
@@ -3609,29 +3130,24 @@ class GramIndex:
             F.broadcast(dup_tdg) if hint_g else dup_tdg, "_dg"
         ).select("_id", "_pos")
         cached += [new_dg, changed_dg, touched, touched_pos, tdg]
-        return self._finish_retro_delta(
-            spark, dup_pos, cached, done, all_tags, durability, output_path
-        )
+        return dup_pos, cached
 
     def _finish_retro_delta(
         self,
         spark,
         dup_pos: DataFrame,
         cached: list,
-        done: set,
-        all_tags: set,
+        covered: dict,
         durability: str,
         output_path: str | None,
     ) -> DataFrame:
-        """Shared tail of :meth:`retro_delta` — span merge, watermark
-        durability, root handoff (r16: factored out so the small-store
-        window spelling and the probe-chain spelling share it)."""
+        """Tail of :meth:`retro_delta` — span merge and the watermark
+        write (``covered``) per the durability mode."""
         from ralf_spark.connectors import write_json_sidecar
 
         out = attach_cached(
             _positions_to_spans(dup_pos, self.min_tokens), cached
         )
-        covered = {"tags": sorted(done | all_tags)}
         if output_path is not None:
             # write-then-advance: the spans land durably (staged — a
             # crash never leaves a readable partial tree at the target)
@@ -3647,7 +3163,6 @@ class GramIndex:
             write_json_sidecar(
                 spark, f"{self.path}/grams/.retro_watermark.json", covered
             )
-            self._handoff_root(spark)
             return spark.read.parquet(output_path)
         # the sidecar write happens AFTER the plan is defined either
         # way: the plan reads the frozen file snapshot, so neither
@@ -3660,5 +3175,4 @@ class GramIndex:
         write_json_sidecar(
             spark, f"{self.path}/grams/{sidecar}", covered
         )
-        self._handoff_root(spark)
         return out

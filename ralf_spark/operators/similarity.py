@@ -30,6 +30,13 @@ from pyspark.sql import functions as F
 
 from ralf_spark.functions.arrays import cosine_similarity
 from ralf_spark.functions.hashing import stable_hash64
+from ralf_spark.layout import (
+    AUTO_MAINTAIN_BATCHES,
+    AddFence,
+    BatchStore,
+    batch_tag_count,
+    compact_tiered,
+)
 from ralf_spark.operators.util import attach_cached, ensure_parallelism
 from ralf_spark.table import FeatureTable
 
@@ -831,8 +838,6 @@ class IvfIndex:
         self.path = path
         self.vec_col = vec_col
         if auto_maintain is None:
-            from ralf_spark.layout import AUTO_MAINTAIN_BATCHES
-
             auto_maintain = AUTO_MAINTAIN_BATCHES
         #: auto-maintenance cadence (r11, VERDICT r10 #1): ``add()``
         #: self-compacts via :meth:`maintain` once more than this many
@@ -850,12 +855,11 @@ class IvfIndex:
         #: byte-identical to any serial order.
         self.concurrent_adds = concurrent_adds
 
-    def _handoff_root(self, spark) -> None:
-        """See ``GramIndex._handoff_root`` (r14 clean handoff)."""
-        if self.concurrent_adds:
-            from ralf_spark.connectors import release_writer_lease
-
-            release_writer_lease(spark, self.path)
+    @property
+    def _store(self) -> BatchStore:
+        """The store protocol at ``path`` (leases, fenced publish,
+        epoch); no ``_meta`` pin — the frozen quantizer is the config."""
+        return BatchStore(self.path, self.concurrent_adds)
 
     def _cen_rows(self, spark) -> list[tuple[int, list[float]]]:
         """Stored coarse quantizer, read DRIVER-side (r15, guide §5):
@@ -973,19 +977,13 @@ class IvfIndex:
         )
 
     def _write_cells(
-        self,
-        assigned: DataFrame,
-        tag: str,
-        mode: str,
-        lease_path: str | None = None,
-        writer_id: str | None = None,
-        expect_epoch: int | None = None,
+        self, assigned: DataFrame, tag: str, fence: AddFence = AddFence()
     ) -> None:
-        """Fold an assigned projection into its ``_batch=<tag>`` subtree.
-        Dynamic overwrite touches only the ``(cell, _batch)`` directories
-        present in ``assigned`` — a replayed tag rewrites itself in place
-        (idempotent: assignment under the frozen quantizer is
-        deterministic); other batches' partitions are untouched.
+        """Fold an assigned projection into its ``_batch=<tag>`` subtree
+        (:meth:`BatchStore.publish`): only the ``(cell, _batch)``
+        directories present in ``assigned`` are rewritten — a replayed tag
+        rewrites itself in place (idempotent: assignment under the frozen
+        quantizer is deterministic).
 
         ``repartition(cell)`` first (r10, finding 16): a partitionBy
         write otherwise emits one file per (shuffle task × cell) — the
@@ -994,42 +992,10 @@ class IvfIndex:
         one file per touched (cell, batch); the write stays parallel
         across cells, and at build scale a cell's file is its member
         count (cells ∝ √corpus keeps that bounded)."""
-        from ralf_spark.connectors import (
-            check_no_foreign_root_lease,
-            check_store_epoch,
-            hold_writer_lease,
+        self._store.publish(
+            assigned.repartition(F.col("cell")), "cells", tag, fence,
+            partition_by=("cell", "_batch"),
         )
-
-        # fence + heartbeat keeper (r13, ADVICE r12): assignment/encoding
-        # between acquire and this publish can outlive the lease TTL; the
-        # keeper renews during the cell write itself. Concurrent adds
-        # (r14) hold their TAG lease here, not the root.
-        with hold_writer_lease(
-            assigned.sparkSession, lease_path or self.path,
-            writer_id=writer_id,
-        ):
-            if lease_path is not None:
-                # concurrent-mode publish fence (r15, ADVICE r14 medium):
-                # nobody contends the tag lease, so re-check the ROOT —
-                # a TTL-overrun add must fail loudly here, not publish
-                # into a store an exclusive op rebuilt/compacted meanwhile.
-                # r16 (ADVICE r15 low): plus the epoch compare — a
-                # COMPLETED exclusive op releases the root, so the lease
-                # check alone passes vacuously after the fact.
-                check_no_foreign_root_lease(
-                    assigned.sparkSession, self.path, writer_id=writer_id
-                )
-                check_store_epoch(
-                    assigned.sparkSession, self.path, expect_epoch
-                )
-            (
-                assigned.withColumn("_batch", F.lit(tag))
-                .repartition(F.col("cell"))
-                .write.mode(mode)
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("cell", "_batch")
-                .parquet(f"{self.path}/cells")
-            )
 
     def build(
         self,
@@ -1073,84 +1039,70 @@ class IvfIndex:
             # not have overwritten the quantizer or cleared the cells of
             # a working index (reviewed r7)
             _check_codebooks(codebooks)
-        from ralf_spark.connectors import (
-            acquire_writer_lease,
-            assert_no_concurrent_adds,
-        )
-
-        # single-writer guard (r12) — before the first destructive write;
-        # r14: refuse while tag-scoped adds are in flight; a refusal
-        # releases the root (r16, the retro_delta pre-flight pattern)
-        acquire_writer_lease(table.df.sparkSession, self.path)
-        try:
-            assert_no_concurrent_adds(table.df.sparkSession, self.path)
-        except Exception:
-            self._handoff_root(table.df.sparkSession)
-            raise
-        centroids.select(
-            F.col("centroid_id").cast("long"),
-            F.col("centroid_vec").cast("array<double>"),
-        ).write.mode("overwrite").parquet(f"{self.path}/centroids")
         spark = table.df.sparkSession
-        cells_path = f"{self.path}/cells"
-        fs, jcells = _hadoop_fs(spark, cells_path)
-        if fs.exists(jcells):
-            fs.delete(jcells, True)
-        books_path = f"{self.path}/pq_books"
-        if codebooks is not None:
-            # driver-side sidecar write (r15, guide §5): the codebooks
-            # are a driver-local list — no Spark job for KBs
-            from ralf_spark.connectors import write_parquet_sidecar
+        # before the first destructive write
+        with self._store.exclusive(spark) as op:
+            centroids.select(
+                F.col("centroid_id").cast("long"),
+                F.col("centroid_vec").cast("array<double>"),
+            ).write.mode("overwrite").parquet(f"{self.path}/centroids")
+            cells_path = f"{self.path}/cells"
+            fs, jcells = _hadoop_fs(spark, cells_path)
+            if fs.exists(jcells):
+                fs.delete(jcells, True)
+            books_path = f"{self.path}/pq_books"
+            if codebooks is not None:
+                # driver-side sidecar write (r15, guide §5): the
+                # codebooks are a driver-local list — no Spark job for KBs
+                from ralf_spark.connectors import write_parquet_sidecar
 
-            write_parquet_sidecar(
-                spark, books_path,
-                [
-                    (j, c, [float(x) for x in cv])
-                    for j, book in enumerate(codebooks)
-                    for c, cv in enumerate(book)
-                ],
-                "subspace int, code int, vec array<double>",
-            )
-        else:
-            fs2, jbooks = _hadoop_fs(spark, books_path)
-            if fs2.exists(jbooks):
-                fs2.delete(jbooks, True)  # plain rebuild drops PQ mode
-        bounds_path = f"{self.path}/sq8_bounds"
-        fs3, jbounds = _hadoop_fs(spark, bounds_path)
-        if fs3.exists(jbounds):
-            fs3.delete(jbounds, True)  # rebuild drops/refreshes SQ8 mode
-        # a re-build replaces the quantizer, so the cached two-level
-        # grouping (keyed on the OLD centroid set) must die with it —
-        # equal-cardinality rebuilds would otherwise serve queries
-        # through a stale coarse grouping (ADVICE r9). add() keeps the
-        # cache: it folds vectors under the FROZEN quantizer.
-        self._two_level = None
-        cen_rows = self._cen_rows(spark)
-        assigned = self._assign(table, cen_rows)
-        if codebooks is not None:
-            assigned = self._encode(assigned, codebooks)
-        if sq8:
-            # dim from the centroid literals already on the driver (r16,
-            # VERDICT r15 #4): no probe row, one fixed-width agg job
-            bounds = sq8_bounds(assigned, "_v", dim=len(cen_rows[0][1]))
-            from ralf_spark.connectors import write_parquet_sidecar
+                write_parquet_sidecar(
+                    spark, books_path,
+                    [
+                        (j, c, [float(x) for x in cv])
+                        for j, book in enumerate(codebooks)
+                        for c, cv in enumerate(book)
+                    ],
+                    "subspace int, code int, vec array<double>",
+                )
+            else:
+                fs2, jbooks = _hadoop_fs(spark, books_path)
+                if fs2.exists(jbooks):
+                    fs2.delete(jbooks, True)  # plain rebuild drops PQ mode
+            bounds_path = f"{self.path}/sq8_bounds"
+            fs3, jbounds = _hadoop_fs(spark, bounds_path)
+            if fs3.exists(jbounds):
+                fs3.delete(jbounds, True)  # rebuild drops/refreshes SQ8
+            # a re-build replaces the quantizer, so the cached two-level
+            # grouping (keyed on the OLD centroid set) must die with it —
+            # equal-cardinality rebuilds would otherwise serve queries
+            # through a stale coarse grouping (ADVICE r9). add() keeps
+            # the cache: it folds vectors under the FROZEN quantizer.
+            self._two_level = None
+            cen_rows = self._cen_rows(spark)
+            assigned = self._assign(table, cen_rows)
+            if codebooks is not None:
+                assigned = self._encode(assigned, codebooks)
+            if sq8:
+                # dim from the centroid literals already on the driver
+                # (r16, VERDICT r15 #4): no probe row, one fixed-width agg
+                bounds = sq8_bounds(
+                    assigned, "_v", dim=len(cen_rows[0][1])
+                )
+                from ralf_spark.connectors import write_parquet_sidecar
 
-            write_parquet_sidecar(
-                spark, bounds_path,
-                [(d, float(lo), float(hi))
-                 for d, (lo, hi) in enumerate(bounds)],
-                "dim int, lo double, hi double",
-            )
-            assigned = sq8_encode(
-                assigned, bounds, vec_col="_v", out_col="_sq8",
-                keep_vec=True,
-            )
-        self._write_cells(assigned, "base", "overwrite")
-        # generation bump at rebuild commit (r16, ADVICE r15 low)
-        from ralf_spark.connectors import bump_store_epoch
-
-        bump_store_epoch(spark, self.path)
-        self._handoff_root(spark)
+                write_parquet_sidecar(
+                    spark, bounds_path,
+                    [(d, float(lo), float(hi))
+                     for d, (lo, hi) in enumerate(bounds)],
+                    "dim int, lo double, hi double",
+                )
+                assigned = sq8_encode(
+                    assigned, bounds, vec_col="_v", out_col="_sq8",
+                    keep_vec=True,
+                )
+            self._write_cells(assigned, "base")
+            op.rewritten = True
 
     def add(
         self,
@@ -1171,44 +1123,11 @@ class IvfIndex:
         lease instead of the root, auto-maintenance skipped (the
         coordinator owns the cadence); see ``GramIndex.add``."""
         import uuid
-        from contextlib import ExitStack
 
         spark = table.df.sparkSession
-        from ralf_spark.connectors import (
-            acquire_writer_lease,
-            held_add_lease,
-        )
-
         tag = batch_tag if batch_tag is not None else uuid.uuid4().hex[:12]
-        lease_path: str | None = None
-        expect_epoch: int | None = None
-        with ExitStack() as stack:
-            if self.concurrent_adds:
-                # announce + KEEP the tag lease heartbeated through the
-                # publish (r15, ADVICE r14 medium) under a per-add-unique
-                # writer id (ADVICE r14 low)
-                lease_path, writer_id = stack.enter_context(
-                    held_add_lease(
-                        spark, self.path, tag, writer_id=writer_id
-                    )
-                )
-                # record the store generation AT ANNOUNCE (r16, ADVICE
-                # r15 low) — the publish fence compares it
-                from ralf_spark.connectors import read_store_epoch
-
-                expect_epoch = read_store_epoch(spark, self.path)
-            else:
-                # single-writer mode IGNORES writer_id (r15, ADVICE r14
-                # low): the handle's whole lifecycle (this acquire, the
-                # publish-time hold, a nested auto-maintain) runs under
-                # the process identity — honoring a caller id on just
-                # this acquire made the publish's re-acquire (and any
-                # nested maintain) self-conflict on every batch
-                writer_id = None
-                acquire_writer_lease(spark, self.path)  # single-writer (r12)
+        with self._store.add_session(spark, tag, writer_id) as fence:
             if self.auto_maintain and not self.concurrent_adds:
-                from ralf_spark.layout import batch_tag_count
-
                 if (
                     batch_tag_count(spark, f"{self.path}/cells")
                     > self.auto_maintain
@@ -1226,11 +1145,7 @@ class IvfIndex:
                     assigned, bounds, vec_col="_v", out_col="_sq8",
                     keep_vec=True,
                 )
-            self._write_cells(
-                assigned, tag, "overwrite",
-                lease_path=lease_path, writer_id=writer_id,
-                expect_epoch=expect_epoch,
-            )
+            self._write_cells(assigned, tag, fence)
 
     def maintain(
         self,
@@ -1256,45 +1171,14 @@ class IvfIndex:
         :data:`~ralf_spark.layout.COMPACTED_TIER_LIMIT` compacted
         partitions exist, then one full fold — ~8× less write
         amplification on a growing index (see MinHashIndex.maintain)."""
-        from ralf_spark.connectors import (
-            acquire_writer_lease,
-            assert_no_concurrent_adds,
-        )
-        from ralf_spark.layout import (
-            compact_batch_partitions,
-            tiered_compaction_sources,
-        )
-
         # root lease first (r12 review): contend with add()/build() on
-        # the store root, not only per-subtree inside the compaction;
-        # r14: refuse while tag-scoped adds are in flight
-        acquire_writer_lease(spark, self.path)
-        # r16: a refusal releases the root (see IvfIndex.build)
-        try:
-            assert_no_concurrent_adds(spark, self.path)
-        except Exception:
-            self._handoff_root(spark)
-            raise
-        root = f"{self.path}/cells"
-        sources = (
-            tiered_compaction_sources(spark, root, keep_last=keep_last)
-            if tiered
-            else None
-        )
-        if tiered and sources is None:
-            self._handoff_root(spark)
-            return None
-        out = compact_batch_partitions(
-            spark, root, keep_last=keep_last,
-            target_file_bytes=target_file_bytes, sources=sources,
-        )
-        if out:
-            # a fold happened: bump the store generation so a lapsed
-            # concurrent add's publish fence observes it (r16)
-            from ralf_spark.connectors import bump_store_epoch
-
-            bump_store_epoch(spark, self.path)
-        self._handoff_root(spark)
+        # the store root, not only per-subtree inside the compaction
+        with self._store.exclusive(spark) as op:
+            out = compact_tiered(
+                spark, f"{self.path}/cells", keep_last=keep_last,
+                tiered=tiered, target_file_bytes=target_file_bytes,
+            )
+            op.rewritten = bool(out)
         return out
 
     def query(

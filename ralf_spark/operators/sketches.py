@@ -100,12 +100,22 @@ def kmv_state_update(
     (:func:`kmv_merge_state`), which is IDEMPOTENT by algebra (re-folding
     seen values cannot change a min-k set), like the HLL register max."""
     value = F.col(value_col) if isinstance(value_col, str) else value_col
-    hashed = (
-        df.select(*group_cols, stable_hash64(value).alias("h")).distinct()
+    return kmv_fold(
+        df.select(*group_cols, stable_hash64(value).alias("h")), group_cols, k
     )
+
+
+def kmv_fold(rows: DataFrame, group_cols: list[str], k: int = 32) -> DataFrame:
+    """The KMV union over a set of ``group_cols + [h]`` rows: dedup, keep
+    each group's k smallest hashes. The update, the two-table merge and
+    the append log's compaction and read all fold through it. Spark runs
+    the per-group k-smallest as WindowGroupLimit — map-side pre-limited
+    to k rows per group."""
     w = Window.partitionBy(*group_cols).orderBy("h")
     return (
-        hashed.withColumn("rk", F.row_number().over(w))
+        rows.select(*group_cols, "h")
+        .distinct()
+        .withColumn("rk", F.row_number().over(w))
         .where(F.col("rk") <= k)
         .drop("rk")
     )
@@ -114,17 +124,13 @@ def kmv_state_update(
 def kmv_merge_state(
     state: DataFrame, batch: DataFrame, group_cols: list[str], k: int = 32
 ) -> DataFrame:
-    """Merge two KMV hash tables: union, dedup, keep each group's k
-    smallest (the KMV union). Same WindowGroupLimit shape as the update —
-    map-side pre-limited to k rows per group."""
-    w = Window.partitionBy(*group_cols).orderBy("h")
-    return (
-        state.select(*group_cols, "h")
-        .unionByName(batch.select(*group_cols, "h"))
-        .distinct()
-        .withColumn("rk", F.row_number().over(w))
-        .where(F.col("rk") <= k)
-        .drop("rk")
+    """Merge two KMV hash tables: :func:`kmv_fold` over their union."""
+    return kmv_fold(
+        state.select(*group_cols, "h").unionByName(
+            batch.select(*group_cols, "h")
+        ),
+        group_cols,
+        k,
     )
 
 
@@ -200,7 +206,7 @@ def rq_state_update(
     before the shuffle, so the exchange carries O(groups·k)."""
     value = F.col(value_col) if isinstance(value_col, str) else value_col
     ident = F.col(id_col) if isinstance(id_col, str) else id_col
-    hashed = (
+    return rq_fold(
         df.select(
             *group_cols,
             stable_hash64(ident).alias("h"),
@@ -209,12 +215,23 @@ def rq_state_update(
         # NULL values are excluded BEFORE the draw (a quantile over
         # nulls is undefined, and Spark/DuckDB disagree on null sort
         # position — the one spot that would break cross-engine replay)
-        .where(F.col("v").isNotNull())
-        .distinct()
+        .where(F.col("v").isNotNull()),
+        group_cols,
+        k,
     )
+
+
+def rq_fold(rows: DataFrame, group_cols: list[str], k: int = 256) -> DataFrame:
+    """The bottom-k union over a set of ``group_cols + [h, v]`` rows:
+    dedup, keep each group's k smallest by ``(h, v)`` — associative,
+    commutative, idempotent (re-folding seen rows cannot change a min-k
+    set). The update, the merge and the append log fold through it, with
+    the same WindowGroupLimit shape as :func:`kmv_fold`."""
     w = Window.partitionBy(*group_cols).orderBy("h", "v")
     return (
-        hashed.withColumn("rk", F.row_number().over(w))
+        rows.select(*group_cols, "h", "v")
+        .distinct()
+        .withColumn("rk", F.row_number().over(w))
         .where(F.col("rk") <= k)
         .drop("rk")
     )
@@ -223,18 +240,14 @@ def rq_state_update(
 def rq_merge_state(
     state: DataFrame, batch: DataFrame, group_cols: list[str], k: int = 256
 ) -> DataFrame:
-    """Merge two bottom-k sample tables: union, dedup, keep each group's
-    k smallest by ``(h, v)`` — associative, commutative, idempotent
-    (re-folding seen rows cannot change a min-k set). Same
-    WindowGroupLimit shape as the update."""
-    w = Window.partitionBy(*group_cols).orderBy("h", "v")
-    return (
-        state.select(*group_cols, "h", "v")
-        .unionByName(batch.select(*group_cols, "h", "v"))
-        .distinct()
-        .withColumn("rk", F.row_number().over(w))
-        .where(F.col("rk") <= k)
-        .drop("rk")
+    """Merge two bottom-k sample tables: :func:`rq_fold` over their
+    union."""
+    return rq_fold(
+        state.select(*group_cols, "h", "v").unionByName(
+            batch.select(*group_cols, "h", "v")
+        ),
+        group_cols,
+        k,
     )
 
 
@@ -374,17 +387,24 @@ def hll_register_update(
     )
 
 
+def hll_fold(regs: DataFrame, group_cols: list[str]) -> DataFrame:
+    """The HLL union over a set of ``group_cols + [bucket, reg]`` rows:
+    register-wise max — associative, commutative, idempotent. One hash
+    aggregation on (group, bucket); the merge and the append log's
+    compaction and read fold through it."""
+    return regs.groupBy(*group_cols, "bucket").agg(F.max("reg").alias("reg"))
+
+
 def hll_merge_registers(
     state: DataFrame, batch_regs: DataFrame, group_cols: list[str]
 ) -> DataFrame:
-    """Merge two register tables: register-wise max (the HLL union —
-    associative, commutative, idempotent). One hash aggregation on
-    (group, bucket); keys only on one side pass through."""
-    return (
-        state.select(*group_cols, "bucket", "reg")
-        .unionByName(batch_regs.select(*group_cols, "bucket", "reg"))
-        .groupBy(*group_cols, "bucket")
-        .agg(F.max("reg").alias("reg"))
+    """Merge two register tables: :func:`hll_fold` over their union
+    (keys only on one side pass through)."""
+    return hll_fold(
+        state.select(*group_cols, "bucket", "reg").unionByName(
+            batch_regs.select(*group_cols, "bucket", "reg")
+        ),
+        group_cols,
     )
 
 
@@ -525,17 +545,20 @@ def cms_counter_update(
     return hashed.groupBy("r", "bucket").agg(F.count("*").alias("c"))
 
 
-def cms_merge_counters(state: DataFrame, batch: DataFrame) -> DataFrame:
-    """Merge two counter matrices: counter-wise sum (the CMS union).
-    One hash aggregation on (r, bucket); cells only on one side pass
-    through with their own count."""
-    from pyspark.sql import functions as F
+def cms_fold(counters: DataFrame) -> DataFrame:
+    """The CMS union over a set of ``(r, bucket, c)`` rows: counter-wise
+    sum, one hash aggregation on (r, bucket). The merge and the append
+    log's compaction and read fold through it."""
+    return counters.groupBy("r", "bucket").agg(F.sum("c").alias("c"))
 
-    return (
-        state.select("r", "bucket", "c")
-        .unionByName(batch.select("r", "bucket", "c"))
-        .groupBy("r", "bucket")
-        .agg(F.sum("c").alias("c"))
+
+def cms_merge_counters(state: DataFrame, batch: DataFrame) -> DataFrame:
+    """Merge two counter matrices: :func:`cms_fold` over their union
+    (cells only on one side pass through with their own count)."""
+    return cms_fold(
+        state.select("r", "bucket", "c").unionByName(
+            batch.select("r", "bucket", "c")
+        )
     )
 
 

@@ -481,72 +481,35 @@ def _bucketed_fold_upsert(
         summary.unpersist()
 
 
-#: replay-guard sidecar of a sketch append log: the cumulative set of
-#: ``_batch`` tags that MERGING compaction has folded away. A replay of
-#: a folded tag would recreate its partition and (for the CMS counter
-#: sums) double-count — the append callback refuses such tags instead.
-_COMPACTED_TAGS_NAME = ".compacted_tags.json"
-
-
-def _read_compacted_tags(spark: SparkSession, path: str) -> set[str]:
-    from ralf_spark.connectors import _hadoop_fs, read_json_sidecar
-
-    sidecar = f"{path}/{_COMPACTED_TAGS_NAME}"
-    fs, jpath = _hadoop_fs(spark, sidecar)
-    if not fs.exists(jpath):
-        return set()
-    return set(read_json_sidecar(spark, sidecar).get("tags", []))
-
-
 def hll_log_merge(group_cols: list[str]):
     """The HLL append log's row-set fold (register-wise max) — pass to
     :func:`maintain_sketch_log`; also the auto-maintenance merge."""
-    return lambda df: df.groupBy(*group_cols, "bucket").agg(
-        F.max("reg").alias("reg")
-    )
+    from ralf_spark.operators.sketches import hll_fold
+
+    return lambda df: hll_fold(df, group_cols)
 
 
 def kmv_log_merge(group_cols: list[str], k: int = 32):
     """The KMV append log's row-set fold (union-distinct-keep-k)."""
-    from pyspark.sql import Window
+    from ralf_spark.operators.sketches import kmv_fold
 
-    w = Window.partitionBy(*group_cols).orderBy("h")
-
-    def merge(df: DataFrame) -> DataFrame:
-        return (
-            df.select(*group_cols, "h")
-            .distinct()
-            .withColumn("_rk", F.row_number().over(w))
-            .where(F.col("_rk") <= k)
-            .drop("_rk")
-        )
-
-    return merge
+    return lambda df: kmv_fold(df, group_cols, k)
 
 
 def rq_log_merge(group_cols: list[str], k: int = 256):
     """The reservoir-quantile append log's row-set fold
     (union-distinct-keep-k by ``(h, v)`` — the bottom-k union, idempotent
     like the KMV min-k set)."""
-    from pyspark.sql import Window
+    from ralf_spark.operators.sketches import rq_fold
 
-    w = Window.partitionBy(*group_cols).orderBy("h", "v")
-
-    def merge(df: DataFrame) -> DataFrame:
-        return (
-            df.select(*group_cols, "h", "v")
-            .distinct()
-            .withColumn("_rk", F.row_number().over(w))
-            .where(F.col("_rk") <= k)
-            .drop("_rk")
-        )
-
-    return merge
+    return lambda df: rq_fold(df, group_cols, k)
 
 
 def cms_log_merge():
     """The CMS append log's row-set fold (counter-wise sum per cell)."""
-    return lambda df: df.groupBy("r", "bucket").agg(F.sum("c").alias("c"))
+    from ralf_spark.operators.sketches import cms_fold
+
+    return cms_fold
 
 
 def _append_log_batch(
@@ -584,10 +547,11 @@ def _append_log_batch(
 
     def upsert(batch_df: DataFrame, batch_id: int) -> None:
         from ralf_spark.connectors import acquire_writer_lease
+        from ralf_spark.layout import folded_tags
 
         spark = batch_df.sparkSession
         acquire_writer_lease(spark, path)  # single-writer guard (r12)
-        if f"b{batch_id}" in _read_compacted_tags(spark, path):
+        if f"b{batch_id}" in folded_tags(spark, path):
             return  # replay of a batch the compaction already folded
         (
             summarize(batch_df)
@@ -747,28 +711,14 @@ def hll_log_state(
     logged row — associative/commutative/idempotent, so the result is
     independent of batching AND of how much the log has been
     compacted."""
-    return (
-        _read_sketch_log(spark, path)
-        .groupBy(*group_cols, "bucket")
-        .agg(F.max("reg").alias("reg"))
-    )
+    return hll_log_merge(group_cols)(_read_sketch_log(spark, path))
 
 
 def kmv_log_state(
     spark: SparkSession, path: str, group_cols: list[str], k: int = 32
 ) -> DataFrame:
     """Merge a KMV append log on read: union-distinct-keep-k."""
-    from pyspark.sql import Window
-
-    w = Window.partitionBy(*group_cols).orderBy("h")
-    return (
-        _read_sketch_log(spark, path)
-        .select(*group_cols, "h")
-        .distinct()
-        .withColumn("_rk", F.row_number().over(w))
-        .where(F.col("_rk") <= k)
-        .drop("_rk")
-    )
+    return kmv_log_merge(group_cols, k)(_read_sketch_log(spark, path))
 
 
 def rq_log_state(
@@ -776,26 +726,12 @@ def rq_log_state(
 ) -> DataFrame:
     """Merge a reservoir-quantile append log on read: union-distinct-
     keep-k by ``(h, v)``."""
-    from pyspark.sql import Window
-
-    w = Window.partitionBy(*group_cols).orderBy("h", "v")
-    return (
-        _read_sketch_log(spark, path)
-        .select(*group_cols, "h", "v")
-        .distinct()
-        .withColumn("_rk", F.row_number().over(w))
-        .where(F.col("_rk") <= k)
-        .drop("_rk")
-    )
+    return rq_log_merge(group_cols, k)(_read_sketch_log(spark, path))
 
 
 def cms_log_state(spark: SparkSession, path: str) -> DataFrame:
     """Merge a CMS append log on read: counter-wise sum per cell."""
-    return (
-        _read_sketch_log(spark, path)
-        .groupBy("r", "bucket")
-        .agg(F.sum("c").alias("c"))
-    )
+    return cms_log_merge()(_read_sketch_log(spark, path))
 
 
 def maintain_sketch_log(
@@ -816,27 +752,19 @@ def maintain_sketch_log(
     — merging MUST be algebra-exact (it is, for all three sketches),
     because estimates read the compacted log through the same fold.
 
-    Replay interaction (r11, ADVICE r10): folded tags are recorded in a
-    ``.compacted_tags.json`` sidecar INSIDE the compaction transaction
-    (before the done marker), and the append callbacks ignore a
-    replayed tag already folded — without the guard, a checkpoint
-    rollback replaying a pre-compaction batch would recreate its
-    partition and the CMS counter sums would double-count (HLL/KMV are
-    immune by algebra). Keep ``keep_last`` at or above the number of
+    Replay interaction (r11, ADVICE r10): folded tags are recorded in
+    the folded-tags sidecar INSIDE the compaction transaction
+    (:func:`~ralf_spark.layout.compact_tiered`), and the append callbacks
+    ignore a replayed tag already folded — without the guard, a
+    checkpoint rollback replaying a pre-compaction batch would recreate
+    its partition and the CMS counter sums would double-count (HLL/KMV
+    are immune by algebra). Keep ``keep_last`` at or above the number of
     batches a retry can have in flight (1 for foreachBatch)."""
-    from ralf_spark.connectors import write_json_sidecar
-    from ralf_spark.layout import compact_batch_partitions
+    from ralf_spark.layout import compact_tiered
 
-    def record(sources: list[str]) -> None:
-        tags = _read_compacted_tags(spark, path)
-        tags.update(sources)
-        write_json_sidecar(
-            spark, f"{path}/{_COMPACTED_TAGS_NAME}", {"tags": sorted(tags)}
-        )
-
-    return compact_batch_partitions(
-        spark, path, keep_last=keep_last, transform=merge,
-        on_before_done=record,
+    return compact_tiered(
+        spark, path, keep_last=keep_last, tiered=False, record_folds=True,
+        transform=merge,
     )
 
 
@@ -1718,66 +1646,57 @@ def foreach_batch_index_add(
     ``auto_maintain=0`` and let the coordinator compact), and the
     folds commute exactly as in the batch multi-writer contract.
     """
-    if auto_maintain is None:
-        from ralf_spark.layout import AUTO_MAINTAIN_BATCHES
+    return df.writeStream.foreachBatch(
+        _index_log_batch(
+            pairs_path,
+            lambda table, tag: index.add(
+                table, text_col=text_col, threshold=threshold,
+                batch_tag=tag, writer_id=writer_id,
+            ),
+            key, tag_prefix, auto_maintain,
+        )
+    )
 
+
+def _index_log_batch(
+    log_path: str, add, key: str, tag_prefix: str, auto_maintain: int | None
+):
+    """foreachBatch callback of the streaming index sinks: fold the
+    micro-batch into the index with ``add(table, tag)`` and append the
+    rows it returns to ``log_path`` under the same ``_batch`` tag
+    (dynamic overwrite: a replay rewrites itself). A tag the log's
+    compaction already folded is skipped, and the log self-compacts past
+    ``auto_maintain`` partitions (default
+    :data:`~ralf_spark.layout.AUTO_MAINTAIN_BATCHES`; 0 disables)."""
+    from ralf_spark.layout import (
+        AUTO_MAINTAIN_BATCHES,
+        auto_compact_log,
+        folded_tags,
+    )
+    from ralf_spark.operators.util import unpersist_cached
+
+    if auto_maintain is None:
         auto_maintain = AUTO_MAINTAIN_BATCHES
 
-    def add(batch_df: DataFrame, batch_id: int) -> None:
-        from ralf_spark.operators.util import unpersist_cached
-
+    def fold(batch_df: DataFrame, batch_id: int) -> None:
         if not batch_df.take(1):
             return
         spark = batch_df.sparkSession
         tag = f"{tag_prefix}{batch_id}"
-        if tag in _read_compacted_tags(spark, pairs_path):
+        if tag in folded_tags(spark, log_path):
             return  # replay of a tag already folded into the compacted log
-        pairs = index.add(
-            FeatureTable(batch_df, key=key),
-            text_col=text_col,
-            threshold=threshold,
-            batch_tag=tag,
-            writer_id=writer_id,
-        )
+        out = add(FeatureTable(batch_df, key=key), tag)
         (
-            pairs.withColumn("_batch", F.lit(tag))
+            out.withColumn("_batch", F.lit(tag))
             .write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")
             .partitionBy("_batch")
-            .parquet(pairs_path)
+            .parquet(log_path)
         )
-        unpersist_cached(pairs)
-        if auto_maintain:
-            from ralf_spark.connectors import write_json_sidecar
-            from ralf_spark.layout import (
-                batch_tag_count,
-                compact_batch_partitions,
-                tiered_compaction_sources,
-            )
+        unpersist_cached(out)
+        auto_compact_log(spark, log_path, auto_maintain)
 
-            if batch_tag_count(spark, pairs_path) > auto_maintain:
-
-                def record(sources: list[str]) -> None:
-                    tags = _read_compacted_tags(spark, pairs_path)
-                    tags.update(sources)
-                    write_json_sidecar(
-                        spark,
-                        f"{pairs_path}/{_COMPACTED_TAGS_NAME}",
-                        {"tags": sorted(tags)},
-                    )
-
-                # tiered (r11): the pairs log grows with the corpus, so
-                # fold raw tags only until the compacted tier fills
-                srcs = tiered_compaction_sources(
-                    spark, pairs_path, keep_last=1
-                )
-                if srcs is not None:
-                    compact_batch_partitions(
-                        spark, pairs_path, keep_last=1,
-                        on_before_done=record, sources=srcs,
-                    )
-
-    return df.writeStream.foreachBatch(add)
+    return fold
 
 
 def foreach_batch_gram_decontaminate(
@@ -1923,60 +1842,12 @@ def foreach_batch_gram_dedup(
     ``auto_maintain`` batch partitions (tiered, transaction-recorded —
     identical discipline to the pairs log); ``auto_maintain=0``
     disables."""
-    if auto_maintain is None:
-        from ralf_spark.layout import AUTO_MAINTAIN_BATCHES
-
-        auto_maintain = AUTO_MAINTAIN_BATCHES
-
-    def add(batch_df: DataFrame, batch_id: int) -> None:
-        from ralf_spark.operators.util import unpersist_cached
-
-        if not batch_df.take(1):
-            return
-        spark = batch_df.sparkSession
-        tag = f"{tag_prefix}{batch_id}"
-        if tag in _read_compacted_tags(spark, spans_path):
-            return  # replay of a tag already folded into the compacted log
-        spans = index.add(
-            FeatureTable(batch_df, key=key),
-            text_col=text_col,
-            batch_tag=tag,
-            writer_id=writer_id,
+    return df.writeStream.foreachBatch(
+        _index_log_batch(
+            spans_path,
+            lambda table, tag: index.add(
+                table, text_col=text_col, batch_tag=tag, writer_id=writer_id
+            ),
+            key, tag_prefix, auto_maintain,
         )
-        (
-            spans.withColumn("_batch", F.lit(tag))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("_batch")
-            .parquet(spans_path)
-        )
-        unpersist_cached(spans)
-        if auto_maintain:
-            from ralf_spark.connectors import write_json_sidecar
-            from ralf_spark.layout import (
-                batch_tag_count,
-                compact_batch_partitions,
-                tiered_compaction_sources,
-            )
-
-            if batch_tag_count(spark, spans_path) > auto_maintain:
-
-                def record(sources: list[str]) -> None:
-                    tags = _read_compacted_tags(spark, spans_path)
-                    tags.update(sources)
-                    write_json_sidecar(
-                        spark,
-                        f"{spans_path}/{_COMPACTED_TAGS_NAME}",
-                        {"tags": sorted(tags)},
-                    )
-
-                srcs = tiered_compaction_sources(
-                    spark, spans_path, keep_last=1
-                )
-                if srcs is not None:
-                    compact_batch_partitions(
-                        spark, spans_path, keep_last=1,
-                        on_before_done=record, sources=srcs,
-                    )
-
-    return df.writeStream.foreachBatch(add)
+    )

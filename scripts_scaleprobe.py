@@ -1927,7 +1927,8 @@ def concurrent_adds_probe(n_batches: int = 8, workers: int = 2) -> dict:
                 raise errs[0]
         out[f"{mode}_wall_s"] = round(time.perf_counter() - t0, 2)
         out[f"{mode}_distinct_dg"] = (
-            idx._read(spark).select("_dg").distinct().count()
+            idx._store.snapshot(spark, "grams")
+            .select("_dg").distinct().count()
         )
     assert out["serial_distinct_dg"] == out["concurrent_distinct_dg"]
     out["speedup"] = round(

@@ -92,12 +92,14 @@ def test_gram_concurrent_adds_fold_equals_serial(spark, tmp_path):
     serial.add(ta).collect()
     serial.add(tb).collect()
     got = sorted(
-        r["_dg"] for r in conc._read(spark).select("_dg").distinct()
-        .collect()
+        r["_dg"]
+        for r in conc._store.snapshot(spark, "grams")
+        .select("_dg").distinct().collect()
     )
     want = sorted(
-        r["_dg"] for r in serial._read(spark).select("_dg").distinct()
-        .collect()
+        r["_dg"]
+        for r in serial._store.snapshot(spark, "grams")
+        .select("_dg").distinct().collect()
     )
     assert got == want and got
     probe = _docs(spark, base + a + b)
@@ -108,8 +110,9 @@ def test_gram_concurrent_adds_fold_equals_serial(spark, tmp_path):
     # (their tag leases were released on completion)
     conc.maintain(spark, keep_last=0, tiered=False)
     after = sorted(
-        r["_dg"] for r in conc._read(spark).select("_dg").distinct()
-        .collect()
+        r["_dg"]
+        for r in conc._store.snapshot(spark, "grams")
+        .select("_dg").distinct().collect()
     )
     assert after == want
 
@@ -459,3 +462,122 @@ def test_gram_cross_process_concurrent_adds(spark, tmp_path):
     # with the foreign processes gone, the exclusive op succeeds
     out = idx.maintain(spark, keep_last=0, tiered=False)
     assert out["grams"]
+
+
+def _handoff_index(spark, kind, path):
+    """(index, build, add) for one index class in concurrent-adds mode:
+    ``build()`` rebuilds from a fixed corpus, ``add(tag, writer_id)``
+    folds one small batch and drains what it returns."""
+    from ralf_spark.operators.dedup import GramIndex, MinHashIndex
+    from ralf_spark.operators.similarity import IvfIndex
+
+    base, a, _ = _batches()
+    if kind == "ivf":
+        def vecs(lo, n):
+            return FeatureTable(
+                spark.createDataFrame(
+                    [(lo + i, [float((lo + i) % 7), 1.0, 0.0])
+                     for i in range(n)],
+                    "id long, embedding array<double>",
+                ),
+                key="id",
+            )
+
+        idx = IvfIndex(
+            path, vec_col="embedding", auto_maintain=0, concurrent_adds=True
+        )
+        cents = spark.createDataFrame(
+            [(0, [0.0, 1.0, 0.0]), (1, [5.0, 1.0, 0.0])],
+            "centroid_id long, centroid_vec array<double>",
+        )
+        return (
+            idx,
+            lambda: idx.build(vecs(0, 8), cents),
+            lambda n, tag, wid: idx.add(
+                vecs(100 * n, 4), batch_tag=tag, writer_id=wid
+            ),
+        )
+    if kind == "minhash":
+        idx = MinHashIndex(
+            path, num_perm=16, bands=8, auto_maintain=0,
+            concurrent_adds=True,
+        )
+    else:
+        idx = GramIndex(
+            path, min_tokens=8, auto_maintain=0, count_mode=True,
+            concurrent_adds=True,
+        )
+
+    def add(n, tag, wid):
+        rows = [(100 * n + i, t) for i, (_, t) in enumerate(a)]
+        idx.add(_docs(spark, rows), batch_tag=tag, writer_id=wid).collect()
+
+    return idx, lambda: idx.build(_docs(spark, base)), add
+
+
+@pytest.mark.parametrize("kind", ["minhash", "gram", "ivf"])
+def test_exclusive_ops_hand_back_the_root(spark, tmp_path, kind):
+    """Every exit of an exclusive operation hands the store root back:
+    no root lease file is left, and a FOREIGN writer's add goes through
+    right away instead of waiting out the lease TTL. The exits: build,
+    a maintain with nothing to fold, a folding maintain, a build refused
+    under a live foreign add lease, and GramIndex's retro_delta with no
+    new tags and commit_retro_delta with nothing pending."""
+    import os
+
+    from ralf_spark.connectors import WRITER_LEASE_SUFFIX
+
+    path = str(tmp_path / kind)
+    idx, build, add = _handoff_index(spark, kind, path)
+    adds = iter(range(1, 100))
+
+    def assert_handed_back():
+        assert not os.path.exists(path + WRITER_LEASE_SUFFIX)
+        n = next(adds)
+        add(n, f"f{n}", f"foreign-{n}")
+
+    def folded(summary) -> bool:
+        # IvfIndex returns the compaction summary, the others one per
+        # projection
+        return bool(summary) and (
+            "sources" in summary or any(summary.values())
+        )
+
+    build()
+    assert_handed_back()
+    assert not folded(idx.maintain(spark))  # base + f1: nothing to fold
+    assert_handed_back()
+    assert folded(idx.maintain(spark))  # base + f1 fold, f2 is kept
+    assert_handed_back()
+    acquire_add_lease(spark, path, "tX", writer_id="worker-x")
+    with pytest.raises(ConcurrentWriterError, match="in-flight"):
+        build()
+    release_add_lease(spark, path, "tX", writer_id="worker-x")
+    assert_handed_back()
+    if kind == "gram":
+        idx.retro_delta(spark, durability="at_call").collect()
+        idx.retro_delta(spark).collect()  # every tag covered: no new tags
+        assert_handed_back()
+        assert idx.commit_retro_delta(spark) == []  # nothing pending
+        assert_handed_back()
+
+
+def test_index_modules_name_no_lease_primitives():
+    """The index classes reach the store protocol only through
+    ``layout.BatchStore``: no lease or epoch primitive is named in the
+    operator modules."""
+    import pathlib
+    import re
+
+    names = (
+        "acquire_writer_lease", "verify_writer_lease", "hold_writer_lease",
+        "release_writer_lease", "held_add_lease",
+        "assert_no_concurrent_adds", "check_no_foreign_root_lease",
+        "read_store_epoch", "check_store_epoch", "bump_store_epoch",
+    )
+    ops = pathlib.Path(__file__).resolve().parents[1] / "ralf_spark"
+    ops = ops / "operators"
+    for module in ("dedup.py", "similarity.py"):
+        text = (ops / module).read_text()
+        found = [n for n in names if re.search(rf"\b{n}\b", text)]
+        assert not found, f"{module} names {found}"

@@ -588,29 +588,61 @@ def test_store_epoch_roundtrip_and_fence(spark, tmp_path):
 
 
 @pytest.mark.slow
-def test_exclusive_ops_bump_store_epoch(spark, tmp_path):
-    """Rebuilds advance the generation the publish fence compares."""
-    from pyspark.sql import functions as F
-
+@pytest.mark.parametrize("kind", ["minhash", "gram", "ivf"])
+def test_exclusive_ops_bump_store_epoch(spark, tmp_path, kind):
+    """Rebuilds and folding maintains advance the generation the publish
+    fence compares; a maintain with nothing to fold does not."""
     from ralf_spark.connectors import read_store_epoch
-    from ralf_spark.operators.dedup import GramIndex
+    from ralf_spark.operators.dedup import GramIndex, MinHashIndex
+    from ralf_spark.operators.similarity import IvfIndex
     from ralf_spark.table import FeatureTable
 
-    docs = FeatureTable(
-        spark.createDataFrame(
-            [(i, "alpha beta gamma delta epsilon zeta eta theta iota")
-             for i in range(4)],
-            "doc_id bigint, text string",
-        ),
-        key="doc_id",
-    )
-    p = str(tmp_path / "gi")
-    idx = GramIndex(p, min_tokens=8)
+    def docs(lo):
+        return FeatureTable(
+            spark.createDataFrame(
+                [(lo + i, "alpha beta gamma delta epsilon zeta eta theta "
+                  f"iota w{lo + i}") for i in range(4)],
+                "doc_id bigint, text string",
+            ),
+            key="doc_id",
+        )
+
+    def vecs(lo):
+        return FeatureTable(
+            spark.createDataFrame(
+                [(lo + i, [float(i), 1.0]) for i in range(4)],
+                "id bigint, embedding array<double>",
+            ),
+            key="id",
+        )
+
+    p = str(tmp_path / kind)
+    if kind == "ivf":
+        idx = IvfIndex(p, auto_maintain=0)
+        cents = spark.createDataFrame(
+            [(0, [0.0, 1.0]), (1, [3.0, 1.0])],
+            "centroid_id long, centroid_vec array<double>",
+        )
+        build = lambda: idx.build(vecs(0), cents)  # noqa: E731
+        add = lambda: idx.add(vecs(10), batch_tag="b1")  # noqa: E731
+    else:
+        idx = (
+            GramIndex(p, min_tokens=8, auto_maintain=0)
+            if kind == "gram"
+            else MinHashIndex(p, num_perm=16, bands=8, auto_maintain=0)
+        )
+        build = lambda: idx.build(docs(0))  # noqa: E731
+        add = lambda: idx.add(docs(10), batch_tag="b1").collect()  # noqa: E731
     assert read_store_epoch(spark, p) == 0
-    idx.build(docs)
+    build()
     assert read_store_epoch(spark, p) == 1
-    idx.build(docs)  # re-build bumps again
+    build()  # re-build bumps again
     assert read_store_epoch(spark, p) == 2
+    idx.maintain(spark)  # one tag: nothing to fold
+    assert read_store_epoch(spark, p) == 2
+    add()
+    idx.maintain(spark, keep_last=0, tiered=False)  # base + b1 fold
+    assert read_store_epoch(spark, p) == 3
 
 
 def test_footer_rows_via_file_scheme_hadoop_path(

@@ -42,7 +42,7 @@ def test_minhash_index_maintain_preserves_rows_and_pairs(spark, tmp_path):
         ids = range(6 + b * 4, 10 + b * 4)
         idx.add(_docs(spark, ids), threshold=0.3, batch_tag=f"b{b}")
         ref.add(_docs(spark, ids), threshold=0.3, batch_tag=f"b{b}")
-    before_sigs = _rows(idx._read(spark, "sigs"))
+    before_sigs = _rows(idx._store.snapshot(spark, "sigs"))
     dirs_before = len(glob.glob(f"{path}/sigs/_batch=*"))
     assert dirs_before == 5  # build + 4 adds
     out = idx.maintain(spark)
@@ -51,7 +51,7 @@ def test_minhash_index_maintain_preserves_rows_and_pairs(spark, tmp_path):
     assert len(glob.glob(f"{path}/buckets/_batch=*")) == 2
     # stored rows identical, fresh handle
     idx2 = MinHashIndex(path, num_perm=16, bands=8, hash_fn="xxhash64")
-    assert _rows(idx2._read(spark, "sigs")) == before_sigs
+    assert _rows(idx2._store.snapshot(spark, "sigs")) == before_sigs
     # a post-maintenance add returns the same pairs as the uncompacted twin
     batch = _docs(spark, range(100, 104))
     got = _rows(idx2.add(batch, threshold=0.3, batch_tag="post"))
@@ -129,7 +129,7 @@ def test_compaction_manifest_recovery(spark, tmp_path):
     idx.add(_docs(spark, range(4, 8)), batch_tag="b0")
     idx.add(_docs(spark, range(8, 12)), batch_tag="b1")
     root = f"{path}/sigs"
-    want = _rows(idx._read(spark, "sigs"))
+    want = _rows(idx._store.snapshot(spark, "sigs"))
 
     # crash BEFORE done: partial compacted dir exists, sources intact
     shutil.copytree(f"{root}/_batch=b0", f"{root}/_batch=ctag1")
@@ -141,7 +141,7 @@ def test_compaction_manifest_recovery(spark, tmp_path):
     assert not os.path.exists(f"{root}/_batch=ctag1")
     assert os.path.exists(f"{root}/_batch=b0")
     assert not os.path.exists(f"{root}/.compact_manifest.json")
-    assert _rows(idx._read(spark, "sigs")) == want
+    assert _rows(idx._store.snapshot(spark, "sigs")) == want
 
     # crash AFTER done: compacted dir holds the rows, a source remains
     shutil.copytree(f"{root}/_batch=b0", f"{root}/_batch=ctag2")
@@ -152,7 +152,8 @@ def test_compaction_manifest_recovery(spark, tmp_path):
     recover_compaction(spark, root)
     assert os.path.exists(f"{root}/_batch=ctag2")
     assert not os.path.exists(f"{root}/_batch=b0")
-    assert _rows(idx._read(spark, "sigs")) == want  # ctag2 replaced b0
+    # ctag2 replaced b0
+    assert _rows(idx._store.snapshot(spark, "sigs")) == want
 
 
 @pytest.mark.slow
@@ -192,7 +193,9 @@ def test_minhash_auto_maintain_cadence(spark, tmp_path):
     assert max_dirs <= 4 + COMPACTED_TIER_LIMIT
     assert len(glob.glob(f"{twin}/sigs/_batch=*")) == 9  # never compacted
     # stored rows identical across the two lifecycles
-    assert _rows(idx._read(spark, "sigs")) == _rows(ref._read(spark, "sigs"))
+    assert _rows(idx._store.snapshot(spark, "sigs")) == _rows(
+        ref._store.snapshot(spark, "sigs")
+    )
 
 
 @pytest.mark.slow
@@ -298,11 +301,8 @@ def test_pairs_log_auto_maintain_and_replay_guard(spark, tmp_path):
     threshold (plain concatenation — pair rows need no merge), folded
     tags are replay-guarded via the compacted-tags sidecar, and the
     total pair set equals the never-compacted twin's."""
-    from ralf_spark.layout import batch_tag_count
-    from ralf_spark.streaming.sinks import (
-        _read_compacted_tags,
-        foreach_batch_index_add,
-    )
+    from ralf_spark.layout import batch_tag_count, folded_tags
+    from ralf_spark.streaming.sinks import foreach_batch_index_add
 
     def batches(n_per=5):
         return [
@@ -348,7 +348,7 @@ def test_pairs_log_auto_maintain_and_replay_guard(spark, tmp_path):
 
     assert batch_tag_count(spark, pairs_a) <= 3 + COMPACTED_TIER_LIMIT
     assert batch_tag_count(spark, pairs_b) == 6  # never compacted
-    folded = _read_compacted_tags(spark, pairs_a)
+    folded = folded_tags(spark, pairs_a)
     assert folded  # sidecar recorded the folded tags
     # replay of a FOLDED tag: no-op (no partition recreated, pairs equal)
     tag = sorted(folded)[0]
@@ -420,7 +420,7 @@ def test_minhash_tier2_full_fold(spark, tmp_path):
                     threshold=0.3, batch_tag=f"b{b}")
             b += 1
         idx.maintain(spark)
-    want_rows = _rows(idx._read(spark, "sigs"))
+    want_rows = _rows(idx._store.snapshot(spark, "sigs"))
     tags = {
         os.path.basename(p).split("=", 1)[1]
         for p in glob.glob(f"{path}/sigs/_batch=*")
@@ -429,4 +429,4 @@ def test_minhash_tier2_full_fold(spark, tmp_path):
     # the tier filled and a full fold collapsed it back to one
     assert len(comp) <= COMPACTED_TIER_LIMIT
     idx2 = MinHashIndex(path, num_perm=16, bands=8, hash_fn="xxhash64")
-    assert _rows(idx2._read(spark, "sigs")) == want_rows
+    assert _rows(idx2._store.snapshot(spark, "sigs")) == want_rows

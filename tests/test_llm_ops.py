@@ -1382,7 +1382,7 @@ def test_minhash_meta_committed_read_failure_raises(spark, tmp_path):
     meta.mkdir(parents=True)
     # crashed first writer: directory exists, no committed data file
     idx = MinHashIndex(str(path), hash_fn="md5")
-    idx._check_or_write_meta(spark)  # rewrites _meta, no error
+    idx._store.pin_meta(spark)  # rewrites _meta, no error
     stored = spark.read.parquet(str(meta)).collect()[0]
     assert stored.hash_fn == "md5"
 
@@ -1392,7 +1392,7 @@ def test_minhash_meta_committed_read_failure_raises(spark, tmp_path):
     (meta2 / "part-00000-garbage.parquet").write_bytes(b"not parquet")
     idx2 = MinHashIndex(str(tmp_path / "mh2"), hash_fn="md5")
     with pytest.raises(Exception):
-        idx2._check_or_write_meta(spark)
+        idx2._store.pin_meta(spark)
 
 
 def test_pq_encode_and_adc_match_numpy(spark):
