@@ -21,6 +21,9 @@ the engine:
   streaming/foreachBatch small-file accretion.
 - :func:`file_stats` — per-file row counts + bytes, the observability
   view that tells you compaction is due.
+- :func:`write_batch` — the dynamic-overwrite write of one
+  ``_batch=<tag>`` partition, shared by every batch-partitioned store
+  and log.
 - :class:`BatchStore` — the store protocol of the persistent indexes
   over ``_batch=<tag>`` trees: root lease for exclusive operations,
   tag-scoped add leases, store epoch, fenced publish, ``_meta`` pin;
@@ -189,18 +192,40 @@ def compact(
 
     File count = ceil(current bytes / target), from the filesystem — not
     a row-count guess, so wide and narrow schemas both land near the
-    target. Uses a staged write + swap (crash leaves the original).
+    target. Published by ``connectors._staged_overwrite`` under the
+    writer lease: a crash leaves the original, or a complete rewrite
+    that the next read rolls forward.
     """
     fs, hpath = _hadoop_fs(spark, path)
     summary = fs.getContentSummary(hpath)
     n_files = max(min_files, -(-summary.getLength() // target_file_bytes))
-    df = spark.read.parquet(path)
-    staging = path.rstrip("/") + ".__compact__"
-    df.repartition(n_files).write.mode("overwrite").parquet(staging)
-    fs.delete(hpath, True)
-    jvm = spark._jvm  # type: ignore[attr-defined]
-    fs.rename(jvm.org.apache.hadoop.fs.Path(staging), hpath)
+    connectors._staged_overwrite(
+        spark, spark.read.parquet(path).repartition(n_files), path
+    )
     return n_files
+
+
+def write_batch(
+    df: DataFrame,
+    root: str,
+    tag: str,
+    partition_by: tuple[str, ...] = ("_batch",),
+) -> None:
+    """Write ``df`` as the ``_batch=<tag>`` partition of ``root`` by
+    DYNAMIC overwrite: a replayed tag rewrites its own directories in
+    place, every other partition is untouched. ``partition_by`` ends
+    with ``_batch`` (the IvfIndex cell tree puts ``cell`` first).
+
+    Every batch-partitioned store and log lands through here. Callers
+    shape the file count first (``coalesce``, ``repartition``) and take
+    whatever lease they need: the writer takes none."""
+    (
+        df.withColumn("_batch", F.lit(tag))
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy(*partition_by)
+        .parquet(root)
+    )
 
 
 def _batch_dirs(spark: SparkSession, root: str) -> dict[str, list]:
@@ -446,10 +471,9 @@ def compact_batch_partitions(
             verify_writer_lease,
         )
 
-        df = spark.read.option("basePath", root).parquet(*files)
+        df = spark.read.option("basePath", root).parquet(*files).drop("_batch")
         if transform is not None:
-            df = transform(df.drop("_batch"))
-        df = df.withColumn("_batch", F.lit(ctag))
+            df = transform(df)
         if len(pcols) > 1:
             df = df.repartition(*[F.col(c) for c in pcols[:-1]])
         else:
@@ -459,12 +483,7 @@ def compact_batch_partitions(
         # before the compacted write, renew during it (the store rewrite
         # is the longest step of the whole protocol)
         with hold_writer_lease(spark, root):
-            (
-                df.write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy(*pcols)
-                .parquet(root)
-            )
+            write_batch(df, root, ctag, tuple(pcols))
         # fencing read (r13): the merged write above is the long step —
         # only commit (done marker + source deletion) while still owner
         verify_writer_lease(spark, root)
@@ -751,13 +770,7 @@ class BatchStore:
                     spark, self.path, writer_id=fence.writer_id
                 )
                 connectors.check_store_epoch(spark, self.path, fence.epoch)
-            (
-                df.withColumn("_batch", F.lit(tag))
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy(*partition_by)
-                .parquet(f"{self.path}/{sub}")
-            )
+            write_batch(df, f"{self.path}/{sub}", tag, partition_by)
 
     def snapshot(
         self, spark: SparkSession, sub: str, exclude_tag: str | None = None

@@ -97,8 +97,9 @@ def kmv_state_update(
 ) -> DataFrame:
     """The sketch STATE: per group, the (<= k) smallest distinct value
     hashes — ``group_cols + [h]``. Mergeable by union-distinct-keep-k
-    (:func:`kmv_merge_state`), which is IDEMPOTENT by algebra (re-folding
-    seen values cannot change a min-k set), like the HLL register max."""
+    (:func:`kmv_fold` over the union), which is IDEMPOTENT by algebra
+    (re-folding seen values cannot change a min-k set), like the HLL
+    register max."""
     value = F.col(value_col) if isinstance(value_col, str) else value_col
     return kmv_fold(
         df.select(*group_cols, stable_hash64(value).alias("h")), group_cols, k
@@ -118,19 +119,6 @@ def kmv_fold(rows: DataFrame, group_cols: list[str], k: int = 32) -> DataFrame:
         .withColumn("rk", F.row_number().over(w))
         .where(F.col("rk") <= k)
         .drop("rk")
-    )
-
-
-def kmv_merge_state(
-    state: DataFrame, batch: DataFrame, group_cols: list[str], k: int = 32
-) -> DataFrame:
-    """Merge two KMV hash tables: :func:`kmv_fold` over their union."""
-    return kmv_fold(
-        state.select(*group_cols, "h").unionByName(
-            batch.select(*group_cols, "h")
-        ),
-        group_cols,
-        k,
     )
 
 
@@ -194,7 +182,7 @@ def rq_state_update(
     must identify rows uniquely (the draw is uniform over ROWS; hashing
     the value instead would dedup repeats and skew every quantile).
 
-    Mergeable by union-distinct-keep-k (:func:`rq_merge_state`) —
+    Mergeable by union-distinct-keep-k (:func:`rq_fold` over the union) —
     IDEMPOTENT by algebra like the KMV min-k set, so any micro-batching
     and any replay converge on the identical sample. Deterministic: the
     keep-k rank orders by ``(h, v)``, so even a 60-bit hash collision
@@ -234,20 +222,6 @@ def rq_fold(rows: DataFrame, group_cols: list[str], k: int = 256) -> DataFrame:
         .withColumn("rk", F.row_number().over(w))
         .where(F.col("rk") <= k)
         .drop("rk")
-    )
-
-
-def rq_merge_state(
-    state: DataFrame, batch: DataFrame, group_cols: list[str], k: int = 256
-) -> DataFrame:
-    """Merge two bottom-k sample tables: :func:`rq_fold` over their
-    union."""
-    return rq_fold(
-        state.select(*group_cols, "h", "v").unionByName(
-            batch.select(*group_cols, "h", "v")
-        ),
-        group_cols,
-        k,
     )
 
 
@@ -395,19 +369,6 @@ def hll_fold(regs: DataFrame, group_cols: list[str]) -> DataFrame:
     return regs.groupBy(*group_cols, "bucket").agg(F.max("reg").alias("reg"))
 
 
-def hll_merge_registers(
-    state: DataFrame, batch_regs: DataFrame, group_cols: list[str]
-) -> DataFrame:
-    """Merge two register tables: :func:`hll_fold` over their union
-    (keys only on one side pass through)."""
-    return hll_fold(
-        state.select(*group_cols, "bucket", "reg").unionByName(
-            batch_regs.select(*group_cols, "bucket", "reg")
-        ),
-        group_cols,
-    )
-
-
 def hll_estimate(
     regs: DataFrame, group_cols: list[str], b: int = 6
 ) -> DataFrame:
@@ -533,7 +494,7 @@ def cms_counter_update(
 ) -> DataFrame:
     """The sketch STATE: the (r, bucket, c) counter matrix of ``df`` —
     at most ``depth * width`` rows whatever the input size. Mergeable by
-    counter-wise SUM (:func:`cms_merge_counters`); unlike the HLL
+    counter-wise SUM (:func:`cms_fold` over the union); unlike the HLL
     register max, a sum double-counts on replay, so the streaming sink
     guards with the in-table batch marker."""
     from pyspark.sql import functions as F
@@ -550,16 +511,6 @@ def cms_fold(counters: DataFrame) -> DataFrame:
     sum, one hash aggregation on (r, bucket). The merge and the append
     log's compaction and read fold through it."""
     return counters.groupBy("r", "bucket").agg(F.sum("c").alias("c"))
-
-
-def cms_merge_counters(state: DataFrame, batch: DataFrame) -> DataFrame:
-    """Merge two counter matrices: :func:`cms_fold` over their union
-    (cells only on one side pass through with their own count)."""
-    return cms_fold(
-        state.select("r", "bucket", "c").unionByName(
-            batch.select("r", "bucket", "c")
-        )
-    )
 
 
 def cms_counters_sql(

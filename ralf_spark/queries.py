@@ -113,6 +113,31 @@ def _scratch(prefix: str) -> str:
     return tempfile.mkdtemp(prefix=prefix, dir=_SCRATCH_ROOT)
 
 
+def _doc_stream(frames: list[DataFrame], prefix: str) -> DataFrame:
+    """A ``(doc_id, text)`` file stream that replays ``frames`` as
+    micro-batches in list order: each frame lands as ONE parquet file in
+    a fresh scratch dir (written to a staging dir, renamed out of it)
+    with ascending mtimes, and the source reads one file per trigger."""
+    import os
+    import time
+
+    src = _scratch(prefix)
+    now = time.time()
+    for i, frame in enumerate(frames):
+        staged = f"{src}/_stage{i}"
+        frame.coalesce(1).write.parquet(staged)
+        part = next(f for f in os.listdir(staged) if f.endswith(".parquet"))
+        dst = f"{src}/batch{i}.parquet"
+        os.rename(f"{staged}/{part}", dst)
+        # mtime pins the micro-batch order
+        os.utime(dst, (now - 100 + i, now - 100 + i))
+    return (
+        frames[0].sparkSession.readStream.schema("doc_id long, text string")
+        .option("maxFilesPerTrigger", 1)
+        .parquet(src)
+    )
+
+
 def _t(spark: SparkSession, sf_dir: str, name: str) -> FeatureTable:
     return load_fixture(spark, name, sf_dir)
 
@@ -1334,7 +1359,6 @@ def stream_static_enrichment_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     Bounded availableNow drain makes it oracle-checkable against the plain
     batch join."""
     import hashlib as _hl
-    import tempfile as _tf
 
     from ralf_spark.streaming import file_events, run_bounded, write_memory
 
@@ -2519,7 +2543,6 @@ def streaming_dedup_replay_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded replay here exercises the same state machinery.)"""
     import hashlib as _hl
     import os as _os
-    import tempfile as _tf
 
     from ralf_spark.streaming import run_bounded, write_memory
 
@@ -2672,7 +2695,6 @@ def streaming_tumbling_window_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     equals the batch (ts, event_id) order on this data — so the streaming
     result is oracle-checkable against the same SQL as the batch W1."""
     import hashlib as _hl
-    import tempfile as _tf
 
     from ralf_spark.streaming import (
         file_events,
@@ -2737,7 +2759,6 @@ def streaming_sliding_window_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows in event_id order, so the emit positions and sums are
     oracle-checkable against the batch rows-frame SQL."""
     import hashlib as _hl
-    import tempfile as _tf
 
     from ralf_spark.streaming import (
         file_events,

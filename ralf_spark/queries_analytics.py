@@ -417,7 +417,6 @@ def layout_partitioned_write_stats_q(
     directory, byte-stable re-runs, footer min/max tightness) are pinned
     by tests/test_layout.py."""
     import hashlib as _hl
-    import tempfile as _tf
 
     from ralf_spark.layout import write_partitioned
 
@@ -460,7 +459,6 @@ def layout_zorder_roundtrip_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     vs range-clustering's full-span trailing column) is pinned by
     tests/test_layout.py."""
     import hashlib as _hl
-    import tempfile as _tf
 
     from ralf_spark.layout import cluster_by_zorder
 

@@ -29,7 +29,7 @@ from ralf_spark.operators.text_analysis import (
     pii_counts,
     pii_counts_sql,
 )
-from ralf_spark.queries import _docs_par, _scratch, _t, query
+from ralf_spark.queries import _doc_stream, _docs_par, _scratch, _t, query
 from ralf_spark.table import FeatureTable
 
 #: deterministic PII injection — the synthetic corpus contains no PII, so
@@ -274,7 +274,6 @@ def incremental_minhash_index_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     stored ∪ new. Only the new half is hashed in the add round — the
     incremental-cost contract."""
     import hashlib as _hl
-    import tempfile as _tf
 
     docs = _docs_par(spark, sf_dir)
     tag = _hl.md5(sf_dir.encode()).hexdigest()[:8]
@@ -395,8 +394,6 @@ def streaming_minhash_screen_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``minhash_index_check_serving``, which pins batch-decomposition
     invariance."""
     import hashlib as _hl
-    import os as _os
-    import time as _time
 
     from ralf_spark.streaming import (
         foreach_batch_minhash_screen,
@@ -411,23 +408,10 @@ def streaming_minhash_screen_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs.df.where(F.col("doc_id") % 2 == 0), key="doc_id"
     ))
     odd = docs.df.where(F.col("doc_id") % 2 == 1).select("doc_id", "text")
-    src = _scratch("mh_screen_stream_")
-    now = _time.time()
-    for i, pred in enumerate(
-        (F.col("doc_id") % 4 == 1, F.col("doc_id") % 4 == 3)
-    ):
-        staged = f"{src}/_stage{i}"
-        odd.where(pred).coalesce(1).write.parquet(staged)
-        part = next(
-            f for f in _os.listdir(staged) if f.endswith(".parquet")
-        )
-        dst = f"{src}/batch{i}.parquet"
-        _os.rename(f"{staged}/{part}", dst)
-        _os.utime(dst, (now - 100 + i, now - 100 + i))
-    stream = (
-        spark.readStream.schema("doc_id long, text string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
+    stream = _doc_stream(
+        [odd.where(F.col("doc_id") % 4 == 1),
+         odd.where(F.col("doc_id") % 4 == 3)],
+        "mh_screen_stream_",
     )
     out_path = _scratch(f"mh_screen_out_{tag}_") + "/pairs"
     run_bounded(
@@ -1139,31 +1123,16 @@ def streaming_gram_dedup_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     spans over the even half alone, plus batch 2's spans over the full
     corpus restricted to odd docs."""
     import hashlib as _hl
-    import os as _os
-    import time as _time
 
     from ralf_spark.operators.dedup import GramIndex
     from ralf_spark.streaming import foreach_batch_gram_dedup, run_bounded
 
     docs = _t(spark, sf_dir, "documents").df.select("doc_id", "text")
-    src = _scratch("gram_stream_")
-    now = _time.time()
-    for i, pred in enumerate(
-        (F.col("doc_id") % 2 == 0, F.col("doc_id") % 2 == 1)
-    ):
-        staged = f"{src}/_stage{i}"
-        docs.where(pred).coalesce(1).write.parquet(staged)
-        part = next(
-            f for f in _os.listdir(staged) if f.endswith(".parquet")
-        )
-        dst = f"{src}/batch{i}.parquet"
-        _os.rename(f"{staged}/{part}", dst)
-        # mtime pins micro-batch order: even half first
-        _os.utime(dst, (now - 100 + i, now - 100 + i))
-    stream = (
-        spark.readStream.schema("doc_id long, text string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
+    # even half first
+    stream = _doc_stream(
+        [docs.where(F.col("doc_id") % 2 == 0),
+         docs.where(F.col("doc_id") % 2 == 1)],
+        "gram_stream_",
     )
     tag = _hl.md5(sf_dir.encode()).hexdigest()[:8]
     idx = GramIndex(_scratch(f"gram_sidx_{tag}_"), min_tokens=8)

@@ -13,7 +13,7 @@ from pyspark.sql import functions as F
 
 from ralf_spark.functions.hashing import stable_hash64_sql
 from ralf_spark.functions.text import tokens_sql, word_shingles_sql
-from ralf_spark.queries import _docs_par, _scratch, _t, query
+from ralf_spark.queries import _doc_stream, _docs_par, _scratch, _t, query
 
 #: blocklist for the redaction query (inlined into both engines)
 _SCRUB_PATTERN = r"\b(customer|spark)\b"
@@ -734,8 +734,6 @@ def streaming_decontaminate_eval_q(
     ``remove_contaminated_spans`` replay that gates the batch
     composition, which pins batch-decomposition invariance."""
     import hashlib as _hl
-    import os as _os
-    import time as _time
 
     from ralf_spark.functions.hashing import stable_hash64
     from ralf_spark.operators.dedup import GramIndex
@@ -753,23 +751,10 @@ def streaming_decontaminate_eval_q(
     idx = GramIndex(_scratch(f"decon_idx_{tag}_"), min_tokens=_DECON_N)
     idx.build(FeatureTable(docs.where(is_eval), key="doc_id"))
     train = docs.where(~is_eval)
-    src = _scratch("decon_stream_")
-    now = _time.time()
-    for i, pred in enumerate(
-        (F.col("doc_id") % 2 == 0, F.col("doc_id") % 2 == 1)
-    ):
-        staged = f"{src}/_stage{i}"
-        train.where(pred).coalesce(1).write.parquet(staged)
-        part = next(
-            f for f in _os.listdir(staged) if f.endswith(".parquet")
-        )
-        dst = f"{src}/batch{i}.parquet"
-        _os.rename(f"{staged}/{part}", dst)
-        _os.utime(dst, (now - 100 + i, now - 100 + i))
-    stream = (
-        spark.readStream.schema("doc_id long, text string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
+    stream = _doc_stream(
+        [train.where(F.col("doc_id") % 2 == 0),
+         train.where(F.col("doc_id") % 2 == 1)],
+        "decon_stream_",
     )
     out_path = _scratch(f"decon_out_{tag}_") + "/cleaned"
     run_bounded(

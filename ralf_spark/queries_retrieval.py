@@ -325,7 +325,6 @@ def ivf_index_query_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     and probe semantics as the one-shot ivf_topk, so the SAME oracle gates
     both paths."""
     import hashlib as _hl
-    import tempfile as _tf
 
     from ralf_spark.queries import _query_vectors
     from ralf_spark.table import FeatureTable

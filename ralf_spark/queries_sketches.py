@@ -400,7 +400,6 @@ def streaming_hll_state_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     fix); the merge algebra is layout-independent, so the oracle is
     unchanged."""
     import hashlib as _hl
-    import tempfile as _tf
 
     from ralf_spark.operators.sketches import hll_estimate
     from ralf_spark.streaming import (
@@ -449,7 +448,6 @@ def streaming_hll_log_state_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     in place mid-gate — the estimate must be unchanged by it. Same
     oracle as ``streaming_hll_state``."""
     import hashlib as _hl
-    import tempfile as _tf
 
     from ralf_spark.operators.sketches import hll_estimate
     from ralf_spark.streaming import (
@@ -498,7 +496,6 @@ def streaming_kmv_state_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     by the SAME oracle as the one-shot ``kmv_distinct_users``. r10:
     bucketed state layout (``buckets=8``), same estimates by algebra."""
     import hashlib as _hl
-    import tempfile as _tf
 
     from ralf_spark.operators.sketches import kmv_estimate
     from ralf_spark.streaming import (
@@ -546,7 +543,6 @@ def streaming_cms_state_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     replay marker — the non-idempotent sink exercising the per-bucket
     skip), cell values unchanged by algebra."""
     import hashlib as _hl
-    import tempfile as _tf
 
     from ralf_spark.streaming import (
         file_events,

@@ -457,7 +457,6 @@ def streaming_change_detection_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     streaming-fixture invariant); the cross-batch state contract is
     pinned by the multi-trigger parity test in tests/test_streaming.py."""
     import hashlib as _hl
-    import tempfile as _tf
 
     from ralf_spark.streaming import (
         file_events,
@@ -511,7 +510,6 @@ def streaming_ewma_state_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     multi-batch seeding contract is pinned by the 3-trigger parity test
     in tests/test_streaming.py."""
     import hashlib as _hl
-    import tempfile as _tf
 
     from ralf_spark.sources.fixtures import load_fixture
     from ralf_spark.streaming import (
@@ -575,7 +573,6 @@ def streaming_decayed_sum_state_q(spark: SparkSession, sf_dir: str) -> DataFrame
     ``time_decayed_sum_per_user``. Cross-batch seeding is pinned by the
     3-split parity test in tests/test_streaming.py."""
     import hashlib as _hl
-    import tempfile as _tf
 
     from ralf_spark.sources.fixtures import load_fixture
     from ralf_spark.streaming import (
@@ -678,7 +675,6 @@ def streaming_pipeline_end2end_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     pinned in tests/test_streaming.py.
     """
     import hashlib as _hl
-    import tempfile as _tf
 
     from ralf_spark.streaming import (
         file_events,
@@ -816,7 +812,6 @@ def csv_stream_replay_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     totals — gating the CSV writer/parser round-trip (header handling,
     double formatting) and the file-stream replay machinery end to end."""
     import hashlib as _hl
-    import tempfile as _tf
 
     from ralf_spark.sources.fixtures import load_fixture
     from ralf_spark.streaming import file_events, run_bounded, write_memory
@@ -871,7 +866,6 @@ def streaming_enrichment_join_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     cached on the DataFrame). The broadcast hint on the dimension keeps
     every micro-batch shuffle-free on the stream side."""
     import hashlib as _hl
-    import tempfile as _tf
 
     from ralf_spark.operators.joins import enrichment_join
     from ralf_spark.streaming import file_events, run_bounded, write_memory
@@ -932,7 +926,6 @@ def streaming_interval_join_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     append-mode shape); batching-invariance across time-ordered splits
     is pinned in tests/test_streaming.py."""
     import hashlib as _hl
-    import tempfile as _tf
 
     from ralf_spark.functions.timeutil import epoch_us
     from ralf_spark.operators.joins import interval_join

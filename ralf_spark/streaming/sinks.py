@@ -1,18 +1,34 @@
-"""Structured Streaming sinks — writers + the latest-per-key upsert state sink.
+"""Structured Streaming sinks: plain writers and the state each micro-batch
+maintains.
 
-The reference's operators each materialize latest-per-key state on every
-update (``ralf/state/table_state.py:29-46``) into dict/SQLite/Redis
+The reference's operators each keep their own state table up to date on
+every update (``ralf/v2/table_state.py:29-46``) through dict/SQLite/Redis
 connectors; its ``Sink`` op is a pass-through writer
-(``ralf/operators/sink.py:5-11``). Spark spellings:
+(``ralf/operators/sink.py:5-11``). Here console/memory/parquet writers
+cover the pass-through and debug cases (``Print``,
+``ralf/operators/logging.py:10-24``), and every ``foreachBatch`` sink
+maintains one of three state shapes, each with its own exactly-once unit
+under checkpoint replay:
 
-- console/memory writers for debug + tests (``Print``,
-  ``ralf/operators/logging.py:10-24``)
-- ``foreach_batch_latest_upsert``: the state-table maintenance loop — each
-  micro-batch MERGEs into the persisted latest-per-key table. On a lakehouse
-  table format this is a real ``MERGE INTO``; the parquet spelling below is
-  read-union-recompute-overwrite, which is correct and idempotent for
-  bounded replays (exactly-once not concurrent-writer-safe — a production
-  deployment points this at Delta/Iceberg).
+- **Keyed latest-per-key upsert** (``foreach_batch_latest_upsert``,
+  ``foreach_batch_kv_upsert``). The batch reduces to its per-key winners
+  by (ts, seq) and upserts them. The unit is the key: a replayed batch
+  re-derives the same winners. ``connectors.upsert_into`` publishes the
+  parquet table by staged directory rename under the writer lease, or
+  runs a Delta ``MERGE INTO``.
+- **Keyed fold state** (moments, EWMA, decayed sum, HLL, KMV, reservoir
+  quantile, CMS: the ``*_upsert_batch`` callbacks, all built by
+  :func:`_fold_upsert_batch`). The batch summary folds into the stored
+  state. Unbucketed, the unit is the table: every row carries the last
+  folded batch id (``LAST_BATCH_COL``) and ``_staged_overwrite``
+  publishes data and marker in one rename. Bucketed (``buckets=N``), the
+  unit is the ``_state_bucket=`` directory: only touched buckets are
+  rewritten, each stamped, through a manifest-recovered stage-then-swap.
+- **``_batch`` logs** (sketch append logs, enrichment and quality logs,
+  the index sinks' pairs/spans logs, decontamination and screening
+  output). Each batch writes its own ``_batch=<tag>`` partition through
+  ``layout.write_batch``. The unit is the partition: a replay rewrites
+  it in place, and a tag a compaction already folded is skipped.
 """
 
 from __future__ import annotations
@@ -21,6 +37,15 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
+from ralf_spark import connectors
+from ralf_spark.layout import (
+    AUTO_MAINTAIN_BATCHES,
+    auto_compact_log,
+    batch_tag_count,
+    compact_tiered,
+    folded_tags,
+    write_batch,
+)
 from ralf_spark.table import FeatureTable
 
 
@@ -66,9 +91,7 @@ def foreach_batch_latest_upsert(
     """
 
     def upsert(batch_df: DataFrame, batch_id: int) -> None:
-        from ralf_spark.connectors import upsert_into
-
-        upsert_into(
+        connectors.upsert_into(
             path,
             FeatureTable(batch_df, key=key, ts=ts, seq=seq),
             table_format=table_format,
@@ -126,9 +149,7 @@ def _load_state(spark: SparkSession, path: str):
     ``last_id`` is None for absent/empty state or a pre-r7 table without
     the marker column (a replay across that migration boundary may
     re-fold one batch — document, don't pretend)."""
-    from ralf_spark.connectors import _try_read_parquet
-
-    current = _try_read_parquet(spark, path)
+    current = connectors._try_read_parquet(spark, path)
     if current is None:
         return None, None
     if LAST_BATCH_COL not in current.columns:
@@ -155,18 +176,6 @@ def _state_bucket_expr(group_cols: list[str], buckets: int):
     )
 
 
-def _read_meta_json(spark: SparkSession, meta_path) -> dict:
-    from ralf_spark.connectors import read_json_sidecar
-
-    return read_json_sidecar(spark, meta_path)
-
-
-def _write_meta_json(spark: SparkSession, meta_path, payload: dict) -> None:
-    from ralf_spark.connectors import write_json_sidecar
-
-    write_json_sidecar(spark, meta_path, payload)
-
-
 def _check_bucket_layout(
     spark: SparkSession, path: str, buckets: int
 ) -> bool:
@@ -180,15 +189,13 @@ def _check_bucket_layout(
     self-heals if it already has ``_state_bucket=`` children (crash
     between the first data write and the meta write); a plain unbucketed
     state table is refused rather than silently misread."""
-    from ralf_spark.connectors import _hadoop_fs
-
-    fs, jpath = _hadoop_fs(spark, path)
+    fs, jpath = connectors._hadoop_fs(spark, path)
     if not fs.exists(jpath):
         return False
     meta_path = f"{path}/{_STATE_META_NAME}"
-    _, jmeta = _hadoop_fs(spark, meta_path)
+    _, jmeta = connectors._hadoop_fs(spark, meta_path)
     if fs.exists(jmeta):
-        meta = _read_meta_json(spark, meta_path)
+        meta = connectors.read_json_sidecar(spark, meta_path)
         if meta.get("buckets") != buckets:
             raise ValueError(
                 f"state at {path!r} was written with "
@@ -221,7 +228,7 @@ def _check_bucket_layout(
                 "bucket count). Reopen with the original count or start "
                 "a new path; healing would split groups across layouts."
             )
-        _write_meta_json(spark, meta_path, {"buckets": buckets})
+        connectors.write_json_sidecar(spark, meta_path, {"buckets": buckets})
         return True
     if all(n.startswith(("_", ".")) for n in names):
         return False  # markers only (e.g. _SUCCESS) — no data yet
@@ -237,6 +244,35 @@ def _check_bucket_layout(
 _PUBLISH_MANIFEST_NAME = ".publish_manifest.json"
 
 
+def _swap_staged_buckets(
+    spark: SparkSession, path: str, staging: str, buckets: list[int]
+) -> None:
+    """The swap step of the bucketed publish: each staged
+    ``_state_bucket=<b>`` directory under ``staging`` replaces its final
+    directory in ``path`` by one rename (the old one is deleted first:
+    Hadoop would move the source INTO an existing directory). A bucket
+    without a staged copy already swapped. Then the staging dir and the
+    manifest go. A failed rename raises with both still in place, so the
+    next upsert's :func:`_recover_publish` completes the swap."""
+    fs, _ = connectors._hadoop_fs(spark, path)
+    jvm_path = spark._jvm.org.apache.hadoop.fs.Path  # type: ignore[attr-defined]
+    for b in buckets:
+        jstaged = jvm_path(f"{staging}/{STATE_BUCKET_COL}={b}")
+        if not fs.exists(jstaged):
+            continue
+        jfinal = jvm_path(f"{path}/{STATE_BUCKET_COL}={b}")
+        if fs.exists(jfinal):
+            fs.delete(jfinal, True)
+        if not fs.rename(jstaged, jfinal):
+            raise IOError(
+                f"bucket publish: rename {jstaged} -> {jfinal} failed; the "
+                "staged copy and manifest survive — the next upsert's "
+                "recovery completes the swap"
+            )
+    fs.delete(jvm_path(staging), True)
+    fs.delete(jvm_path(f"{path}/{_PUBLISH_MANIFEST_NAME}"), False)
+
+
 def _recover_publish(spark: SparkSession, path: str) -> None:
     """Finish (or sweep) an interrupted per-bucket publish (r11, ADVICE
     r10): the publish protocol stages the merged bucket directories
@@ -248,9 +284,7 @@ def _recover_publish(spark: SparkSession, path: str) -> None:
     garbage, deleted. Either way no bucket's prior state is ever lost —
     the window the old dynamic-partition-overwrite publish had (job
     commit deletes a bucket dir before its replacement lands)."""
-    from ralf_spark.connectors import _hadoop_fs, read_json_sidecar
-
-    fs, jpath = _hadoop_fs(spark, path)
+    fs, jpath = connectors._hadoop_fs(spark, path)
     if not fs.exists(jpath):
         return
     jvm_path = spark._jvm.org.apache.hadoop.fs.Path  # type: ignore[attr-defined]
@@ -258,7 +292,7 @@ def _recover_publish(spark: SparkSession, path: str) -> None:
     committed_staging = None
     if fs.exists(jvm_path(mpath)):
         try:
-            man = read_json_sidecar(spark, mpath)
+            man = connectors.read_json_sidecar(spark, mpath)
         except Exception:
             # a partial/corrupt manifest can only mean the crash hit the
             # manifest write itself — no swap had begun, every final dir
@@ -268,25 +302,50 @@ def _recover_publish(spark: SparkSession, path: str) -> None:
             man = None
         if man is not None:
             committed_staging = man["staging"]
-            staging = f"{path}/{committed_staging}"
-            for b in man["buckets"]:
-                jstaged = jvm_path(f"{staging}/{STATE_BUCKET_COL}={b}")
-                if not fs.exists(jstaged):
-                    continue  # this bucket's swap already completed
-                jfinal = jvm_path(f"{path}/{STATE_BUCKET_COL}={b}")
-                if fs.exists(jfinal):
-                    fs.delete(jfinal, True)
-                if not fs.rename(jstaged, jfinal):
-                    raise IOError(
-                        f"recover_publish: rename {jstaged} -> {jfinal} "
-                        "failed; staged state preserved — retry recovers"
-                    )
-            fs.delete(jvm_path(staging), True)
-            fs.delete(jvm_path(mpath), False)
+            _swap_staged_buckets(
+                spark, path, f"{path}/{committed_staging}", man["buckets"]
+            )
     for st in fs.listStatus(jpath):
         n = st.getPath().getName()
         if n.startswith(".staging_") and n != committed_staging:
             fs.delete(st.getPath(), True)  # pre-manifest crash garbage
+
+
+def _fold_upsert_batch(
+    path: str, group_cols: list[str], summarize, init, merge,
+    buckets: int | None,
+):
+    """The foreachBatch callback of every keyed fold-state sink: reduce
+    the batch to ``summarize(batch_df)`` and fold it into the state at
+    ``path``, skipping a replayed ``batch_id``. ``init(summary)`` turns
+    a summary into first-write state rows; ``merge(current, summary)``
+    folds it into stored rows. Neither frame carries the layout columns.
+
+    ``buckets=None``: one table, every row stamped with the batch that
+    wrote it (``LAST_BATCH_COL``); a batch id not above the stamp is a
+    replay, and ``_staged_overwrite`` publishes data and stamp in one
+    rename (see the ``LAST_BATCH_COL`` note for crash recovery).
+    ``buckets=N``: the per-bucket layout of
+    :func:`_bucketed_fold_upsert`."""
+
+    def upsert(batch_df: DataFrame, batch_id: int) -> None:
+        spark = batch_df.sparkSession
+        summary = summarize(batch_df)
+        if buckets is not None:
+            _bucketed_fold_upsert(
+                spark, path, summary, group_cols, init, merge, batch_id,
+                buckets,
+            )
+            return
+        current, last = _load_state(spark, path)
+        if last is not None and batch_id <= last:
+            return  # replayed batch — already folded in
+        merged = init(summary) if current is None else merge(current, summary)
+        connectors._staged_overwrite(
+            spark, merged.withColumn(LAST_BATCH_COL, F.lit(batch_id)), path
+        )
+
+    return upsert
 
 
 def _bucketed_fold_upsert(
@@ -308,8 +367,8 @@ def _bucketed_fold_upsert(
     and the index sinks already use, applied to merged state. Layout:
     ``path/_state_bucket=<pmod(xxhash64(group_cols), buckets)>/…`` — a
     group's rows live entirely in one bucket, so merging a batch needs
-    only its buckets' current rows (partition-pruned read) and dynamic
-    partition overwrite replaces only those directories.
+    only its buckets' current rows (partition-pruned read), and only
+    those directories are replaced.
 
     Exactly-once becomes PER-BUCKET: every row of a bucket directory is
     stamped with the batch that last rewrote it (the directory rewrites
@@ -327,16 +386,11 @@ def _bucketed_fold_upsert(
     stronger than the legacy global marker. Staging to a separate dir
     also means the merge plan never overwrites its own input (the r10
     spelling needed an eager localCheckpoint for that, materializing the
-    merge twice). ``init(summary)`` turns a batch summary into
-    first-write state rows; ``merge(current, summary)`` folds a summary
-    into existing rows (both receive frames WITHOUT the bucket/marker
-    columns).
+    merge twice).
     """
-    from ralf_spark.connectors import _hadoop_fs, acquire_writer_lease
-
     # single-writer guard (r12): two interleaved stage-then-swap publishes
     # would corrupt each other's manifests — refuse the second writer
-    acquire_writer_lease(spark, path)
+    connectors.acquire_writer_lease(spark, path)
     exists = _check_bucket_layout(spark, path, buckets)
     if exists:
         _recover_publish(spark, path)
@@ -358,7 +412,7 @@ def _bucketed_fold_upsert(
             # the bucket column — a partitionBy write otherwise emits
             # one file per (task × bucket), and the small-file blowup
             # compounds every later batch
-            _write_meta_json(
+            connectors.write_json_sidecar(
                 spark, f"{path}/{_STATE_META_NAME}", {"buckets": buckets}
             )
             (
@@ -379,7 +433,7 @@ def _bucketed_fold_upsert(
         # are passed as EXPLICIT read paths (basePath keeps the partition
         # column) — `spark.read.parquet(path)` would list ALL bucket
         # dirs before pruning (the finding-9 listing class)
-        fs, jpath = _hadoop_fs(spark, path)
+        fs, jpath = connectors._hadoop_fs(spark, path)
         live = {
             int(n.split("=", 1)[1])
             for n in (
@@ -441,8 +495,6 @@ def _bucketed_fold_upsert(
             .partitionBy(STATE_BUCKET_COL)
             .parquet(staging)
         )
-        from ralf_spark.connectors import write_json_sidecar
-
         jvm_path = spark._jvm.org.apache.hadoop.fs.Path  # type: ignore[attr-defined]
         # swap only buckets the merge actually staged: a bucket absent
         # from the merged frame keeps its current directory untouched
@@ -452,31 +504,16 @@ def _bucketed_fold_upsert(
             for b in eligible
             if fs.exists(jvm_path(f"{staging}/{STATE_BUCKET_COL}={b}"))
         ]
-        from ralf_spark.connectors import verify_writer_lease
-
         # fencing read (r13, ADVICE r12): the merge+staging write is the
         # long step — start the swap only while still the lease owner
         # (the swap itself is per-bucket renames: fast, no keeper needed)
-        verify_writer_lease(spark, path)
-        write_json_sidecar(
+        connectors.verify_writer_lease(spark, path)
+        connectors.write_json_sidecar(
             spark,
             f"{path}/{_PUBLISH_MANIFEST_NAME}",
             {"staging": staging_name, "buckets": staged, "batch": batch_id},
         )
-        for b in staged:
-            jfinal = jvm_path(f"{path}/{STATE_BUCKET_COL}={b}")
-            if fs.exists(jfinal):
-                fs.delete(jfinal, True)
-            if not fs.rename(
-                jvm_path(f"{staging}/{STATE_BUCKET_COL}={b}"), jfinal
-            ):
-                raise IOError(
-                    f"bucket publish: rename of {STATE_BUCKET_COL}={b} "
-                    "failed; the staged copy and manifest survive — the "
-                    "next upsert's recovery completes the swap"
-                )
-        fs.delete(jvm_path(staging), True)
-        fs.delete(jvm_path(f"{path}/{_PUBLISH_MANIFEST_NAME}"), False)
+        _swap_staged_buckets(spark, path, staging, staged)
     finally:
         summary.unpersist()
 
@@ -541,30 +578,16 @@ def _append_log_batch(
     and the listing flat for any stream length. keep_last=1 keeps the
     just-written tag replayable."""
     if auto_maintain is None:
-        from ralf_spark.layout import AUTO_MAINTAIN_BATCHES
-
         auto_maintain = AUTO_MAINTAIN_BATCHES
 
     def upsert(batch_df: DataFrame, batch_id: int) -> None:
-        from ralf_spark.connectors import acquire_writer_lease
-        from ralf_spark.layout import folded_tags
-
         spark = batch_df.sparkSession
-        acquire_writer_lease(spark, path)  # single-writer guard (r12)
+        connectors.acquire_writer_lease(spark, path)  # single-writer guard
         if f"b{batch_id}" in folded_tags(spark, path):
             return  # replay of a batch the compaction already folded
-        (
-            summarize(batch_df)
-            .withColumn("_batch", F.lit(f"b{batch_id}"))
-            .repartition(1)  # batch summaries are sketch-sized
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("_batch")
-            .parquet(path)
-        )
+        # batch summaries are sketch-sized: one file
+        write_batch(summarize(batch_df).repartition(1), path, f"b{batch_id}")
         if merge is not None and auto_maintain:
-            from ralf_spark.layout import batch_tag_count
-
             if batch_tag_count(spark, path) > auto_maintain:
                 maintain_sketch_log(spark, path, merge=merge)
 
@@ -691,9 +714,7 @@ def _read_sketch_log(spark: SparkSession, path: str) -> DataFrame:
     concurrent append can't shift it mid-plan). With the sinks'
     auto-compaction cadence the dir count is bounded, so this read is
     O(kept batches) whatever the stream length."""
-    from ralf_spark.connectors import _hadoop_fs
-
-    fs, jpath = _hadoop_fs(spark, path)
+    fs, jpath = connectors._hadoop_fs(spark, path)
     dirs = [
         s.getPath().toString()
         for s in fs.listStatus(jpath)
@@ -760,8 +781,6 @@ def maintain_sketch_log(
     its partition and the CMS counter sums would double-count (HLL/KMV
     are immune by algebra). Keep ``keep_last`` at or above the number of
     batches a retry can have in flight (1 for foreachBatch)."""
-    from ralf_spark.layout import compact_tiered
-
     return compact_tiered(
         spark, path, keep_last=keep_last, tiered=False, record_folds=True,
         transform=merge,
@@ -778,20 +797,6 @@ def read_bucketed_state(spark: SparkSession, path: str) -> DataFrame:
         c for c in (STATE_BUCKET_COL, LAST_BATCH_COL) if c in df.columns
     ]
     return df.drop(*drop)
-
-
-def _store_state(
-    spark: SparkSession, merged: DataFrame, path: str, batch_id: int
-) -> None:
-    """Stamp every row with ``batch_id`` and replace the state directory
-    — data and exactly-once marker commit in the same write and the same
-    rename publish (see the ``LAST_BATCH_COL`` note for crash recovery
-    and object stores)."""
-    from ralf_spark.connectors import _staged_overwrite
-
-    _staged_overwrite(
-        spark, merged.withColumn(LAST_BATCH_COL, F.lit(batch_id)), path
-    )
 
 
 def foreach_batch_moments_upsert(
@@ -834,31 +839,15 @@ def moments_upsert_batch(
     :func:`foreach_batch_moments_upsert`, exposed for direct use/testing:
     ``(batch_df, batch_id) -> None``, folding the batch into the state
     unless ``batch_id`` was already applied."""
+    from ralf_spark.operators.moments import batch_moments, merge_moments
 
-    def upsert(batch_df: DataFrame, batch_id: int) -> None:
-        from ralf_spark.operators.moments import batch_moments, merge_moments
-
-        spark = batch_df.sparkSession
-        summary = batch_moments(batch_df, key, value_col)
-        if buckets is not None:
-            _bucketed_fold_upsert(
-                spark, path, summary, [key],
-                init=lambda s: s,
-                merge=lambda cur, bat: merge_moments(cur, bat, key),
-                batch_id=batch_id, buckets=buckets,
-            )
-            return
-        current, last = _load_state(spark, path)
-        if last is not None and batch_id <= last:
-            return  # replayed batch — already folded in
-        merged = (
-            merge_moments(current, summary, key)
-            if current is not None
-            else summary
-        )
-        _store_state(spark, merged, path, batch_id)
-
-    return upsert
+    return _fold_upsert_batch(
+        path, [key],
+        lambda b: batch_moments(b, key, value_col),
+        init=lambda s: s,
+        merge=lambda cur, bat: merge_moments(cur, bat, key),
+        buckets=buckets,
+    )
 
 
 def foreach_batch_ewma_upsert(
@@ -953,23 +942,7 @@ def ewma_upsert_batch(
             .alias("ewma"),
         )
 
-    def upsert(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        summary = summarize(batch_df)
-        if buckets is not None:
-            _bucketed_fold_upsert(
-                spark, path, summary, [key],
-                init=init, merge=merge,
-                batch_id=batch_id, buckets=buckets,
-            )
-            return
-        current, last = _load_state(spark, path)
-        if last is not None and batch_id <= last:
-            return  # replayed batch — already folded in
-        merged = init(summary) if current is None else merge(current, summary)
-        _store_state(spark, merged, path, batch_id)
-
-    return upsert
+    return _fold_upsert_batch(path, [key], summarize, init, merge, buckets)
 
 
 #: state-store provider aliases for ``run_bounded(state_store=...)``
@@ -1104,23 +1077,7 @@ def decayed_upsert_batch(
             )
         )
 
-    def upsert(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        summary = summarize(batch_df)
-        if buckets is not None:
-            _bucketed_fold_upsert(
-                spark, path, summary, [key],
-                init=init, merge=merge,
-                batch_id=batch_id, buckets=buckets,
-            )
-            return
-        current, last = _load_state(spark, path)
-        if last is not None and batch_id <= last:
-            return  # replayed batch — already folded in
-        merged = init(summary) if current is None else merge(current, summary)
-        _store_state(spark, merged, path, batch_id)
-
-    return upsert
+    return _fold_upsert_batch(path, [key], summarize, init, merge, buckets)
 
 
 def foreach_batch_enriched_write(
@@ -1151,13 +1108,8 @@ def foreach_batch_enriched_write(
         spark = batch_df.sparkSession
         spark.catalog.refreshByPath(dim_path)
         dim = spark.read.parquet(dim_path)
-        (
-            batch_df.join(F.broadcast(dim), on, how)
-            .withColumn("_batch", F.lit(f"b{batch_id}"))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("_batch")
-            .parquet(out_path)
+        write_batch(
+            batch_df.join(F.broadcast(dim), on, how), out_path, f"b{batch_id}"
         )
 
     return df.writeStream.foreachBatch(enrich)
@@ -1182,13 +1134,8 @@ def foreach_batch_quality_log(
 
         if not batch_df.take(1):
             return
-        (
-            check_constraints(batch_df, rules)
-            .withColumn("_batch", F.lit(f"b{batch_id}"))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("_batch")
-            .parquet(out_path)
+        write_batch(
+            check_constraints(batch_df, rules), out_path, f"b{batch_id}"
         )
 
     return df.writeStream.foreachBatch(log)
@@ -1205,9 +1152,9 @@ def foreach_batch_hll_upsert(
     stream (r7) — incremental distinct counting without distinct sets:
     each micro-batch reduces to its (group, bucket, max-rho) registers
     and merges into the stored table by register-wise max
-    (``operators.sketches.hll_merge_registers``). State is O(groups × 64
-    registers) regardless of stream length; the estimate is read out
-    with ``hll_estimate`` — the same algebra as the one-shot
+    (``operators.sketches.hll_fold`` over the union). State is
+    O(groups × 64 registers) regardless of stream length; the estimate
+    is read out with ``hll_estimate`` — the same algebra as the one-shot
     ``hll_distinct``, so the same oracle gates both paths.
 
     Unlike the moments/EWMA/decayed folds, the HLL merge is IDEMPOTENT
@@ -1234,36 +1181,15 @@ def hll_upsert_batch(
 ):
     """The foreachBatch callback behind :func:`foreach_batch_hll_upsert`,
     exposed for direct use/testing: ``(batch_df, batch_id) -> None``."""
+    from ralf_spark.operators.sketches import hll_fold, hll_register_update
 
-    def upsert(batch_df: DataFrame, batch_id: int) -> None:
-        from ralf_spark.operators.sketches import (
-            hll_merge_registers,
-            hll_register_update,
-        )
-
-        spark = batch_df.sparkSession
-        regs = hll_register_update(batch_df, group_cols, value_col)
-        if buckets is not None:
-            _bucketed_fold_upsert(
-                spark, path, regs, group_cols,
-                init=lambda s: s,
-                merge=lambda cur, bat: hll_merge_registers(
-                    cur, bat, group_cols
-                ),
-                batch_id=batch_id, buckets=buckets,
-            )
-            return
-        current, last = _load_state(spark, path)
-        if last is not None and batch_id <= last:
-            return  # replayed batch (a merge would be harmless; skip work)
-        merged = (
-            hll_merge_registers(current, regs, group_cols)
-            if current is not None
-            else regs
-        )
-        _store_state(spark, merged, path, batch_id)
-
-    return upsert
+    return _fold_upsert_batch(
+        path, group_cols,
+        lambda b: hll_register_update(b, group_cols, value_col),
+        init=lambda s: s,
+        merge=lambda cur, bat: hll_fold(cur.unionByName(bat), group_cols),
+        buckets=buckets,
+    )
 
 
 def foreach_batch_kmv_upsert(
@@ -1277,11 +1203,11 @@ def foreach_batch_kmv_upsert(
     """Maintain a persisted per-group KMV sketch (k smallest distinct
     value hashes) from a stream (r7): each micro-batch reduces to its own
     min-k table and merges by union-distinct-keep-k
-    (``operators.sketches.kmv_merge_state``) — idempotent by algebra like
-    the HLL register max, so replays are harmless even without the
-    marker (still stamped, for the skip and observability). State is
-    O(groups × k); the estimate reads out with ``kmv_estimate`` under
-    the same oracle as the one-shot ``kmv_distinct``. ``buckets=N``:
+    (``operators.sketches.kmv_fold`` over the union) — idempotent by
+    algebra like the HLL register max, so replays are harmless even
+    without the marker (still stamped, for the skip and observability).
+    State is O(groups × k); the estimate reads out with ``kmv_estimate``
+    under the same oracle as the one-shot ``kmv_distinct``. ``buckets=N``:
     hash-bucketed state layout — per-batch cost ∝ touched buckets, not
     group count (see :func:`_bucketed_fold_upsert`)."""
 
@@ -1299,36 +1225,15 @@ def kmv_upsert_batch(
 ):
     """The foreachBatch callback behind :func:`foreach_batch_kmv_upsert`,
     exposed for direct use/testing: ``(batch_df, batch_id) -> None``."""
+    from ralf_spark.operators.sketches import kmv_fold, kmv_state_update
 
-    def upsert(batch_df: DataFrame, batch_id: int) -> None:
-        from ralf_spark.operators.sketches import (
-            kmv_merge_state,
-            kmv_state_update,
-        )
-
-        spark = batch_df.sparkSession
-        batch = kmv_state_update(batch_df, group_cols, value_col, k)
-        if buckets is not None:
-            _bucketed_fold_upsert(
-                spark, path, batch, group_cols,
-                init=lambda s: s,
-                merge=lambda cur, bat: kmv_merge_state(
-                    cur, bat, group_cols, k
-                ),
-                batch_id=batch_id, buckets=buckets,
-            )
-            return
-        current, last = _load_state(spark, path)
-        if last is not None and batch_id <= last:
-            return  # replayed batch (merge would be harmless; skip work)
-        merged = (
-            kmv_merge_state(current, batch, group_cols, k)
-            if current is not None
-            else batch
-        )
-        _store_state(spark, merged, path, batch_id)
-
-    return upsert
+    return _fold_upsert_batch(
+        path, group_cols,
+        lambda b: kmv_state_update(b, group_cols, value_col, k),
+        init=lambda s: s,
+        merge=lambda cur, bat: kmv_fold(cur.unionByName(bat), group_cols, k),
+        buckets=buckets,
+    )
 
 
 def foreach_batch_rq_upsert(
@@ -1365,36 +1270,15 @@ def rq_upsert_batch(
 ):
     """The foreachBatch callback behind :func:`foreach_batch_rq_upsert`,
     exposed for direct use/testing: ``(batch_df, batch_id) -> None``."""
+    from ralf_spark.operators.sketches import rq_fold, rq_state_update
 
-    def upsert(batch_df: DataFrame, batch_id: int) -> None:
-        from ralf_spark.operators.sketches import (
-            rq_merge_state,
-            rq_state_update,
-        )
-
-        spark = batch_df.sparkSession
-        batch = rq_state_update(batch_df, group_cols, value_col, id_col, k)
-        if buckets is not None:
-            _bucketed_fold_upsert(
-                spark, path, batch, group_cols,
-                init=lambda s: s,
-                merge=lambda cur, bat: rq_merge_state(
-                    cur, bat, group_cols, k
-                ),
-                batch_id=batch_id, buckets=buckets,
-            )
-            return
-        current, last = _load_state(spark, path)
-        if last is not None and batch_id <= last:
-            return  # replayed batch (merge would be harmless; skip work)
-        merged = (
-            rq_merge_state(current, batch, group_cols, k)
-            if current is not None
-            else batch
-        )
-        _store_state(spark, merged, path, batch_id)
-
-    return upsert
+    return _fold_upsert_batch(
+        path, group_cols,
+        lambda b: rq_state_update(b, group_cols, value_col, id_col, k),
+        init=lambda s: s,
+        merge=lambda cur, bat: rq_fold(cur.unionByName(bat), group_cols, k),
+        buckets=buckets,
+    )
 
 
 def foreach_batch_cms_upsert(
@@ -1430,34 +1314,15 @@ def cms_upsert_batch(
 ):
     """The foreachBatch callback behind :func:`foreach_batch_cms_upsert`,
     exposed for direct use/testing: ``(batch_df, batch_id) -> None``."""
+    from ralf_spark.operators.sketches import cms_counter_update, cms_fold
 
-    def upsert(batch_df: DataFrame, batch_id: int) -> None:
-        from ralf_spark.operators.sketches import (
-            cms_counter_update,
-            cms_merge_counters,
-        )
-
-        spark = batch_df.sparkSession
-        batch = cms_counter_update(batch_df, key_col, depth, width)
-        if buckets is not None:
-            _bucketed_fold_upsert(
-                spark, path, batch, ["r", "bucket"],
-                init=lambda s: s,
-                merge=cms_merge_counters,
-                batch_id=batch_id, buckets=buckets,
-            )
-            return
-        current, last = _load_state(spark, path)
-        if last is not None and batch_id <= last:
-            return  # replayed batch — counters would double-count
-        merged = (
-            cms_merge_counters(current, batch)
-            if current is not None
-            else batch
-        )
-        _store_state(spark, merged, path, batch_id)
-
-    return upsert
+    return _fold_upsert_batch(
+        path, ["r", "bucket"],
+        lambda b: cms_counter_update(b, key_col, depth, width),
+        init=lambda s: s,
+        merge=lambda cur, bat: cms_fold(cur.unionByName(bat)),
+        buckets=buckets,
+    )
 
 
 def foreach_batch_ivf_add(
@@ -1668,11 +1533,6 @@ def _index_log_batch(
     compaction already folded is skipped, and the log self-compacts past
     ``auto_maintain`` partitions (default
     :data:`~ralf_spark.layout.AUTO_MAINTAIN_BATCHES`; 0 disables)."""
-    from ralf_spark.layout import (
-        AUTO_MAINTAIN_BATCHES,
-        auto_compact_log,
-        folded_tags,
-    )
     from ralf_spark.operators.util import unpersist_cached
 
     if auto_maintain is None:
@@ -1686,13 +1546,7 @@ def _index_log_batch(
         if tag in folded_tags(spark, log_path):
             return  # replay of a tag already folded into the compacted log
         out = add(FeatureTable(batch_df, key=key), tag)
-        (
-            out.withColumn("_batch", F.lit(tag))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("_batch")
-            .parquet(log_path)
-        )
+        write_batch(out, log_path, tag)
         unpersist_cached(out)
         auto_compact_log(spark, log_path, auto_maintain)
 
@@ -1724,15 +1578,13 @@ def foreach_batch_gram_decontaminate(
     (doc_id, clean_text, n_kept, n_removed)."""
 
     def clean(batch_df: DataFrame, batch_id: int) -> None:
-        from ralf_spark.connectors import acquire_writer_lease
         from ralf_spark.operators.dedup import _cut_spans
         from ralf_spark.operators.util import unpersist_cached
-        from ralf_spark.table import FeatureTable
 
         if not batch_df.take(1):
             return
         spark = batch_df.sparkSession
-        acquire_writer_lease(spark, out_path)  # guards the OUTPUT only
+        connectors.acquire_writer_lease(spark, out_path)  # the OUTPUT only
         spans = index.check(
             FeatureTable(batch_df, key=key), text_col=text_col
         )
@@ -1742,13 +1594,7 @@ def foreach_batch_gram_decontaminate(
             batch_df, key, text_col, spans,
             getattr(index, "token_mode", "ascii"),
         )
-        (
-            cleaned.withColumn("_batch", F.lit(f"b{batch_id}"))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("_batch")
-            .parquet(out_path)
-        )
+        write_batch(cleaned, out_path, f"b{batch_id}")
         unpersist_cached(spans)
 
     return df.writeStream.foreachBatch(clean)
@@ -1782,26 +1628,18 @@ def foreach_batch_minhash_screen(
     (id1, id2, est_jaccard)."""
 
     def screen(batch_df: DataFrame, batch_id: int) -> None:
-        from ralf_spark.connectors import acquire_writer_lease
         from ralf_spark.operators.util import unpersist_cached
-        from ralf_spark.table import FeatureTable
 
         if not batch_df.take(1):
             return
         spark = batch_df.sparkSession
-        acquire_writer_lease(spark, out_path)  # guards the OUTPUT only
+        connectors.acquire_writer_lease(spark, out_path)  # the OUTPUT only
         pairs = index.check(
             FeatureTable(batch_df, key=key),
             text_col=text_col,
             threshold=threshold,
         )
-        (
-            pairs.withColumn("_batch", F.lit(f"b{batch_id}"))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("_batch")
-            .parquet(out_path)
-        )
+        write_batch(pairs, out_path, f"b{batch_id}")
         unpersist_cached(pairs)
 
     return df.writeStream.foreachBatch(screen)

@@ -12,12 +12,10 @@ import traceback
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from pyspark.sql import SparkSession
+from ralf_spark.session import get_spark  # noqa: E402
 
-spark = (SparkSession.builder.master("local[32]")
-         .config("spark.sql.shuffle.partitions", "32")
-         .config("spark.driver.memory", "64g")
-         .getOrCreate())
+# local[$SPARK_GRAFT_CPUS] with a $SPARK_GRAFT_DRIVER_MEM driver
+spark = get_spark(extra_confs={"spark.ui.enabled": "false"})
 spark.sparkContext.setLogLevel("ERROR")
 
 import __spark_entry__ as e  # noqa: E402

@@ -1,4 +1,5 @@
-"""One-off driver replica: vanilla session, sf0.01, all queries vs oracles.
+"""Full oracle sweep: engine-default session (``get_spark``), sf0.01, every
+registered query vs its oracle.
 
 The per-query ``sec`` fields are measured on a machine that swings >2x
 between identical back-to-back runs (r12 adjudication) and each query runs
@@ -7,12 +8,10 @@ ONCE — they exist only to spot hangs, and the output stamps
 r12 #4). Perf claims live in bench.py's interleaved-pass medians.
 """
 import json, time, traceback
-from pyspark.sql import SparkSession
+from ralf_spark.session import get_spark
 
-spark = (SparkSession.builder.master("local[32]")
-         .config("spark.sql.shuffle.partitions", "32")
-         .config("spark.driver.memory", "100g")
-         .getOrCreate())
+# local[$SPARK_GRAFT_CPUS] with a $SPARK_GRAFT_DRIVER_MEM driver
+spark = get_spark(extra_confs={"spark.ui.enabled": "false"})
 spark.sparkContext.setLogLevel("ERROR")
 
 import __spark_entry__ as e

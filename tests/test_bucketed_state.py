@@ -30,6 +30,7 @@ from ralf_spark.streaming.sinks import (
     kmv_upsert_batch,
     moments_upsert_batch,
     read_bucketed_state,
+    rq_upsert_batch,
 )
 
 
@@ -63,6 +64,8 @@ def test_bucketed_sketch_sinks_equal_legacy(spark, tmp_path, batches):
         kmv_upsert_batch(f"{d}/kb", ["k"], "v", k=16, buckets=8)(b, i)
         cms_upsert_batch(f"{d}/cl", "k", depth=4, width=32)(b, i)
         cms_upsert_batch(f"{d}/cb", "k", depth=4, width=32, buckets=4)(b, i)
+        rq_upsert_batch(f"{d}/rl", ["k"], "v", "seq", k=16)(b, i)
+        rq_upsert_batch(f"{d}/rb", ["k"], "v", "seq", k=16, buckets=8)(b, i)
     assert _rows(
         hll_estimate(spark.read.parquet(f"{d}/hl"), ["k"]),
         ["k", "est_distinct"],
@@ -82,6 +85,9 @@ def test_bucketed_sketch_sinks_equal_legacy(spark, tmp_path, batches):
     )
     assert _rows(spark.read.parquet(f"{d}/cl"), ["r", "bucket", "c"]) == (
         _rows(read_bucketed_state(spark, f"{d}/cb"), ["r", "bucket", "c"])
+    )
+    assert _rows(spark.read.parquet(f"{d}/rl"), ["k", "h", "v"]) == (
+        _rows(read_bucketed_state(spark, f"{d}/rb"), ["k", "h", "v"])
     )
     # the layout really is partitioned by the state bucket
     assert any(
@@ -116,20 +122,42 @@ def test_bucketed_fold_sinks_equal_legacy(spark, tmp_path, batches):
 
 @pytest.mark.slow
 def test_bucketed_replay_skips_nonidempotent_folds(spark, tmp_path, batches):
+    """A replayed batch id leaves every fold sink's state rows unchanged,
+    in both layouts: the global marker skips it (unbucketed), the
+    per-bucket stamps skip it (bucketed) — including the non-idempotent
+    moments/EWMA/decayed/CMS folds."""
     d = str(tmp_path)
-    cb = cms_upsert_batch(f"{d}/c", "k", depth=4, width=32, buckets=4)
-    mb = moments_upsert_batch(f"{d}/m", "k", "x", buckets=8)
-    for i, b in enumerate(batches):
-        cb(b, i)
-        mb(b, i)
-    cms_before = _rows(read_bucketed_state(spark, f"{d}/c"), ["r", "bucket", "c"])
-    mom_before = _rows(read_bucketed_state(spark, f"{d}/m"), ["k", "n"])
-    cb(batches[1], 1)  # replayed batch — must be skipped per-bucket
-    mb(batches[1], 1)
-    assert _rows(
-        read_bucketed_state(spark, f"{d}/c"), ["r", "bucket", "c"]
-    ) == cms_before
-    assert _rows(read_bucketed_state(spark, f"{d}/m"), ["k", "n"]) == mom_before
+    sinks = {
+        "moments": lambda p, n: moments_upsert_batch(p, "k", "x", buckets=n),
+        "ewma": lambda p, n: ewma_upsert_batch(
+            p, "k", "ts", "x", 0.3, "seq", buckets=n
+        ),
+        "decayed": lambda p, n: decayed_upsert_batch(
+            p, "k", "ts", "x", 3600.0, "seq", buckets=n
+        ),
+        "hll": lambda p, n: hll_upsert_batch(p, ["k"], "v", buckets=n),
+        "kmv": lambda p, n: kmv_upsert_batch(p, ["k"], "v", k=16, buckets=n),
+        "rq": lambda p, n: rq_upsert_batch(
+            p, ["k"], "v", "seq", k=16, buckets=n
+        ),
+        "cms": lambda p, n: cms_upsert_batch(
+            p, "k", depth=4, width=32, buckets=n
+        ),
+    }
+
+    def state(path):
+        df = read_bucketed_state(spark, path)
+        return _rows(df, sorted(df.columns))
+
+    for name, make in sinks.items():
+        for buckets in (None, 4):
+            path = f"{d}/{name}_{buckets}"
+            cb = make(path, buckets)
+            for i, b in enumerate(batches):
+                cb(b, i)
+            before = state(path)
+            cb(batches[1], 1)  # replayed batch — must be skipped
+            assert state(path) == before, (name, buckets)
 
 
 def test_bucket_count_pinned_and_legacy_refused(spark, tmp_path, batches):

@@ -110,6 +110,46 @@ def test_compact_reduces_files_preserves_rows(spark, events, tmp_path):
     assert spark.read.parquet(out).count() == n
 
 
+def test_compact_publish_failure_keeps_every_row(
+    spark, events, tmp_path, monkeypatch
+):
+    """``compact`` publishes through the staged rename: when the rename
+    onto the table fails, it raises, and the next read still returns
+    every original row (rolled forward from the complete staging copy)
+    instead of a deleted table."""
+    from ralf_spark import connectors
+
+    out = str(tmp_path / "fragmented")
+    events.repartition(8).write.parquet(out)
+    want = sorted(map(tuple, spark.read.parquet(out).collect()))
+    real = connectors._rename
+
+    def fail_publish(fs, src, dst):
+        if src.toString().endswith(connectors.STAGING_SUFFIX):
+            raise IOError("injected: publish rename failed")
+        real(fs, src, dst)
+
+    monkeypatch.setattr(connectors, "_rename", fail_publish)
+    with pytest.raises(IOError, match="injected"):
+        compact(spark, out, target_file_bytes=10 * 1024 * 1024)
+    monkeypatch.setattr(connectors, "_rename", real)
+    back = connectors._try_read_parquet(spark, out)
+    assert back is not None
+    assert sorted(map(tuple, back.collect())) == want
+
+
+def test_dynamic_overwrite_spelled_once():
+    """The dynamic partition overwrite is written once per module:
+    ``layout.write_batch`` for every ``_batch`` store and log, and the
+    bucketed fold sink's first write in ``streaming/sinks.py``."""
+    import ralf_spark.layout as layout_mod
+    import ralf_spark.streaming.sinks as sinks_mod
+
+    for mod in (layout_mod, sinks_mod):
+        with open(mod.__file__) as f:
+            assert f.read().count("partitionOverwriteMode") == 1, mod.__name__
+
+
 def test_file_stats(spark, events, tmp_path):
     out = str(tmp_path / "stats")
     events.repartition(4).write.parquet(out)

@@ -146,7 +146,10 @@ def test_rq_state_fold_equals_batch(spark, events):
     batch state — the property that makes the streaming log sink
     exactly-once by algebra — and replay idempotence (re-merging a
     batch changes nothing)."""
-    from ralf_spark.operators.sketches import rq_merge_state, rq_state_update
+    from ralf_spark.operators.sketches import rq_fold, rq_state_update
+
+    def rq_merge(state, batch):
+        return rq_fold(state.unionByName(batch), ["event_type"], k=64)
 
     ev = events.select("event_type", "event_id", "value")
     batch_state = rq_state_update(ev, ["event_type"], "value", "event_id", k=64)
@@ -156,11 +159,9 @@ def test_rq_state_fold_equals_batch(spark, events):
     sa = rq_state_update(a, ["event_type"], "value", "event_id", k=64)
     sb = rq_state_update(b, ["event_type"], "value", "event_id", k=64)
     sc = rq_state_update(c, ["event_type"], "value", "event_id", k=64)
-    folded = rq_merge_state(
-        rq_merge_state(sa, sb, ["event_type"], k=64), sc, ["event_type"], k=64
-    )
+    folded = rq_merge(rq_merge(sa, sb), sc)
     assert _rows(folded) == _rows(batch_state)
-    replayed = rq_merge_state(folded, sb, ["event_type"], k=64)
+    replayed = rq_merge(folded, sb)
     assert _rows(replayed) == _rows(batch_state)
 
 
