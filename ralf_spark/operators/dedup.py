@@ -343,7 +343,7 @@ def near_dup_pairs(
     # gate refuses and the measured Σ c·(c−1)/2 auto spelling runs
     # unchanged.
     small = broadcast_candidates is None and sizing.provably_small(
-        table.df, per_byte=sizing.EXPANSION["shingle"]
+        table.df, per_byte=sizing.shingle_expansion(shingle_n)
     )
     hint = False if small else sizing.choose_broadcast(
         broadcast_candidates,
@@ -529,7 +529,7 @@ def _inverted_candidates_verified(
     # r16: footer-proved small corpus -> docs-broadcast spelling, no
     # stats job (see near_dup_pairs)
     small = broadcast_candidates is None and sizing.provably_small(
-        table.df, per_byte=sizing.EXPANSION["shingle"]
+        table.df, per_byte=sizing.shingle_expansion(shingle_n)
     )
     hint = False if small else sizing.choose_broadcast(
         broadcast_candidates,
@@ -1678,7 +1678,7 @@ class MinHashIndex:
             broadcast_candidates is None
             and sizing.provably_small(
                 table.df,
-                per_byte=x["shingle"],
+                per_byte=sizing.shingle_expansion(self.shingle_n),
                 per_row=max(
                     self.num_perm * x["sig_perm"] + x["sig_frame"],
                     self.bands * x["bucket_row"],

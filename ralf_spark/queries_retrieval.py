@@ -857,10 +857,7 @@ def sq8_encode_codes_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash compare requires scalar cells)."""
     emb = _t(spark, sf_dir, "embeddings")
     base = emb.df.select("vec_id", "embedding")
-    # dim=64 is the same constant the oracle pins (sq8_dims_sql()
-    # hardcodes generate_series(1, 64)); passing it skips the probe row
-    # and the fixed-width bounds agg replaces the 64× posexplode (r16)
-    bounds = sq8_bounds(base, dim=64)
+    bounds = sq8_bounds(base)
     enc = sq8_encode(base, bounds)
     return enc.select(
         "vec_id",
@@ -1023,9 +1020,7 @@ def sq8_adc_topk_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = emb.df.select(
         F.col("vec_id").alias("neighbor_id"), F.col("embedding")
     )
-    # dim=64 is the same constant the oracle pins (sq8_dims_sql());
-    # the fixed-width bounds agg replaces the 64× posexplode (r16)
-    bounds = sq8_bounds(base, dim=64)
+    bounds = sq8_bounds(base)
     enc = sq8_encode(base, bounds)
     out = sq8_adc_topk_precoded(
         enc, _query_vectors(spark, sf_dir), bounds, k=5

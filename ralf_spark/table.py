@@ -315,9 +315,16 @@ class FeatureTable:
         """Point lookup on the latest-per-key state (``ralf/table.py:179-191``,
         ``ralf/client.py:8-11``): :meth:`point_query_df` collected — one
         Spark job, no shuffle. Convenience form — it reads the key's rows
-        inline; for repeated serving-path lookups, persist the state with
+        inline on every call. For repeated serving-path lookups, register
+        the table with ``FeatureStore``, whose point index serves a small
+        table from the driver with no Spark job once built (it falls back
+        to this read otherwise), or persist the state with
         ``ralf_spark.connectors.ParquetStateConnector`` (key-bucketed layout,
-        partition-pruned point reads) or ``SqliteStateConnector`` (indexed)."""
+        partition-pruned point reads) or ``SqliteStateConnector`` (indexed).
+
+        Every call reads the files the table listed when it was made: once
+        they are replaced, the read fails on the missing files, where the
+        store's index keeps serving the snapshot it copied."""
         return self.point_query_df(key_value).collect()
 
     def bulk_query(self, collect: bool = False) -> DataFrame | list[Row]:

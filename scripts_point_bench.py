@@ -10,7 +10,12 @@ the sf0.1 events fixture (100k keys), served as
   shape), vs
 - ``ParquetStateConnector`` key-bucketed layout (``bucket =
   pmod(xxhash64(key), 64)`` directory partitioning) whose point plan
-  prunes to ONE bucket directory.
+  prunes to ONE bucket directory, vs
+- ``FeatureStore.point_query`` on the unbucketed table registered with
+  a store: its first (cold) read builds the store's point index, and
+  later (warm) reads are driver-side lookups when the index's size gate
+  admits the table (the 5M-key state is refused and reads through
+  Spark).
 
 Run: ``python scripts_point_bench.py`` — prints a markdown row set for
 BENCH_NOTES. Medians over interleaved repeats, warm JVM.
@@ -27,6 +32,7 @@ from pyspark.sql import functions as F
 from ralf_spark.connectors import ParquetStateConnector
 from ralf_spark.session import get_spark
 from ralf_spark.sources.fixtures import load_fixture
+from ralf_spark.store import FeatureStore
 from ralf_spark.table import FeatureTable
 
 SF_DIR = "/root/testdata/sf0.1"
@@ -73,7 +79,12 @@ def _bench(spark, state, key_col, keys, ts=None, seq=None, bulk_label=None):
     # warm both paths once (plan compile / file listing)
     flat.point_query(keys[0])
     conn.point_query(spark, keys[0])
-    flat_ms, bucket_ms = [], []
+    store = FeatureStore(spark)
+    store.register("state", flat)
+    t0 = time.perf_counter()
+    assert len(store.point_query("state", keys[0])) == 1
+    cold_ms = (time.perf_counter() - t0) * 1000
+    flat_ms, bucket_ms, store_ms = [], [], []
     for _ in range(REPEATS):
         for k in keys:
             t0 = time.perf_counter()
@@ -84,22 +95,25 @@ def _bench(spark, state, key_col, keys, ts=None, seq=None, bulk_label=None):
             rows = conn.point_query(spark, k)
             bucket_ms.append((time.perf_counter() - t0) * 1000)
             assert len(rows) == 1
+            t0 = time.perf_counter()
+            rows = store.point_query("state", k)
+            store_ms.append((time.perf_counter() - t0) * 1000)
+            assert len(rows) == 1
     if bulk_label is not None:
         _bench_bulk(spark, bulk_label, flat, conn)
-    return flat_ms, bucket_ms
+    return flat_ms, bucket_ms, store_ms, cold_ms
 
 
-def _report(label, flat_ms, bucket_ms):
-    def stats(xs):
-        return (statistics.median(xs),
-                sorted(xs)[int(0.9 * len(xs))], max(xs))
+def _report(label, flat_ms, bucket_ms, store_ms, cold_ms):
+    def row(name, xs):
+        med, p90 = statistics.median(xs), sorted(xs)[int(0.9 * len(xs))]
+        print(f"| {label} {name} | {med:.1f}ms | {p90:.1f}ms "
+              f"| {max(xs):.1f}ms | {len(xs)} |")
 
-    fm, f9, fx = stats(flat_ms)
-    bm, b9, bx = stats(bucket_ms)
-    print(f"| {label} unbucketed full-scan filter | {fm:.0f}ms | {f9:.0f}ms "
-          f"| {fx:.0f}ms | {len(flat_ms)} |")
-    print(f"| {label} bucketed (64) pruned plan | {bm:.0f}ms | {b9:.0f}ms "
-          f"| {bx:.0f}ms | {len(bucket_ms)} |")
+    row("unbucketed full-scan filter", flat_ms)
+    row("bucketed (64) pruned plan", bucket_ms)
+    row("FeatureStore.point_query, first (cold) read", [cold_ms])
+    row("FeatureStore.point_query, warm", store_ms)
 
 
 def main() -> None:

@@ -196,15 +196,11 @@ def test_point_query_returns_latest(spark):
     assert t.point_query("zzz") == []
 
 
-@pytest.mark.parametrize("key_type", ["long", "string"])
-def test_point_query_matches_latest(spark, key_type):
-    """The sort-limit point read picks ``latest()``'s row for every key,
-    on a multi-partition frame: NULL ts and NULL seq order below every
-    value (as in ``max_by`` over ``struct(ts, seq)``), and ties on ts
-    fall to seq. Absent keys read as no rows."""
-    def key(i):
-        return i if key_type == "long" else f"k{i}"
-
+def point_rows(key):
+    """(k, ts, seq, v) rows whose newest row per key takes every rule of
+    ``latest()``'s order: NULL ts and NULL seq order below every value
+    (as in ``max_by`` over ``struct(ts, seq)``), and ties on ts fall to
+    seq. ``key(i)`` spells key ``i``; keys 0-11, 50 and 51 exist."""
     rows = []
     for i in range(12):
         rows += [
@@ -219,8 +215,19 @@ def test_point_query_matches_latest(spark, key_type):
             rows.append((key(i), 20, None, 7.0))  # NULL seq only
     rows += [(key(50), None, None, 8.0), (key(50), None, 4, 9.0)]
     rows.append((key(51), None, None, 10.0))
+    return rows
+
+
+@pytest.mark.parametrize("key_type", ["long", "string"])
+def test_point_query_matches_latest(spark, key_type):
+    """The sort-limit point read picks ``latest()``'s row for every key,
+    on a multi-partition frame (:func:`point_rows`). Absent keys read as
+    no rows."""
+    def key(i):
+        return i if key_type == "long" else f"k{i}"
+
     df = spark.createDataFrame(
-        rows, f"k {key_type}, ts long, seq long, v double"
+        point_rows(key), f"k {key_type}, ts long, seq long, v double"
     ).repartition(4)
     assert df.rdd.getNumPartitions() >= 4
     t = FeatureTable(df, key="k", ts="ts", seq="seq")

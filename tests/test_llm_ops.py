@@ -145,11 +145,11 @@ def test_small_corpus_docs_broadcast_spelling(spark, tmp_path, monkeypatch):
         containment_pairs,
         jaccard_pairs_inverted,
     )
-    from ralf_spark.plans.sizing import EXPANSION, provably_small
+    from ralf_spark.plans.sizing import provably_small, shingle_expansion
     from ralf_spark.table import FeatureTable
 
     def gate(df):
-        return provably_small(df, per_byte=EXPANSION["shingle"])
+        return provably_small(df, per_byte=shingle_expansion(3))
 
     base = "the quick brown fox jumps over the lazy dog again and again"
     rows = [
@@ -211,7 +211,7 @@ def test_minhash_index_small_sides_scoring(spark, tmp_path):
     from ralf_spark.connectors import _list_parquet_files_sized
     from ralf_spark.operators.dedup import MinHashIndex
     from ralf_spark.plans.sizing import EXPANSION as X
-    from ralf_spark.plans.sizing import provably_small
+    from ralf_spark.plans.sizing import provably_small, shingle_expansion
     from ralf_spark.table import FeatureTable
 
     base = "the quick brown fox jumps over the lazy dog again and again"
@@ -247,7 +247,7 @@ def test_minhash_index_small_sides_scoring(spark, tmp_path):
         # payloads) and the stored signature table
         assert provably_small(
             second.df,
-            per_byte=X["shingle"],
+            per_byte=shingle_expansion(3),
             per_row=max(
                 idx.num_perm * X["sig_perm"] + X["sig_frame"],
                 idx.bands * X["bucket_row"],
@@ -311,14 +311,16 @@ def _footer_rows_unc(paths) -> tuple[int, int]:
     return rows, unc
 
 
+@pytest.mark.parametrize("shingle_n", [3, 5])
 @pytest.mark.parametrize("hash_fn", ["md5", "xxhash64"])
-def test_expansion_table_bounds_broadcasts(spark, tmp_path, hash_fn):
+def test_expansion_table_bounds_broadcasts(spark, tmp_path, hash_fn, shingle_n):
     """Every small spelling, built on the worst case of the expansion
     table (1-char tokens, all shingles and digests distinct), broadcasts
     no more than the byte bound the size gate computes for its input
-    from footers: the docs broadcast of the pair operators, the digest
-    broadcast of cross_corpus_duplicate_spans, and the bucket and
-    signature broadcasts of MinHashIndex.add."""
+    from footers: the docs broadcast of the pair operators (at shingle
+    width ``shingle_n``), the digest broadcast of
+    cross_corpus_duplicate_spans, and the bucket and signature
+    broadcasts of MinHashIndex.add."""
     import random
 
     from ralf_spark.operators.dedup import (
@@ -327,7 +329,7 @@ def test_expansion_table_bounds_broadcasts(spark, tmp_path, hash_fn):
     )
     from ralf_spark.operators.util import unpersist_cached
     from ralf_spark.plans.sizing import EXPANSION as X
-    from ralf_spark.plans.sizing import provably_small
+    from ralf_spark.plans.sizing import provably_small, shingle_expansion
 
     rnd = random.Random(7)
     letters = "abcdefghijklmnopqrstuvwxyz"
@@ -337,6 +339,13 @@ def test_expansion_table_bounds_broadcasts(spark, tmp_path, hash_fn):
             (i, " ".join(rnd.choice(letters) for _ in range(400)))
             for i in range(half * 150, half * 150 + 150)
         ]
+        if half == 0:
+            doc0 = rows[0][1]
+        else:
+            # one near-duplicate of doc 0, so every hash and width has a
+            # candidate pair (with none, AQE drops the verification join
+            # and the docs broadcast is never built)
+            rows[-1] = (rows[-1][0], doc0[:-1] + "z")
         paths.append(str(tmp_path / f"docs{half}"))
         spark.createDataFrame(rows, "doc_id long, text string").coalesce(
             1
@@ -355,9 +364,12 @@ def test_expansion_table_bounds_broadcasts(spark, tmp_path, hash_fn):
         return max(sizes)
 
     # pair operators: the docs (shingle table) broadcast
-    assert provably_small(corpus.df, per_byte=X["shingle"])
-    got = measured(near_dup_pairs(corpus, hash_fn=hash_fn), "_sh")
-    assert got <= unc * X["shingle"], (got, unc)
+    per_byte = shingle_expansion(shingle_n)
+    assert provably_small(corpus.df, per_byte=per_byte)
+    got = measured(
+        near_dup_pairs(corpus, hash_fn=hash_fn, shingle_n=shingle_n), "_sh"
+    )
+    assert got <= unc * per_byte, (got, unc)
 
     # cross-corpus spans: the eval side's digest broadcast
     assert provably_small(corpus.df, per_byte=X["digest"])
@@ -367,7 +379,7 @@ def test_expansion_table_bounds_broadcasts(spark, tmp_path, hash_fn):
     assert got <= unc * X["digest"], (got, unc)
 
     # MinHashIndex.add: batch buckets and (stored + batch) signatures
-    idx = MinHashIndex(str(tmp_path / "mh"), hash_fn=hash_fn)
+    idx = MinHashIndex(str(tmp_path / "mh"), hash_fn=hash_fn, shingle_n=shingle_n)
     idx.build(first)
     _, store_unc = _footer_rows_unc([f"{idx.path}/sigs"])
     batch_rows, _ = _footer_rows_unc(paths[1:])
@@ -3503,37 +3515,19 @@ def test_maintain_reports_retro_watermark_coverage(spark, tmp_path):
     assert out2["retro_watermark"]["covered"] is True
 
 
-def test_sq8_bounds_fixed_width_agg_matches_grouped_spelling(spark):
-    """r16 (VERDICT r15 #4): sq8_bounds is now one fixed-width global
-    aggregate (no posexplode, no grouping exchange). min/max are exact
-    in IEEE doubles, so the values must be bit-identical to the old
-    posexplode + groupBy(dim) spelling, with and without an explicit
-    dim; an empty corpus yields [] like the grouped spelling did."""
+def test_sq8_bounds_matches_per_dimension_minmax(spark):
+    """sq8_bounds is each dimension's exact (min, max) in dimension
+    order, bit-identical to a driver-side computation (min/max are
+    exact in IEEE doubles); an empty corpus has no bounds."""
     from pyspark.sql import functions as F
 
     from ralf_spark.operators.similarity import sq8_bounds
 
+    vecs = [[float(i) * 0.5 - 1.0, float((i * 7) % 5), -2.5 + i]
+            for i in range(9)]
     df = spark.createDataFrame(
-        [(i, [float(i) * 0.5 - 1.0, float((i * 7) % 5), -2.5 + i])
-         for i in range(9)],
-        "vec_id bigint, embedding array<double>",
-    )
-    # old spelling, replayed inline as the reference
-    ref_rows = (
-        df.select(
-            F.posexplode(F.col("embedding").cast("array<double>"))
-            .alias("_d", "_x")
-        )
-        .groupBy("_d")
-        .agg(F.min("_x").alias("_lo"), F.max("_x").alias("_hi"))
-        .collect()
-    )
-    ref = [
-        (float(r["_lo"]), float(r["_hi"]))
-        for r in sorted(ref_rows, key=lambda r: r["_d"])
-    ]
-    assert sq8_bounds(df) == ref                 # dim probed from a row
-    assert sq8_bounds(df, dim=3) == ref          # dim passed explicitly
-    empty = df.where(F.lit(False))
-    assert sq8_bounds(empty, dim=3) == []
-    assert sq8_bounds(empty) == []
+        list(enumerate(vecs)), "vec_id bigint, embedding array<double>",
+    ).repartition(3)
+    ref = [(min(col), max(col)) for col in zip(*vecs)]
+    assert sq8_bounds(df) == ref
+    assert sq8_bounds(df.where(F.lit(False))) == []
