@@ -1166,10 +1166,14 @@ class ParquetStateConnector(StateConnector):
             partition_by="bucket",
         )
 
+    def _read(self, spark: SparkSession) -> DataFrame:
+        """The stored state, after recovering a staged publish that a
+        crash cut between its renames (:func:`_recover_staged_publish`)."""
+        _recover_staged_publish(spark, self.path)
+        return spark.read.parquet(self.path)
+
     def load(self, spark: SparkSession) -> FeatureTable:
-        return FeatureTable(
-            spark.read.parquet(self.path).drop("bucket"), key=self.key
-        )
+        return FeatureTable(self._read(spark).drop("bucket"), key=self.key)
 
     def point_query(self, spark: SparkSession, key_value: Any) -> list[Row]:
         return self.pruned_point_plan(spark, key_value).drop("bucket").collect()
@@ -1179,7 +1183,7 @@ class ParquetStateConnector(StateConnector):
         assertions). The key literal is cast to the stored key type first:
         xxhash64 is type-sensitive, so hashing an int literal against a
         long column would land in the wrong bucket."""
-        df = spark.read.parquet(self.path)
+        df = self._read(spark)
         lit = F.lit(key_value).cast(df.schema[self.key].dataType)
         return df.where(
             (F.col("bucket") == F.pmod(F.xxhash64(lit), F.lit(self.num_buckets)))
@@ -1187,7 +1191,7 @@ class ParquetStateConnector(StateConnector):
         )
 
     def delete(self, spark: SparkSession, keys: Sequence[Any]) -> None:
-        df = spark.read.parquet(self.path)
+        df = self._read(spark)
         remaining = df.where(~F.col(self.key).isin(list(keys)))
         _staged_overwrite(spark, remaining, self.path, partition_by="bucket")
 

@@ -32,9 +32,3 @@ def cosine_similarity(a: Column, b: Column) -> Column:
     """cos(a,b) = a·b / (|a||b|) — the reference's cosine policy math
     (``load_shedding_policy.py:41-50``) as one JVM expression."""
     return dot(a, b) / (l2_norm(a) * l2_norm(b))
-
-
-def array_mean(a: Column) -> Column:
-    """Mean of an array column (window-payload mean,
-    ``load_shedding_policy.py:25-35``)."""
-    return F.aggregate(a, F.lit(0.0), lambda acc, v: acc + v) / F.size(a)

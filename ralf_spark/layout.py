@@ -194,8 +194,9 @@ def compact(
     a row-count guess, so wide and narrow schemas both land near the
     target. Published by ``connectors._staged_overwrite`` under the
     writer lease: a crash leaves the original, or a complete rewrite
-    that the next read rolls forward.
+    that the next read rolls forward, which this call does first.
     """
+    connectors._recover_staged_publish(spark, path)
     fs, hpath = _hadoop_fs(spark, path)
     summary = fs.getContentSummary(hpath)
     n_files = max(min_files, -(-summary.getLength() // target_file_bytes))

@@ -194,22 +194,6 @@ def _band_array_sql(
     return f"array({', '.join(entries)})"
 
 
-def minhash_signature_sql(
-    w: str = "w", num_perm: int = 16, shingle_n: int = 3
-) -> str:
-    """DuckDB spelling of :func:`minhash_signature` over a bound token-list
-    column ``w`` (inside a CTE)."""
-    from ralf_spark.functions.text import distinct_shingles_sql
-
-    sh = distinct_shingles_sql(w, shingle_n)
-    mins = ", ".join(
-        f"list_min(list_transform(sh, s -> CAST(('0x' || substring("
-        f"md5('mh{p}' || '|' || s), 1, {HEX_CHARS})) AS BIGINT)))"
-        for p in range(num_perm)
-    )
-    return f"(SELECT [{mins}] FROM (SELECT {sh} AS sh))"
-
-
 def lsh_band_keys(
     sig: Column, bands: int, rows_per_band: int, hash_fn: str = "md5"
 ) -> Column:
@@ -239,7 +223,6 @@ def near_dup_pairs(
     threshold: float = 0.5,
     shingle_n: int = 3,
     hash_fn: str | None = None,
-    broadcast_candidates: bool | None = None,
     token_mode: str = "ascii",
 ) -> DataFrame:
     """Banded-LSH near-duplicate pairs with exact-Jaccard verification.
@@ -255,15 +238,17 @@ def near_dup_pairs(
     between modes (different permutations); the exact-Jaccard verification
     makes precision identical.
 
-    ``broadcast_candidates`` picks the verification spelling: ``True`` =
-    chained-broadcast (corpus streams map-side; candidates must fit the
-    broadcast cap), ``False`` = plain shuffle join, ``None`` (default) =
-    AUTO — the Σ c·(c−1)/2 pair bound over the persisted bucket table
-    chooses, so an adversarial corpus (one giant dup cluster) degrades to
-    the shuffle join instead of failing at Spark's 8 GB broadcast cap.
-    Auto runs one cheap aggregation job at plan-construction time, which
-    materializes the persisted shingle/bucket projections — work the first
-    consumer action needed anyway (the persists are reused).
+    The verification spelling (:func:`_verify_join`) is the engine's
+    choice: a corpus its parquet footers prove small broadcasts its
+    shingle table with no plan-construction job; otherwise the
+    Σ c·(c−1)/2 pair bound over the persisted bucket table picks the
+    chained-broadcast join (corpus streams map-side; candidates must fit
+    the broadcast cap) or, past the bound, the plain shuffle join, so an
+    adversarial corpus (one giant dup cluster) degrades instead of failing
+    at Spark's 8 GB broadcast cap. The bound is one cheap aggregation job
+    at plan-construction time, which materializes the persisted
+    shingle/bucket projections — work the first consumer action needed
+    anyway (the persists are reused).
 
     Returns (id1, id2, jaccard). No cross join anywhere: candidate
     generation is a bucket equi-join, so cost is Σ bucket² not n².
@@ -336,18 +321,17 @@ def near_dup_pairs(
         .distinct()
     )
     # r16 (VERDICT r15 #3): when footer metadata PROVES the corpus side
-    # broadcast-safe, skip the stats job (auto mode's only
+    # broadcast-safe, skip the stats job (the measured spelling's only
     # plan-construction job) and broadcast the docs side instead — the
     # candidate stream stays un-broadcast, so the safety bound is
     # corpus-proportional, not dup-structure-dependent. At 100 TB the
-    # gate refuses and the measured Σ c·(c−1)/2 auto spelling runs
+    # gate refuses and the measured Σ c·(c−1)/2 spelling runs
     # unchanged.
-    small = broadcast_candidates is None and sizing.provably_small(
+    small = sizing.provably_small(
         table.df, per_byte=sizing.shingle_expansion(shingle_n)
     )
     hint = False if small else sizing.choose_broadcast(
-        broadcast_candidates,
-        lambda: _pair_bound_from_buckets(buckets, "_band", "_key"),
+        lambda: _pair_bound_from_buckets(buckets, "_band", "_key")
     )
 
     verified = (
@@ -478,7 +462,6 @@ def _inverted_candidates_verified(
     text_col: str,
     max_df: int,
     shingle_n: int,
-    broadcast_candidates: bool | None,
     token_mode: str,
     op_name: str,
 ) -> tuple[DataFrame, list]:
@@ -528,12 +511,11 @@ def _inverted_candidates_verified(
     )
     # r16: footer-proved small corpus -> docs-broadcast spelling, no
     # stats job (see near_dup_pairs)
-    small = broadcast_candidates is None and sizing.provably_small(
+    small = sizing.provably_small(
         table.df, per_byte=sizing.shingle_expansion(shingle_n)
     )
     hint = False if small else sizing.choose_broadcast(
-        broadcast_candidates,
-        lambda: _pair_bound_from_buckets(posting_r, "_s"),
+        lambda: _pair_bound_from_buckets(posting_r, "_s")
     )
     return (
         _verify_join(docs, cand, hint_broadcast=hint, broadcast_docs=small),
@@ -547,7 +529,6 @@ def jaccard_pairs_inverted(
     threshold: float = 0.5,
     max_df: int = 5,
     shingle_n: int = 3,
-    broadcast_candidates: bool | None = None,
     token_mode: str = "ascii",
 ) -> DataFrame:
     """n-gram Jaccard near-dup via INVERTED-INDEX blocking — the classic
@@ -559,13 +540,12 @@ def jaccard_pairs_inverted(
     pair whose every shared shingle is hot is missed; near-dups share many
     shingles, so in practice some shared shingle is rare.
 
-    ``broadcast_candidates``: verification-spelling knob, same tri-state
-    contract as :func:`near_dup_pairs` — auto (None) bounds candidates by
-    Σ df·(df−1)/2 over the persisted rare-posting table.
+    Verification spellings as in :func:`near_dup_pairs`; the measured
+    bound is Σ df·(df−1)/2 over the persisted rare-posting table.
     """
     verified, cached = _inverted_candidates_verified(
-        table, text_col, max_df, shingle_n, broadcast_candidates,
-        token_mode, "jaccard_pairs_inverted",
+        table, text_col, max_df, shingle_n, token_mode,
+        "jaccard_pairs_inverted",
     )
     out = (
         verified.select(
@@ -1084,7 +1064,6 @@ def containment_pairs(
     threshold: float = 0.5,
     max_df: int = 5,
     shingle_n: int = 3,
-    broadcast_candidates: bool | None = None,
     token_mode: str = "ascii",
 ) -> DataFrame:
     """Directed n-gram CONTAINMENT near-dup pairs: C(A→B) = |A∩B| / |A|.
@@ -1098,12 +1077,10 @@ def containment_pairs(
     Candidate generation and the Σdf²-bounded cost model are identical to
     :func:`jaccard_pairs_inverted` (rare-shingle inverted index, hot
     shingles pruned); only the verification ratio differs — the denominator
-    is the SOURCE's shingle set, not the union. ``broadcast_candidates``:
-    same tri-state verification-spelling knob as the other pair operators.
+    is the SOURCE's shingle set, not the union.
     """
     verified, cached = _inverted_candidates_verified(
-        table, text_col, max_df, shingle_n, broadcast_candidates,
-        token_mode, "containment_pairs",
+        table, text_col, max_df, shingle_n, token_mode, "containment_pairs",
     )
     scored = (
         verified.select(
@@ -1513,7 +1490,6 @@ class MinHashIndex:
         text_col: str = "text",
         threshold: float = 0.5,
         batch_tag: str | None = None,
-        broadcast_candidates: bool | None = None,
         writer_id: str | None = None,
     ) -> DataFrame:
         """Dedup-check ``table`` against the index AND itself, then fold it
@@ -1525,15 +1501,13 @@ class MinHashIndex:
         REPLACES the batch's rows instead of duplicating them. Unnamed
         batches get a unique tag (plain append semantics).
 
-        ``broadcast_candidates``: verification-spelling knob (r9, same
-        tri-state contract as :func:`near_dup_pairs`). Auto (None) bounds
-        the candidate pairs by Σₖ nₖ·aₖ — per-(band,key) counts of the new
-        batch's buckets (tiny, broadcast) summed against one pass over the
-        stored∪new bucket table. That pass costs one extra store scan per
-        add; the scoring join already scans the store once, so the
-        per-batch contract stays O(store-scan), and SCALEPROBE re-measures
-        the flat exponent. Batches with known-bounded dup volume can pass
-        ``True`` to skip the stats pass entirely (the pre-r9 behavior).
+        Scoring spellings: see :meth:`_scored_pairs`. Past the size gate
+        the measured spelling bounds the candidate pairs by Σₖ nₖ·aₖ —
+        per-(band,key) counts of the new batch's buckets (tiny,
+        broadcast) summed against one pass over the stored∪new bucket
+        table. That pass costs one extra store scan per add; the scoring
+        join already scans the store once, so the per-batch contract
+        stays O(store-scan), and SCALEPROBE re-measures the flat exponent.
 
         CONCURRENT mode (r14 — ``concurrent_adds=True``): tag-scoped
         lease instead of the root, auto-maintenance skipped (the
@@ -1576,8 +1550,7 @@ class MinHashIndex:
                 else new_sigs
             )
             pairs, small = self._scored_pairs(
-                table, new_buckets, all_b, all_s, threshold,
-                broadcast_candidates,
+                table, new_buckets, all_b, all_s, threshold
             )
             out = attach_cached(pairs, [new_sigs, new_buckets])
             # Fold the batch in AFTER the candidate join is defined: the
@@ -1586,16 +1559,16 @@ class MinHashIndex:
             # file snapshot of the store, so it can never observe its own
             # append.
             #
-            # File-sizing rows (r16, VERDICT r15 #3): in measured-auto
-            # mode the bucket-stats bound job above already materialized
-            # both caches, firing the _project observation — read it
-            # instead of paying a second count job per add. Explicit-hint
-            # and small-shortcut adds (no stats job) keep the count,
-            # which doubles as the cache materialization.
-            if broadcast_candidates is None and not small:
-                n = observed_rows(sigs_obs, new_sigs)
-            else:
+            # File-sizing rows (r16, VERDICT r15 #3): in the measured
+            # spelling the bucket-stats bound job above already
+            # materialized both caches, firing the _project observation —
+            # read it instead of paying a second count job per add.
+            # Small-shortcut adds (no stats job) keep the count, which
+            # doubles as the cache materialization.
+            if small:
                 n = new_sigs.count()  # materializes the cache; sizes files
+            else:
+                n = observed_rows(sigs_obs, new_sigs)
             self._write(new_sigs, "sigs", tag, rows=n, fence=fence)
             self._write(
                 new_buckets, "buckets", tag, rows=n * self.bands, fence=fence
@@ -1608,7 +1581,6 @@ class MinHashIndex:
         text_col: str = "text",
         threshold: float = 0.5,
         within_batch: bool = False,
-        broadcast_candidates: bool | None = None,
     ) -> DataFrame:
         """READ-ONLY near-dup check against the store — nothing is
         folded in (r13): the serving/decontamination spelling of
@@ -1623,8 +1595,7 @@ class MinHashIndex:
         id from the batch, one from the store (a batch screened against
         a fixed corpus: its own internal repeats don't count);
         ``True`` adds the batch's self-pairs (the :meth:`add` detection
-        without the fold). Same candidate bound, chained-broadcast
-        verification, and auto shuffle degrade as :meth:`add`.
+        without the fold). Same scoring spellings as :meth:`add`.
 
         Returns (id1, id2, est_jaccard) with id1 < id2."""
         spark = table.df.sparkSession
@@ -1644,8 +1615,7 @@ class MinHashIndex:
         )
         all_s = stored_s.unionByName(new_sigs)
         pairs, _ = self._scored_pairs(
-            table, new_buckets, other_b, all_s, threshold,
-            broadcast_candidates,
+            table, new_buckets, other_b, all_s, threshold
         )
         return attach_cached(pairs, [new_sigs, new_buckets])
 
@@ -1656,7 +1626,6 @@ class MinHashIndex:
         other_b: DataFrame,
         all_s: DataFrame,
         threshold: float,
-        broadcast_candidates: bool | None,
     ) -> tuple[DataFrame, bool]:
         """Candidate join, spelling choice and scoring shared by
         :meth:`add` and :meth:`check`: the batch buckets joined against
@@ -1674,21 +1643,17 @@ class MinHashIndex:
 
         spark = table.df.sparkSession
         x = sizing.EXPANSION
-        small = (
-            broadcast_candidates is None
-            and sizing.provably_small(
-                table.df,
-                per_byte=sizing.shingle_expansion(self.shingle_n),
-                per_row=max(
-                    self.num_perm * x["sig_perm"] + x["sig_frame"],
-                    self.bands * x["bucket_row"],
-                ),
-            )
-            and sizing.provably_small(
-                _list_parquet_files_sized(spark, f"{self.path}/sigs"),
-                spark,
-                per_byte=x["stored_sig"],
-            )
+        small = sizing.provably_small(
+            table.df,
+            per_byte=sizing.shingle_expansion(self.shingle_n),
+            per_row=max(
+                self.num_perm * x["sig_perm"] + x["sig_frame"],
+                self.bands * x["bucket_row"],
+            ),
+        ) and sizing.provably_small(
+            _list_parquet_files_sized(spark, f"{self.path}/sigs"),
+            spark,
+            per_byte=x["stored_sig"],
         )
         cand = (
             # batch side provably small under the shortcut: hint it so
@@ -1723,9 +1688,7 @@ class MinHashIndex:
             )
             return int(row["_pairs"] or 0)
 
-        hint = False if small else sizing.choose_broadcast(
-            broadcast_candidates, pair_bound
-        )
+        hint = False if small else sizing.choose_broadcast(pair_bound)
         # Exact-estimate scoring, three spellings with identical output
         # (r16): the PROVED-small signature table broadcast into the
         # candidate stream (store-proportional bound, no stats job); or
@@ -2022,7 +1985,6 @@ def cross_corpus_duplicate_spans(
     other_text_col: str | None = None,
     min_tokens: int = 8,
     hash_fn: str | None = None,
-    broadcast_other: bool | None = None,
     token_mode: str = "ascii",
 ) -> DataFrame:
     """Spans of ``table`` documents that appear VERBATIM in ``other`` —
@@ -2039,12 +2001,12 @@ def cross_corpus_duplicate_spans(
     count — this is strictly cross-corpus.
 
     Scale (100 TB train vs bounded eval): the eval side reduces to its
-    DISTINCT gram digests — ``broadcast_other`` None (auto) broadcasts
-    that set into the training-gram scan while it stays under the
-    broadcast bound (an eval suite is millions of grams, not billions),
-    else degrades to a digest-keyed shuffle join (same tri-state
-    contract as the index adds). The train corpus never self-joins and
-    only (digest, id, int) rows ever shuffle.
+    DISTINCT gram digests, broadcast into the training-gram scan when
+    the eval side's footers prove it small, or while its measured count
+    stays under the broadcast bound (an eval suite is millions of grams,
+    not billions); past the bound it degrades to a digest-keyed shuffle
+    join. The train corpus never self-joins and only (digest, id, int)
+    rows ever shuffle.
 
     Returns (doc_id, span_start, span_end, span_tokens) for ``table``'s
     documents, 1-based inclusive token positions.
@@ -2067,7 +2029,7 @@ def cross_corpus_duplicate_spans(
         _gram_positions(odf, okey, ocol, min_tokens, hash_fn, token_mode)
         .select("_dg")
         .distinct()
-        # persisted: the auto-broadcast decision COUNTS this set, and
+        # persisted: the measured broadcast decision COUNTS this set, and
         # the join must not re-run the whole eval tokenize/hash/distinct
         # pipeline a second time (r12 review). Released by the caller
         # via the attach_cached convention.
@@ -2078,12 +2040,9 @@ def cross_corpus_duplicate_spans(
     # (the "digest" expansion: an upper bound BEFORE distinct shrinks
     # it). Past the gate (or on unbounded lineages) the measured count
     # decides.
-    small = broadcast_other is None and sizing.provably_small(
+    hint = sizing.provably_small(
         odf, per_byte=sizing.EXPANSION["digest"]
-    )
-    hint = True if small else sizing.choose_broadcast(
-        broadcast_other, lambda: eval_dg.count()
-    )
+    ) or sizing.choose_broadcast(eval_dg.count)
     probe = F.broadcast(eval_dg) if hint else eval_dg
     dup_pos = pos.join(probe, "_dg").select("_id", "_pos")
     return attach_cached(
@@ -2193,7 +2152,6 @@ def remove_contaminated_spans(
     other_text_col: str | None = None,
     min_tokens: int = 8,
     hash_fn: str | None = None,
-    broadcast_other: bool | None = None,
     token_mode: str = "ascii",
 ) -> DataFrame:
     """Cut every span of ``table`` that appears verbatim in ``other`` —
@@ -2209,8 +2167,7 @@ def remove_contaminated_spans(
     spans = cross_corpus_duplicate_spans(
         table, other,
         text_col=text_col, other_text_col=other_text_col,
-        min_tokens=min_tokens, hash_fn=hash_fn,
-        broadcast_other=broadcast_other, token_mode=token_mode,
+        min_tokens=min_tokens, hash_fn=hash_fn, token_mode=token_mode,
     )
     # re-attach: _cut_spans returns a NEW DataFrame object, which drops
     # the attribute-based cache handle — carry it forward so the
@@ -2375,9 +2332,9 @@ class GramIndex:
     8 bytes/token a suffix array pays, sharded as parquet. Per-add cost
     is one store SCAN with zero store shuffle: the batch digest set
     broadcasts into the scan (``seen = store ⋈ broadcast(batch)``, the
-    chained-broadcast shape of ``MinHashIndex.add``), and auto-degrades
-    to a shuffle join when the batch digest count outgrows the broadcast
-    bound (same tri-state knob + graceful-degradation contract). Batch
+    chained-broadcast shape of ``MinHashIndex.add``), and degrades to a
+    shuffle join when the batch digest count outgrows the broadcast
+    bound (``sizing.choose_broadcast``). Batch
     folds append one partition; the auto-maintenance cadence (r11)
     compacts with the tiered write-amp discipline.
     """
@@ -2537,7 +2494,6 @@ class GramIndex:
         table: FeatureTable,
         text_col: str = "text",
         batch_tag: str | None = None,
-        broadcast_digests: bool | None = None,
         writer_id: str | None = None,
     ) -> DataFrame:
         """Detect the batch's duplicated spans vs everything seen so far
@@ -2546,11 +2502,11 @@ class GramIndex:
         docs — identical to the batch detector over corpus-so-far
         restricted to this batch (oracle-gated).
 
-        ``batch_tag`` replay semantics and the ``broadcast_digests``
-        tri-state match ``MinHashIndex.add``: a replayed tag rewrites its
-        own partition (and is excluded from "seen"); auto broadcasts the
-        batch digest set into the store scan while it stays under the
-        broadcast bound, else degrades to a shuffle join.
+        ``batch_tag`` replay semantics match ``MinHashIndex.add``: a
+        replayed tag rewrites its own partition (and is excluded from
+        "seen"). The batch digest set broadcasts into the store scan
+        while it stays under the broadcast bound, else the probe degrades
+        to a shuffle join.
 
         REPLAY RESTRICTION (the CMS-log class): only tags newer than the
         last compaction may be replayed. Once :meth:`maintain` folds a
@@ -2634,7 +2590,7 @@ class GramIndex:
             if stored is None:
                 seen = batch_dup
             else:
-                hint = sizing.choose_broadcast(broadcast_digests, lambda: n_dg)
+                hint = sizing.choose_broadcast(lambda: n_dg)
                 probe = F.broadcast(batch_dg) if hint else batch_dg
                 seen_in_store = (
                     stored.join(probe, "_dg").select("_dg").distinct()
@@ -2661,7 +2617,6 @@ class GramIndex:
         table: FeatureTable,
         text_col: str = "text",
         within_batch: bool = False,
-        broadcast_digests: bool | None = None,
     ) -> DataFrame:
         """READ-ONLY span detection against the store — nothing is
         folded in (r12): the serving/decontamination spelling of
@@ -2687,7 +2642,7 @@ class GramIndex:
         pos = self._positions(table, text_col).persist()
         batch_dg = pos.select("_dg").distinct().persist()
         n_dg = batch_dg.count()
-        hint = sizing.choose_broadcast(broadcast_digests, lambda: n_dg)
+        hint = sizing.choose_broadcast(lambda: n_dg)
         probe = F.broadcast(batch_dg) if hint else batch_dg
         seen = stored.join(probe, "_dg").select("_dg").distinct()
         if within_batch:
@@ -2764,27 +2719,21 @@ class GramIndex:
     def _tag_of(file_path: str) -> str:
         return file_path.split("/_batch=", 1)[1].split("/", 1)[0]
 
-    def _retro_done_tags(self, spark) -> set[str]:
-        """Tags already covered by a COMMITTED :meth:`retro_delta`
-        cadence — the since-tag watermark (r13, VERDICT r12 #3)."""
+    #: the retro_delta watermark sidecars under ``grams/``: the tags a
+    #: COMMITTED cadence covered (r13, VERDICT r12 #3), and the tags the
+    #: last call covered but :meth:`commit_retro_delta` has not yet
+    #: promoted (r14, VERDICT r13 #2 / ADVICE r13). Until the commit the
+    #: next cadence treats pending tags as uncovered and re-emits their
+    #: spans, so a caller crash between the call and persisting its
+    #: output loses nothing.
+    _DONE = ".retro_watermark.json"
+    _PENDING = ".retro_watermark_pending.json"
+
+    def _watermark(self, spark, name: str) -> set[str]:
+        """The tags of watermark sidecar ``name`` (empty when absent)."""
         from ralf_spark.connectors import _hadoop_fs, read_json_sidecar
 
-        sidecar = f"{self.path}/grams/.retro_watermark.json"
-        fs, jpath = _hadoop_fs(spark, sidecar)
-        if not fs.exists(jpath):
-            return set()
-        return set(read_json_sidecar(spark, sidecar).get("tags", []))
-
-    def _retro_pending_tags(self, spark) -> set[str]:
-        """Tags covered by the LAST retro_delta call but not yet
-        committed (r14, VERDICT r13 #2 / ADVICE r13): the pending half
-        of the two-phase watermark. Until :meth:`commit_retro_delta`
-        promotes them, the next cadence treats them as uncovered and
-        re-emits their spans — so a caller crash between the call and
-        persisting its output loses nothing."""
-        from ralf_spark.connectors import _hadoop_fs, read_json_sidecar
-
-        sidecar = f"{self.path}/grams/.retro_watermark_pending.json"
+        sidecar = f"{self.path}/grams/{name}"
         fs, jpath = _hadoop_fs(spark, sidecar)
         if not fs.exists(jpath):
             return set()
@@ -2792,10 +2741,10 @@ class GramIndex:
 
     def commit_retro_delta(self, spark) -> list[str]:
         """Promote the pending watermark written by the last
-        ``retro_delta(durability="deferred")`` call — call this AFTER
-        the returned spans are durably persisted/folded (the consume
-        point). Idempotent: re-committing (or committing with nothing
-        pending) is a no-op. Returns the newly covered tags.
+        :meth:`retro_delta` call — call this AFTER the returned spans
+        are durably persisted/folded (the consume point). Idempotent:
+        re-committing (or committing with nothing pending) is a no-op.
+        Returns the newly covered tags.
 
         Sequencing this after the consume is what upgrades the batch
         cadence from at-most-once to exactly-once: a crash before the
@@ -2803,23 +2752,18 @@ class GramIndex:
         their spans (emissions fold latest-wins per document, so a
         re-emission is harmless); a crash after the commit has already
         persisted the output the commit acknowledges."""
-        from ralf_spark.connectors import (
-            _hadoop_fs,
-            read_json_sidecar,
-            write_json_sidecar,
-        )
+        from ralf_spark.connectors import _hadoop_fs, write_json_sidecar
 
         # the root without the in-flight-add check: promoting the pending
         # half touches no batch partition an add's snapshot reads
         with self._store.exclusive(spark, check_adds=False):
-            pend_path = f"{self.path}/grams/.retro_watermark_pending.json"
-            fs, jpend = _hadoop_fs(spark, pend_path)
+            fs, jpend = _hadoop_fs(spark, f"{self.path}/grams/{self._PENDING}")
             if not fs.exists(jpend):
                 return []
-            pend = set(read_json_sidecar(spark, pend_path).get("tags", []))
-            done = self._retro_done_tags(spark)
+            pend = self._watermark(spark, self._PENDING)
+            done = self._watermark(spark, self._DONE)
             write_json_sidecar(
-                spark, f"{self.path}/grams/.retro_watermark.json",
+                spark, f"{self.path}/grams/{self._DONE}",
                 {"tags": sorted(done | pend)},
             )
             fs.delete(jpend, False)
@@ -2838,8 +2782,8 @@ class GramIndex:
         O(store) cadence instead of diagnosing it as a regression)."""
         from ralf_spark.connectors import write_json_sidecar
 
-        done = self._retro_done_tags(spark)
-        pend = self._retro_pending_tags(spark)
+        done = self._watermark(spark, self._DONE)
+        pend = self._watermark(spark, self._PENDING)
         if not (done or pend):
             return None  # no delta cadence has ever run: nothing to keep valid
         src = set(summary.get("sources") or [])
@@ -2849,7 +2793,7 @@ class GramIndex:
         if src <= done:
             new_done.add(summary["ctag"])
         write_json_sidecar(
-            spark, f"{self.path}/grams/.retro_watermark.json",
+            spark, f"{self.path}/grams/{self._DONE}",
             {"tags": sorted(new_done)},
         )
         if pend:
@@ -2863,8 +2807,7 @@ class GramIndex:
             if src <= (done | pend):
                 new_pend.add(summary["ctag"])
             write_json_sidecar(
-                spark,
-                f"{self.path}/grams/.retro_watermark_pending.json",
+                spark, f"{self.path}/grams/{self._PENDING}",
                 {"tags": sorted(new_pend)},
             )
         covered = src <= (done | pend)
@@ -2874,13 +2817,7 @@ class GramIndex:
             "uncovered_sources": sorted(src - done - pend),
         }
 
-    def retro_delta(
-        self,
-        spark,
-        broadcast_digests: bool | None = None,
-        durability: str = "deferred",
-        output_path: str | None = None,
-    ) -> DataFrame:
+    def retro_delta(self, spark) -> DataFrame:
         """Incremental retro-flagging (r13, VERDICT r12 #4): the spans of
         every document TOUCHED by data ingested since the last
         ``retro_delta`` — instead of :meth:`retro`'s recompute-and-re-emit
@@ -2912,36 +2849,20 @@ class GramIndex:
         and the SHUFFLED and EMITTED volume — the part that dominated retro()'s
         cadence at a growing store — scales with the batch and its
         touched neighborhood (probe-measured in SCALEPROBE.md).
-        ``broadcast_digests``: same tri-state as :meth:`add`, decided
-        PER STAGE (r13 review): the derived probe sets (changed digests,
-        touched docs, their digest universe) can be arbitrarily larger
-        than the new-digest set they grew from — one boilerplate gram
-        makes ``touched`` approach every doc — so auto sizes each
-        stage's broadcast from that stage's own (persisted) set and
-        degrades it independently to a shuffle join past the bound.
+        Each stage sizes its broadcast from its own (persisted) probe set
+        and degrades to a shuffle join past the bound (r13 review): the
+        derived sets (changed digests, touched docs, their digest
+        universe) can be arbitrarily larger than the new-digest set they
+        grew from — one boilerplate gram makes ``touched`` approach every
+        doc.
 
-        Watermark durability (r14, VERDICT r13 #2 / ADVICE r13 — the
-        two-phase watermark):
-
-        - ``durability="deferred"`` (default): the covered-tag set is
-          written to a PENDING sidecar; the caller drains/persists the
-          returned spans, then calls :meth:`commit_retro_delta` — the
-          consume point. A crash in between leaves the watermark
-          unchanged, so the next cadence re-emits the uncommitted tags'
-          spans (latest-wins folding makes the re-emission harmless):
-          exactly-once end to end.
-        - ``output_path=...``: the spans are WRITTEN to ``output_path``
-          (staged overwrite — never a readable partial tree) and the
-          watermark commits only after the write succeeds; returns the
-          written frame re-read. The ``foreach_batch_gram_dedup``
-          sequencing, as a batch API.
-        - ``durability="at_call"``: the pre-r14 behavior — advance
-          immediately (the returned plan reads the frozen pre-call
-          snapshot so it can't be starved, but a caller crash before
-          consuming loses those tags' delta; recovery is a full
-          :meth:`retro`). At-most-once; only for callers that prefer
-          never re-emitting over never losing.
-
+        Two-phase watermark (r14, VERDICT r13 #2 / ADVICE r13): the
+        covered-tag set is written to the PENDING sidecar; the caller
+        drains/persists the returned spans, then calls
+        :meth:`commit_retro_delta` — the consume point. A crash in
+        between leaves the watermark unchanged, so the next cadence
+        re-emits the uncommitted tags' spans (latest-wins folding makes
+        the re-emission harmless): exactly-once end to end.
         :meth:`maintain` keeps both watermark halves valid across
         compaction renames (see :meth:`_advance_retro_watermark`)."""
         if not self.count_mode:
@@ -2951,12 +2872,10 @@ class GramIndex:
                 "retro-flagging is impossible. Rebuild with "
                 "count_mode=True for the retro pass."
             )
-        if durability not in ("deferred", "at_call"):
-            raise ValueError(
-                f"unknown durability: {durability!r} "
-                "(expected 'deferred' or 'at_call')"
-            )
-        from ralf_spark.connectors import _list_parquet_files_sized
+        from ralf_spark.connectors import (
+            _list_parquet_files_sized,
+            write_json_sidecar,
+        )
 
         store = self._store
 
@@ -2976,19 +2895,24 @@ class GramIndex:
             sized = op.preflight
             files = [f for f, _ in sized]
             grams = spark.read.parquet(*files)
-            done = self._retro_done_tags(spark)
+            done = self._watermark(spark, self._DONE)
             new_files = [f for f in files if self._tag_of(f) not in done]
             if not new_files:
                 dup_pos = grams.select("_id", "_pos").where(F.lit(False))
                 return _positions_to_spans(dup_pos, self.min_tokens)
             dup_pos, cached = self._retro_delta_positions(
-                spark, grams, sized, new_files, broadcast_digests
+                spark, grams, sized, new_files
             )
-            return self._finish_retro_delta(
-                spark, dup_pos, cached,
+            out = attach_cached(
+                _positions_to_spans(dup_pos, self.min_tokens), cached
+            )
+            # written AFTER the plan is defined: the plan reads the
+            # frozen file snapshot, so the watermark cannot starve it
+            write_json_sidecar(
+                spark, f"{self.path}/grams/{self._PENDING}",
                 {"tags": sorted(done | {self._tag_of(f) for f in files})},
-                durability, output_path,
             )
+            return out
 
     def _retro_delta_positions(
         self,
@@ -2996,7 +2920,6 @@ class GramIndex:
         store: DataFrame,
         sized: list[tuple[str, int]],
         new_files: list[str],
-        broadcast_digests: bool | None,
     ) -> tuple[DataFrame, list]:
         """The duplicated ``(_id, _pos)`` set of every document touched by
         ``new_files``, plus the caches it reads — :meth:`retro_delta`'s
@@ -3014,7 +2937,7 @@ class GramIndex:
         # position log small from the listing's on-disk bytes and the
         # footer rows, zero jobs — every derived probe set is a subset of
         # its rows.
-        if broadcast_digests is None and sizing.provably_small(sized, spark):
+        if sizing.provably_small(sized, spark):
             # r16 (VERDICT r15 #1/#6 — the cadence's job count): a store
             # the gate just PROVED tiny (<= 64 MB on disk, <= 5M rows)
             # does not need the four-stage probe-broadcast protocol —
@@ -3098,19 +3021,16 @@ class GramIndex:
         # set they grew from — one boilerplate gram in the batch makes
         # `touched` approach the whole doc-id universe, and broadcasting
         # it under a hint sized from the (tiny) new-digest set would OOM
-        # the driver at 100 TB. `broadcast_digests=None` therefore pays
-        # one count per stage (each probe is persisted and reused by the
-        # final plan, so the stats pass materializes work the plan needs
-        # anyway); True/False skip the counts and force one spelling.
+        # the driver at 100 TB. Each stage therefore pays one count (each
+        # probe is persisted and reused by the final plan, so the stats
+        # pass materializes work the plan needs anyway).
         new_dg = fused.where("_new").select("_dg").distinct().persist()
-        hint_n = sizing.choose_broadcast(broadcast_digests, new_dg.count)
+        hint_n = sizing.choose_broadcast(new_dg.count)
         changed_dg = counted(new_dg, hint_n).persist()
         # changed_dg ⊆ new_dg's digests (it is new_dg filtered by corpus
         # count), so a broadcast-safe stage 1 proves stage 2 safe — no
         # second count job in the at-scale (non-small-store) regime (r16)
-        hint_c = hint_n or sizing.choose_broadcast(
-            broadcast_digests, changed_dg.count
-        )
+        hint_c = hint_n or sizing.choose_broadcast(changed_dg.count)
         touched = (
             store.join(
                 F.broadcast(changed_dg) if hint_c else changed_dg, "_dg"
@@ -3119,60 +3039,15 @@ class GramIndex:
             .distinct()
             .persist()
         )
-        hint_t = sizing.choose_broadcast(broadcast_digests, touched.count)
+        hint_t = sizing.choose_broadcast(touched.count)
         touched_pos = store.join(
             F.broadcast(touched) if hint_t else touched, "_id"
         ).persist()
         tdg = touched_pos.select("_dg").distinct().persist()
-        hint_g = sizing.choose_broadcast(broadcast_digests, tdg.count)
+        hint_g = sizing.choose_broadcast(tdg.count)
         dup_tdg = counted(tdg, hint_g)
         dup_pos = touched_pos.join(
             F.broadcast(dup_tdg) if hint_g else dup_tdg, "_dg"
         ).select("_id", "_pos")
         cached += [new_dg, changed_dg, touched, touched_pos, tdg]
         return dup_pos, cached
-
-    def _finish_retro_delta(
-        self,
-        spark,
-        dup_pos: DataFrame,
-        cached: list,
-        covered: dict,
-        durability: str,
-        output_path: str | None,
-    ) -> DataFrame:
-        """Tail of :meth:`retro_delta` — span merge and the watermark
-        write (``covered``) per the durability mode."""
-        from ralf_spark.connectors import write_json_sidecar
-
-        out = attach_cached(
-            _positions_to_spans(dup_pos, self.min_tokens), cached
-        )
-        if output_path is not None:
-            # write-then-advance: the spans land durably (staged — a
-            # crash never leaves a readable partial tree at the target)
-            # BEFORE the watermark commits, so the cadence is
-            # exactly-once without any caller discipline
-            from ralf_spark.connectors import _staged_overwrite
-            from ralf_spark.operators.util import unpersist_cached
-
-            try:
-                _staged_overwrite(spark, out, output_path)
-            finally:
-                unpersist_cached(out)  # release even on a failed write
-            write_json_sidecar(
-                spark, f"{self.path}/grams/.retro_watermark.json", covered
-            )
-            return spark.read.parquet(output_path)
-        # the sidecar write happens AFTER the plan is defined either
-        # way: the plan reads the frozen file snapshot, so neither
-        # watermark half can starve it
-        sidecar = (
-            ".retro_watermark_pending.json"
-            if durability == "deferred"
-            else ".retro_watermark.json"
-        )
-        write_json_sidecar(
-            spark, f"{self.path}/grams/{sidecar}", covered
-        )
-        return out

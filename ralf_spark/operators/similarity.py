@@ -1212,7 +1212,7 @@ class IvfIndex:
         for free), two-level with :data:`TWO_LEVEL_AUTO_PROBE` groups
         at or above it — the same escalate-past-the-measured-threshold
         discipline as ``choose_simhash_blocks`` and the dedup
-        ``broadcast_candidates="auto"``. Two-level selection is
+        ``sizing.choose_broadcast``. Two-level selection is
         deterministic but a RESTRICTION: a query whose true nearest
         cell sits in an unprobed coarse group probes its best covered
         cells instead (raise ``coarse_probe`` for selection recall;

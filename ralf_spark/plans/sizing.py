@@ -7,7 +7,17 @@ small spelling is only taken when :func:`provably_small` PROVES, from
 driver-side metadata alone, that the payload it broadcasts fits
 :data:`SMALL_INPUT_BYTES` and the input fits
 :data:`BROADCAST_CANDIDATE_LIMIT` rows. ``SPARK_GRAFT_SMALL_CORPUS=0``
-refuses every proof — the one switch to the at-scale spellings.
+refuses every proof.
+
+No caller picks a spelling. Two routes lead to the at-scale spellings:
+
+- a refused proof — ``SPARK_GRAFT_SMALL_CORPUS=0``, an in-memory or
+  row-multiplying lineage, or an input past the bounds — runs the
+  measured spelling, which broadcasts while :func:`choose_broadcast`
+  finds the measured bound within :data:`BROADCAST_CANDIDATE_LIMIT`;
+- a measured bound past :data:`BROADCAST_CANDIDATE_LIMIT` runs the
+  shuffle spelling (tests reach it by lowering the limit to 0, which
+  also refuses every proof of a non-empty input).
 
 The proof reads three kinds of metadata, none of which runs a job:
 
@@ -275,16 +285,13 @@ def _decoded_bytes(path: str, spark) -> tuple[int, int] | None:
     return meta.num_rows, total
 
 
-def choose_broadcast(choice: bool | None, bound_fn) -> bool:
-    """Resolve the tri-state ``broadcast_candidates`` knob: explicit
-    True/False wins (no stats job); None = auto — run ``bound_fn`` and
-    broadcast only while the pair bound stays under
-    :data:`BROADCAST_CANDIDATE_LIMIT`. Auto turns the one documented scale
-    hazard (forced broadcast of a data-dependent candidate set) into
-    graceful degradation: above the limit the verification joins carry no
-    hints and the planner falls back to a shuffle join — slower, alive."""
-    if choice is not None:
-        return bool(choice)
+def choose_broadcast(bound_fn) -> bool:
+    """Broadcast only while the measured pair bound ``bound_fn()`` stays
+    at most :data:`BROADCAST_CANDIDATE_LIMIT`. This turns the one
+    documented scale hazard (a broadcast of a data-dependent candidate
+    set) into graceful degradation: above the limit the verification
+    joins carry no hints and the planner falls back to a shuffle join —
+    slower, alive."""
     return bound_fn() <= BROADCAST_CANDIDATE_LIMIT
 
 

@@ -1107,6 +1107,24 @@ def skew_probe(mults: list[int]) -> dict:
     return out
 
 
+def _forced_broadcast_twin(sz, cap: int, build):
+    """Run ``build()`` in the measured broadcast spelling: the footer
+    gate off (``SPARK_GRAFT_SMALL_CORPUS=0``) and the pair limit raised
+    to ``cap``, so any bound up to ``cap`` broadcasts."""
+    limit = sz.BROADCAST_CANDIDATE_LIMIT
+    env = os.environ.get("SPARK_GRAFT_SMALL_CORPUS")
+    sz.BROADCAST_CANDIDATE_LIMIT = cap
+    os.environ["SPARK_GRAFT_SMALL_CORPUS"] = "0"
+    try:
+        return build()
+    finally:
+        sz.BROADCAST_CANDIDATE_LIMIT = limit
+        if env is None:
+            os.environ.pop("SPARK_GRAFT_SMALL_CORPUS")
+        else:
+            os.environ["SPARK_GRAFT_SMALL_CORPUS"] = env
+
+
 def adversarial_probe(mults: list[int]) -> dict:
     """r9 (VERDICT r8 #1): one giant duplicate cluster — the corpus every
     Σ bucket² argument disclaims — against near_dup_pairs' AUTO spelling.
@@ -1116,7 +1134,8 @@ def adversarial_probe(mults: list[int]) -> dict:
     needed to cross it changes). Per point it records the bucket-stats
     pair bound, the spelling auto chose, wall + shuffle, and — while the
     bound stays under FORCED_CAP — a forced-broadcast twin run proving
-    the two spellings emit the same rows."""
+    the two spellings emit the same rows (the limit raised to FORCED_CAP
+    for the twin)."""
     import ralf_spark.operators.dedup as dd
     import ralf_spark.plans.sizing as sz
     from ralf_spark.table import FeatureTable
@@ -1131,9 +1150,7 @@ def adversarial_probe(mults: list[int]) -> dict:
     orig_choose = sz.choose_broadcast
     rec: dict = {}
 
-    def spy(choice, bound_fn):
-        if choice is not None:
-            return bool(choice)
+    def spy(bound_fn):
         bound = bound_fn()
         rec["bound"] = bound
         rec["broadcast"] = bound <= sz.BROADCAST_CANDIDATE_LIMIT
@@ -1166,11 +1183,12 @@ def adversarial_probe(mults: list[int]) -> dict:
                 def build_forced(s, _p=path):
                     docs = s.read.parquet(_p)
                     return dd.near_dup_pairs(
-                        FeatureTable(docs, key="doc_id"),
-                        hash_fn="xxhash64", broadcast_candidates=True,
+                        FeatureTable(docs, key="doc_id"), hash_fn="xxhash64"
                     )
 
-                rf = _measure(build_forced, spark)
+                rf = _forced_broadcast_twin(
+                    sz, FORCED_CAP, lambda: _measure(build_forced, spark)
+                )
                 r["forced"] = {k: rf[k] for k in
                                ("sec", "shuffle_write_mb", "rows")}
                 r["rows_match_forced"] = rf["rows"] == r["rows"]
@@ -2070,9 +2088,7 @@ def adversarial_add_probe(mults: list[int]) -> dict:
     orig_choose = sz.choose_broadcast
     rec: dict = {}
 
-    def spy(choice, bound_fn):
-        if choice is not None:
-            return bool(choice)
+    def spy(bound_fn):
         bound = bound_fn()
         rec["bound"] = bound
         rec["broadcast"] = bound <= sz.BROADCAST_CANDIDATE_LIMIT
@@ -2133,9 +2149,9 @@ def adversarial_add_probe(mults: list[int]) -> dict:
                     f"{work}/idx_forced", hash_fn="xxhash64"
                 )
                 t0 = time.perf_counter()
-                pf = idxf.add(
-                    batch, threshold=0.5, batch_tag="adv",
-                    broadcast_candidates=True,
+                pf = _forced_broadcast_twin(
+                    sz, FORCED_CAP,
+                    lambda: idxf.add(batch, threshold=0.5, batch_tag="adv"),
                 )
                 nf, chkf = pair_stats(pf)
                 secf = round(time.perf_counter() - t0, 2)

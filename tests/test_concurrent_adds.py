@@ -555,7 +555,8 @@ def test_exclusive_ops_hand_back_the_root(spark, tmp_path, kind):
     release_add_lease(spark, path, "tX", writer_id="worker-x")
     assert_handed_back()
     if kind == "gram":
-        idx.retro_delta(spark, durability="at_call").collect()
+        idx.retro_delta(spark).collect()
+        assert idx.commit_retro_delta(spark)  # covers every tag
         idx.retro_delta(spark).collect()  # every tag covered: no new tags
         assert_handed_back()
         assert idx.commit_retro_delta(spark) == []  # nothing pending

@@ -464,6 +464,33 @@ def test_fold_sink_load_state_survives_publish_crash(
     assert rows(path) == want[2]
 
 
+@pytest.mark.parametrize("case", _CRASH_CASES)
+def test_parquet_connector_reads_survive_publish_crash(
+    spark, tmp_path, monkeypatch, case
+):
+    """After a ``ParquetStateConnector.save`` killed between the publish
+    renames, ``load`` and ``point_query`` each recover the pre- or
+    post-crash state instead of failing on the missing ``path``."""
+
+    def con(path):
+        return ParquetStateConnector(path, key="user_id", num_buckets=4)
+
+    def write(path, i):
+        con(path).save(_events(spark, _UPSERT_BATCHES[i]))
+
+    batch = _UPSERT_BATCHES[2 if case == "staging_complete" else 1]
+    loaded = _crash_second_publish(
+        spark, tmp_path / "load", monkeypatch, case, write
+    )
+    assert sorted(map(tuple, con(loaded).load(spark).df.collect())) == \
+        sorted(batch)
+    pointed = _crash_second_publish(
+        spark, tmp_path / "point", monkeypatch, case, write
+    )
+    assert [tuple(r) for r in con(pointed).point_query(spark, 1)] == \
+        [r for r in batch if r[0] == 1]
+
+
 # ------------------------------------------------------------ snapshot diff
 def test_snapshot_diff_classifies_all_four_statuses(spark):
     from ralf_spark.connectors import snapshot_diff

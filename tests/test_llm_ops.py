@@ -7,6 +7,8 @@ properties of the plans (no cross join in LSH candidate generation).
 
 from __future__ import annotations
 
+import contextlib
+
 import pyspark.sql.functions as F
 import pytest
 
@@ -100,16 +102,103 @@ def test_pair_bound_from_buckets_sums_c_choose_2(spark):
     assert _pair_bound_from_buckets(b, "_band", "_key") == 9
 
 
-def test_verify_spelling_knob_output_identical(spark, monkeypatch):
-    """r9 (VERDICT r8 #1 / ADVICE): the broadcast_candidates tri-state —
-    forced chained-broadcast, forced shuffle join, and auto under a limit
-    so tight auto MUST pick the shuffle spelling — all emit identical
-    verified pairs. The hints change the physical join strategy only."""
+_JOINS = ("BroadcastHashJoinExec", "SortMergeJoinExec", "ShuffledHashJoinExec")
+
+
+def _join_spellings(df, *keys: str) -> set[str]:
+    """Run ``df`` and name the physical spelling of every join in its
+    executed plan (final adaptive plans and cached subplans included)
+    whose keys mention one of ``keys``: ``"broadcast-left"`` or
+    ``"broadcast-right"`` for a BroadcastHashJoin by its build side,
+    ``"shuffle"`` for a sort-merge or shuffled hash join."""
+    df.collect()
+    out = set()
+
+    def walk(p):
+        cls = p.getClass().getSimpleName()
+        if cls == "AdaptiveSparkPlanExec":
+            return walk(p.executedPlan())
+        if cls.endswith("QueryStageExec"):
+            return walk(p.plan())
+        if cls == "InMemoryTableScanExec":
+            walk(p.relation().cachedPlan())
+        if cls in _JOINS:
+            on = p.leftKeys().toString() + p.rightKeys().toString()
+            if any(k in on for k in keys):
+                if cls == "BroadcastHashJoinExec":
+                    side = p.buildSide().toString()
+                    out.add("broadcast-" + side[len("Build"):].lower())
+                else:
+                    out.add("shuffle")
+        it = p.children().iterator()
+        while it.hasNext():
+            walk(it.next())
+
+    walk(df._jdf.queryExecution().executedPlan())
+    return out
+
+
+@pytest.fixture
+def spelling_probe(spark, monkeypatch):
+    """Joins broadcast only where an operator hints them, so a plan
+    shows which spelling ran however small the test data; yields the
+    list of pair bounds ``sizing.choose_broadcast`` measured (empty when
+    no stats job ran)."""
     import ralf_spark.plans.sizing as sizing
+
+    bounds = []
+    choose = sizing.choose_broadcast
+
+    def measured(bound_fn):
+        bounds.append(bound_fn())
+        return choose(lambda: bounds[-1])
+
+    monkeypatch.setattr(sizing, "choose_broadcast", measured)
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    yield bounds
+    spark.conf.set(key, prev)
+
+
+@contextlib.contextmanager
+def _spelling(monkeypatch, arm: str):
+    """Reach spelling ``arm`` through the engine's own observables: the
+    footer gate off (``SPARK_GRAFT_SMALL_CORPUS=0``) for ``"measured"``,
+    a pair limit of 0 for ``"shuffle"``, nothing for any other arm."""
+    import ralf_spark.plans.sizing as sizing
+
+    with monkeypatch.context() as m:
+        if arm == "measured":
+            m.setenv("SPARK_GRAFT_SMALL_CORPUS", "0")
+        elif arm == "shuffle":
+            m.setattr(sizing, "BROADCAST_CANDIDATE_LIMIT", 0)
+        yield
+
+
+#: verification-join spelling of each arm: the docs (shingle) table
+#: broadcast into the candidate stream, the candidates broadcast into
+#: the docs scans, or shuffle joins
+_VERIFY = {
+    "docs": {"broadcast-right"},
+    "candidates": {"broadcast-left"},
+    "shuffle": {"shuffle"},
+}
+
+
+def test_verify_spellings_output_identical(
+    spark, tmp_path, monkeypatch, spelling_probe
+):
+    """The three verification spellings of the pair operators emit
+    identical pairs, each reached through the engine's own observables:
+    a parquet corpus its footers prove small takes the docs broadcast
+    with no stats job; an in-memory corpus the measured candidate
+    broadcast; and a pair limit of 0 the shuffle joins."""
     from ralf_spark.operators.dedup import (
         containment_pairs,
         jaccard_pairs_inverted,
     )
+    from ralf_spark.operators.util import unpersist_cached
 
     base = "the quick brown fox jumps over the lazy dog again and again"
     rows = [
@@ -120,27 +209,41 @@ def test_verify_spelling_knob_output_identical(spark, monkeypatch):
         (5, "sphinx of black quartz judge my vow said the typist quickly"),
     ]
     t = _docs(spark, rows)
+    p = str(tmp_path / "docs.parquet")
+    t.df.coalesce(1).write.parquet(p)
+    t_pq = FeatureTable(spark.read.parquet(p), key="doc_id")
 
-    def run(op, **kw):
-        outs = []
-        for bc in (True, False, None):
-            df = op(t, threshold=0.4, broadcast_candidates=bc, **kw)
-            outs.append(sorted(map(tuple, df.collect())))
-        return outs
-
-    monkeypatch.setattr(sizing, "BROADCAST_CANDIDATE_LIMIT", 0)
     for op in (near_dup_pairs, jaccard_pairs_inverted, containment_pairs):
-        forced_b, forced_s, auto = run(op)
-        assert forced_b == forced_s == auto and len(auto) > 0, op.__name__
+        outs = {}
+        for arm, table in (
+            ("docs", t_pq), ("candidates", t), ("shuffle", t)
+        ):
+            spelling_probe.clear()
+            with _spelling(monkeypatch, arm):
+                df = op(table, threshold=0.4)
+            assert bool(spelling_probe) == (arm != "docs"), (op.__name__, arm)
+            assert _join_spellings(df, "id1", "id2") == _VERIFY[arm], (
+                op.__name__, arm
+            )
+            outs[arm] = sorted(map(tuple, df.collect()))
+            # a cached result of one arm would serve the next arm's plan
+            unpersist_cached(df, blocking=True)
+        assert outs["docs"] == outs["candidates"] == outs["shuffle"], (
+            op.__name__
+        )
+        assert outs["docs"], op.__name__
 
 
 @pytest.mark.slow
-def test_small_corpus_docs_broadcast_spelling(spark, tmp_path, monkeypatch):
+def test_small_corpus_docs_broadcast_spelling(
+    spark, tmp_path, monkeypatch, spelling_probe
+):
     """r16 (VERDICT r15 #3): a parquet-backed corpus whose footers prove
     it broadcast-safe takes the docs-broadcast verification spelling
-    with ZERO plan-construction jobs, and emits pairs identical to both
-    forced spellings. In-memory tables (no input files) must refuse the
-    shortcut and keep the measured stats decision."""
+    with ZERO plan-construction jobs, and emits pairs identical to the
+    measured candidate broadcast that ``SPARK_GRAFT_SMALL_CORPUS=0``
+    forces on the same corpus. In-memory tables (no input files) must
+    refuse the shortcut and keep the measured stats decision."""
     from ralf_spark.operators.dedup import (
         containment_pairs,
         jaccard_pairs_inverted,
@@ -184,32 +287,57 @@ def test_small_corpus_docs_broadcast_spelling(spark, tmp_path, monkeypatch):
     assert gate(expl) is False
     st.unpersist()
 
-    tracker = spark.sparkContext.statusTracker
-    for op in (near_dup_pairs, jaccard_pairs_inverted, containment_pairs):
-        j0 = len(tracker().getJobIdsForGroup(None))
-        auto = op(t, threshold=0.4)  # shortcut fires: no stats job
-        assert len(tracker().getJobIdsForGroup(None)) == j0, op.__name__
-        got = sorted(map(tuple, auto.collect()))
-        for bc in (True, False):
-            forced = sorted(
-                map(tuple, op(t, threshold=0.4,
-                              broadcast_candidates=bc).collect())
-            )
-            assert got == forced and len(got) > 0, op.__name__
+    from ralf_spark.operators.util import unpersist_cached
 
-    # the env kill switch restores the stats-job path
-    monkeypatch.setenv("SPARK_GRAFT_SMALL_CORPUS", "0")
-    assert gate(t.df) is False
+    sc = spark.sparkContext
+    for op in (near_dup_pairs, jaccard_pairs_inverted, containment_pairs):
+        outs = {}
+        for arm in ("docs", "candidates"):
+            with monkeypatch.context() as m:
+                if arm == "candidates":
+                    # the env kill switch restores the stats-job path
+                    m.setenv("SPARK_GRAFT_SMALL_CORPUS", "0")
+                    assert gate(t.df) is False
+                spelling_probe.clear()
+                group = f"small_corpus_{op.__name__}_{arm}"
+                sc.setJobGroup(group, "plan construction")
+                try:
+                    df = op(t, threshold=0.4)
+                finally:
+                    sc.setJobGroup(None, None)
+            jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+            # the shortcut runs no job; the measured spelling its stats job
+            assert (jobs == 0) == (arm == "docs"), (op.__name__, arm, jobs)
+            assert bool(spelling_probe) == (arm != "docs"), (op.__name__, arm)
+            assert _join_spellings(df, "id1", "id2") == _VERIFY[arm], (
+                op.__name__, arm
+            )
+            outs[arm] = sorted(map(tuple, df.collect()))
+            unpersist_cached(df, blocking=True)
+        assert outs["docs"] == outs["candidates"], op.__name__
+        assert outs["docs"], op.__name__
+
+
+#: MinHashIndex scoring-join spelling of each arm: the stored signature
+#: table broadcast into the candidate stream, the candidates broadcast
+#: into the signature scans, or shuffle joins
+_SCORING = {
+    "small": {"broadcast-right"},
+    "measured": {"broadcast-left"},
+    "shuffle": {"shuffle"},
+}
 
 
 @pytest.mark.slow
-def test_minhash_index_small_sides_scoring(spark, tmp_path):
+def test_minhash_index_small_sides_scoring(
+    spark, tmp_path, monkeypatch, spelling_probe
+):
     """r16: MinHashIndex.add/check on a footer-proved small batch+store
-    take the sigs-broadcast scoring with ZERO plan-construction jobs
-    beyond the documented lifecycle actions, and emit pairs identical
-    to both forced spellings."""
+    take the sigs-broadcast scoring with no stats job, and emit pairs
+    identical to the measured chained broadcast and the shuffle joins."""
     from ralf_spark.connectors import _list_parquet_files_sized
     from ralf_spark.operators.dedup import MinHashIndex
+    from ralf_spark.operators.util import unpersist_cached
     from ralf_spark.plans.sizing import EXPANSION as X
     from ralf_spark.plans.sizing import provably_small, shingle_expansion
     from ralf_spark.table import FeatureTable
@@ -230,36 +358,39 @@ def test_minhash_index_small_sides_scoring(spark, tmp_path):
     second = FeatureTable(t.df.where("doc_id > 2"), key="doc_id")
 
     outs = {}
-    for bc in (None, True, False):
-        idx = MinHashIndex(str(tmp_path / f"mh_{bc}"))
+    for arm in ("small", "measured", "shuffle"):
+        idx = MinHashIndex(str(tmp_path / f"mh_{arm}"))
         idx.build(first)
-        add_pairs = sorted(
-            map(tuple,
-                idx.add(second, threshold=0.4,
-                        broadcast_candidates=bc).collect())
-        )
-        chk_pairs = sorted(
-            map(tuple,
-                idx.check(second, threshold=0.4, within_batch=True,
-                          broadcast_candidates=bc).collect())
-        )
-        # both serving sides pass the gate: the batch (text and row
-        # payloads) and the stored signature table
-        assert provably_small(
-            second.df,
-            per_byte=shingle_expansion(3),
-            per_row=max(
-                idx.num_perm * X["sig_perm"] + X["sig_frame"],
-                idx.bands * X["bucket_row"],
-            ),
-        )
-        assert provably_small(
-            _list_parquet_files_sized(spark, f"{idx.path}/sigs"), spark,
-            per_byte=X["stored_sig"],
-        )
-        outs[bc] = (add_pairs, chk_pairs)
-    assert outs[None] == outs[True] == outs[False]
-    assert outs[None][0]  # the sphinx pair crosses the batches
+        got = []
+        for serve in (
+            lambda: idx.add(second, threshold=0.4),
+            lambda: idx.check(second, threshold=0.4, within_batch=True),
+        ):
+            spelling_probe.clear()
+            with _spelling(monkeypatch, arm):
+                pairs = serve()
+            assert bool(spelling_probe) == (arm != "small"), arm
+            assert _join_spellings(pairs, "id1", "id2") == _SCORING[arm], arm
+            got.append(sorted(map(tuple, pairs.collect())))
+            unpersist_cached(pairs, blocking=True)
+        if arm == "small":
+            # both serving sides pass the gate: the batch (text and row
+            # payloads) and the stored signature table
+            assert provably_small(
+                second.df,
+                per_byte=shingle_expansion(3),
+                per_row=max(
+                    idx.num_perm * X["sig_perm"] + X["sig_frame"],
+                    idx.bands * X["bucket_row"],
+                ),
+            )
+            assert provably_small(
+                _list_parquet_files_sized(spark, f"{idx.path}/sigs"), spark,
+                per_byte=X["stored_sig"],
+            )
+        outs[arm] = got
+    assert outs["small"] == outs["measured"] == outs["shuffle"]
+    assert outs["small"][0]  # the sphinx pair crosses the batches
 
 
 def _broadcast_payloads(df) -> list[tuple[str, int]]:
@@ -432,51 +563,49 @@ def test_observed_rows_falls_back_to_count(spark):
     assert rows == 5 and jobs > 0  # the fallback count ran
 
 
-def test_choose_broadcast_tristate():
-    """Explicit True/False never runs the stats job; auto compares the
-    bound against the module limit."""
+def test_choose_broadcast_bound_vs_limit():
+    """The measured spelling broadcasts while the bound stays at most
+    the module limit."""
     import ralf_spark.plans.sizing as sz
 
-    def boom():
-        raise AssertionError("stats job must not run on explicit choice")
-
-    assert sz.choose_broadcast(True, boom) is True
-    assert sz.choose_broadcast(False, boom) is False
-    assert sz.choose_broadcast(None, lambda: sz.BROADCAST_CANDIDATE_LIMIT) \
-        is True
+    assert sz.choose_broadcast(lambda: sz.BROADCAST_CANDIDATE_LIMIT) is True
     assert sz.choose_broadcast(
-        None, lambda: sz.BROADCAST_CANDIDATE_LIMIT + 1
+        lambda: sz.BROADCAST_CANDIDATE_LIMIT + 1
     ) is False
 
 
 @pytest.mark.slow
-def test_minhash_index_add_spelling_knob_identical(spark, tmp_path):
-    """r9: MinHashIndex.add under forced-broadcast, forced-shuffle and
-    auto-with-zero-limit returns the same pair set as the default."""
+def test_minhash_index_add_spellings_identical(
+    spark, tmp_path, monkeypatch, spelling_probe
+):
+    """r9: MinHashIndex.add on an in-memory batch (the footer gate
+    refuses it) scores with the measured chained broadcast, and under a
+    pair limit of 0 with shuffle joins; both return the same pairs."""
     import ralf_spark.operators.dedup as dd
     import ralf_spark.plans.sizing as sz
+    from ralf_spark.operators.util import unpersist_cached
 
     base = "the quick brown fox jumps over the lazy dog again and again"
     first = _docs(spark, [(1, base), (3, "alpha beta gamma delta epsilon "
                                          "zeta eta theta iota kappa")])
     second = _docs(spark, [(2, base + " tonight")])
     got = {}
-    for name, bc in (("bcast", True), ("smj", False), ("auto0", None)):
-        idx = dd.MinHashIndex(str(tmp_path / name))
+    for arm in ("measured", "shuffle"):
+        idx = dd.MinHashIndex(str(tmp_path / arm))
         idx.build(first)
-        old = sz.BROADCAST_CANDIDATE_LIMIT
-        if bc is None:
-            sz.BROADCAST_CANDIDATE_LIMIT = 0
-        try:
-            pairs = idx.add(second, broadcast_candidates=bc)
-            got[name] = sorted(
-                (r.id1, r.id2, round(r.est_jaccard, 6))
-                for r in pairs.collect()
-            )
-        finally:
-            sz.BROADCAST_CANDIDATE_LIMIT = old
-    assert got["bcast"] == got["smj"] == got["auto0"]
-    assert [(p[0], p[1]) for p in got["bcast"]] == [(1, 2)]
+        spelling_probe.clear()
+        with monkeypatch.context() as m:
+            if arm == "shuffle":
+                m.setattr(sz, "BROADCAST_CANDIDATE_LIMIT", 0)
+            pairs = idx.add(second)
+        assert spelling_probe, arm  # the stats job ran
+        assert _join_spellings(pairs, "id1", "id2") == _SCORING[arm], arm
+        got[arm] = sorted(
+            (r.id1, r.id2, round(r.est_jaccard, 6)) for r in pairs.collect()
+        )
+        unpersist_cached(pairs, blocking=True)
+    assert got["measured"] == got["shuffle"]
+    assert [(p[0], p[1]) for p in got["measured"]] == [(1, 2)]
 
 
 def test_near_dup_unpersist_cached_releases_storage(spark):
@@ -3365,76 +3494,38 @@ def test_retro_delta_two_phase_watermark(spark, tmp_path):
 
 
 @pytest.mark.slow
-def test_retro_delta_at_call_and_output_path_modes(spark, tmp_path):
-    """r14: durability='at_call' restores the advance-at-call behavior
-    (documented at-most-once); output_path writes the spans durably and
-    commits ONLY after the write — a failed write leaves the watermark
-    untouched so the retry re-emits."""
-    import pytest as _pytest
-
+def test_retro_delta_shuffle_join_degrade_matches_broadcast(
+    spark, tmp_path, monkeypatch, spelling_probe
+):
+    """retro_delta's three spellings return identical spans: the
+    one-pass window cadence on a footer-proved small store (no joins, no
+    stats job), the four-stage probe chain with every probe broadcast
+    (``SPARK_GRAFT_SMALL_CORPUS=0``), and the same chain degraded to
+    shuffle joins past the bound (a pair limit of 0 — the 100 TB batch
+    regime)."""
     from ralf_spark.operators.dedup import GramIndex
+    from ralf_spark.operators.util import unpersist_cached
 
-    b1, b2, _ = _gram_batches()
-    idx = GramIndex(
-        str(tmp_path / "gi"), min_tokens=8, count_mode=True,
-        auto_maintain=0,
-    )
-    idx.build(_docs(spark, list(b1.items())))
-    d = idx.retro_delta(spark, durability="at_call")
-    rows = sorted(tuple(r) for r in d.collect())
-    # at_call: covered immediately, no commit needed
-    assert idx.retro_delta(spark).collect() == []
-    idx.add(_docs(spark, list(b2.items()))).collect()
-    # a failed output write must not advance the watermark
-    import ralf_spark.connectors as _conn
-
-    orig = _conn._staged_overwrite
-
-    def boom(*a, **k):
-        raise RuntimeError("disk full")
-
-    _conn._staged_overwrite = boom
-    try:
-        with _pytest.raises(RuntimeError, match="disk full"):
-            idx.retro_delta(spark, output_path=str(tmp_path / "out"))
-    finally:
-        _conn._staged_overwrite = orig
-    # retry: the write lands, THEN the watermark commits
-    out = idx.retro_delta(spark, output_path=str(tmp_path / "out"))
-    written = sorted(tuple(r) for r in out.collect())
-    assert written and written == sorted(
-        tuple(r)
-        for r in spark.read.parquet(str(tmp_path / "out")).collect()
-    )
-    assert idx.retro_delta(spark).collect() == []  # committed by the write
-    with _pytest.raises(ValueError, match="durability"):
-        idx.retro_delta(spark, durability="bogus")
-
-
-@pytest.mark.slow
-def test_retro_delta_shuffle_join_degrade_matches_broadcast(spark, tmp_path):
-    """retro_delta's broadcast tri-state: forcing the shuffle-join
-    spelling (broadcast_digests=False — the past-the-bound degrade at
-    100 TB batch sizes) returns the identical spans as the broadcast
-    path."""
-    from ralf_spark.operators.dedup import GramIndex
-
+    probes = {"small": set(), "measured": {"broadcast-right"},
+              "shuffle": {"shuffle"}}
     b1, b2, _ = _gram_batches()
     spans = {}
-    for mode, flag in (("bcast", True), ("shuffle", False)):
+    for arm in ("small", "measured", "shuffle"):
         idx = GramIndex(
-            str(tmp_path / mode), min_tokens=8, count_mode=True,
+            str(tmp_path / arm), min_tokens=8, count_mode=True,
             auto_maintain=0,
         )
         idx.build(_docs(spark, list(b1.items())))
         idx.add(_docs(spark, list(b2.items()))).collect()
-        spans[mode] = sorted(
-            tuple(r)
-            for r in idx.retro_delta(
-                spark, broadcast_digests=flag
-            ).collect()
-        )
-    assert spans["bcast"] == spans["shuffle"] and spans["bcast"]
+        spelling_probe.clear()
+        with _spelling(monkeypatch, arm):
+            d = idx.retro_delta(spark)
+        assert bool(spelling_probe) == (arm != "small"), arm
+        assert _join_spellings(d, "_dg", "_id") == probes[arm], arm
+        spans[arm] = sorted(tuple(r) for r in d.collect())
+        unpersist_cached(d, blocking=True)
+    assert spans["small"] == spans["measured"] == spans["shuffle"]
+    assert spans["small"]
 
 
 def test_minhash_index_check_is_read_only(spark, tmp_path):

@@ -208,21 +208,28 @@ def test_registry_wide_no_cartesian_no_rowwise_python(static_spark):
     assert not bad, bad
 
 
-def test_shuffle_mode_verify_join_reuses_store_exchange(static_spark):
+def test_shuffle_mode_verify_join_reuses_store_exchange(
+    static_spark, monkeypatch
+):
     """ADVICE r9 (verified r10): in the no-hint (shuffle) verification
     spelling, the store/shingle side appears in BOTH half-joins but is
     shuffled by the same key, so exchange reuse serves the second join
     from the first join's shuffle — the one-store-scan-per-projection
     contract holds without persisting the candidate subtree. A lost
     ReusedExchange here means every add/verify pays a second corpus
-    shuffle at scale."""
+    shuffle at scale. A pair limit of 0 puts both operators past the
+    measured bound, and the plans show the shuffle spelling ran: sort-
+    merge joins and no broadcast."""
     import tempfile
 
     from pyspark.sql import functions as F
 
+    import ralf_spark.plans.sizing as sizing
     from ralf_spark.operators.dedup import MinHashIndex, near_dup_pairs
     from ralf_spark.operators.util import unpersist_cached
     from ralf_spark.table import FeatureTable
+
+    monkeypatch.setattr(sizing, "BROADCAST_CANDIDATE_LIMIT", 0)
 
     prev = static_spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     static_spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
@@ -233,10 +240,11 @@ def test_shuffle_mode_verify_join_reuses_store_exchange(static_spark):
             "doc_id long, text string",
         )
         p = near_dup_pairs(
-            FeatureTable(docs, key="doc_id"), hash_fn="xxhash64",
-            broadcast_candidates=False,
+            FeatureTable(docs, key="doc_id"), hash_fn="xxhash64"
         )
         plan = p._jdf.queryExecution().executedPlan().toString()
+        assert "SortMergeJoin" in plan, plan[:2000]
+        assert "BroadcastHashJoin" not in plan, plan[:2000]
         assert plan.count("ReusedExchange") >= 1, plan[:2000]
         unpersist_cached(p)
 
@@ -245,9 +253,11 @@ def test_shuffle_mode_verify_join_reuses_store_exchange(static_spark):
                                key="doc_id"))
         pairs = idx.add(
             FeatureTable(docs.where(F.col("doc_id") >= 20), key="doc_id"),
-            broadcast_candidates=False, batch_tag="b1",
+            batch_tag="b1",
         )
         plan2 = pairs._jdf.queryExecution().executedPlan().toString()
+        assert "SortMergeJoin" in plan2, plan2[:2000]
+        assert "BroadcastHashJoin" not in plan2, plan2[:2000]
         assert plan2.count("ReusedExchange") >= 1, plan2[:2000]
         # each stored projection (sigs, buckets) scans once
         assert plan2.count("Scan parquet") <= 2, plan2[:2000]
