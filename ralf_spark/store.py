@@ -15,7 +15,7 @@ from typing import Any
 from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import types as T
 
-from ralf_spark.connectors import StateConnector
+from ralf_spark.connectors import StateConnector, _recover_staged_publish
 from ralf_spark.plans import sizing
 from ralf_spark.table import FeatureTable
 
@@ -157,6 +157,9 @@ class FeatureStore:
         ts: str | None = None,
         seq: str | None = None,
     ) -> FeatureTable:
+        """Parquet source; a publish a crash cut between its renames
+        (``upsert_into`` state) is recovered before the read."""
+        _recover_staged_publish(self.spark, path)
         return FeatureTable(self.spark.read.parquet(path), key=key, ts=ts, seq=seq)
 
     def read_csv(

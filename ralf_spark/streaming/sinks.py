@@ -791,7 +791,9 @@ def read_bucketed_state(spark: SparkSession, path: str) -> DataFrame:
     """Read a bucketed sink's state table with the layout columns
     (bucket partition + per-bucket batch stamp) projected away — what
     estimate read-outs consume. Also accepts a legacy unbucketed table
-    (drops whatever layout columns are present)."""
+    (drops whatever layout columns are present), recovering a publish
+    of the unbucketed layout that a crash cut between its renames."""
+    connectors._recover_staged_publish(spark, path)
     df = spark.read.parquet(path)
     drop = [
         c for c in (STATE_BUCKET_COL, LAST_BATCH_COL) if c in df.columns

@@ -9,14 +9,25 @@ broadcast, a Python UDF creeping into a hot path) show up in review.
 
 Streaming queries are skipped (their plan is per-micro-batch; the bounded
 replay executes rather than explains).
+
+    python scripts_plan_audit.py          # writes PLANS.md beside this file
+    python scripts_plan_audit.py --all    # every registry query; prints the
+                                          # flagged ones (SMJ, Python, errors)
 """
 
 from __future__ import annotations
 
+import argparse
+import json
+import os
 import re
 import sys
 
+from ralf_spark.operators.util import unpersist_cached
+from ralf_spark.queries import DRIVER_CHECKED_FIRST, QUERIES
 from ralf_spark.session import get_spark
+
+HERE = os.path.dirname(os.path.abspath(__file__))
 
 SKIP = {
     # bounded streaming replays: fn() executes a streaming query
@@ -63,7 +74,40 @@ def audit(explain: str) -> dict[str, int]:
     }
 
 
-def main() -> None:
+def _explain(spark, fn, sf_dir: str) -> str:
+    df = fn(spark, sf_dir)
+    try:
+        return df._sc._jvm.PythonSQLUtils.explainString(  # type: ignore
+            df._jdf.queryExecution(), "formatted"
+        )
+    finally:
+        unpersist_cached(df)
+        spark.catalog.clearCache()
+
+
+def audit_all(spark, sf_dir: str) -> dict[str, dict]:
+    """Audit every registry query; returns the flagged ones (a sort-merge
+    join, a Python eval node, or an error) by name."""
+    flagged = {}
+    for name, q in QUERIES.items():
+        if name in SKIP:
+            continue
+        try:
+            m = audit(_explain(spark, q.fn, sf_dir))
+        except Exception as e:
+            m = {"error": f"{type(e).__name__}: {e}"[:200]}
+        if m.get("smj") or m.get("python") or m.get("error"):
+            flagged[name] = m
+    return flagged
+
+
+def main(argv=None) -> None:
+    ap = argparse.ArgumentParser(description=__doc__.split("\n")[0])
+    ap.add_argument("--all", action="store_true",
+                    help="audit every registry query and print the flagged "
+                         "ones (SMJ, Python nodes, errors) instead of "
+                         "writing PLANS.md")
+    args = ap.parse_args(argv)
     sf_dir = "/root/testdata/sf0.01"
     # AQE off for the audit ONLY: un-executed AdaptiveSparkPlan hides
     # whole-stage-codegen spans and final join strategies; the static
@@ -73,7 +117,13 @@ def main() -> None:
                                    "spark.sql.adaptive.enabled": "false"})
     spark.sparkContext.setLogLevel("ERROR")
 
-    from ralf_spark.queries import DRIVER_CHECKED_FIRST, QUERIES
+    if args.all:
+        flagged = audit_all(spark, sf_dir)
+        print(json.dumps(flagged, indent=1))
+        print("audited", sum(n not in SKIP for n in QUERIES), "queries;",
+              len(flagged), "flagged")
+        spark.stop()
+        return
 
     lines = [
         "# PLANS.md — physical-plan audit of the driver-checked queries",
@@ -98,10 +148,7 @@ def main() -> None:
             lines.append(f"| {name} | — | — | — | — | — | — |")
             continue
         try:
-            df = QUERIES[name].fn(spark, sf_dir)
-            ex = df._sc._jvm.PythonSQLUtils.explainString(  # type: ignore
-                df._jdf.queryExecution(), "formatted"
-            )
+            ex = _explain(spark, QUERIES[name].fn, sf_dir)
         except Exception:
             ex = QUERIES[name].fn(spark, sf_dir)._jdf.queryExecution().toString()
         m = audit(ex)
@@ -109,7 +156,7 @@ def main() -> None:
             f"| {name} | {m['scans']} | {m['shuffles']} | {m['bcast']} "
             f"| {m['smj']} | {m['codegen']} | {m['python']} |"
         )
-    with open("/root/repo/PLANS.md", "w") as f:
+    with open(os.path.join(HERE, "PLANS.md"), "w") as f:
         f.write("\n".join(lines) + "\n")
     print("wrote PLANS.md", len(lines) - 7, "rows")
     spark.stop()

@@ -52,6 +52,8 @@ import pyarrow.parquet as pq
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from ralf_spark.session import get_spark  # noqa: E402
+
 DATA_ROOT = os.path.join(os.path.dirname(os.path.abspath(__file__)),
                          ".scaleprobe")
 UI_PORT = 4057
@@ -243,18 +245,10 @@ def _rest_shuffle_totals() -> tuple[int, int]:
 
 
 def _session():
-    from pyspark.sql import SparkSession
-
-    return (
-        SparkSession.builder.master("local[32]")
-        .appName("scaleprobe")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.driver.memory", "100g")
-        .config("spark.ui.enabled", "true")
-        .config("spark.ui.port", str(UI_PORT))
-        .config("spark.sql.session.timeZone", "UTC")
-        .getOrCreate()
-    )
+    return get_spark("scaleprobe", extra_confs={
+        "spark.ui.enabled": "true",
+        "spark.ui.port": str(UI_PORT),
+    })
 
 
 def _drain(df) -> None:
@@ -871,8 +865,6 @@ def streaming_state_probe(mults: list[int], sink_only: bool = False) -> dict:
     for the foreachBatch HLL sketch sink (whose per-batch cost is an
     O(groups) register-table merge+rewrite BY DESIGN — measured to
     document the trade, not to pass a flatness bar)."""
-    from pyspark.sql import SparkSession
-
     from ralf_spark.streaming import (
         file_events,
         run_bounded,
@@ -884,15 +876,7 @@ def streaming_state_probe(mults: list[int], sink_only: bool = False) -> dict:
         foreach_batch_hll_upsert,
     )
 
-    spark = (
-        SparkSession.builder.master("local[32]")
-        .appName("streamprobe")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.driver.memory", "100g")
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.session.timeZone", "UTC")
-        .getOrCreate()
-    )
+    spark = get_spark("streamprobe", extra_confs={"spark.ui.enabled": "false"})
     spark.sparkContext.setLogLevel("ERROR")
     schema = "event_id long, user_id long, value double"
     out: dict[str, dict] = {}
@@ -1003,7 +987,6 @@ def skew_probe(mults: list[int]) -> dict:
     Four ops per scale: enrichment equi-join and as-of join, plain vs
     salted. Recorded per run: wall, and the heaviest stage's per-task
     executorRunTime median/max + ratio (REST taskSummary)."""
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
     from ralf_spark.operators.joins import asof_join
@@ -1014,17 +997,12 @@ def skew_probe(mults: list[int]) -> dict:
     )
     from ralf_spark.table import FeatureTable
 
-    spark = (
-        SparkSession.builder.master("local[32]")
-        .appName("skewprobe")
-        .config("spark.driver.memory", "100g")
-        .config("spark.sql.adaptive.enabled", "false")
-        .config("spark.sql.autoBroadcastJoinThreshold", "-1")
-        .config("spark.ui.enabled", "true")
-        .config("spark.ui.port", str(UI_PORT))
-        .config("spark.sql.session.timeZone", "UTC")
-        .getOrCreate()
-    )
+    spark = get_spark("skewprobe", extra_confs={
+        "spark.sql.adaptive.enabled": "false",
+        "spark.sql.autoBroadcastJoinThreshold": "-1",
+        "spark.ui.enabled": "true",
+        "spark.ui.port": str(UI_PORT),
+    })
     spark.sparkContext.setLogLevel("ERROR")
     out: dict[str, dict] = {}
     try:
@@ -1217,7 +1195,6 @@ def window_skew_probe(mults: list[int]) -> dict:
     the explode strategy's payload amplification lands on (key, pos)
     FINE-GRAINED keys — so the row straggler may not be a time straggler.
     The numbers decide whether a salted-window spelling is warranted."""
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F  # noqa: F401
 
     from ralf_spark.operators.windows import (
@@ -1226,17 +1203,12 @@ def window_skew_probe(mults: list[int]) -> dict:
     )
     from ralf_spark.table import FeatureTable
 
-    spark = (
-        SparkSession.builder.master("local[32]")
-        .appName("winskewprobe")
-        .config("spark.driver.memory", "100g")
-        .config("spark.sql.adaptive.enabled", "false")
-        .config("spark.sql.autoBroadcastJoinThreshold", "-1")
-        .config("spark.ui.enabled", "true")
-        .config("spark.ui.port", str(UI_PORT))
-        .config("spark.sql.session.timeZone", "UTC")
-        .getOrCreate()
-    )
+    spark = get_spark("winskewprobe", extra_confs={
+        "spark.sql.adaptive.enabled": "false",
+        "spark.sql.autoBroadcastJoinThreshold": "-1",
+        "spark.ui.enabled": "true",
+        "spark.ui.port": str(UI_PORT),
+    })
     spark.sparkContext.setLogLevel("ERROR")
     out: dict[str, dict] = {}
     try:
@@ -1287,7 +1259,6 @@ def window_null_skew_probe(mults: list[int]) -> dict:
     through the salted two-phase rank via null-safe joins. Expect the
     salted spelling's heaviest-stage time max/median ratio to collapse
     vs plain, same as finding 13's non-null hot key."""
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F  # noqa: F401
 
     from ralf_spark.operators.windows import (
@@ -1296,16 +1267,11 @@ def window_null_skew_probe(mults: list[int]) -> dict:
     )
     from ralf_spark.table import FeatureTable
 
-    spark = (
-        SparkSession.builder.master("local[32]")
-        .appName("winnullskew")
-        .config("spark.driver.memory", "100g")
-        .config("spark.sql.adaptive.enabled", "false")
-        .config("spark.ui.enabled", "true")
-        .config("spark.ui.port", str(UI_PORT))
-        .config("spark.sql.session.timeZone", "UTC")
-        .getOrCreate()
-    )
+    spark = get_spark("winnullskew", extra_confs={
+        "spark.sql.adaptive.enabled": "false",
+        "spark.ui.enabled": "true",
+        "spark.ui.port": str(UI_PORT),
+    })
     spark.sparkContext.setLogLevel("ERROR")
     out: dict[str, dict] = {}
     try:

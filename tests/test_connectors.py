@@ -491,6 +491,62 @@ def test_parquet_connector_reads_survive_publish_crash(
         [r for r in batch if r[0] == 1]
 
 
+@pytest.mark.parametrize("case", _CRASH_CASES)
+def test_state_readers_survive_publish_crash(
+    spark, tmp_path, monkeypatch, case
+):
+    """``FeatureStore.read_parquet`` over ``upsert_into`` state and
+    ``read_bucketed_state`` over an unbucketed fold sink's state recover
+    a publish killed between its renames: each returns the pre- or
+    post-crash state instead of failing on the missing ``path``."""
+    from ralf_spark.connectors import upsert_into
+    from ralf_spark.store import FeatureStore
+    from ralf_spark.streaming.sinks import (
+        moments_upsert_batch,
+        read_bucketed_state,
+    )
+
+    i = 2 if case == "staging_complete" else 1
+
+    def upsert(path, j):
+        upsert_into(path, _events(spark, _UPSERT_BATCHES[j]))
+
+    ref = str(tmp_path / "ref")
+    for j in range(1, i + 1):
+        upsert(ref, j)
+    want = sorted(map(tuple, spark.read.parquet(ref).collect()))
+    path = _crash_second_publish(
+        spark, tmp_path / "upsert", monkeypatch, case, upsert
+    )
+    fs = FeatureStore(spark)
+    table = fs.register(
+        "state", fs.read_parquet(path, key="user_id", ts="ts", seq="seq")
+    )
+    assert sorted(map(tuple, table.df.collect())) == want
+    assert [tuple(r) for r in fs.point_query("state", 1)] == \
+        [r for r in want if r[0] == 1]
+
+    batches = {
+        j: spark.createDataFrame(
+            [(k, float(k * j)) for k in (1, 2)], "k long, v double"
+        )
+        for j in (1, 2, 3)
+    }
+
+    def fold(path, j):
+        moments_upsert_batch(path, "k", "v")(batches[j], j)
+
+    ref = str(tmp_path / "fold_ref")
+    for j in range(1, i + 1):
+        fold(ref, j)
+    want = sorted(map(tuple, read_bucketed_state(spark, ref).collect()))
+    path = _crash_second_publish(
+        spark, tmp_path / "fold", monkeypatch, case, fold
+    )
+    assert sorted(map(tuple, read_bucketed_state(spark, path).collect())) == \
+        want
+
+
 # ------------------------------------------------------------ snapshot diff
 def test_snapshot_diff_classifies_all_four_statuses(spark):
     from ralf_spark.connectors import snapshot_diff

@@ -107,7 +107,7 @@ BUDGETS = {
 #: with broadcast hints; subtree size estimates freeze pessimistic under
 #: windows/aggs) and feature_drift_psi's FULL OUTER histogram align
 #: (fixed by union + re-aggregate — Spark cannot broadcast a full outer).
-#: r15: the full-registry audit (scripts_r15_full_audit.py) found the
+#: r15: the full-registry audit (scripts_plan_audit.py --all) found the
 #: same estimate-freeze class OUTSIDE the prefix — pq_rerank joins two
 #: per-query top-10 frames, kmeans_refine joins two k-row aggregates;
 #: both now carry the broadcast hints and must stay SMJ-free.
