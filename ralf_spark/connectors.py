@@ -29,6 +29,7 @@ from typing import Any
 
 from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ralf_spark.functions.timeutil import epoch_us_expr, ntz_from_epoch_us
 from ralf_spark.table import FeatureTable
@@ -872,18 +873,32 @@ def upsert_into(
     persisted latest-per-key state at ``path`` — the nightly/incremental
     maintenance loop (the reference's per-record upsert,
     ``ralf/v2/table_state.py:29-46``, amortized over a batch). Idempotent
-    for replays (re-upserting the same batch is a no-op).
+    for replays (re-upserting the same batch leaves the state as it was).
 
-    ``table_format="parquet"`` (default): one ``latest()`` over current
-    state ∪ batch keeps the per-key winners (``max_by``'s partial
-    aggregation already reduces the batch map-side, so no separate batch
-    reduction runs), then :func:`_staged_overwrite` writes the result
-    once to ``.__staging__`` and publishes it by directory rename. A
-    crash mid-write leaves ``path`` untouched; a crash between the
-    publish renames is rolled forward (or back) by the next read. The
-    WHOLE state still rewrites every batch, which at 100 TB of state is
-    the dominant cost, and on object stores (S3A) a directory rename is
-    a copy, not atomic.
+    ``table_format="parquet"`` (default): the state is a base plus a log
+    of per-batch winners, like the reference's state table, which takes
+    each record and never rewrites itself. Each upsert appends only
+    ``batch.latest()`` as a fresh ``_batch=<tag>`` partition
+    (``layout.write_batch``) under the writer lease; it reads no state.
+    ``FeatureStore.read_parquet`` reads the union, whose ``latest()``,
+    ``bulk_query()`` and point reads are the state. A replay appends
+    duplicate winners, which ``latest()`` folds away. Once more than
+    ``layout.AUTO_MAINTAIN_BATCHES`` tags exist, ``compact_tiered``
+    folds the older tags into one with ``latest()``; a crash inside it
+    leaves both copies or one, which read the same, and the next upsert
+    finishes or rolls it back (``layout.recover_compaction``).
+
+    The first upsert writes ``latest()`` as the base, tagged
+    ``compacted-base`` so tier-1 folds leave it alone, together with a
+    hidden sidecar holding key, ts, seq and schema — the mark of this
+    layout. A directory without the sidecar is the older full-rewrite
+    state; the first upsert into it migrates it once, through one
+    ``latest()`` over state ∪ batch published by
+    :func:`_staged_overwrite` (recovering a publish a crash cut between
+    its renames first). A later batch must carry the sidecar's key, ts,
+    seq and column names, each type equal to the stored one or safely
+    up-castable to it (then cast, as ``unionByName`` would widen it);
+    anything else raises before a byte is written.
 
     ``table_format="delta"``: the production spelling — a real
     ``MERGE INTO`` against a Delta table at ``path``. Atomic (readers see
@@ -901,22 +916,132 @@ def upsert_into(
             f"unsupported table_format {table_format!r} "
             "(supported: 'parquet', 'delta')"
         )
+    import uuid
+
+    from ralf_spark import layout
+
     spark = batch.df.sparkSession
-    # single-writer guard (r12): fail loudly before the staged replace
-    acquire_writer_lease(spark, path)
+    # single-writer guard (r12): fail loudly before any write
+    with hold_writer_lease(spark, path):
+        _recover_staged_publish(spark, path)
+        meta = upsert_state_meta(spark, path)
+        if meta is None:
+            _migrate_upsert_state(spark, path, batch)
+            return
+        batch = _conform_batch(spark, path, batch, meta)
+        layout.recover_compaction(spark, path)
+        layout.write_batch(
+            batch.latest().df, path, f"upsert-{uuid.uuid4().hex}"
+        )
+        if layout.batch_tag_count(spark, path) > layout.AUTO_MAINTAIN_BATCHES:
+            layout.compact_tiered(
+                spark, path, transform=lambda df: batch._with(df).latest().df
+            )
+
+
+def _upsert_state_path(path: str) -> str:
+    """The hidden sidecar inside an append-only upsert state
+    (:func:`upsert_into`); Spark's readers skip dot-files."""
+    return f"{path.rstrip('/')}/.upsert_state.json"
+
+
+def upsert_state_meta(spark: SparkSession, path: str) -> dict | None:
+    """The sidecar of the append-only upsert state at ``path`` —
+    ``{key, ts, seq, schema}`` — or None when ``path`` holds none: no
+    state, or the full-rewrite layout."""
+    sidecar = _upsert_state_path(path)
+    fs, jpath = _hadoop_fs(spark, sidecar)
+    if not fs.exists(jpath):
+        return None
+    return read_json_sidecar(spark, sidecar)
+
+
+def read_upsert_state(spark: SparkSession, path: str, meta: dict) -> DataFrame:
+    """The base and every appended batch of the append-only upsert state
+    at ``path``, ``_batch`` dropped. It may hold older winners of a key
+    beside the newest; its ``latest()`` is the state. The open runs no
+    schema job: the sidecar's schema is given."""
+    schema = T.StructType.fromJson(meta["schema"])
+    return (
+        spark.read.schema(schema.add("_batch", T.StringType()))
+        .parquet(path)
+        .drop("_batch")
+    )
+
+
+def _migrate_upsert_state(
+    spark: SparkSession, path: str, batch: FeatureTable
+) -> None:
+    """The first upsert into ``path``: ``latest()`` over the full-rewrite
+    state ∪ ``batch`` (the batch alone on a fresh path) becomes the base
+    partition, published with the sidecar by one staged rename."""
     current = _try_read_parquet(spark, path)
     if current is not None:
-        merged = (
-            FeatureTable(
-                current.unionByName(batch.df),
-                key=batch.key, ts=batch.ts, seq=batch.seq,
-            )
-            .latest()
-            .df
+        batch = batch._with(current.unionByName(batch.df))
+    base = batch.latest().df
+    meta = {
+        "key": batch.key, "ts": batch.ts, "seq": batch.seq,
+        "schema": base.schema.jsonValue(),
+    }
+    _staged_overwrite(
+        spark, base.withColumn("_batch", F.lit("compacted-base")), path,
+        partition_by="_batch",
+        on_staged=lambda stage: write_json_sidecar(
+            spark, _upsert_state_path(stage), meta
+        ),
+    )
+
+
+def _conform_batch(
+    spark: SparkSession, path: str, batch: FeatureTable, meta: dict
+) -> FeatureTable:
+    """``batch`` in the stored column order and types; raises
+    ``ValueError`` when it cannot join the state at ``path``: another
+    key, ts or seq, other column names, or a column whose type Spark
+    cannot up-cast to the stored one (``Cast.canUpCast``: no narrowing
+    or lossy cast)."""
+    stored = T.StructType.fromJson(meta["schema"])
+    fields = batch.df.schema.fields
+    have = {f.name: f.dataType for f in fields}
+    named = (batch.key, batch.ts, batch.seq)
+    if named != (meta["key"], meta["ts"], meta["seq"]):
+        raise ValueError(
+            f"upsert_into {path}: batch key/ts/seq {named} differ from the "
+            f"state's {(meta['key'], meta['ts'], meta['seq'])}"
         )
-    else:
-        merged = batch.latest().df
-    _staged_overwrite(spark, merged, path)
+    if len(have) != len(batch.df.columns) or set(have) != set(stored.names):
+        raise ValueError(
+            f"upsert_into {path}: batch columns {batch.df.columns} differ "
+            f"from the state's {stored.names}"
+        )
+
+    def up_casts(src: T.DataType, dst: T.DataType) -> bool:
+        jvm = spark._jvm  # type: ignore[attr-defined]
+        parse = jvm.org.apache.spark.sql.types.DataType.fromJson
+        return jvm.org.apache.spark.sql.catalyst.expressions.Cast.canUpCast(
+            parse(src.json()), parse(dst.json())
+        )
+
+    narrowing = [
+        f"{f.name} {have[f.name].simpleString()} -> "
+        f"{f.dataType.simpleString()}"
+        for f in stored.fields
+        if have[f.name] != f.dataType
+        and not up_casts(have[f.name], f.dataType)
+    ]
+    if narrowing:
+        raise ValueError(
+            f"upsert_into {path}: batch types cannot up-cast to the "
+            f"state's: {narrowing}"
+        )
+    if [(f.name, f.dataType) for f in fields] == \
+            [(f.name, f.dataType) for f in stored.fields]:
+        return batch
+    return batch._with(batch.df.select(*[
+        F.col(f.name) if have[f.name] == f.dataType
+        else F.col(f.name).cast(f.dataType).alias(f.name)
+        for f in stored.fields
+    ]))
 
 
 def merge_upsert_condition(
@@ -1016,7 +1141,11 @@ def _delta_merge_upsert(path: str, batch: FeatureTable) -> None:
 
 
 def _staged_overwrite(
-    spark: SparkSession, df: DataFrame, path: str, partition_by: str | None = None
+    spark: SparkSession,
+    df: DataFrame,
+    path: str,
+    partition_by: str | None = None,
+    on_staged=None,
 ) -> None:
     """Write ``df`` once to ``<path>.__staging__`` (the output may derive
     from ``path``'s current contents, so a direct overwrite would read
@@ -1030,13 +1159,20 @@ def _staged_overwrite(
     from the complete staging directory or back from ``__retired__``.
     On local and HDFS filesystems each rename is atomic; on object
     stores (S3A) a directory rename is a copy and is not —
-    ``upsert_into(table_format="delta")`` is the atomic spelling there."""
+    ``upsert_into(table_format="delta")`` is the atomic spelling there.
+
+    ``on_staged(staging_path)`` runs between the write and the publish:
+    a sidecar it writes into the staging directory publishes with the
+    data."""
     _recover_staged_publish(spark, path)
     fs, jpath, jstage, jretired = _publish_paths(spark, path)
     writer = df.write.mode("overwrite")
     if partition_by:
         writer = writer.partitionBy(partition_by)
-    writer.parquet(path.rstrip("/") + STAGING_SUFFIX)
+    stage = path.rstrip("/") + STAGING_SUFFIX
+    writer.parquet(stage)
+    if on_staged is not None:
+        on_staged(stage)  # a sidecar that must publish with the data
     # fence + heartbeat keeper (r13): the staging write above is the long
     # step; publish over ``path`` only while still the owner. Neither
     # rename may target an existing directory: Hadoop would move the

@@ -19,7 +19,7 @@ partial aggregation). Properties:
 
 ``merge_moments`` is pure DataFrame logic, so it slots into
 ``foreachBatch`` for streaming or a nightly batch upsert via
-``connectors.upsert_into``'s staged-overwrite pattern.
+``connectors._staged_overwrite`` (the fold sinks' publish).
 """
 
 from __future__ import annotations

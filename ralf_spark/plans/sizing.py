@@ -166,7 +166,9 @@ def provably_small(
         return False
 
 
-def provably_small_snapshot(df: DataFrame, per_byte: int, per_row: int) -> bool:
+def provably_small_snapshot(
+    df: DataFrame, per_byte: int, per_row: int, sized: dict | None = None
+) -> bool:
     """True when ``df`` may be copied to the driver once and served from
     the copy: :func:`provably_small` holds, the copy's bound — decoded
     footer bytes (:func:`_decoded_bytes`) × ``per_byte`` plus rows ×
@@ -179,7 +181,11 @@ def provably_small_snapshot(df: DataFrame, per_byte: int, per_row: int) -> bool:
 
     The copy is a snapshot: once the files under ``df`` are replaced, a
     run of ``df`` fails on the missing files, while the copy still
-    serves the rows it read. Any error refuses."""
+    serves the rows it read. Any error refuses.
+
+    ``sized`` memoizes (rows, decoded bytes) per file: a file it holds
+    is not read again, and each file read is added. Only a caller that
+    knows the held files unchanged may pass one back."""
     if not provably_small(df, per_byte=per_byte, per_row=per_row):
         return False
     try:
@@ -188,11 +194,13 @@ def provably_small_snapshot(df: DataFrame, per_byte: int, per_row: int) -> bool:
             return False
         spark = df.sparkSession
         rows = decoded = 0
+        memo = {} if sized is None else sized
         for f in _bounded_input_files(df) or ():
-            sized = _decoded_bytes(f, spark)
-            if sized is None:
+            if f not in memo:
+                memo[f] = _decoded_bytes(f, spark)
+            if memo[f] is None:
                 return False
-            rows, decoded = rows + sized[0], decoded + sized[1]
+            rows, decoded = rows + memo[f][0], decoded + memo[f][1]
             if decoded * per_byte + rows * per_row > SMALL_INPUT_BYTES:
                 return False
         return True

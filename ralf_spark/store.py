@@ -15,7 +15,12 @@ from typing import Any
 from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import types as T
 
-from ralf_spark.connectors import StateConnector, _recover_staged_publish
+from ralf_spark.connectors import (
+    StateConnector,
+    _recover_staged_publish,
+    read_upsert_state,
+    upsert_state_meta,
+)
 from ralf_spark.plans import sizing
 from ralf_spark.table import FeatureTable
 
@@ -53,24 +58,40 @@ class _KeyIndex:
     """The point index of one registration: the table copied to the
     driver as Arrow, and each key's newest row position — ralf's point
     query, a lookup in the operator's in-memory state table
-    (``ralf/state/table_state.py:36-40``)."""
+    (``ralf/state/table_state.py:36-40``). ``files`` is the
+    registration's file set (path -> (length, mtime)) when it is a plain
+    parquet scan, else None; ``sized`` its files' footer sizes
+    (``sizing.provably_small_snapshot``'s memo)."""
 
-    def __init__(self, tbl, schema: T.StructType, key_type: type,
-                 pos: dict) -> None:
+    def __init__(self, tbl, schema: T.StructType, key: str, order: list,
+                 key_type: type, pos: dict, files: dict | None,
+                 sized: dict) -> None:
         self.tbl = tbl
         self.schema = schema
+        self.key = key
+        self.order = order
         self.key_type = key_type
         self.pos = pos
+        self.files = files
+        self.sized = sized
 
     @classmethod
-    def build(cls, table: FeatureTable) -> "_KeyIndex | None":
+    def build(
+        cls, table: FeatureTable, seed: "_KeyIndex | None" = None
+    ) -> "_KeyIndex | None":
         """The index of ``table``, or None when a condition fails and
         ``FeatureTable.point_query`` serves instead (a keyless or
         unordered table raises its ``ValueError`` there): the key column
         is integral or a binary-collated string; ts and seq are
         integral, date, timestamp or binary-collated strings; every
         column type is served; and ``sizing.provably_small_snapshot``
-        proves the copy small and every run of the table equal."""
+        proves the copy small and every run of the table equal.
+
+        ``seed``, the index of an earlier registration, is folded
+        forward instead of copying the whole table when both are plain
+        parquet scans of one schema, key and order, and ``table``'s
+        files are a superset of the seed's (an ``upsert_into`` append):
+        one Spark job reads only the new files."""
         import pyarrow.compute as pc
 
         order = [c for c in (table.ts, table.seq) if c]
@@ -93,11 +114,31 @@ class _KeyIndex:
             for c in order
         ) or not all(_served(f.dataType) for f in schema.fields):
             return None
+        files = _scan_files(table.df)
+        fold = (
+            seed is not None and files is not None
+            and seed.files is not None
+            and (seed.schema, seed.key, seed.order)
+            == (schema, table.key, order)
+            and seed.files.items() <= files.items()
+        )
+        # the seed's files are unchanged: their footers are not re-read
+        sized = dict(seed.sized) if fold else {}
         x = sizing.EXPANSION
         if not sizing.provably_small_snapshot(
-            table.df, per_byte=x["index_byte"], per_row=x["index_row"]
+            table.df, per_byte=x["index_byte"], per_row=x["index_row"],
+            sized=sized,
         ):
             return None
+        if fold:
+            new = [f for f in files if f not in seed.files]
+            spark = table.df.sparkSession
+            try:
+                tbl = spark.read.schema(schema).parquet(*new).toArrow() \
+                    if new else None  # the one Spark job
+                return seed._fold(tbl, files, sized)
+            except Exception:
+                pass  # the copy of the whole table reports or serves
         try:
             tbl = table.df.toArrow()  # the one Spark job
         except Exception:
@@ -109,19 +150,53 @@ class _KeyIndex:
             tbl = tbl.filter(pc.is_valid(keys))
             keys = tbl[table.key]
         pos = dict(zip(keys.to_numpy().tolist(), range(tbl.num_rows)))
+        index = cls(tbl, schema, table.key, order, key_type, pos, files, sized)
         if len(pos) < tbl.num_rows:
             # a key repeats: keep its newest row in latest()'s order
-            # (ts, then seq, descending, NULL below every value); the
-            # dict keeps the last position it is given for a key
-            ranked = pc.sort_indices(
-                tbl, sort_keys=[(c, "descending") for c in order],
-                null_placement="at_end",
-            )
-            pos = dict(zip(
-                reversed(keys.take(ranked).to_numpy().tolist()),
-                reversed(ranked.to_numpy().tolist()),
-            ))
-        return cls(tbl, schema, key_type, pos)
+            index._rank(range(tbl.num_rows))
+        return index
+
+    def _rank(self, candidates) -> None:
+        """Point each key among the rows at positions ``candidates`` at
+        its newest one in latest()'s order (ts, then seq, descending,
+        NULL below every value); the dict keeps the last position it is
+        given for a key."""
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        cand = pa.array(candidates, pa.int64())
+        sub = self.tbl.select([self.key, *self.order]).take(cand)
+        ranked = pc.sort_indices(
+            sub, sort_keys=[(c, "descending") for c in self.order],
+            null_placement="at_end",
+        )
+        self.pos.update(zip(
+            reversed(sub[self.key].take(ranked).to_numpy().tolist()),
+            reversed(cand.take(ranked).to_numpy().tolist()),
+        ))
+
+    def _fold(self, new, files: dict, sized: dict) -> "_KeyIndex":
+        """This index with the rows of ``new`` (an Arrow table of the
+        new files, or None) appended to a fresh contiguous table, and the
+        keys they touch re-pointed over their old and new rows."""
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        out = _KeyIndex(self.tbl, self.schema, self.key, self.order,
+                        self.key_type, dict(self.pos), files, sized)
+        if new is None:
+            return out
+        keys = new[self.key]
+        if keys.null_count:
+            new = new.filter(pc.is_valid(keys))
+            keys = new[self.key]
+        n0 = self.tbl.num_rows
+        out.tbl = pa.concat_tables([self.tbl, new]).combine_chunks()
+        touched = {
+            self.pos[k] for k in keys.to_numpy().tolist() if k in self.pos
+        }
+        out._rank([*range(n0, n0 + new.num_rows), *touched])
+        return out
 
     def rows(self, key_value: Any) -> list[Row] | None:
         """The key's newest row (``[]`` when absent), or None for a
@@ -141,6 +216,51 @@ class _KeyIndex:
         )
 
 
+def _scan_files(df: DataFrame) -> dict | None:
+    """path -> (length, mtime) of every file ``df`` reads, when ``df``
+    is a plain parquet scan — a path read without reader options,
+    optionally projected to some of its data columns, so that reading a
+    subset of its files with ``df``'s schema yields their rows of ``df``
+    — else None. The listing is the one the frame was made with: no
+    filesystem call."""
+    try:
+        plan = df._jdf.queryExecution().analyzed()
+        if plan.getClass().getSimpleName() == "Project":
+            it = plan.projectList().iterator()
+            while it.hasNext():
+                if it.next().getClass().getSimpleName() != "AttributeReference":
+                    return None
+            plan = plan.child()
+        if (
+            plan.getClass().getSimpleName() != "LogicalRelation"
+            or plan.catalogTable().isDefined()
+        ):
+            return None
+        rel = plan.relation()
+        if (
+            rel.getClass().getSimpleName() != "HadoopFsRelation"
+            or rel.fileFormat().getClass().getSimpleName()
+            != "ParquetFileFormat"
+            or rel.location().getClass().getSimpleName() != "InMemoryFileIndex"
+            or not set(df.columns) <= set(rel.dataSchema().fieldNames())
+        ):
+            return None
+        it = rel.options().keysIterator()
+        while it.hasNext():
+            if it.next() not in ("path", "paths"):
+                return None  # a reader option a plain re-read would drop
+        out = {}
+        it = rel.location().allFiles().iterator()
+        while it.hasNext():
+            st = it.next()
+            out[st.getPath().toString()] = (
+                int(st.getLen()), int(st.getModificationTime())
+            )
+        return out
+    except Exception:
+        return None
+
+
 class FeatureStore:
     def __init__(self, spark: SparkSession) -> None:
         self.spark = spark
@@ -148,6 +268,8 @@ class FeatureStore:
         self._connectors: dict[str, StateConnector] = {}
         # name -> its registration's point index, None once refused
         self._indexes: dict[str, _KeyIndex | None] = {}
+        # name -> the index of an earlier registration, to fold forward
+        self._seeds: dict[str, _KeyIndex] = {}
 
     # ------------------------------------------------------------- sources
     def read_parquet(
@@ -158,9 +280,23 @@ class FeatureStore:
         seq: str | None = None,
     ) -> FeatureTable:
         """Parquet source; a publish a crash cut between its renames
-        (``upsert_into`` state) is recovered before the read."""
+        (``upsert_into`` state) is recovered before the read.
+
+        On ``upsert_into`` state (a directory holding its sidecar) the
+        frame is the union of the base and every appended batch of
+        per-key winners, opened with the stored schema (no schema job).
+        Its ``latest()``, ``bulk_query()`` and point reads are the state;
+        its ``df`` may hold an older winner of a key beside the newest
+        one. ``latest()`` is idempotent, so the read is exact in every
+        crash state of a compaction: both copies of the folded batches,
+        or one."""
         _recover_staged_publish(self.spark, path)
-        return FeatureTable(self.spark.read.parquet(path), key=key, ts=ts, seq=seq)
+        meta = upsert_state_meta(self.spark, path)
+        df = (
+            self.spark.read.parquet(path) if meta is None
+            else read_upsert_state(self.spark, path, meta)
+        )
+        return FeatureTable(df, key=key, ts=ts, seq=seq)
 
     def read_csv(
         self,
@@ -212,9 +348,12 @@ class FeatureStore:
     def register(self, name: str, table: FeatureTable) -> FeatureTable:
         """Make ``table`` queryable by name (ralf ``.as_queryable``).
         Drops the name's point index: the next point read builds one
-        for ``table``."""
+        for ``table``, folding the dropped one forward when ``table``
+        only adds files to it (:meth:`point_query`)."""
         self._tables[name] = table
-        self._indexes.pop(name, None)
+        old = self._indexes.pop(name, None)
+        if old is not None:
+            self._seeds[name] = old
         table.df.createOrReplaceTempView(name)
         return table
 
@@ -238,14 +377,21 @@ class FeatureStore:
         its result or error. ``SPARK_GRAFT_SMALL_CORPUS=0`` refuses the
         index as every small spelling.
 
-        A registration is a snapshot: once the files under it are
-        replaced (a later ``upsert_into`` publishes new ones), a read
-        still returns the row the index copied, where a Spark read fails
-        on the missing files. Register the table again to serve the new
-        state."""
+        A registration is a snapshot: it keeps serving the rows of the
+        files it listed. A later ``upsert_into`` appends files beside
+        them (a compaction replaces them; then a Spark read of the old
+        registration fails on the missing files, while the index still
+        serves its copy). Register the table again to serve the new
+        state: when the new registration lists the old one's files
+        (path, length and mtime) plus new ones, in the same schema, the
+        first read folds only the new files into the old index — one
+        Spark job over the appended batches instead of a copy of the
+        whole state."""
         table = self._tables[name]
         if name not in self._indexes:
-            self._indexes[name] = _KeyIndex.build(table)
+            self._indexes[name] = _KeyIndex.build(
+                table, self._seeds.pop(name, None)
+            )
         index = self._indexes[name]
         rows = None if index is None else index.rows(key_value)
         return table.point_query(key_value) if rows is None else rows

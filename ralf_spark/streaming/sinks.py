@@ -13,9 +13,10 @@ under checkpoint replay:
 - **Keyed latest-per-key upsert** (``foreach_batch_latest_upsert``,
   ``foreach_batch_kv_upsert``). The batch reduces to its per-key winners
   by (ts, seq) and upserts them. The unit is the key: a replayed batch
-  re-derives the same winners. ``connectors.upsert_into`` publishes the
-  parquet table by staged directory rename under the writer lease, or
-  runs a Delta ``MERGE INTO``.
+  re-derives the same winners. ``connectors.upsert_into`` appends them
+  as one ``_batch`` partition of the parquet state under the writer
+  lease (a replay appends duplicate winners, which ``latest()`` folds
+  away), or runs a Delta ``MERGE INTO``.
 - **Keyed fold state** (moments, EWMA, decayed sum, HLL, KMV, reservoir
   quantile, CMS: the ``*_upsert_batch`` callbacks, all built by
   :func:`_fold_upsert_batch`). The batch summary folds into the stored
@@ -79,14 +80,15 @@ def foreach_batch_latest_upsert(
 ) -> DataStreamWriter:
     """Maintain a persisted latest-per-key state table from a stream.
 
-    Each micro-batch: reduce the batch to latest-per-key, union with the
-    current state, keep the per-key winner by (ts, seq), atomically replace
-    the state directory. The batch analog of the reference's per-record
-    upsert (``ralf/v2/table_state.py:29-46``).
+    Each micro-batch: reduce the batch to its per-key winners by
+    (ts, seq) and append them to the state as one ``_batch`` partition
+    (``connectors.upsert_into``); ``FeatureStore.read_parquet(path)
+    .latest()`` is the state. The batch analog of the reference's
+    per-record upsert (``ralf/v2/table_state.py:29-46``).
 
     ``table_format="delta"`` routes each micro-batch through a real
     ``MERGE INTO`` (atomic, touched-files-only) instead of the parquet
-    full-rewrite — the production deployment shape; see
+    append — the production deployment shape; see
     ``connectors.upsert_into``.
     """
 
@@ -812,8 +814,7 @@ def foreach_batch_moments_upsert(
     a stream — incremental mean/variance features without reprocessing
     history (``operators/moments.py``: each micro-batch reduces map-side
     to one summary row per key, then one full-outer merge join against
-    the state; the staged overwrite is the same crash-safe pattern as
-    ``upsert_into``).
+    the state, published by ``connectors._staged_overwrite``).
 
     NOTE: unlike latest-per-key upserts, the moments merge is NOT
     idempotent under replay (a re-applied batch double-counts);

@@ -247,8 +247,18 @@ def test_upsert_into_cleans_staging_dir(spark, tmp_path):
     upsert_into(path, _events(spark, [(2, 10, 2, 2.0)]))
     assert not os.path.exists(path + ".__staging__")
     assert not os.path.exists(path + ".__retired__")
-    got = {r.user_id: r.value for r in spark.read.parquet(path).collect()}
+    got = {r.user_id: r.value for r in _upsert_state(spark, path).collect()}
     assert got == {1: 1.0, 2: 2.0}
+
+
+def _upsert_state(spark, path):
+    """The ``upsert_into`` state at ``path``: ``latest()`` of its store
+    read."""
+    from ralf_spark.store import FeatureStore
+
+    return FeatureStore(spark).read_parquet(
+        path, key="user_id", ts="ts", seq="seq"
+    ).latest().df
 
 
 def test_parquet_delete_cleans_staging_dir(spark, tmp_path):
@@ -269,10 +279,10 @@ def test_parquet_delete_cleans_staging_dir(spark, tmp_path):
 
 
 def test_upsert_into_existing_state_job_budget(spark, tmp_path):
-    """An upsert into existing state writes it once: one ``latest()``
-    over state ∪ batch and one staged write published by rename — at
-    most 4 Spark jobs (the old staging re-read and rewrite plus the
-    separate batch reduction made it 7)."""
+    """An upsert into existing state appends the batch's per-key
+    winners and reads no state: at most 2 Spark jobs for an in-memory
+    batch, the ``latest()`` shuffle and the write (the full-rewrite
+    state's ``latest()`` over state ∪ batch and staged rename ran 4)."""
     from ralf_spark.connectors import upsert_into
 
     path = str(tmp_path / "state")
@@ -285,10 +295,10 @@ def test_upsert_into_existing_state_job_budget(spark, tmp_path):
     finally:
         sc.setJobGroup(None, None)
     jobs = list(sc.statusTracker().getJobIdsForGroup("upsert_budget"))
-    assert 0 < len(jobs) <= 4, f"upsert_into ran {len(jobs)} jobs: {jobs}"
+    assert 0 < len(jobs) <= 2, f"upsert_into ran {len(jobs)} jobs: {jobs}"
     want = {i: float(i) for i in range(50)}
     want.update({i: -float(i) for i in range(0, 80, 2)})
-    got = {r.user_id: r.value for r in spark.read.parquet(path).collect()}
+    got = {r.user_id: r.value for r in _upsert_state(spark, path).collect()}
     assert got == want
 
 
@@ -382,28 +392,43 @@ _UPSERT_BATCHES = {
 }
 
 
+def _legacy_upsert(spark, path, i):
+    """Batch ``i`` upserted in the full-rewrite layout: ``latest()`` over
+    state ∪ batch, published by ``_staged_overwrite`` — how ``upsert_into``
+    wrote state before it appended, and the layout it migrates."""
+    from ralf_spark.connectors import _staged_overwrite, _try_read_parquet
+
+    batch = _events(spark, _UPSERT_BATCHES[i])
+    current = _try_read_parquet(spark, path)
+    if current is not None:
+        batch = batch._with(current.unionByName(batch.df))
+    _staged_overwrite(spark, batch.latest().df, path)
+
+
 @pytest.mark.parametrize("case", _CRASH_CASES)
 def test_upsert_crash_between_publish_renames_recovers(
     spark, tmp_path, monkeypatch, case
 ):
-    """A writer killed between the publish renames leaves no ``path``;
-    the next read rolls forward from a complete staging directory or
-    back from ``__retired__`` — never "no state" — and the replayed and
-    next upserts equal an uninterrupted run."""
+    """A full-rewrite state whose publish was killed between the renames
+    has no ``path``; ``read_parquet`` rolls it forward from a complete
+    staging directory or back from ``__retired__`` — never "no state" —
+    and the migrating ``upsert_into`` of the replayed batch and the next
+    one equal an uninterrupted run."""
     import os
 
     from ralf_spark.connectors import (
         RETIRED_SUFFIX,
         STAGING_SUFFIX,
-        _try_read_parquet,
         upsert_into,
+        upsert_state_meta,
     )
+    from ralf_spark.store import FeatureStore
 
     def write(path, i):
-        upsert_into(path, _events(spark, _UPSERT_BATCHES[i]))
+        _legacy_upsert(spark, path, i)
 
     def rows(path):
-        return sorted(map(tuple, spark.read.parquet(path).collect()))
+        return sorted(map(tuple, _upsert_state(spark, path).collect()))
 
     ref = str(tmp_path / "ref")
     want = {}
@@ -412,13 +437,14 @@ def test_upsert_crash_between_publish_renames_recovers(
         want[i] = rows(ref)
 
     path = _crash_second_publish(spark, tmp_path, monkeypatch, case, write)
-    recovered = _try_read_parquet(spark, path)
-    assert recovered is not None
-    got = sorted(map(tuple, recovered.collect()))
+    recovered = FeatureStore(spark).read_parquet(path)
+    got = sorted(map(tuple, recovered.df.collect()))
     assert got == (want[2] if case == "staging_complete" else want[1])
-    write(path, 2)  # the stream replays the batch it never saw committed
+    # the stream replays the batch it never saw committed
+    upsert_into(path, _events(spark, _UPSERT_BATCHES[2]))
+    assert upsert_state_meta(spark, path) is not None  # migrated
     assert rows(path) == want[2]
-    write(path, 3)
+    upsert_into(path, _events(spark, _UPSERT_BATCHES[3]))
     assert rows(path) == want[3]
     assert not os.path.exists(path + STAGING_SUFFIX)
     assert not os.path.exists(path + RETIRED_SUFFIX)
@@ -495,10 +521,11 @@ def test_parquet_connector_reads_survive_publish_crash(
 def test_state_readers_survive_publish_crash(
     spark, tmp_path, monkeypatch, case
 ):
-    """``FeatureStore.read_parquet`` over ``upsert_into`` state and
-    ``read_bucketed_state`` over an unbucketed fold sink's state recover
-    a publish killed between its renames: each returns the pre- or
-    post-crash state instead of failing on the missing ``path``."""
+    """``FeatureStore.read_parquet`` over full-rewrite ``upsert_into``
+    state and ``read_bucketed_state`` over an unbucketed fold sink's
+    state recover a publish killed between its renames: each returns the
+    pre- or post-crash state instead of failing on the missing ``path``,
+    and the migrating ``upsert_into`` of the next batch lands on it."""
     from ralf_spark.connectors import upsert_into
     from ralf_spark.store import FeatureStore
     from ralf_spark.streaming.sinks import (
@@ -509,7 +536,7 @@ def test_state_readers_survive_publish_crash(
     i = 2 if case == "staging_complete" else 1
 
     def upsert(path, j):
-        upsert_into(path, _events(spark, _UPSERT_BATCHES[j]))
+        _legacy_upsert(spark, path, j)
 
     ref = str(tmp_path / "ref")
     for j in range(1, i + 1):
@@ -525,6 +552,10 @@ def test_state_readers_survive_publish_crash(
     assert sorted(map(tuple, table.df.collect())) == want
     assert [tuple(r) for r in fs.point_query("state", 1)] == \
         [r for r in want if r[0] == 1]
+    upsert(ref, 3)
+    upsert_into(path, _events(spark, _UPSERT_BATCHES[3]))
+    assert sorted(map(tuple, _upsert_state(spark, path).collect())) == \
+        sorted(map(tuple, spark.read.parquet(ref).collect()))
 
     batches = {
         j: spark.createDataFrame(

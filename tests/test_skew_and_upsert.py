@@ -50,12 +50,21 @@ def test_upsert_into_incremental_equals_full_latest(spark, tmp_path):
     )
     upsert_into(path, b1)
     upsert_into(path, b2)
-    got = {r.k: r.v for r in spark.read.parquet(path).collect()}
+    got = {r.k: r.v for r in _state(spark, path).collect()}
     assert got == {1: 9.0, 2: 2.0, 3: 7.0}
     # replay of b2 is a no-op (idempotent)
     upsert_into(path, b2)
-    again = {r.k: r.v for r in spark.read.parquet(path).collect()}
+    again = {r.k: r.v for r in _state(spark, path).collect()}
     assert again == got
+
+
+def _state(spark, path):
+    """The upsert state at ``path``: ``latest()`` of its store read."""
+    from ralf_spark.store import FeatureStore
+
+    return FeatureStore(spark).read_parquet(
+        path, key="k", ts="ts", seq="seq"
+    ).latest().df
 
 
 def test_ivf_topk_within_cell_matches_bruteforce_scores(spark):
@@ -168,7 +177,7 @@ def test_merge_plan_matches_parquet_upsert_branch(spark, tmp_path):
             if merged is None
             else merge_upsert_plan(merged, latest, "k", ["ts", "seq"])
         )
-    via_parquet = {tuple(r) for r in spark.read.parquet(path).collect()}
+    via_parquet = {tuple(r) for r in _state(spark, path).collect()}
     via_merge = {tuple(r) for r in merged.collect()}
     assert via_parquet == via_merge
     assert {r[0]: r[3] for r in via_merge} == {1: 9.0, 2: 2.0, 3: 7.0, 4: 4.5}

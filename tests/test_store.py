@@ -284,10 +284,11 @@ def test_store_point_index_job_budget(spark, tmp_path):
 
 
 def test_store_point_index_snapshot_and_invalidation(spark, tmp_path):
-    """A registration is a snapshot: after an upsert replaces its files
-    the index still serves the copied row (a Spark read of the old
-    registration fails on the missing files). ``register`` and
-    ``deploy`` drop the index, and the same key reads the new row."""
+    """A registration is a snapshot: after an upsert appends beside its
+    files the index still serves the copied row, and so does a Spark
+    read of the old registration (its files are still there).
+    ``register`` and ``deploy`` drop the index, and the same key reads
+    the new row."""
     path = _upserted(spark, tmp_path, [[(i, 10, i, float(i)) for i in range(10)]])
     store = FeatureStore(spark)
     meta = dict(key="user_id", ts="ts", seq="seq")
@@ -297,8 +298,8 @@ def test_store_point_index_snapshot_and_invalidation(spark, tmp_path):
     _upserted(spark, tmp_path, [[(3, 20, 50, -3.0)]])
     [row] = store.point_query("state", 3)
     assert row.value == 3.0  # the snapshot
-    with pytest.raises(Exception):
-        old.point_query(3)  # its files were replaced
+    [row] = old.point_query(3)
+    assert row.value == 3.0  # its files are still there
     store.register("state", store.read_parquet(path, **meta))
     [row] = store.point_query("state", 3)
     assert row.value == -3.0

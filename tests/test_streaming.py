@@ -17,6 +17,7 @@ from ralf_spark.streaming import (
     write_memory,
 )
 from ralf_spark.operators.windows import tumbling_count_window
+from ralf_spark.store import FeatureStore
 from ralf_spark.table import FeatureTable
 
 from tests.conftest import SF_DIR
@@ -120,9 +121,12 @@ def test_foreach_batch_latest_upsert_equals_batch_latest(spark, events_dir, tmp_
         ),
         checkpoint=str(tmp_path / "ck_upsert"),
     )
+    state = FeatureStore(spark).read_parquet(
+        state_path, key="user_id", ts="ts", seq="event_id"
+    )
     got = {
         r.user_id: (r.event_id, round(r.value, 4))
-        for r in spark.read.parquet(state_path).collect()
+        for r in state.latest().df.collect()
     }
     ev = FeatureTable(
         spark.read.parquet(events_dir), key="user_id", ts="ts", seq="event_id"
