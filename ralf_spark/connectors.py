@@ -25,7 +25,7 @@ from __future__ import annotations
 
 from abc import ABC, abstractmethod
 from collections.abc import Sequence
-from typing import Any
+from typing import Any, NamedTuple
 
 from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
@@ -35,15 +35,41 @@ from ralf_spark.functions.timeutil import epoch_us_expr, ntz_from_epoch_us
 from ralf_spark.table import FeatureTable
 
 
+class _JvmHandles(NamedTuple):
+    Path: Any  # org.apache.hadoop.fs.Path
+    IOUtils: Any  # org.apache.commons.io.IOUtils
+    conf: Any  # the context's hadoopConfiguration()
+
+
+#: (JavaSparkContext, its handles) of the context last seen
+_JVM_HANDLES: tuple[Any, _JvmHandles] | None = None
+
+
+def _jvm_handles(spark: SparkSession) -> _JvmHandles:
+    """The JVM handles the filesystem helpers use, resolved once per
+    live SparkContext: each ``spark._jvm.org.apache...`` lookup is one
+    py4j round trip per package segment. The cache is keyed on the
+    context's ``JavaSparkContext`` object and holds it, so a session
+    stopped and started again, whose new context is another object,
+    never reuses a dead context's Configuration."""
+    global _JVM_HANDLES
+    jsc = spark._jsc  # type: ignore[attr-defined]
+    if _JVM_HANDLES is None or _JVM_HANDLES[0] is not jsc:
+        jvm = spark._jvm  # type: ignore[attr-defined]
+        _JVM_HANDLES = (jsc, _JvmHandles(
+            jvm.org.apache.hadoop.fs.Path,
+            jvm.org.apache.commons.io.IOUtils,
+            jsc.hadoopConfiguration(),
+        ))
+    return _JVM_HANDLES[1]
+
+
 def _hadoop_fs(spark: SparkSession, path: str):
     """(FileSystem, Path) for ``path`` via the Hadoop FS API — works on any
     configured filesystem (local, HDFS, S3A), unlike ``os.path``."""
-    jvm = spark._jvm  # type: ignore[attr-defined]
-    jpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = jpath.getFileSystem(
-        spark._jsc.hadoopConfiguration()  # type: ignore[attr-defined]
-    )
-    return fs, jpath
+    jvm = _jvm_handles(spark)
+    jpath = jvm.Path(path)
+    return jpath.getFileSystem(jvm.conf), jpath
 
 
 #: sibling directories of a staged publish (:func:`_staged_overwrite`):
@@ -57,7 +83,7 @@ def _publish_paths(spark: SparkSession, path: str):
     """(FileSystem, path, staging, retired) Hadoop paths of a staged
     publish onto ``path``."""
     fs, jpath = _hadoop_fs(spark, path)
-    Path = spark._jvm.org.apache.hadoop.fs.Path  # type: ignore[attr-defined]
+    Path = _jvm_handles(spark).Path
     base = path.rstrip("/")
     return (
         fs, jpath, Path(base + STAGING_SUFFIX), Path(base + RETIRED_SUFFIX)
@@ -67,7 +93,7 @@ def _publish_paths(spark: SparkSession, path: str):
 def _rename(fs, src, dst) -> None:
     """``FileSystem.rename`` that raises instead of returning false."""
     if not fs.rename(src, dst):
-        raise IOError(f"staged publish: rename {src} -> {dst} failed")
+        raise IOError(f"rename {src} -> {dst} failed")
 
 
 def _recover_staged_publish(spark: SparkSession, path: str) -> bool:
@@ -83,8 +109,7 @@ def _recover_staged_publish(spark: SparkSession, path: str) -> bool:
     fs, jpath, jstage, jretired = _publish_paths(spark, path)
     if fs.exists(jpath):
         return True
-    Path = spark._jvm.org.apache.hadoop.fs.Path  # type: ignore[attr-defined]
-    if fs.exists(Path(jstage, "_SUCCESS")):
+    if fs.exists(_jvm_handles(spark).Path(jstage, "_SUCCESS")):
         _rename(fs, jstage, jpath)
         fs.delete(jretired, True)
         return True
@@ -157,9 +182,7 @@ def read_json_sidecar(spark: SparkSession, path: str) -> dict:
     fs, jpath = _hadoop_fs(spark, path)
     stream = fs.open(jpath)
     try:
-        text = spark._jvm.org.apache.commons.io.IOUtils.toString(  # type: ignore[attr-defined]
-            stream, "UTF-8"
-        )
+        text = _jvm_handles(spark).IOUtils.toString(stream, "UTF-8")
     finally:
         stream.close()
     return json.loads(text)
@@ -214,7 +237,7 @@ def read_parquet_sidecar(
     )
     if not committed:
         return []
-    io_utils = spark._jvm.org.apache.commons.io.IOUtils  # type: ignore[attr-defined]
+    io_utils = _jvm_handles(spark).IOUtils
     rows: list[dict] = []
     for jfile in committed:
         stream = fs.open(jfile)
@@ -247,7 +270,6 @@ def write_parquet_sidecar(
     fields) — kept in that spelling so the pinned schemas read
     identically at both call sites."""
     import pyarrow as pa
-    import pyarrow.parquet as pq
 
     _ARROW_TYPES = {
         "string": pa.string(),
@@ -290,30 +312,39 @@ def write_parquet_sidecar(
         [dict(zip([f.name for f in fields], r)) for r in rows],
         schema=pa.schema(fields),
     )
-    sink = pa.BufferOutputStream()
-    pq.write_table(table, sink, compression="snappy")
-    buf = sink.getvalue().to_pybytes()
-
-    jvm = spark._jvm  # type: ignore[attr-defined]
     fs, jpath = _hadoop_fs(spark, path)
     fs.delete(jpath, True)
     fs.mkdirs(jpath)
-    jtmp = jvm.org.apache.hadoop.fs.Path(
-        path, ".part-00000-ralf.snappy.parquet.staged"
+    _write_parquet_file(spark, path, "part-00000-ralf.snappy.parquet", table)
+    fs.create(_jvm_handles(spark).Path(path, "_SUCCESS"), True).close()
+
+
+def _write_parquet_file(
+    spark: SparkSession, directory: str, name: str, table,
+    use_dictionary: bool = True,
+) -> None:
+    """Write the Arrow ``table`` as the snappy parquet file ``name`` in
+    ``directory`` (made if missing), driver-side through the Hadoop FS
+    API: the bytes land under a hidden staged name, which Spark's
+    readers and the committed-``part-`` checks skip, and are RENAMED
+    into place. A writer killed before the rename leaves no committed
+    file."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    sink = pa.BufferOutputStream()
+    pq.write_table(
+        table, sink, compression="snappy", use_dictionary=use_dictionary
     )
+    Path = _jvm_handles(spark).Path
+    fs, _ = _hadoop_fs(spark, directory)
+    jtmp = Path(directory, f".{name}.staged")
     out = fs.create(jtmp, True)
     try:
-        out.write(bytearray(buf))
+        out.write(bytearray(sink.getvalue().to_pybytes()))
     finally:
         out.close()
-    jfinal = jvm.org.apache.hadoop.fs.Path(
-        path, "part-00000-ralf.snappy.parquet"
-    )
-    if not fs.rename(jtmp, jfinal):
-        raise IOError(f"sidecar commit rename failed under {path}")
-    fs.create(
-        jvm.org.apache.hadoop.fs.Path(path, "_SUCCESS"), True
-    ).close()
+    _rename(fs, jtmp, Path(directory, name))
 
 
 class ConcurrentWriterError(RuntimeError):
@@ -882,7 +913,24 @@ def upsert_into(
     (``layout.write_batch``) under the writer lease; it reads no state.
     ``FeatureStore.read_parquet`` reads the union, whose ``latest()``,
     ``bulk_query()`` and point reads are the state. A replay appends
-    duplicate winners, which ``latest()`` folds away. Once more than
+    duplicate winners, which ``latest()`` folds away.
+
+    Two spellings write the append. A batch whose decoded rows are
+    shown small (``sizing.fits_driver``, refused by
+    ``SPARK_GRAFT_SMALL_CORPUS=0``) skips the shuffle and the write job,
+    as the reference's in-process upsert runs no job: Spark reads the
+    batch into Arrow on the driver (``toArrow``, one job, plus one
+    aggregate when the footers cannot bound the decoded bytes), the
+    driver picks each key's newest row in ``latest()``'s order
+    (``store.newest_positions``) and writes the winners as one
+    plain-encoded file, staged and renamed into a fresh ``_batch=``
+    directory (:func:`_write_parquet_file`), which the point index's
+    footer proof admits. A killed writer leaves at most an empty batch
+    directory, which reads as nothing and folds away at the next
+    compaction. Every other batch — past the byte budget, of unknown
+    size, nondeterministic, or with a column type the point index does
+    not serve — runs ``batch.latest()`` in Spark and lands through
+    ``layout.write_batch`` (:func:`_small_winners`). Once more than
     ``layout.AUTO_MAINTAIN_BATCHES`` tags exist, ``compact_tiered``
     folds the older tags into one with ``latest()``; a crash inside it
     leaves both copies or one, which read the same, and the next upsert
@@ -930,13 +978,45 @@ def upsert_into(
             return
         batch = _conform_batch(spark, path, batch, meta)
         layout.recover_compaction(spark, path)
-        layout.write_batch(
-            batch.latest().df, path, f"upsert-{uuid.uuid4().hex}"
-        )
+        tag = uuid.uuid4().hex
+        winners = _small_winners(batch)
+        if winners is None:
+            layout.write_batch(batch.latest().df, path, f"upsert-{tag}")
+        elif winners.num_rows:
+            _write_parquet_file(
+                spark, f"{path.rstrip('/')}/_batch=upsert-{tag}",
+                f"part-00000-{tag}.c000.snappy.parquet", winners,
+                use_dictionary=False,
+            )
         if layout.batch_tag_count(spark, path) > layout.AUTO_MAINTAIN_BATCHES:
             layout.compact_tiered(
                 spark, path, transform=lambda df: batch._with(df).latest().df
             )
+
+
+def _small_winners(batch: FeatureTable):
+    """``batch.latest()`` picked on the driver, as an Arrow table in the
+    batch's schema, or None when the Spark spelling runs instead: the
+    point index could not rank the batch in Arrow
+    (``store.arrow_key_type``: another key type, an ordering column
+    whose Arrow order is not Spark's, or a column type it does not
+    serve), or ``sizing.fits_driver`` does not show the batch's decoded
+    rows small. Spark reads the batch (``toArrow``), so every read
+    option, cast and timestamp encoding is Spark's."""
+    import pyarrow as pa
+
+    from ralf_spark.plans import sizing
+    from ralf_spark.store import arrow_key_type, newest_positions
+
+    x = sizing.EXPANSION
+    if arrow_key_type(batch) is None or not sizing.fits_driver(
+        batch.df, per_byte=x["index_byte"], per_row=x["index_row"]
+    ):
+        return None
+    tbl = batch.df.toArrow()
+    order = [c for c in (batch.ts, batch.seq) if c]
+    pos = newest_positions(tbl, batch.key, order)
+    return tbl.take(pa.array(sorted(pos.values()), pa.int64()))
 
 
 def _upsert_state_path(path: str) -> str:

@@ -231,11 +231,14 @@ def write_batch(
 
 def _batch_dirs(spark: SparkSession, root: str) -> dict[str, list]:
     """Map batch tag -> [FileStatus] of its ``_batch=<tag>`` directories
-    under ``root``, matching both the flat layout (``root/_batch=t``, the
-    MinHashIndex projections) and one nesting level (``root/cell=c/
-    _batch=t``, the IvfIndex cell tree)."""
+    under ``root``, in the flat layout (``root/_batch=t``: the
+    MinHashIndex projections, the logs, the upsert state) or one
+    nesting level down (``root/cell=c/_batch=t``, the IvfIndex cell
+    tree). A store is one or the other, never both, so the nested glob,
+    which lists inside every top-level directory, runs only when the
+    flat one finds no batch directory."""
     fs, _ = _hadoop_fs(spark, root)
-    jvm_path = spark._jvm.org.apache.hadoop.fs.Path  # type: ignore[attr-defined]
+    jvm_path = connectors._jvm_handles(spark).Path
     out: dict[str, list] = {}
     for pattern in (f"{root}/_batch=*", f"{root}/*/_batch=*"):
         for st in fs.globStatus(jvm_path(pattern)) or []:
@@ -243,6 +246,8 @@ def _batch_dirs(spark: SparkSession, root: str) -> dict[str, list]:
                 continue
             tag = st.getPath().getName().split("=", 1)[1]
             out.setdefault(tag, []).append(st)
+        if out:
+            break
     return out
 
 
@@ -444,7 +449,7 @@ def compact_batch_partitions(
         "|".join(sorted(sources)).encode()
     ).hexdigest()[:10]
     fs, _ = _hadoop_fs(spark, root)
-    jvm_path = spark._jvm.org.apache.hadoop.fs.Path  # type: ignore[attr-defined]
+    jvm_path = connectors._jvm_handles(spark).Path
     files: list[str] = []
     for tag in sources:
         for st in dirs[tag]:
@@ -782,10 +787,22 @@ class BatchStore:
         the bare projection. ``exclude_tag`` drops that batch: on a
         replay its stored rows are the FAILED previous attempt of the
         batch being re-added, about to be overwritten — not "stored"."""
-        files = connectors._list_parquet_files(spark, f"{self.path}/{sub}")
+        return self.sized_snapshot(spark, sub, exclude_tag)[0]
+
+    def sized_snapshot(
+        self, spark: SparkSession, sub: str, exclude_tag: str | None = None
+    ) -> tuple[DataFrame | None, list[tuple[str, int]]]:
+        """:meth:`snapshot` and the sized listing ``[(path, on-disk
+        bytes)]`` of the files it reads, for a size gate
+        (``sizing.provably_small``) that would otherwise list them
+        again."""
+        sized = connectors._list_parquet_files_sized(
+            spark, f"{self.path}/{sub}"
+        )
         if exclude_tag is not None:
-            files = [f for f in files if f"/_batch={exclude_tag}/" not in f]
-        return spark.read.parquet(*files) if files else None
+            sized = [s for s in sized if f"/_batch={exclude_tag}/" not in s[0]]
+        files = [f for f, _ in sized]
+        return (spark.read.parquet(*files) if files else None), sized
 
     def pin_meta(
         self, spark: SparkSession, write_if_missing: bool = True

@@ -126,8 +126,9 @@ def ensure_parallelism(df: DataFrame, min_partitions: int | None = None) -> Data
         #    sampled stratum is unrepresentatively large, which costs
         #    some idle cores locally — strictly cheaper than shuffling
         #    100 TB to fix nothing.
-        jvm = spark._jvm  # type: ignore[attr-defined]
-        hconf = spark._jsc.hadoopConfiguration()  # type: ignore[attr-defined]
+        from ralf_spark.connectors import _jvm_handles
+
+        jvm = _jvm_handles(spark)
         n = len(files)
         k = min(64, n)
         step = n / k
@@ -136,8 +137,8 @@ def ensure_parallelism(df: DataFrame, min_partitions: int | None = None) -> Data
         total = floor
         min_size = None
         for f in sample:
-            jpath = jvm.org.apache.hadoop.fs.Path(f)
-            size = jpath.getFileSystem(hconf).getFileStatus(jpath).getLen()
+            jpath = jvm.Path(f)
+            size = jpath.getFileSystem(jvm.conf).getFileStatus(jpath).getLen()
             total += size + open_cost
             min_size = size if min_size is None else min(min_size, size)
             if total >= budget:

@@ -54,6 +54,57 @@ def _binary_string(dt: T.DataType | None) -> bool:
     return isinstance(dt, T.StringType) and dt.collation == "UTF8_BINARY"
 
 
+def arrow_key_type(table: FeatureTable) -> type | None:
+    """``int`` or ``str``, the Python type of ``table``'s key, when the
+    driver may rank and serve ``table``'s rows in Arrow exactly as Spark
+    does, else None: the table has a key and an order, no repeated
+    column name, an integral or binary-collated string key, ts and seq
+    of :data:`_ORDER_TYPES` or binary-collated strings, and only
+    :data:`_SERVED_TYPES` columns, nested ones included."""
+    order = [c for c in (table.ts, table.seq) if c]
+    fields = table.df.schema.fields
+    types = {f.name: f.dataType for f in fields}
+    if table.key is None or not order or len(types) < len(fields):
+        return None
+    if not all(
+        isinstance(types.get(c), _ORDER_TYPES) or _binary_string(types.get(c))
+        for c in order
+    ) or not all(_served(dt) for dt in types.values()):
+        return None
+    key_dt = types.get(table.key)
+    if isinstance(key_dt, T.IntegralType):
+        return int
+    return str if _binary_string(key_dt) else None
+
+
+def newest_positions(tbl, key: str, order: list, candidates=None) -> dict:
+    """key -> position of its newest row in the Arrow table ``tbl``,
+    among the rows at positions ``candidates`` (every row when None), in
+    ``FeatureTable.latest()``'s order: the ``order`` columns (ts, then
+    seq) descending, NULL below every value. Arrow's order is Spark's
+    for :data:`_ORDER_TYPES` and binary-collated strings. A NULL key is
+    the key None and keeps one winner, as ``groupBy`` does."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    cand = pa.array(
+        range(tbl.num_rows) if candidates is None else candidates, pa.int64()
+    )
+    sub = tbl.select([key, *order]).take(cand)
+    ranked = pc.sort_indices(
+        sub, sort_keys=[(c, "descending") for c in order],
+        null_placement="at_end",
+    )
+    keys = sub[key].take(ranked)
+    # the dict keeps the last position it is given for a key: feed the
+    # ranking newest-last
+    return dict(zip(
+        reversed(keys.to_pylist() if keys.null_count
+                 else keys.to_numpy().tolist()),
+        reversed(cand.take(ranked).to_numpy().tolist()),
+    ))
+
+
 class _KeyIndex:
     """The point index of one registration: the table copied to the
     driver as Arrow, and each key's newest row position — ralf's point
@@ -95,25 +146,10 @@ class _KeyIndex:
         import pyarrow.compute as pc
 
         order = [c for c in (table.ts, table.seq) if c]
-        if table.key is None or not order:
+        key_type = arrow_key_type(table)
+        if key_type is None:
             return None
         schema = table.df.schema
-        types = {f.name: f.dataType for f in schema.fields}
-        if len(types) < len(schema.fields):
-            return None  # a repeated column name
-        key_dt = types.get(table.key)
-        if isinstance(key_dt, T.IntegralType):
-            key_type: type = int
-        elif _binary_string(key_dt):
-            key_type = str
-        else:
-            return None
-        if not all(
-            isinstance(types.get(c), _ORDER_TYPES)
-            or _binary_string(types.get(c))
-            for c in order
-        ) or not all(_served(f.dataType) for f in schema.fields):
-            return None
         files = _scan_files(table.df)
         fold = (
             seed is not None and files is not None
@@ -158,22 +194,10 @@ class _KeyIndex:
 
     def _rank(self, candidates) -> None:
         """Point each key among the rows at positions ``candidates`` at
-        its newest one in latest()'s order (ts, then seq, descending,
-        NULL below every value); the dict keeps the last position it is
-        given for a key."""
-        import pyarrow as pa
-        import pyarrow.compute as pc
-
-        cand = pa.array(candidates, pa.int64())
-        sub = self.tbl.select([self.key, *self.order]).take(cand)
-        ranked = pc.sort_indices(
-            sub, sort_keys=[(c, "descending") for c in self.order],
-            null_placement="at_end",
+        its newest one (:func:`newest_positions`)."""
+        self.pos.update(
+            newest_positions(self.tbl, self.key, self.order, candidates)
         )
-        self.pos.update(zip(
-            reversed(sub[self.key].take(ranked).to_numpy().tolist()),
-            reversed(cand.take(ranked).to_numpy().tolist()),
-        ))
 
     def _fold(self, new, files: dict, sized: dict) -> "_KeyIndex":
         """This index with the rows of ``new`` (an Arrow table of the

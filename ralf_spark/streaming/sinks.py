@@ -84,7 +84,10 @@ def foreach_batch_latest_upsert(
     (ts, seq) and append them to the state as one ``_batch`` partition
     (``connectors.upsert_into``); ``FeatureStore.read_parquet(path)
     .latest()`` is the state. The batch analog of the reference's
-    per-record upsert (``ralf/v2/table_state.py:29-46``).
+    per-record upsert (``ralf/v2/table_state.py:29-46``). A micro-batch
+    whose source reports a size within ``sizing.SMALL_INPUT_BYTES`` (a
+    file stream does, the rate source does not) takes ``upsert_into``'s
+    driver-side spelling, with no shuffle and no write job.
 
     ``table_format="delta"`` routes each micro-batch through a real
     ``MERGE INTO`` (atomic, touched-files-only) instead of the parquet
@@ -257,7 +260,7 @@ def _swap_staged_buckets(
     manifest go. A failed rename raises with both still in place, so the
     next upsert's :func:`_recover_publish` completes the swap."""
     fs, _ = connectors._hadoop_fs(spark, path)
-    jvm_path = spark._jvm.org.apache.hadoop.fs.Path  # type: ignore[attr-defined]
+    jvm_path = connectors._jvm_handles(spark).Path
     for b in buckets:
         jstaged = jvm_path(f"{staging}/{STATE_BUCKET_COL}={b}")
         if not fs.exists(jstaged):
@@ -289,7 +292,7 @@ def _recover_publish(spark: SparkSession, path: str) -> None:
     fs, jpath = connectors._hadoop_fs(spark, path)
     if not fs.exists(jpath):
         return
-    jvm_path = spark._jvm.org.apache.hadoop.fs.Path  # type: ignore[attr-defined]
+    jvm_path = connectors._jvm_handles(spark).Path
     mpath = f"{path}/{_PUBLISH_MANIFEST_NAME}"
     committed_staging = None
     if fs.exists(jvm_path(mpath)):
@@ -497,7 +500,7 @@ def _bucketed_fold_upsert(
             .partitionBy(STATE_BUCKET_COL)
             .parquet(staging)
         )
-        jvm_path = spark._jvm.org.apache.hadoop.fs.Path  # type: ignore[attr-defined]
+        jvm_path = connectors._jvm_handles(spark).Path
         # swap only buckets the merge actually staged: a bucket absent
         # from the merged frame keeps its current directory untouched
         # (same semantics the dynamic overwrite had)

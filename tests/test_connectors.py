@@ -788,3 +788,38 @@ def test_footer_rows_via_file_scheme_hadoop_path(
     assert sizing._footer_meta_remote(
         spark, f"file://{local}"
     ).num_rows == 1234
+
+
+def test_jvm_handles_resolved_once_per_context(monkeypatch):
+    """The filesystem helpers' JVM handles are looked up once per live
+    SparkContext, shared by its sessions, and looked up again for a
+    context started after a stop: a dead context's Configuration is
+    never reused."""
+    from ralf_spark import connectors
+
+    lookups = []
+
+    class Package:
+        def __getattr__(self, name):
+            lookups.append(name)
+            return Package()
+
+    class Context:
+        def hadoopConfiguration(self):
+            lookups.append("conf")
+            return object()
+
+    class Session:
+        def __init__(self, jsc):
+            self._jsc, self._jvm = jsc, Package()
+
+    monkeypatch.setattr(connectors, "_JVM_HANDLES", None)
+    first = Context()
+    handles = connectors._jvm_handles(Session(first))
+    n = len(lookups)
+    assert n > 0
+    assert connectors._jvm_handles(Session(first)) is handles  # same context
+    assert len(lookups) == n
+    restarted = connectors._jvm_handles(Session(Context()))
+    assert len(lookups) == 2 * n
+    assert restarted.conf is not handles.conf

@@ -430,3 +430,34 @@ def test_minhash_tier2_full_fold(spark, tmp_path):
     assert len(comp) <= COMPACTED_TIER_LIMIT
     idx2 = MinHashIndex(path, num_perm=16, bands=8, hash_fn="xxhash64")
     assert _rows(idx2._store.snapshot(spark, "sigs")) == want_rows
+
+
+def test_minhash_add_and_check_list_sigs_once(spark, tmp_path, monkeypatch):
+    """``MinHashIndex.add`` and ``check`` of a parquet batch, whose gate
+    sizes the stored signatures too, take that size from the snapshot's
+    own listing: ``sigs/`` is listed once per call."""
+    from ralf_spark import connectors
+
+    listed = []
+    real = connectors._list_parquet_files_sized
+
+    def listing(spark_, path):
+        listed.append(path.rstrip("/").rsplit("/", 1)[-1])
+        return real(spark_, path)
+
+    def docs(ids):
+        p = str(tmp_path / f"docs{ids[0]}")
+        _docs(spark, ids).df.write.parquet(p)
+        return FeatureTable(spark.read.parquet(p), key="doc_id")
+
+    idx = MinHashIndex(
+        str(tmp_path / "idx"), num_perm=16, bands=8, hash_fn="xxhash64"
+    )
+    idx.build(docs(range(0, 4)))
+    batches = docs(range(4, 8)), docs(range(8, 10))
+    monkeypatch.setattr(connectors, "_list_parquet_files_sized", listing)
+    idx.add(batches[0]).collect()
+    assert listed.count("sigs") == 1
+    listed.clear()
+    idx.check(batches[1]).collect()
+    assert listed.count("sigs") == 1

@@ -211,3 +211,48 @@ def test_cluster_by_zorder_prunes_both_dims(spark, tmp_path):
 
     with pytest.raises(ValueError):
         cluster_by_zorder(df, ["a"], num_files=4, path=str(tmp_path / "x"))
+
+
+def test_batch_dirs_globs_once_on_a_flat_store(spark, tmp_path, monkeypatch):
+    """A flat ``_batch=`` store is listed with one ``globStatus``; a
+    cell tree, which the flat glob misses, is found by the nested glob
+    and still counts and compacts its tags."""
+    from ralf_spark import layout
+
+    globs = []
+    real = layout._hadoop_fs
+
+    class Counting:
+        def __init__(self, fs):
+            self.fs = fs
+
+        def globStatus(self, pattern):
+            globs.append(pattern.toString())
+            return self.fs.globStatus(pattern)
+
+        def __getattr__(self, name):
+            return getattr(self.fs, name)
+
+    def hadoop_fs(spark_, path):
+        fs, jpath = real(spark_, path)
+        return Counting(fs), jpath
+
+    monkeypatch.setattr(layout, "_hadoop_fs", hadoop_fs)
+    df = spark.createDataFrame([(i, i % 2) for i in range(6)], "v long, cell int")
+    flat, tree = str(tmp_path / "flat"), str(tmp_path / "tree")
+    for tag in ("a", "b", "c"):
+        layout.write_batch(df.drop("cell"), flat, tag)
+        layout.write_batch(df, tree, tag, ("cell", "_batch"))
+    assert layout.batch_tag_count(spark, flat) == 3
+    assert len(globs) == 1
+    globs.clear()
+    assert layout.batch_tag_count(spark, tree) == 3
+    assert len(globs) == 2
+    out = layout.compact_batch_partitions(spark, tree, keep_last=1)
+    assert out is not None and sorted(out["sources"]) == ["a", "b"]
+    assert layout.batch_tag_count(spark, tree) == 2
+    assert sorted(glob.glob(f"{tree}/cell=*/_batch=c")) == [
+        f"{tree}/cell=0/_batch=c", f"{tree}/cell=1/_batch=c"
+    ]
+    rows = spark.read.parquet(tree).groupBy("cell").count().collect()
+    assert sorted(map(tuple, rows)) == [(0, 9), (1, 9)]
