@@ -895,20 +895,16 @@ def assert_no_concurrent_adds(
         )
 
 
-def upsert_into(
-    path: str,
-    batch: FeatureTable,
-    table_format: str = "parquet",
-) -> None:
+def upsert_into(path: str, batch: FeatureTable) -> None:
     """Batch incremental upsert: merge a new batch of events into the
     persisted latest-per-key state at ``path`` — the nightly/incremental
     maintenance loop (the reference's per-record upsert,
     ``ralf/v2/table_state.py:29-46``, amortized over a batch). Idempotent
     for replays (re-upserting the same batch leaves the state as it was).
 
-    ``table_format="parquet"`` (default): the state is a base plus a log
-    of per-batch winners, like the reference's state table, which takes
-    each record and never rewrites itself. Each upsert appends only
+    The state is a base plus a log of per-batch winners, like the
+    reference's state table, which takes each record and never rewrites
+    itself. Each upsert appends only
     ``batch.latest()`` as a fresh ``_batch=<tag>`` partition
     (``layout.write_batch``) under the writer lease; it reads no state.
     ``FeatureStore.read_parquet`` reads the union, whose ``latest()``,
@@ -948,22 +944,9 @@ def upsert_into(
     up-castable to it (then cast, as ``unionByName`` would widen it);
     anything else raises before a byte is written.
 
-    ``table_format="delta"``: the production spelling — a real
-    ``MERGE INTO`` against a Delta table at ``path``. Atomic (readers see
-    pre- or post-merge snapshots, never partial), and the transaction
-    rewrites only the files containing matched keys instead of the whole
-    table. Requires the ``delta-spark`` package + Delta-enabled session;
-    both branches implement the same relational spec
-    (:func:`merge_upsert_plan` — contract-tested against each other).
+    The state's ``latest()`` equals :func:`merge_upsert_plan` over the
+    previous state and the batch; the contract tests pin it there.
     """
-    if table_format == "delta":
-        _delta_merge_upsert(path, batch)
-        return
-    if table_format != "parquet":
-        raise ValueError(
-            f"unsupported table_format {table_format!r} "
-            "(supported: 'parquet', 'delta')"
-        )
     import uuid
 
     from ralf_spark import layout
@@ -1128,12 +1111,12 @@ def merge_upsert_condition(
     order_cols: Sequence[str], src: str = "s", tgt: str = "t"
 ) -> str:
     """SQL condition under which the source (batch) row beats the stored
-    target row — the WHEN MATCHED guard of the upsert MERGE, and the exact
-    ordering contract of ``FeatureTable.latest``: lexicographic >= on the
-    ordering columns with NULL ordered below every value (struct
-    comparison semantics of the ``max_by`` spelling). ``>=`` (not ``>``)
-    so a replayed batch re-applies its own winners — a no-op write, which
-    keeps the MERGE idempotent."""
+    target row — the WHEN MATCHED guard of :func:`merge_upsert_plan`, and
+    the exact ordering contract of ``FeatureTable.latest``: lexicographic
+    >= on the ordering columns with NULL ordered below every value
+    (struct comparison semantics of the ``max_by`` spelling). ``>=`` (not
+    ``>``) so a replayed batch re-applies its own winners, which keeps
+    the merge idempotent."""
     if not order_cols:
         return "true"
 
@@ -1162,14 +1145,13 @@ def merge_upsert_plan(
 ) -> DataFrame:
     """The relational semantics of ``MERGE INTO current t USING batch s ON
     t.key <=> s.key WHEN MATCHED AND <winner> THEN UPDATE SET * WHEN NOT
-    MATCHED THEN INSERT *`` as a plain DataFrame plan — the single spec
-    both ``upsert_into`` branches implement. The contract tests pin the
-    parquet branch to THIS plan; the delta branch emits the statement
-    itself, with :func:`merge_upsert_condition` as the matched guard.
+    MATCHED THEN INSERT *`` as a plain DataFrame plan — the spec
+    ``upsert_into``'s state must equal after every batch. The contract
+    tests fold the same batches through both and compare.
 
     One full-outer co-partitioned join on the key; per column the winner
-    side is chosen by the same condition string the MERGE uses (parsed
-    with ``F.expr``, so the spec and the statement cannot drift).
+    side is chosen by :func:`merge_upsert_condition` (parsed with
+    ``F.expr``).
     """
     cols = current.columns
     t = current.withColumn("_in_t", F.lit(True)).alias("t")
@@ -1186,37 +1168,6 @@ def merge_upsert_plan(
             .alias(c)
             for c in cols
         ]
-    )
-
-
-def _delta_merge_upsert(path: str, batch: FeatureTable) -> None:
-    """``MERGE INTO`` the Delta table at ``path`` (created on first
-    upsert). Import-guarded: this environment has no delta-spark, so the
-    branch raises with the dependency named; the statement itself is
-    pinned by the shared :func:`merge_upsert_plan` spec + the condition
-    string tests, which run everywhere."""
-    try:
-        from delta.tables import DeltaTable
-    except ImportError as exc:  # pragma: no cover - env has no delta-spark
-        raise RuntimeError(
-            "upsert_into(table_format='delta') requires the delta-spark "
-            "package and a Delta-enabled SparkSession; install delta-spark "
-            "or use the default parquet branch"
-        ) from exc
-    spark = batch.df.sparkSession
-    src = batch.latest().df
-    if not DeltaTable.isDeltaTable(spark, path):
-        src.write.format("delta").mode("errorifexists").save(path)
-        return
-    key = batch.key
-    order_cols = [c for c in (batch.ts, batch.seq) if c is not None]
-    (
-        DeltaTable.forPath(spark, path)
-        .alias("t")
-        .merge(src.alias("s"), f"t.{key} <=> s.{key}")
-        .whenMatchedUpdateAll(condition=merge_upsert_condition(order_cols))
-        .whenNotMatchedInsertAll()
-        .execute()
     )
 
 
@@ -1237,9 +1188,10 @@ def _staged_overwrite(
     the two renames leaves no ``path``; :func:`_recover_staged_publish`
     (run here first and by :func:`_try_read_parquet`) rolls it forward
     from the complete staging directory or back from ``__retired__``.
-    On local and HDFS filesystems each rename is atomic; on object
-    stores (S3A) a directory rename is a copy and is not —
-    ``upsert_into(table_format="delta")`` is the atomic spelling there.
+    On local and HDFS filesystems each rename is atomic. On object
+    stores (S3A) a directory rename is a file-by-file copy, so the
+    publish is not atomic there: a reader racing the copy can see part
+    of the new directory.
 
     ``on_staged(staging_path)`` runs between the write and the publish:
     a sidecar it writes into the staging directory publishes with the

@@ -135,21 +135,13 @@ def _perm_hash(p: int, hash_fn: str = "md5"):
     return lambda s: stable_hash64(s, salt=f"mh{p}")
 
 
-def _int_perm_hash(p: int):
-    # Permutation over an already-hashed 64-bit shingle: one multi-arg
-    # xxhash64 over (bigint, int) — fixed-width input, no string walk.
-    # (Multiply-add mixing would be cheaper still, but bigint overflow
-    # throws under Spark 4's default ANSI mode.)
-    return lambda x: F.xxhash64(x, F.lit(p))
-
-
 def _sig_array_sql(sh_col: str, num_perm: int, hash_fn: str) -> str:
     """ONE-expression SQL spelling of the ``num_perm`` MinHash transforms
     over a bound shingle column (r15): semantically identical to the
     ``F.array(*[F.array_min(F.transform(...)) ...])`` Column loop — the
-    md5 term is :func:`stable_hash64`'s exact chain, the xxhash64 term is
-    :func:`_int_perm_hash`'s — but parsed JVM-side in a single call. The
-    Column-API loop cost ~340 ms of py4j round trips per query
+    md5 term is :func:`stable_hash64`'s exact chain, the xxhash64 term a
+    multi-arg ``xxhash64(shingle, p)`` — but parsed JVM-side in a single
+    call. The Column-API loop cost ~340 ms of py4j round trips per query
     CONSTRUCTION at num_perm=16 (measured r15); the expr spelling is
     ~50 ms with a bit-identical schema and values (oracle-gated)."""
     from ralf_spark.functions.hashing import HEX_CHARS
@@ -175,9 +167,12 @@ def _sig_array_sql(sh_col: str, num_perm: int, hash_fn: str) -> str:
 def _band_array_sql(
     sig_col: str, bands: int, rows_per_band: int, hash_fn: str
 ) -> str:
-    """ONE-expression SQL spelling of :func:`lsh_band_keys` over a bound
-    signature column (r15) — same single-parse rationale as
-    :func:`_sig_array_sql`, values bit-identical."""
+    """LSH band keys as ONE SQL expression over a bound signature column
+    (r15; same single-parse rationale as :func:`_sig_array_sql`): split
+    the signature into ``bands`` bands of ``rows_per_band`` values, each
+    hashed to a bucket key (md5 → 32-char string, the oracle mode;
+    xxhash64 → bigint, the production mode). Returns
+    array<struct<band,key>> ready to explode."""
     entries = []
     for b in range(bands):
         cols = ", ".join(
@@ -192,27 +187,6 @@ def _band_array_sql(
         )
         entries.append(f"struct({b} AS band, {key} AS key)")
     return f"array({', '.join(entries)})"
-
-
-def lsh_band_keys(
-    sig: Column, bands: int, rows_per_band: int, hash_fn: str = "md5"
-) -> Column:
-    """Split a signature into ``bands`` bands of ``rows_per_band`` values;
-    each band hashes to a bucket key (md5 → 32-char string, the oracle
-    mode; xxhash64 → bigint, the cheap production mode). Returns
-    array<struct<band,key>> ready to explode."""
-    entries = []
-    for b in range(bands):
-        cols = [
-            F.element_at(sig, b * rows_per_band + r + 1).cast("string")
-            for r in range(rows_per_band)
-        ]
-        concat = F.concat_ws(",", *cols)
-        key = F.xxhash64(concat) if hash_fn == "xxhash64" else F.md5(concat)
-        entries.append(
-            F.struct(F.lit(b).alias("band"), key.alias("key"))
-        )
-    return F.array(*entries)
 
 
 def near_dup_pairs(

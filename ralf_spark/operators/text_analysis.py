@@ -33,10 +33,6 @@ STOPWORDS: dict[str, tuple[str, ...]] = {
 TOKEN_REGEX = "[a-z]+|[0-9]+"
 
 
-def n_tokens(text: Column) -> Column:
-    return F.size(tokens(text))
-
-
 def stopword_count(text: Column, lang: str) -> Column:
     words = STOPWORDS[lang]
     return F.size(F.filter(tokens(text), lambda t: t.isin(*words)))
@@ -249,35 +245,15 @@ def simhash_fingerprint_sql(
     return f"CAST(CASE WHEN len({sh}) > 0 THEN {parts} ELSE 0 END AS BIGINT)"
 
 
-def winnow_fingerprints(text: Column, k: int = 3, w: int = 4) -> Column:
-    """Winnowing fingerprint set (Schleimer/Wilkerson/Aiken, SIGMOD'03 —
-    the MOSS local fingerprinting scheme; the "rolling hash" document
-    fingerprint family).
-
-    Positional word k-gram hashes → every window of ``w`` consecutive
-    hashes contributes its minimum → the distinct minima are the
-    fingerprint set. Guarantees any shared run of ``w + k - 1`` tokens
-    between two documents yields at least one shared fingerprint, while
-    keeping ~2/(w+1) of the k-gram hashes. Pure higher-order expressions
-    (transform/slice/array_min) — scan-side, no shuffle, codegen-friendly.
-    Documents with at least one k-gram but fewer than ``w`` windows
-    fingerprint as the global minimum (the scheme's short-input rule).
-
-    NOTE: as a single column expression the shingle+md5 pipeline sits
-    inside the per-window lambda and is re-evaluated for EVERY window —
-    O(windows × shingles) md5 calls (measured ~40s for 500 docs). Fine
-    for small frames/tests; on real data use
-    :func:`add_winnow_fingerprints`, which hashes once per document.
-    """
-    sh = word_shingles(tokens(text), k)
-    # explicit 1-arg lambda: stable_hash64 has a defaulted second param,
-    # and pyspark binds one lambda variable per positional parameter.
-    hs = F.transform(sh, lambda s: stable_hash64(s))
-    return winnow_select(hs, w)
-
-
 def winnow_select(hashes: Column, w: int = 4) -> Column:
-    """Window-minimum fingerprint selection over a k-gram hash array.
+    """Window-minimum fingerprint selection over a k-gram hash array —
+    the winnowing scheme (Schleimer/Wilkerson/Aiken, SIGMOD'03, MOSS's
+    local fingerprinting): every window of ``w`` consecutive hashes
+    contributes its minimum, and the distinct minima are the fingerprint
+    set, so any shared run of ``w + k - 1`` tokens between two documents
+    yields at least one shared fingerprint. Arrays with at least one
+    hash but fewer than ``w`` windows fingerprint as their minimum (the
+    scheme's short-input rule).
 
     Pass a BOUND column (materialized by a prior projection) on real
     data: a bound attribute is evaluated once per row, so the per-window
@@ -301,12 +277,14 @@ def add_winnow_fingerprints(
     k: int = 3,
     w: int = 4,
 ):
-    """Winnowing as a DataFrame transform — the form to use on real data.
+    """Winnowing fingerprints (:func:`winnow_select` over word ``k``-gram
+    hashes) as a DataFrame transform.
 
     Materializes the k-gram hash array in its OWN projection (one md5 per
     shingle), then runs the window-minimum selection over the stored
-    longs — same single-hash-pass discipline as :func:`add_simhash`
-    (measured ~50× faster than the inline expression at sf0.01)."""
+    longs — same single-hash-pass discipline as :func:`add_simhash`. As
+    one inline expression the hash pipeline would be re-evaluated per
+    window (measured ~50× slower at sf0.01)."""
     hs_df = df.withColumn(
         "__wh",
         F.transform(

@@ -278,7 +278,8 @@ def incremental_minhash_index_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _docs_par(spark, sf_dir)
     tag = _hl.md5(sf_dir.encode()).hexdigest()[:8]
     path = _scratch(f"mh_index_{tag}_")
-    index = MinHashIndex(path, num_perm=16, bands=8)  # hash_fn: env default
+    # md5 pinned: the DuckDB oracle replays md5 hashing in either mode
+    index = MinHashIndex(path, num_perm=16, bands=8, hash_fn="md5")
     even = FeatureTable(
         docs.df.where(F.col("doc_id") % 2 == 0), key="doc_id"
     )
@@ -310,7 +311,7 @@ def minhash_index_check_serving_q(spark: SparkSession, sf_dir: str) -> DataFrame
     docs = _docs_par(spark, sf_dir)
     tag = _hl.md5(sf_dir.encode()).hexdigest()[:8]
     path = _scratch(f"mh_check_{tag}_")
-    index = MinHashIndex(path, num_perm=16, bands=8)
+    index = MinHashIndex(path, num_perm=16, bands=8, hash_fn="md5")
     even = FeatureTable(
         docs.df.where(F.col("doc_id") % 2 == 0), key="doc_id"
     )
@@ -347,7 +348,7 @@ def concurrent_minhash_adds_serial_equiv_q(
     docs = _docs_par(spark, sf_dir)
     tag = _hl.md5(sf_dir.encode()).hexdigest()[:8]
     idx = MinHashIndex(
-        _scratch(f"mh_conc_{tag}_"), num_perm=16, bands=8,
+        _scratch(f"mh_conc_{tag}_"), num_perm=16, bands=8, hash_fn="md5",
         auto_maintain=0, concurrent_adds=True,
     )
     part = lambda m: FeatureTable(  # noqa: E731
@@ -403,7 +404,7 @@ def streaming_minhash_screen_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _docs_par(spark, sf_dir)
     tag = _hl.md5(sf_dir.encode()).hexdigest()[:8]
     index = MinHashIndex(_scratch(f"mh_screen_{tag}_"), num_perm=16,
-                         bands=8)
+                         bands=8, hash_fn="md5")
     index.build(FeatureTable(
         docs.df.where(F.col("doc_id") % 2 == 0), key="doc_id"
     ))
@@ -496,7 +497,7 @@ def simhash_near_dup_pairs_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     # blocks pinned to the minimum-band spelling this gate documents
     # (r9: the default auto-selects from the corpus count)
     return simhash_near_dup_pairs(
-        docs, bits=48, max_hamming=3, blocks=4
+        docs, bits=48, max_hamming=3, blocks=4, hash_fn="md5"
     ).orderBy("id1", "id2")
 
 
@@ -514,7 +515,7 @@ def simhash_block_pairs_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     argument for the wider keys end-to-end."""
     docs = _docs_par(spark, sf_dir)
     return simhash_near_dup_pairs(
-        docs, bits=48, max_hamming=3, blocks=6
+        docs, bits=48, max_hamming=3, blocks=6, hash_fn="md5"
     ).orderBy("id1", "id2")
 
 

@@ -799,7 +799,7 @@ def cdc_chunk_documents_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ralf_spark.operators.text_analysis import cdc_chunks
 
     docs = _docs_par(spark, sf_dir)
-    return cdc_chunks(docs.df).orderBy("doc_id", "chunk_idx")
+    return cdc_chunks(docs.df, hash_fn="md5").orderBy("doc_id", "chunk_idx")
 
 
 def _cdc_dedup_oracle() -> str:
@@ -819,7 +819,7 @@ def cdc_chunk_dedup_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ralf_spark.operators.text_analysis import cdc_chunk_dedup_stats
 
     docs = _docs_par(spark, sf_dir)
-    return cdc_chunk_dedup_stats(docs.df).orderBy("doc_id")
+    return cdc_chunk_dedup_stats(docs.df, hash_fn="md5").orderBy("doc_id")
 
 
 @query(

@@ -5,7 +5,8 @@ algorithms and the cross-engine determinism argument; each query here
 replays bit-for-bit in DuckDB, estimator output included — which is the
 point: an *estimator* whose result is part of the correctness contract,
 not just "close to exact". The winnowing queries cover the rolling-hash
-local-fingerprint family (``operators.text_analysis.winnow_fingerprints``).
+local-fingerprint family
+(``operators.text_analysis.add_winnow_fingerprints``).
 """
 
 from __future__ import annotations
@@ -32,7 +33,7 @@ from ralf_spark.queries import _docs_par, _scratch, _t, query
 
 def _winnow_fp_cte(k: int = 3, win: int = 4) -> str:
     """DuckDB CTE chain ``toks -> hs -> fp(doc_id, fingerprints)``
-    replaying :func:`winnow_fingerprints` bit-for-bit."""
+    replaying :func:`add_winnow_fingerprints` bit-for-bit."""
     return f"""
     toks AS (SELECT doc_id, {tokens_sql('text')} AS w FROM documents),
     hs AS (SELECT doc_id,

@@ -356,15 +356,6 @@ class FeatureStore:
             reader = reader.schema(schema)
         return FeatureTable(reader.json(path), key=key, ts=ts, seq=seq)
 
-    def from_dataframe(
-        self,
-        df: DataFrame,
-        key: str | None = None,
-        ts: str | None = None,
-        seq: str | None = None,
-    ) -> FeatureTable:
-        return FeatureTable(df, key=key, ts=ts, seq=seq)
-
     def sql(self, query: str, **meta: str) -> FeatureTable:
         return FeatureTable(self.spark.sql(query), **meta)
 

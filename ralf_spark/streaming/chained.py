@@ -31,7 +31,7 @@ installs — the import fails at the worker boundary), so
 raises with a clear message. The processor's logic is still fully
 tested in-process through the fake-handle harness in
 ``tests/test_streaming.py``; the Spark integration test is skip-gated
-on the probe, the same contract as the Kafka/Redis/Delta real-backend
+on the probe, the same contract as the Kafka/Redis real-backend
 suite.
 
 When to deploy which spelling (SCALE.md "Streaming pipelines"): the

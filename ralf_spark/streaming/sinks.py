@@ -16,7 +16,7 @@ under checkpoint replay:
   re-derives the same winners. ``connectors.upsert_into`` appends them
   as one ``_batch`` partition of the parquet state under the writer
   lease (a replay appends duplicate winners, which ``latest()`` folds
-  away), or runs a Delta ``MERGE INTO``.
+  away).
 - **Keyed fold state** (moments, EWMA, decayed sum, HLL, KMV, reservoir
   quantile, CMS: the ``*_upsert_batch`` callbacks, all built by
   :func:`_fold_upsert_batch`). The batch summary folds into the stored
@@ -76,7 +76,6 @@ def foreach_batch_latest_upsert(
     key: str,
     ts: str | None = None,
     seq: str | None = None,
-    table_format: str = "parquet",
 ) -> DataStreamWriter:
     """Maintain a persisted latest-per-key state table from a stream.
 
@@ -88,18 +87,11 @@ def foreach_batch_latest_upsert(
     whose source reports a size within ``sizing.SMALL_INPUT_BYTES`` (a
     file stream does, the rate source does not) takes ``upsert_into``'s
     driver-side spelling, with no shuffle and no write job.
-
-    ``table_format="delta"`` routes each micro-batch through a real
-    ``MERGE INTO`` (atomic, touched-files-only) instead of the parquet
-    append — the production deployment shape; see
-    ``connectors.upsert_into``.
     """
 
     def upsert(batch_df: DataFrame, batch_id: int) -> None:
         connectors.upsert_into(
-            path,
-            FeatureTable(batch_df, key=key, ts=ts, seq=seq),
-            table_format=table_format,
+            path, FeatureTable(batch_df, key=key, ts=ts, seq=seq)
         )
 
     return df.writeStream.foreachBatch(upsert)
@@ -143,8 +135,8 @@ def foreach_batch_kv_upsert(
 #: leaves no state directory, and the next ``_load_state`` rolls forward
 #: from the complete staging copy (or back to the retired one), so the
 #: marker read is always the pre- or post-crash batch. On object stores
-#: (S3A) a directory rename is a copy, not atomic; a transactional table
-#: format is the atomic spelling there.
+#: (S3A) a directory rename is a file-by-file copy, so the publish is not
+#: atomic there: a reader racing the copy can see part of the new table.
 LAST_BATCH_COL = "_last_batch_id"
 
 
@@ -827,8 +819,8 @@ def foreach_batch_moments_upsert(
     commit together in ``_staged_overwrite``'s rename publish; a crash
     between its renames is rolled forward from the complete staging copy
     (or back to the retired one) by the next read. On object stores
-    (S3A) the directory rename is a copy, not atomic — a transactional
-    table format's (appId, version) txn API is the atomic spelling.
+    (S3A) the directory rename is a file-by-file copy, so the publish is
+    not atomic there (see ``LAST_BATCH_COL``).
     ``buckets=N``: hash-bucketed state layout — per-batch cost ∝ touched
     buckets, not key count, with the marker (and replay skip) per bucket
     (see :func:`_bucketed_fold_upsert`)."""

@@ -1145,9 +1145,14 @@ def test_simhash_near_dup_pairs_pigeonhole_recall_and_plan(spark):
     """Any pair within the Hamming radius MUST be found (pigeonhole over
     bands is exact, not probabilistic, given the fingerprints); disjoint
     docs stay unpaired; candidate generation is a bucket equi-join, never
-    a cartesian plan."""
+    a cartesian plan. Both hash modes: md5 checked against
+    ``add_simhash``'s fingerprints, xxhash64 against
+    ``simhash_fingerprints_agg``'s."""
     from ralf_spark.operators.dedup import simhash_near_dup_pairs
-    from ralf_spark.operators.text_analysis import add_simhash
+    from ralf_spark.operators.text_analysis import (
+        add_simhash,
+        simhash_fingerprints_agg,
+    )
 
     base = ("the quick brown fox jumps over the lazy dog again and again "
             "while the rain falls softly on the quiet grey town tonight")
@@ -1158,28 +1163,31 @@ def test_simhash_near_dup_pairs_pigeonhole_recall_and_plan(spark):
             "arrow batches in a distributed engine running somewhere else"),
     ]
     t = _docs(spark, rows)
-    # md5, like add_simhash's ground-truth fingerprints, whatever
-    # SPARK_GRAFT_HASH_FN the suite runs under
-    out = simhash_near_dup_pairs(t, bits=48, max_hamming=3, hash_fn="md5")
-    pairs = {(r.id1, r.id2): r.hamming for r in out.collect()}
-    # ground truth from the fingerprints themselves
-    fps = {
-        r.doc_id: r.fp
-        for r in add_simhash(t.df, out_col="fp", bits=48).select(
-            "doc_id", "fp"
-        ).collect()
+    truth = {
+        "md5": add_simhash(t.df, out_col="fp", bits=48),
+        "xxhash64": simhash_fingerprints_agg(
+            t.df, "doc_id", bits=48, hash_fn="xxhash64"
+        ),
     }
-    for a in fps:
-        for b in fps:
-            if a < b and fps[a] and fps[b]:
-                h = bin(fps[a] ^ fps[b]).count("1")
-                if h <= 3:
-                    assert (a, b) in pairs and pairs[(a, b)] == h
-                else:
-                    assert (a, b) not in pairs
-    plan = explain_str(out, mode="extended")
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
+    for hash_fn, fp_df in truth.items():
+        out = simhash_near_dup_pairs(
+            t, bits=48, max_hamming=3, hash_fn=hash_fn
+        )
+        pairs = {(r.id1, r.id2): r.hamming for r in out.collect()}
+        # ground truth from the fingerprints themselves
+        fps = {r.doc_id: r.fp for r in fp_df.select("doc_id", "fp").collect()}
+        assert len(fps) == 3, hash_fn
+        for a in fps:
+            for b in fps:
+                if a < b and fps[a] and fps[b]:
+                    h = bin((fps[a] ^ fps[b]) & ((1 << 48) - 1)).count("1")
+                    if h <= 3:
+                        assert (a, b) in pairs and pairs[(a, b)] == h, hash_fn
+                    else:
+                        assert (a, b) not in pairs, hash_fn
+        plan = explain_str(out, mode="extended")
+        assert "CartesianProduct" not in plan
+        assert "BroadcastNestedLoopJoin" not in plan
 
 
 @pytest.mark.slow
@@ -2403,17 +2411,53 @@ def test_kmeans_plusplus_seeding_lifts_recall(spark):
 def test_pq_rerank_recall_clustered_gate_floor(spark):
     """r9 companion to the IVF recall gate: PQ ADC top-50 + exact rerank
     top-10 on the clustered MoG corpus must keep mean recall@10 >= 0.9 —
-    the rerank-width lever's documented operating point."""
+    the rerank-width lever's documented operating point. The IVF-PQ
+    composition (true centers as cells, nprobe=1, the same codebooks,
+    top-50 + exact rerank) must hold the same floor: its ceiling is the
+    nprobe=1 IVF recall, so a regression in its cell probe or its ADC
+    scoring inside a cell drops it below."""
     import statistics
 
-    from ralf_spark.queries import QUERIES
+    from ralf_spark.operators.similarity import (
+        cosine_topk,
+        exact_rerank,
+        ivf_pq_topk,
+    )
+    from ralf_spark.queries import (
+        _MOG_DIM,
+        QUERIES,
+        _mog_centers,
+        _mog_corpus,
+    )
+    from tests.conftest import SF_DIR_ORACLE
 
     rows = QUERIES["pq_rerank_recall_clustered"].fn(
-        spark, "/root/testdata/sf0.01"
+        spark, SF_DIR_ORACLE
     ).collect()
     recalls = [r.recall for r in rows]
     assert len(recalls) == 20
     assert statistics.mean(recalls) >= 0.9
+
+    corpus = _mog_corpus(spark, SF_DIR_ORACLE)
+    qdf = corpus.df.where(F.expr("vec_id % 25 = 0")).select(
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").alias("query_vec"),
+    )
+    cen = _mog_centers()
+    cen_df = spark.createDataFrame(
+        list(enumerate(cen)), "centroid_id long, centroid_vec array<double>"
+    )
+    dsub = _MOG_DIM // 2
+    books = [[v[j * dsub:(j + 1) * dsub] for v in cen] for j in range(2)]
+    short = ivf_pq_topk(corpus, qdf, cen_df, books, k=50, nprobe=1)
+    want, got = {}, {}
+    for r in cosine_topk(corpus, qdf, k=10).collect():
+        want.setdefault(r.query_id, set()).add(r.neighbor_id)
+    for r in exact_rerank(short, corpus, qdf, k=10).collect():
+        got.setdefault(r.query_id, set()).add(r.neighbor_id)
+    assert len(want) == 20
+    ivf_pq = [len(want[q] & got.get(q, set())) / 10.0 for q in want]
+    assert statistics.mean(ivf_pq) >= 0.9, ivf_pq
 
 
 # ------------------------------------------- exact-substring duplicate spans
@@ -3027,20 +3071,25 @@ def test_cdc_chunk_dedup_stats_edit_stability(spark):
     df = spark.createDataFrame(
         [(1, base), (2, edited), (3, other)], "doc_id long, text string"
     )
-    got = {r.doc_id: r for r in cdc_chunk_dedup_stats(df).collect()}
-    assert got[3].dup_chunks == 0 and got[3].dup_frac == 0.0
-    assert got[1].dup_frac > 0.5 and got[2].dup_frac > 0.5
-    assert got[1].n_chunks >= 4  # boundaries actually cut
-    # counts are consistent: dup_tokens <= total tokens chunked
-    for d in (1, 2, 3):
-        assert 0 <= got[d].dup_chunks <= got[d].n_chunks
+    for hash_fn in ("md5", "xxhash64"):
+        got = {
+            r.doc_id: r
+            for r in cdc_chunk_dedup_stats(df, hash_fn=hash_fn).collect()
+        }
+        assert got[3].dup_chunks == 0 and got[3].dup_frac == 0.0, hash_fn
+        assert got[1].dup_frac > 0.5 and got[2].dup_frac > 0.5, hash_fn
+        assert got[1].n_chunks >= 4, hash_fn  # boundaries actually cut
+        # counts are consistent: dup_tokens <= total tokens chunked
+        for d in (1, 2, 3):
+            assert 0 <= got[d].dup_chunks <= got[d].n_chunks
 
 
 def test_cdc_chunks_partition_and_edit_stability(spark):
     """Chunks tile each document exactly (no gaps/overlaps), and the
     defining CDC property holds: prepending tokens only changes the
     chunks up to the first boundary after the edit — every later chunk
-    hash survives (a fixed-window chunker shifts ALL of them)."""
+    hash survives (a fixed-window chunker shifts ALL of them). Both hash
+    modes: boundary positions differ, the properties do not."""
     import random
 
     from ralf_spark.operators.text_analysis import cdc_chunks
@@ -3052,34 +3101,35 @@ def test_cdc_chunks_partition_and_edit_stability(spark):
          (3, "a b"), (4, "")],
         "doc_id long, text string",
     )
-    rows = cdc_chunks(docs, mask_bits=4).collect()
-    by_doc = {}
-    for r in rows:
-        by_doc.setdefault(r.doc_id, []).append(r)
-    # tiling: chunk k ends where k+1 starts - 1; first starts at 1
-    for d in (1, 2, 3):
-        ch = sorted(by_doc[d], key=lambda r: r.chunk_idx)
-        n_tok = len([t for t in docs.where(f"doc_id = {d}")
-                     .first().text.split() if t])
-        assert ch[0].chunk_start == 1 and ch[-1].chunk_end == n_tok
-        for a, b in zip(ch, ch[1:]):
-            assert b.chunk_start == a.chunk_end + 1
-        assert all(r.chunk_tokens == r.chunk_end - r.chunk_start + 1
-                   for r in ch)
-    assert 4 not in by_doc  # empty doc -> no chunks
-    assert len(by_doc[3]) == 1  # shorter than window -> one chunk
-    # edit stability: doc 2 = doc 1 with 5 tokens prepended
-    h1 = [r.chunk_hash for r in
-          sorted(by_doc[1], key=lambda r: r.chunk_idx)]
-    h2 = [r.chunk_hash for r in
-          sorted(by_doc[2], key=lambda r: r.chunk_idx)]
-    # everything after the first shared boundary is identical: the
-    # SUFFIX of chunk hashes matches
-    common = 0
-    while (common < min(len(h1), len(h2))
-           and h1[-1 - common] == h2[-1 - common]):
-        common += 1
-    assert common >= max(1, len(h1) - 3), (len(h1), len(h2), common)
+    n_tok = {r.doc_id: len([t for t in r.text.split() if t])
+             for r in docs.collect()}
+    for hash_fn in ("md5", "xxhash64"):
+        rows = cdc_chunks(docs, mask_bits=4, hash_fn=hash_fn).collect()
+        by_doc = {}
+        for r in rows:
+            by_doc.setdefault(r.doc_id, []).append(r)
+        # tiling: chunk k ends where k+1 starts - 1; first starts at 1
+        for d in (1, 2, 3):
+            ch = sorted(by_doc[d], key=lambda r: r.chunk_idx)
+            assert ch[0].chunk_start == 1 and ch[-1].chunk_end == n_tok[d]
+            for a, b in zip(ch, ch[1:]):
+                assert b.chunk_start == a.chunk_end + 1
+            assert all(r.chunk_tokens == r.chunk_end - r.chunk_start + 1
+                       for r in ch)
+        assert 4 not in by_doc  # empty doc -> no chunks
+        assert len(by_doc[3]) == 1  # shorter than window -> one chunk
+        # edit stability: doc 2 = doc 1 with 5 tokens prepended
+        h1 = [r.chunk_hash for r in
+              sorted(by_doc[1], key=lambda r: r.chunk_idx)]
+        h2 = [r.chunk_hash for r in
+              sorted(by_doc[2], key=lambda r: r.chunk_idx)]
+        # everything after the first shared boundary is identical: the
+        # SUFFIX of chunk hashes matches
+        common = 0
+        while (common < min(len(h1), len(h2))
+               and h1[-1 - common] == h2[-1 - common]):
+            common += 1
+        assert common >= max(1, len(h1) - 3), (hash_fn, len(h1), common)
 
 
 @pytest.mark.slow

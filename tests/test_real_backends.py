@@ -1,10 +1,10 @@
 """Real-backend smoke suite (VERDICT r6 #6).
 
-This sandbox has no Kafka broker, Redis server, or delta-spark package,
-so the engine's external connectors are contract-tested against recorded
-stubs. THIS module converts that caveat into a runnable checklist: each
-test runs the existing contract against the REAL backend and is skipped
-cleanly unless the environment provides it:
+This sandbox has no Kafka broker or Redis server, so the engine's
+external connectors are contract-tested against recorded stubs. THIS
+module converts that caveat into a runnable checklist: each test runs
+the existing contract against the REAL backend and is skipped cleanly
+unless the environment provides it:
 
 - ``SPARK_GRAFT_KAFKA_BOOTSTRAP=host:port`` — JSON wire round-trip
   through a real topic (batch produce via the Kafka sink, bounded
@@ -13,15 +13,9 @@ cleanly unless the environment provides it:
 - ``SPARK_GRAFT_REDIS_URL=redis://host:port/db`` — ``RedisKVClient``
   CRUD + a full ``KVStateConnector`` state round-trip (the reference's
   redis layout: one hash per table, one field per key).
-- ``SPARK_GRAFT_DELTA=1`` (with delta-spark installed) — one real
-  ``MERGE INTO`` through ``upsert_into(table_format="delta")``, checked
-  against the shared ``merge_upsert_plan`` spec the parquet branch and
-  the recorded-stub tests pin.
 
 A cluster CI keeps these gates green (SCALE.md "real-backend CI
-checklist"); locally they skip. The suite is self-contained on purpose:
-the delta test builds its own Delta-enabled SparkSession (stopping any
-active plain one), so run it as its own pytest invocation in CI.
+checklist"); locally they skip.
 """
 
 from __future__ import annotations
@@ -34,7 +28,6 @@ import pytest
 
 KAFKA = os.environ.get("SPARK_GRAFT_KAFKA_BOOTSTRAP")
 REDIS_URL = os.environ.get("SPARK_GRAFT_REDIS_URL")
-DELTA = os.environ.get("SPARK_GRAFT_DELTA") == "1"
 
 
 @pytest.mark.skipif(not KAFKA, reason="SPARK_GRAFT_KAFKA_BOOTSTRAP unset")
@@ -122,63 +115,3 @@ def test_redis_kv_crud_and_state_round_trip(spark):
         assert got == {"x": (3, 9.0), "y": (1, 5.0), "z": (1, 7.0)}
     finally:
         client.delete(table)
-
-
-@pytest.mark.skipif(not DELTA, reason="SPARK_GRAFT_DELTA unset")
-def test_delta_merge_upsert_real(tmp_path):
-    """One real ``MERGE INTO`` through ``upsert_into`` — the statement
-    the recording-stub test pins (tests/test_skew_and_upsert.py) executed
-    against actual Delta, result checked against the shared
-    ``merge_upsert_plan`` spec."""
-    delta = pytest.importorskip("delta")
-    from pyspark.sql import SparkSession
-
-    active = SparkSession.getActiveSession()
-    if active is not None:
-        active.stop()
-    builder = (
-        SparkSession.builder.master("local[4]")
-        .appName("ralf_delta_smoke")
-        .config(
-            "spark.sql.extensions",
-            "io.delta.sql.DeltaSparkSessionExtension",
-        )
-        .config(
-            "spark.sql.catalog.spark_catalog",
-            "org.apache.spark.sql.delta.catalog.DeltaCatalog",
-        )
-    )
-    spark = delta.configure_spark_with_delta_pip(builder).getOrCreate()
-    try:
-        from ralf_spark.connectors import merge_upsert_plan, upsert_into
-        from ralf_spark.table import FeatureTable
-
-        path = str(tmp_path / "delta_state")
-        schema = "k string, seq long, v double"
-        t1 = FeatureTable(
-            spark.createDataFrame(
-                [("x", 2, 2.0), ("y", 1, 5.0)], schema
-            ),
-            key="k", seq="seq",
-        )
-        upsert_into(path, t1, table_format="delta")  # create
-        batch2 = FeatureTable(
-            spark.createDataFrame(
-                [("x", 1, 0.5), ("x", 3, 9.0), ("z", 1, 7.0)], schema
-            ),
-            key="k", seq="seq",
-        )
-        upsert_into(path, batch2, table_format="delta")  # real MERGE INTO
-        got = {
-            r.k: (r.seq, r.v)
-            for r in spark.read.format("delta").load(path).collect()
-        }
-        want = {
-            r.k: (r.seq, r.v)
-            for r in merge_upsert_plan(
-                t1.latest().df, batch2.latest().df, "k", ["seq"]
-            ).collect()
-        }
-        assert got == want == {"x": (3, 9.0), "y": (1, 5.0), "z": (1, 7.0)}
-    finally:
-        spark.stop()

@@ -150,9 +150,9 @@ def test_salted_join_equals_plain_join(spark):
 
 
 def test_merge_plan_matches_parquet_upsert_branch(spark, tmp_path):
-    """Both upsert_into branches implement merge_upsert_plan: folding the
-    same batch sequence through the parquet branch and through the MERGE
-    relational spec must land on the same state — including out-of-order
+    """upsert_into implements merge_upsert_plan: folding the same batch
+    sequence through upsert_into and through the MERGE relational spec
+    must land on the same state — including out-of-order
     replays (older record must NOT clobber newer state) and NULL ordering
     columns (ordered below every value)."""
     from ralf_spark.connectors import merge_upsert_plan
@@ -196,119 +196,6 @@ def test_merge_upsert_condition_contract():
     assert "s.ts IS NOT NULL AND t.ts IS NULL" in cond
     # seq is compared only within a ts tie
     assert "(s.ts <=> t.ts AND (s.seq > t.seq" in cond
-
-
-def test_delta_branch_requires_delta_or_merges(spark, tmp_path):
-    """Without delta-spark the delta branch must fail loudly (never fall
-    back silently to a different storage format); with it, the MERGE must
-    reproduce the parquet branch's state."""
-    import pytest
-
-    schema = "k long, ts long, seq long, v double"
-    b = FeatureTable(
-        spark.createDataFrame([(1, 10, 1, 1.0)], schema),
-        key="k", ts="ts", seq="seq",
-    )
-    try:
-        import delta  # noqa: F401
-    except ImportError:
-        with pytest.raises(RuntimeError, match="delta-spark"):
-            upsert_into(str(tmp_path / "d"), b, table_format="delta")
-        return
-    path = str(tmp_path / "d")  # pragma: no cover - needs delta-spark env
-    upsert_into(path, b, table_format="delta")
-    b2 = FeatureTable(
-        spark.createDataFrame([(1, 20, 2, 9.0), (2, 5, 1, 2.0)], schema),
-        key="k", ts="ts", seq="seq",
-    )
-    upsert_into(path, b2, table_format="delta")
-    got = {r.k: r.v for r in spark.read.format("delta").load(path).collect()}
-    assert got == {1: 9.0, 2: 2.0}
-
-
-def test_delta_merge_statement_pinned_to_plan_spec(spark):
-    """Dry-run the delta branch against a recording DeltaTable stub
-    (VERDICT r5 #7 — the env has no delta-spark, so the statement has
-    never executed): every piece of the emitted MERGE must match the
-    contract-tested merge_upsert_plan spec — null-safe key equality,
-    merge_upsert_condition as the matched guard, update-all/insert-all
-    (full-row replace, the plan's per-column winner select), and a
-    latest-per-key pre-reduced source. Fails if the Delta call ever
-    drifts from the parquet-branch semantics."""
-    import sys
-    import types
-
-    from ralf_spark.connectors import merge_upsert_condition, upsert_into
-    from ralf_spark.table import FeatureTable
-
-    calls = {}
-
-    class _Merge:
-        def whenMatchedUpdateAll(self, condition=None):
-            calls["matched_condition"] = condition
-            return self
-
-        def whenNotMatchedInsertAll(self):
-            calls["insert_all"] = True
-            return self
-
-        def execute(self):
-            calls["executed"] = True
-
-    class _Aliased:
-        def merge(self, src, cond):
-            calls["src_df"] = src
-            calls["merge_condition"] = cond
-            return _Merge()
-
-    class FakeDeltaTable:
-        @staticmethod
-        def isDeltaTable(spark_arg, path):
-            calls["is_delta_path"] = path
-            return True  # skip the create branch (needs the delta jar)
-
-        @staticmethod
-        def forPath(spark_arg, path):
-            calls["for_path"] = path
-            return types.SimpleNamespace(alias=lambda name: (
-                calls.__setitem__("target_alias", name) or _Aliased()
-            ))
-
-    delta_mod = types.ModuleType("delta")
-    tables_mod = types.ModuleType("delta.tables")
-    tables_mod.DeltaTable = FakeDeltaTable
-    delta_mod.tables = tables_mod
-    sys.modules["delta"] = delta_mod
-    sys.modules["delta.tables"] = tables_mod
-    try:
-        rows = [
-            ("a", 1, 1, 10.0), ("a", 2, 2, 20.0),  # a -> latest 20.0
-            ("b", 1, 3, 5.0),
-        ]
-        batch = FeatureTable(
-            spark.createDataFrame(
-                rows, "k string, ts long, seq long, value double"
-            ),
-            key="k", ts="ts", seq="seq",
-        )
-        upsert_into("/tmp/fake_delta_state", batch, table_format="delta")
-    finally:
-        del sys.modules["delta"], sys.modules["delta.tables"]
-
-    assert calls["executed"] and calls["insert_all"]
-    assert calls["is_delta_path"] == calls["for_path"] == "/tmp/fake_delta_state"
-    assert calls["target_alias"] == "t"
-    # ON clause: null-safe key equality, exactly the plan's join condition
-    assert calls["merge_condition"] == "t.k <=> s.k"
-    # WHEN MATCHED guard: the shared condition string (cannot drift by
-    # construction, but pin the order_cols wiring: ts then seq)
-    assert calls["matched_condition"] == merge_upsert_condition(["ts", "seq"])
-    # source is the latest-per-key reduction, aliased "s"
-    src = calls["src_df"]
-    got = {(r.k, r.value) for r in src.collect()}
-    assert got == {("a", 20.0), ("b", 5.0)}
-    plan = src._jdf.queryExecution().analyzed().toString()
-    assert "s" in plan.split("SubqueryAlias")[1][:10]
 
 
 @pytest.mark.slow

@@ -195,10 +195,13 @@ def _jobs_of(spark, group, fn):
 
 
 @pytest.mark.parametrize("key_type", ["long", "string"])
-def test_store_point_index_matches_table(spark, tmp_path, key_type):
+def test_store_point_index_matches_table(
+    spark, tmp_path, monkeypatch, key_type
+):
     """The index serves ``FeatureTable.point_query``'s rows for every
     key and for absent keys, on a multi-file parquet table of
     ``point_rows`` (NULL ts, NULL seq and seq ties)."""
+    monkeypatch.delenv("SPARK_GRAFT_SMALL_CORPUS", raising=False)
     from tests.test_core_surface import point_rows
 
     def key(i):
@@ -216,8 +219,9 @@ def test_store_point_index_matches_table(spark, tmp_path, key_type):
     assert store.point_query("t", key(77)) == []
 
 
-def test_store_point_index_payload_types(spark, tmp_path):
+def test_store_point_index_payload_types(spark, tmp_path, monkeypatch):
     """Every served column type converts to ``collect()``'s Row."""
+    monkeypatch.delenv("SPARK_GRAFT_SMALL_CORPUS", raising=False)
     import datetime as dt
     from decimal import Decimal
 
@@ -263,9 +267,10 @@ def _upserted(spark, tmp_path, batches):
     return path
 
 
-def test_store_point_index_job_budget(spark, tmp_path):
+def test_store_point_index_job_budget(spark, tmp_path, monkeypatch):
     """On ``upsert_into`` state the first read builds the index in at
     most one Spark job, and the next five run none."""
+    monkeypatch.delenv("SPARK_GRAFT_SMALL_CORPUS", raising=False)
     path = _upserted(spark, tmp_path, [
         [(i, 10, i, float(i)) for i in range(50)],
         [(i, 20, 100 + i, -float(i)) for i in range(0, 80, 2)],
@@ -314,6 +319,7 @@ _CATALOG_TABLE = "point_index_catalog_table"
 
 def _refusal_case(spark, tmp_path, case, monkeypatch):
     """(table, key looked up, warm-up key or None) for one refusal."""
+    monkeypatch.delenv("SPARK_GRAFT_SMALL_CORPUS", raising=False)
     store = FeatureStore(spark)
     rows = [(i, 10 + i % 3, i, float(i)) for i in range(20)]
     rows += [(i, 30, 100 + i, -float(i)) for i in range(0, 20, 3)]
@@ -384,12 +390,13 @@ def test_store_point_index_refusals_take_spark_path(
         spark.sql(f"DROP TABLE IF EXISTS {_CATALOG_TABLE}")
 
 
-def test_index_expansion_bounds_driver_bytes(spark, tmp_path):
+def test_index_expansion_bounds_driver_bytes(spark, tmp_path, monkeypatch):
     """The index's two expansion entries bound what building it
     allocates on the driver — Python objects and the Arrow buffers
     ``toArrow`` reads (tracemalloc's peak, plus any Arrow pool growth) —
     on narrow worst cases: long and string keys, unique and repeated,
     and empty and 1-char strings."""
+    monkeypatch.delenv("SPARK_GRAFT_SMALL_CORPUS", raising=False)
     import gc
     import tracemalloc
 

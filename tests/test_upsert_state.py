@@ -262,10 +262,12 @@ def _input_records(spark, group):
     return len(jobs), records
 
 
-def test_point_index_folds_only_the_new_delta(spark, tmp_path):
+def test_point_index_folds_only_the_new_delta(spark, tmp_path, monkeypatch):
     """After an append and a re-register, the first point read runs one
     Spark job, and it reads only the new delta's rows; the next reads
-    run none."""
+    run none. The index exists only in the small regime, so the test
+    pins it."""
+    monkeypatch.delenv("SPARK_GRAFT_SMALL_CORPUS", raising=False)
     path = str(tmp_path / "state")
     upsert_into(path, FeatureTable(spark.createDataFrame(
         [(i, 10, i, float(i)) for i in range(50)], "k long, ts long, seq long, v double"
