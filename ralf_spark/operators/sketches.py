@@ -108,8 +108,8 @@ def kmv_state_update(
 
 def kmv_fold(rows: DataFrame, group_cols: list[str], k: int = 32) -> DataFrame:
     """The KMV union over a set of ``group_cols + [h]`` rows: dedup, keep
-    each group's k smallest hashes. The update, the two-table merge and
-    the append log's compaction and read all fold through it. Spark runs
+    each group's k smallest hashes. The update and the append log's
+    compaction and read all fold through it. Spark runs
     the per-group k-smallest as WindowGroupLimit — map-side pre-limited
     to k rows per group."""
     w = Window.partitionBy(*group_cols).orderBy("h")
@@ -213,7 +213,7 @@ def rq_fold(rows: DataFrame, group_cols: list[str], k: int = 256) -> DataFrame:
     """The bottom-k union over a set of ``group_cols + [h, v]`` rows:
     dedup, keep each group's k smallest by ``(h, v)`` — associative,
     commutative, idempotent (re-folding seen rows cannot change a min-k
-    set). The update, the merge and the append log fold through it, with
+    set). The update and the append log fold through it, with
     the same WindowGroupLimit shape as :func:`kmv_fold`."""
     w = Window.partitionBy(*group_cols).orderBy("h", "v")
     return (
@@ -364,8 +364,8 @@ def hll_register_update(
 def hll_fold(regs: DataFrame, group_cols: list[str]) -> DataFrame:
     """The HLL union over a set of ``group_cols + [bucket, reg]`` rows:
     register-wise max — associative, commutative, idempotent. One hash
-    aggregation on (group, bucket); the merge and the append log's
-    compaction and read fold through it."""
+    aggregation on (group, bucket); the append log's compaction and
+    read fold through it."""
     return regs.groupBy(*group_cols, "bucket").agg(F.max("reg").alias("reg"))
 
 
@@ -496,7 +496,8 @@ def cms_counter_update(
     at most ``depth * width`` rows whatever the input size. Mergeable by
     counter-wise SUM (:func:`cms_fold` over the union); unlike the HLL
     register max, a sum double-counts on replay, so the streaming sink
-    guards with the in-table batch marker."""
+    logs each batch under its own partition, which a replay rewrites in
+    place."""
     from pyspark.sql import functions as F
 
     keyed = df.select(F.col(key_col).cast("string").alias("k"))
@@ -508,8 +509,8 @@ def cms_counter_update(
 
 def cms_fold(counters: DataFrame) -> DataFrame:
     """The CMS union over a set of ``(r, bucket, c)`` rows: counter-wise
-    sum, one hash aggregation on (r, bucket). The merge and the append
-    log's compaction and read fold through it."""
+    sum, one hash aggregation on (r, bucket). The append log's
+    compaction and read fold through it."""
     return counters.groupBy("r", "bucket").agg(F.sum("c").alias("c"))
 
 

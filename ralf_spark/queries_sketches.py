@@ -143,7 +143,7 @@ def quantile_drift_windows_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     window's state is O(groups·k) (WindowGroupLimit pre-limit, no
     per-group sort), the two sketches join on the group key, and in
     production the reference sketch is a PERSISTED state table
-    (``foreach_batch_rq_upsert``/``_append``) — only the current
+    (``foreach_batch_rq_append``) — only the current
     window is scanned per cadence."""
     from ralf_spark.operators.sketches import reservoir_quantile
 
@@ -389,24 +389,22 @@ def cms_token_heavy_hitters_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def streaming_hll_state_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E6 as maintained STREAMING state (r7): the events stream drains in
-    3 micro-batches through ``foreach_batch_hll_upsert`` — each batch's
-    (group, bucket, max-rho) registers merged into the stored table by
-    register-wise max — and the final estimate must equal the one-shot
-    ``hll_distinct`` oracle EXACTLY: the register merge is associative,
-    commutative and idempotent, so ANY micro-batching (and any replay)
-    converges on the identical sketch, unlike the order-contracted fold
-    sinks. State is O(groups x 64 registers) regardless of stream
-    length. r10: the state is hash-BUCKETED (``buckets=8`` — per-batch
-    cost ∝ touched buckets, not group count, SCALEPROBE finding 11's
-    fix); the merge algebra is layout-independent, so the oracle is
-    unchanged."""
+    3 micro-batches through ``foreach_batch_hll_append`` — each batch
+    appends its (group, bucket, max-rho) registers to the log, ZERO
+    reads of existing state — and the estimate over the UNCOMPACTED log
+    (``hll_log_state``: register-wise max on read) must equal the
+    one-shot ``hll_distinct`` oracle EXACTLY: the register merge is
+    associative, commutative and idempotent, so ANY micro-batching (and
+    any replay) converges on the identical sketch, unlike the
+    order-contracted fold sinks. ``streaming_hll_log_state`` gates the
+    same log after a merging compaction."""
     import hashlib as _hl
 
     from ralf_spark.operators.sketches import hll_estimate
     from ralf_spark.streaming import (
         file_events,
-        foreach_batch_hll_upsert,
-        read_bucketed_state,
+        foreach_batch_hll_append,
+        hll_log_state,
         run_bounded,
     )
 
@@ -414,20 +412,19 @@ def streaming_hll_state_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = _scratch(f"hll_src_{tag}_")
     ev = _t(spark, sf_dir, "events").df.select("event_type", "event_id")
     ev.repartition(3).write.mode("overwrite").parquet(src)
-    state = _scratch(f"hll_state_{tag}_") + "/state"
+    state = _scratch(f"hll_state_{tag}_") + "/log"
     stream = file_events(
         spark, src, schema="event_type string, event_id long",
         max_files_per_trigger=1,
     )
     run_bounded(
-        foreach_batch_hll_upsert(
-            stream, state, group_cols=["event_type"], value_col="event_id",
-            buckets=8,
+        foreach_batch_hll_append(
+            stream, state, group_cols=["event_type"], value_col="event_id"
         ),
         checkpoint=_scratch(f"ck_hll_{tag}_"),
     )
     return hll_estimate(
-        read_bucketed_state(spark, state), ["event_type"]
+        hll_log_state(spark, state, ["event_type"]), ["event_type"]
     ).orderBy("event_type")
 
 
@@ -437,17 +434,13 @@ def streaming_hll_state_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     + " ORDER BY event_type",
 )
 def streaming_hll_log_state_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """E6 streaming HLL as an APPEND LOG (r10) — the third state
-    spelling next to the legacy full-rewrite and the bucketed merge:
-    each micro-batch appends its (group, bucket, max-rho) registers
-    under its own ``_batch`` partition (O(batch) per batch, ZERO reads
-    of existing state — the strict-minimum write cost at any group
-    count), the estimate merges the log ON READ (register max is
-    associative/commutative/idempotent, so any batching, any replay and
-    any amount of compaction converge on the identical sketch), and
-    ``maintain_sketch_log`` MERGES all but the newest batch partition
-    in place mid-gate — the estimate must be unchanged by it. Same
-    oracle as ``streaming_hll_state``."""
+    """E6 streaming HLL log after a merging compaction (r10): the same
+    append-log drain as ``streaming_hll_state`` (each micro-batch's
+    registers under its own ``_batch`` partition, merged ON READ), then
+    ``maintain_sketch_log`` MERGES all but the newest batch partition in
+    place mid-gate — register max is associative/commutative/
+    idempotent, so the estimate must be unchanged by it. Same oracle as
+    ``streaming_hll_state``."""
     import hashlib as _hl
 
     from ralf_spark.operators.sketches import hll_estimate
@@ -492,17 +485,17 @@ def streaming_hll_log_state_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def streaming_kmv_state_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E6 KMV as maintained STREAMING state (r7): 3 micro-batches through
-    ``foreach_batch_kmv_upsert`` (min-k hash tables merged by
+    ``foreach_batch_kmv_append`` (each batch's min-k hash table appended
+    to the log, merged on read by ``kmv_log_state``'s
     union-distinct-keep-k — idempotent by algebra), final estimate gated
-    by the SAME oracle as the one-shot ``kmv_distinct_users``. r10:
-    bucketed state layout (``buckets=8``), same estimates by algebra."""
+    by the SAME oracle as the one-shot ``kmv_distinct_users``."""
     import hashlib as _hl
 
     from ralf_spark.operators.sketches import kmv_estimate
     from ralf_spark.streaming import (
         file_events,
-        foreach_batch_kmv_upsert,
-        read_bucketed_state,
+        foreach_batch_kmv_append,
+        kmv_log_state,
         run_bounded,
     )
 
@@ -510,20 +503,21 @@ def streaming_kmv_state_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = _scratch(f"kmv_src_{tag}_")
     ev = _t(spark, sf_dir, "events").df.select("event_type", "user_id")
     ev.repartition(3).write.mode("overwrite").parquet(src)
-    state = _scratch(f"kmv_state_{tag}_") + "/state"
+    state = _scratch(f"kmv_state_{tag}_") + "/log"
     stream = file_events(
         spark, src, schema="event_type string, user_id long",
         max_files_per_trigger=1,
     )
     run_bounded(
-        foreach_batch_kmv_upsert(
+        foreach_batch_kmv_append(
             stream, state, group_cols=["event_type"], value_col="user_id",
-            k=32, buckets=8,
+            k=32,
         ),
         checkpoint=_scratch(f"ck_kmv_{tag}_"),
     )
     return kmv_estimate(
-        read_bucketed_state(spark, state), ["event_type"], k=32
+        kmv_log_state(spark, state, ["event_type"], k=32), ["event_type"],
+        k=32,
     ).orderBy("event_type")
 
 
@@ -534,21 +528,20 @@ def streaming_kmv_state_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def streaming_cms_state_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E6 count-min as maintained STREAMING state (r7): the events stream
-    drains in 3 micro-batches through ``foreach_batch_cms_upsert``, each
-    batch's counter matrix summed into the stored one, and the final
-    matrix is gated CELL-FOR-CELL against DuckDB computing the same
-    matrix over the full table — counter sums are micro-batching-
-    invariant, and replay safety rides the in-table batch marker (sums
+    drains in 3 micro-batches through ``foreach_batch_cms_append``, each
+    batch's counter matrix appended to the log and summed on read by
+    ``cms_log_state``, and the final matrix is gated CELL-FOR-CELL
+    against DuckDB computing the same matrix over the full table —
+    counter sums are micro-batching-invariant, and replay safety rides
+    the per-batch partition (a replay rewrites its own partition; sums
     double-count, unlike the HLL register max). State is depth x width
-    cells whatever the stream length. r10: bucketed layout (per-bucket
-    replay marker — the non-idempotent sink exercising the per-bucket
-    skip), cell values unchanged by algebra."""
+    cells per logged batch, folded to one matrix by compaction."""
     import hashlib as _hl
 
     from ralf_spark.streaming import (
+        cms_log_state,
         file_events,
-        foreach_batch_cms_upsert,
-        read_bucketed_state,
+        foreach_batch_cms_append,
         run_bounded,
     )
 
@@ -556,18 +549,18 @@ def streaming_cms_state_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = _scratch(f"cms_src_{tag}_")
     ev = _t(spark, sf_dir, "events").df.select("user_id")
     ev.repartition(3).write.mode("overwrite").parquet(src)
-    state = _scratch(f"cms_state_{tag}_") + "/state"
+    state = _scratch(f"cms_state_{tag}_") + "/log"
     stream = file_events(
         spark, src, schema="user_id long", max_files_per_trigger=1
     )
     run_bounded(
-        foreach_batch_cms_upsert(
-            stream, state, key_col="user_id", depth=4, width=64, buckets=4
+        foreach_batch_cms_append(
+            stream, state, key_col="user_id", depth=4, width=64
         ),
         checkpoint=_scratch(f"ck_cms_{tag}_"),
     )
     return (
-        read_bucketed_state(spark, state)
+        cms_log_state(spark, state)
         .select("r", "bucket", F.col("c").cast("bigint").alias("c"))
         .orderBy("r", "bucket")
     )

@@ -8,7 +8,6 @@ computation); streaming uses the same FeatureTable semantics with bounded
 """
 
 from ralf_spark.streaming.sinks import (
-    cms_upsert_batch,
     decayed_upsert_batch,
     ewma_upsert_batch,
     foreach_batch_decayed_upsert,
@@ -19,22 +18,16 @@ from ralf_spark.streaming.sinks import (
     foreach_batch_gram_dedup,
     foreach_batch_index_add,
     foreach_batch_cms_append,
-    foreach_batch_cms_upsert,
     foreach_batch_hll_append,
-    foreach_batch_hll_upsert,
     foreach_batch_ivf_add,
     foreach_batch_kmv_append,
     foreach_batch_kv_upsert,
-    foreach_batch_kmv_upsert,
     foreach_batch_latest_upsert,
     foreach_batch_quality_log,
     foreach_batch_rq_append,
-    foreach_batch_rq_upsert,
     cms_log_state,
     hll_log_state,
-    hll_upsert_batch,
     kmv_log_state,
-    kmv_upsert_batch,
     rq_log_merge,
     rq_log_state,
     maintain_sketch_log,
@@ -84,7 +77,6 @@ __all__ = [
     "tws_available",
     "streaming_asof_enrich",
     "streaming_change_detection_filter",
-    "cms_upsert_batch",
     "decayed_upsert_batch",
     "ewma_upsert_batch",
     "foreach_batch_decayed_upsert",
@@ -96,22 +88,16 @@ __all__ = [
     "foreach_batch_index_add",
     "cms_log_state",
     "foreach_batch_cms_append",
-    "foreach_batch_cms_upsert",
     "foreach_batch_hll_append",
-    "foreach_batch_hll_upsert",
     "foreach_batch_kmv_append",
     "foreach_batch_rq_append",
-    "foreach_batch_rq_upsert",
     "hll_log_state",
     "kmv_log_state",
     "rq_log_merge",
     "rq_log_state",
     "maintain_sketch_log",
     "foreach_batch_ivf_add",
-    "foreach_batch_kmv_upsert",
     "foreach_batch_kv_upsert",
-    "hll_upsert_batch",
-    "kmv_upsert_batch",
     "foreach_batch_latest_upsert",
     "foreach_batch_quality_log",
     "read_bucketed_state",

@@ -17,19 +17,23 @@ under checkpoint replay:
   as one ``_batch`` partition of the parquet state under the writer
   lease (a replay appends duplicate winners, which ``latest()`` folds
   away).
-- **Keyed fold state** (moments, EWMA, decayed sum, HLL, KMV, reservoir
-  quantile, CMS: the ``*_upsert_batch`` callbacks, all built by
-  :func:`_fold_upsert_batch`). The batch summary folds into the stored
-  state. Unbucketed, the unit is the table: every row carries the last
-  folded batch id (``LAST_BATCH_COL``) and ``_staged_overwrite``
-  publishes data and marker in one rename. Bucketed (``buckets=N``), the
-  unit is the ``_state_bucket=`` directory: only touched buckets are
-  rewritten, each stamped, through a manifest-recovered stage-then-swap.
-- **``_batch`` logs** (sketch append logs, enrichment and quality logs,
-  the index sinks' pairs/spans logs, decontamination and screening
-  output). Each batch writes its own ``_batch=<tag>`` partition through
-  ``layout.write_batch``. The unit is the partition: a replay rewrites
-  it in place, and a tag a compaction already folded is skipped.
+- **Keyed fold state** (moments, EWMA, decayed sum: the
+  ``*_upsert_batch`` callbacks, all built by :func:`_fold_upsert_batch`).
+  The batch summary folds into the stored state. Unbucketed, the unit is
+  the table: every row carries the last folded batch id
+  (``LAST_BATCH_COL``) and ``_staged_overwrite`` publishes data and
+  marker in one rename. Bucketed (``buckets=N``), the unit is the
+  ``_state_bucket=`` directory: only touched buckets are rewritten, each
+  stamped, through a manifest-recovered stage-then-swap.
+- **``_batch`` logs** (the HLL, KMV, reservoir-quantile and CMS sketch
+  logs, enrichment and quality logs, the index sinks' pairs/spans logs,
+  decontamination and screening output). Each batch writes its own
+  ``_batch=<tag>`` partition through ``layout.write_batch``. The unit is
+  the partition: a replay rewrites it in place, and a tag a compaction
+  already folded is skipped. A sketch log is its sketch's one persisted
+  spelling: its merge is associative and commutative, so
+  ``*_log_state`` folds the log on read and :func:`maintain_sketch_log`
+  folds it in place with the same merge.
 """
 
 from __future__ import annotations
@@ -156,9 +160,9 @@ def _load_state(spark: SparkSession, path: str):
     return current.drop(LAST_BATCH_COL), last
 
 
-#: hash-bucket partition column of the bucketed sketch/fold state layout
-#: (``buckets=`` on the sketch/fold sinks). Named to never collide with
-#: user group columns (the HLL register table has its own ``bucket``).
+#: hash-bucket partition column of the bucketed fold state layout
+#: (``buckets=`` on the fold sinks). Named to never collide with user
+#: key columns.
 STATE_BUCKET_COL = "_state_bucket"
 
 #: layout sidecar inside the state directory. Leading underscore → the
@@ -358,7 +362,7 @@ def _bucketed_fold_upsert(
     """Fold one micro-batch summary into bucketed persisted state —
     per-batch cost ∝ the batch's TOUCHED buckets, not total group count.
 
-    This is the scale fix for the fold/sketch sinks' full-table rewrite
+    This is the scale fix for the fold sinks' full-table rewrite
     (SCALEPROBE finding 11: O(groups) per batch, visible at 72k groups):
     the same touched-partitions-only lever ``foreach_batch_index_add``
     and the index sinks already use, applied to merged state. Layout:
@@ -549,13 +553,12 @@ def cms_log_merge():
 def _append_log_batch(
     path: str, summarize, merge=None, auto_maintain: int | None = None
 ):
-    """foreachBatch callback factory for the APPEND-LOG sketch sinks
-    (r10): the batch's summary rows land under their own
-    ``_batch=b<id>`` partition via dynamic overwrite — O(batch) work
-    with ZERO reads of existing state, the strict-minimum per-batch
-    cost (the LSM spelling next to the legacy full-rewrite and the
-    bucketed merge). Exactly-once: a replayed micro-batch rewrites its
-    own partition in place (the ``foreach_batch_index_add`` regime) —
+    """foreachBatch callback factory for the sketch sinks (r10): the
+    batch's summary rows land under their own ``_batch=b<id>`` partition
+    via dynamic overwrite — O(batch) work with ZERO reads of existing
+    state, the strict-minimum per-batch cost. Exactly-once: a replayed
+    micro-batch rewrites its own partition in place (the
+    ``foreach_batch_index_add`` regime) —
     EXCEPT once :func:`maintain_sketch_log` has folded the tag away
     (r11, ADVICE r10): a replay would then recreate the partition on
     top of the already-merged state, which double-counts for the
@@ -569,8 +572,9 @@ def _append_log_batch(
     #1): after the batch write, one driver-side tag listing fires
     :func:`maintain_sketch_log` once more than ``auto_maintain`` batch
     partitions exist (default :data:`~ralf_spark.layout.
-    AUTO_MAINTAIN_BATCHES`; 0 disables). Because the sketch compaction
-    MERGES, the folded partition stays O(state) — the cadence costs
+    AUTO_MAINTAIN_BATCHES`, what every sink uses; tests pass a smaller
+    cadence). Because the sketch compaction MERGES, the folded
+    partition stays O(state) — the cadence costs
     O(state) every ~N batches, keeping both the merge-on-read estimate
     and the listing flat for any stream length. keep_last=1 keeps the
     just-written tag replayable."""
@@ -596,15 +600,16 @@ def foreach_batch_hll_append(
     path: str,
     group_cols: list[str],
     value_col: str,
-    auto_maintain: int | None = None,
 ) -> DataStreamWriter:
-    """Append-log spelling of the HLL sink (r10; see
-    :func:`_append_log_batch`): per-batch cost is O(batch registers) at
-    ANY total group count. Read the estimate from
-    ``hll_estimate(hll_log_state(spark, path, group_cols), group_cols)``;
-    the merging compaction fires automatically past ``auto_maintain``
-    accumulated batches (r11; 0 disables — then call
-    :func:`maintain_sketch_log` yourself)."""
+    """Maintain a per-group HyperLogLog register log from a stream (r10;
+    see :func:`_append_log_batch`): each micro-batch appends its (group,
+    bucket, max-rho) registers, so per-batch cost is O(batch registers)
+    at ANY total group count. Read the estimate from
+    ``hll_estimate(hll_log_state(spark, path, group_cols), group_cols)``
+    — the same algebra as the one-shot ``hll_distinct``. Register max is
+    idempotent, so a replay cannot change the estimate. The merging
+    compaction fires automatically past
+    :data:`~ralf_spark.layout.AUTO_MAINTAIN_BATCHES` batches."""
     from ralf_spark.operators.sketches import hll_register_update
 
     return df.writeStream.foreachBatch(
@@ -612,7 +617,6 @@ def foreach_batch_hll_append(
             path,
             lambda b: hll_register_update(b, group_cols, value_col),
             merge=hll_log_merge(group_cols),
-            auto_maintain=auto_maintain,
         )
     )
 
@@ -623,11 +627,13 @@ def foreach_batch_kmv_append(
     group_cols: list[str],
     value_col: str,
     k: int = 32,
-    auto_maintain: int | None = None,
 ) -> DataStreamWriter:
-    """Append-log spelling of the KMV sink (r10); read with
-    ``kmv_log_state``; auto-compacts past ``auto_maintain`` batches
-    (r11; 0 disables)."""
+    """Maintain a per-group KMV sketch (k smallest distinct value
+    hashes) log from a stream (r10): each micro-batch appends its own
+    min-k table; ``kmv_log_state`` merges by union-distinct-keep-k
+    (idempotent by algebra), read out with ``kmv_estimate`` under the
+    same oracle as the one-shot ``kmv_distinct``. Auto-compacts like
+    :func:`foreach_batch_hll_append`."""
     from ralf_spark.operators.sketches import kmv_state_update
 
     return df.writeStream.foreachBatch(
@@ -635,7 +641,6 @@ def foreach_batch_kmv_append(
             path,
             lambda b: kmv_state_update(b, group_cols, value_col, k),
             merge=kmv_log_merge(group_cols, k),
-            auto_maintain=auto_maintain,
         )
     )
 
@@ -647,18 +652,18 @@ def foreach_batch_rq_append(
     value_col: str,
     id_col: str,
     k: int = 256,
-    auto_maintain: int | None = None,
 ) -> DataStreamWriter:
-    """Append-log spelling of the quantile-sketch sink (r14, VERDICT r13
-    #3): each micro-batch appends its bottom-k sample rows under its own
-    ``_batch`` partition — O(batch) per batch, zero reads of existing
+    """Maintain a per-group quantile sketch (bottom-k row sample) log
+    from a stream (r14, VERDICT r13 #3): each micro-batch appends its
+    bottom-k sample rows under its own ``_batch`` partition — O(batch)
+    per batch, zero reads of existing
     state — and the estimate merges the log on read
     (``rq_quantiles(rq_log_state(...))``). The bottom-k union is
     associative/commutative/IDEMPOTENT, so any micro-batching, any
     replay, and any amount of compaction converge on the identical
     sample — the same exactly-once-by-algebra class as HLL/KMV, no
-    marker needed. Auto-compacts past ``auto_maintain`` batches (0
-    disables)."""
+    marker needed. Auto-compacts like
+    :func:`foreach_batch_hll_append`."""
     from ralf_spark.operators.sketches import rq_state_update
 
     return df.writeStream.foreachBatch(
@@ -666,7 +671,6 @@ def foreach_batch_rq_append(
             path,
             lambda b: rq_state_update(b, group_cols, value_col, id_col, k),
             merge=rq_log_merge(group_cols, k),
-            auto_maintain=auto_maintain,
         )
     )
 
@@ -677,16 +681,17 @@ def foreach_batch_cms_append(
     key_col: str,
     depth: int = 4,
     width: int = 256,
-    auto_maintain: int | None = None,
 ) -> DataStreamWriter:
-    """Append-log spelling of the CMS sink (r10). Counter sums are NOT
-    idempotent: each batch owns its ``_batch`` partition and a replay
-    rewrites it in place — the partition itself is the exactly-once
-    unit — and once :func:`maintain_sketch_log` folds a tag away, the
-    compacted-tags sidecar makes its replay a no-op (r11, ADVICE r10:
-    recreating a folded partition would double-count the sums; HLL/KMV
-    would merely be redundant). Read with ``cms_log_state``;
-    auto-compacts past ``auto_maintain`` batches (r11; 0 disables)."""
+    """Maintain a count-min counter matrix log from a stream (r10): each
+    micro-batch appends its own ``depth * width`` matrix
+    (``operators.sketches.cms_counter_update``) and ``cms_log_state``
+    sums it counter-wise on read. Counter sums are NOT idempotent: each
+    batch owns its ``_batch`` partition and a replay rewrites it in
+    place — the partition itself is the exactly-once unit — and once
+    :func:`maintain_sketch_log` folds a tag away, the compacted-tags
+    sidecar makes its replay a no-op (r11, ADVICE r10: recreating a
+    folded partition would double-count the sums; HLL/KMV would merely
+    be redundant). Auto-compacts like :func:`foreach_batch_hll_append`."""
     from ralf_spark.operators.sketches import cms_counter_update
 
     return df.writeStream.foreachBatch(
@@ -694,7 +699,6 @@ def foreach_batch_cms_append(
             path,
             lambda b: cms_counter_update(b, key_col, depth, width),
             merge=cms_log_merge(),
-            auto_maintain=auto_maintain,
         )
     )
 
@@ -785,11 +789,11 @@ def maintain_sketch_log(
 
 
 def read_bucketed_state(spark: SparkSession, path: str) -> DataFrame:
-    """Read a bucketed sink's state table with the layout columns
-    (bucket partition + per-bucket batch stamp) projected away — what
-    estimate read-outs consume. Also accepts a legacy unbucketed table
-    (drops whatever layout columns are present), recovering a publish
-    of the unbucketed layout that a crash cut between its renames."""
+    """Read a fold sink's state table (moments, EWMA, decayed sum) with
+    the layout columns (bucket partition + per-bucket batch stamp)
+    projected away. Also accepts an unbucketed table (drops whatever
+    layout columns are present), recovering a publish of the unbucketed
+    layout that a crash cut between its renames."""
     connectors._recover_staged_publish(spark, path)
     df = spark.read.parquet(path)
     drop = [
@@ -1137,190 +1141,6 @@ def foreach_batch_quality_log(
         )
 
     return df.writeStream.foreachBatch(log)
-
-
-def foreach_batch_hll_upsert(
-    df: DataFrame,
-    path: str,
-    group_cols: list[str],
-    value_col: str,
-    buckets: int | None = None,
-) -> DataStreamWriter:
-    """Maintain a persisted per-group HyperLogLog register table from a
-    stream (r7) — incremental distinct counting without distinct sets:
-    each micro-batch reduces to its (group, bucket, max-rho) registers
-    and merges into the stored table by register-wise max
-    (``operators.sketches.hll_fold`` over the union). State is
-    O(groups × 64 registers) regardless of stream length; the estimate
-    is read out with ``hll_estimate`` — the same algebra as the one-shot
-    ``hll_distinct``, so the same oracle gates both paths.
-
-    Unlike the moments/EWMA/decayed folds, the HLL merge is IDEMPOTENT
-    by algebra (max can't double-count), so a replayed batch is harmless
-    even without the marker; the ``LAST_BATCH_COL`` stamp is still
-    written for the skip (saves the merge work) and observability.
-
-    ``buckets=N`` switches the state to the hash-bucketed layout
-    (:func:`_bucketed_fold_upsert`): per-batch cost ∝ the batch's touched
-    buckets instead of total group count — the 100 TB spelling (r10,
-    SCALEPROBE finding 11). Same estimates, same oracle; read the table
-    back with :func:`read_bucketed_state`."""
-
-    return df.writeStream.foreachBatch(
-        hll_upsert_batch(path, group_cols, value_col, buckets)
-    )
-
-
-def hll_upsert_batch(
-    path: str,
-    group_cols: list[str],
-    value_col: str,
-    buckets: int | None = None,
-):
-    """The foreachBatch callback behind :func:`foreach_batch_hll_upsert`,
-    exposed for direct use/testing: ``(batch_df, batch_id) -> None``."""
-    from ralf_spark.operators.sketches import hll_fold, hll_register_update
-
-    return _fold_upsert_batch(
-        path, group_cols,
-        lambda b: hll_register_update(b, group_cols, value_col),
-        init=lambda s: s,
-        merge=lambda cur, bat: hll_fold(cur.unionByName(bat), group_cols),
-        buckets=buckets,
-    )
-
-
-def foreach_batch_kmv_upsert(
-    df: DataFrame,
-    path: str,
-    group_cols: list[str],
-    value_col: str,
-    k: int = 32,
-    buckets: int | None = None,
-) -> DataStreamWriter:
-    """Maintain a persisted per-group KMV sketch (k smallest distinct
-    value hashes) from a stream (r7): each micro-batch reduces to its own
-    min-k table and merges by union-distinct-keep-k
-    (``operators.sketches.kmv_fold`` over the union) — idempotent by
-    algebra like the HLL register max, so replays are harmless even
-    without the marker (still stamped, for the skip and observability).
-    State is O(groups × k); the estimate reads out with ``kmv_estimate``
-    under the same oracle as the one-shot ``kmv_distinct``. ``buckets=N``:
-    hash-bucketed state layout — per-batch cost ∝ touched buckets, not
-    group count (see :func:`_bucketed_fold_upsert`)."""
-
-    return df.writeStream.foreachBatch(
-        kmv_upsert_batch(path, group_cols, value_col, k, buckets)
-    )
-
-
-def kmv_upsert_batch(
-    path: str,
-    group_cols: list[str],
-    value_col: str,
-    k: int = 32,
-    buckets: int | None = None,
-):
-    """The foreachBatch callback behind :func:`foreach_batch_kmv_upsert`,
-    exposed for direct use/testing: ``(batch_df, batch_id) -> None``."""
-    from ralf_spark.operators.sketches import kmv_fold, kmv_state_update
-
-    return _fold_upsert_batch(
-        path, group_cols,
-        lambda b: kmv_state_update(b, group_cols, value_col, k),
-        init=lambda s: s,
-        merge=lambda cur, bat: kmv_fold(cur.unionByName(bat), group_cols, k),
-        buckets=buckets,
-    )
-
-
-def foreach_batch_rq_upsert(
-    df: DataFrame,
-    path: str,
-    group_cols: list[str],
-    value_col: str,
-    id_col: str,
-    k: int = 256,
-    buckets: int | None = None,
-) -> DataStreamWriter:
-    """Maintain a persisted per-group quantile sketch (bottom-k row
-    sample) from a stream (r14) — the merged-state sibling of
-    :func:`foreach_batch_rq_append`, completing the three state
-    spellings the other sketches have (full-rewrite, bucketed merge,
-    append log): each micro-batch reduces to its own bottom-k table and
-    merges by union-distinct-keep-k (idempotent by algebra — replays
-    harmless). State is O(groups × k); read estimates with
-    ``rq_quantiles`` under the same oracle as the one-shot
-    ``reservoir_quantile``. ``buckets=N``: hash-bucketed layout,
-    per-batch cost ∝ touched buckets."""
-    return df.writeStream.foreachBatch(
-        rq_upsert_batch(path, group_cols, value_col, id_col, k, buckets)
-    )
-
-
-def rq_upsert_batch(
-    path: str,
-    group_cols: list[str],
-    value_col: str,
-    id_col: str,
-    k: int = 256,
-    buckets: int | None = None,
-):
-    """The foreachBatch callback behind :func:`foreach_batch_rq_upsert`,
-    exposed for direct use/testing: ``(batch_df, batch_id) -> None``."""
-    from ralf_spark.operators.sketches import rq_fold, rq_state_update
-
-    return _fold_upsert_batch(
-        path, group_cols,
-        lambda b: rq_state_update(b, group_cols, value_col, id_col, k),
-        init=lambda s: s,
-        merge=lambda cur, bat: rq_fold(cur.unionByName(bat), group_cols, k),
-        buckets=buckets,
-    )
-
-
-def foreach_batch_cms_upsert(
-    df: DataFrame,
-    path: str,
-    key_col: str,
-    depth: int = 4,
-    width: int = 256,
-    buckets: int | None = None,
-) -> DataStreamWriter:
-    """Maintain a persisted count-min counter matrix from a stream (r7) —
-    incremental frequency bookkeeping in ``depth * width`` cells whatever
-    the stream length: each micro-batch reduces to its own matrix
-    (``operators.sketches.cms_counter_update``) and merges by
-    counter-wise sum. Sums DO double-count on replay (unlike the HLL
-    register max), so exactly-once rides the in-table batch marker —
-    data and marker commit together in the staged rename publish.
-    ``buckets=N``: hash-bucketed layout on the (r, bucket) cell key —
-    uniformity with the other sinks (and the per-bucket replay marker);
-    the CMS matrix itself is bounded, so this is never a scale need."""
-
-    return df.writeStream.foreachBatch(
-        cms_upsert_batch(path, key_col, depth, width, buckets)
-    )
-
-
-def cms_upsert_batch(
-    path: str,
-    key_col: str,
-    depth: int = 4,
-    width: int = 256,
-    buckets: int | None = None,
-):
-    """The foreachBatch callback behind :func:`foreach_batch_cms_upsert`,
-    exposed for direct use/testing: ``(batch_df, batch_id) -> None``."""
-    from ralf_spark.operators.sketches import cms_counter_update, cms_fold
-
-    return _fold_upsert_batch(
-        path, ["r", "bucket"],
-        lambda b: cms_counter_update(b, key_col, depth, width),
-        init=lambda s: s,
-        merge=lambda cur, bat: cms_fold(cur.unionByName(bat)),
-        buckets=buckets,
-    )
 
 
 def foreach_batch_ivf_add(

@@ -1,11 +1,13 @@
-"""Bucketed sketch/fold state sinks (r10, VERDICT r9 #1): per-batch cost
-∝ touched buckets instead of total group count, same state values.
+"""Bucketed fold state sinks (r10, VERDICT r9 #1): per-batch cost ∝
+touched buckets instead of total group count, same state values. The
+sketch sinks persist as append logs instead (tested here against the
+one-shot sketch operators).
 
 Contract pinned here:
-- every sink's bucketed output equals the legacy full-rewrite output
+- every fold sink's bucketed output equals the full-rewrite output
   row-for-row (the merge algebra is layout-independent);
-- replay of a committed batch is a no-op (per-bucket marker skip), incl.
-  the non-idempotent CMS/moments folds;
+- replay of a committed batch is a no-op (per-bucket marker skip) for
+  the non-idempotent moments/EWMA/decayed folds;
 - the bucket count is pinned in the layout sidecar (reopening with a
   different value raises) and a legacy table cannot be adopted in place;
 - a partially-committed batch (crash mid dynamic overwrite) heals on
@@ -20,17 +22,12 @@ import shutil
 import pyspark.sql.functions as F
 import pytest
 
-from ralf_spark.operators.sketches import hll_estimate, kmv_estimate
 from ralf_spark.streaming.sinks import (
     STATE_BUCKET_COL,
-    cms_upsert_batch,
     decayed_upsert_batch,
     ewma_upsert_batch,
-    hll_upsert_batch,
-    kmv_upsert_batch,
     moments_upsert_batch,
     read_bucketed_state,
-    rq_upsert_batch,
 )
 
 
@@ -54,45 +51,12 @@ def _rows(df, cols):
     return sorted(tuple(r) for r in df.select(*cols).collect())
 
 
-@pytest.mark.slow
-def test_bucketed_sketch_sinks_equal_legacy(spark, tmp_path, batches):
-    d = str(tmp_path)
-    for i, b in enumerate(batches):
-        hll_upsert_batch(f"{d}/hl", ["k"], "v")(b, i)
-        hll_upsert_batch(f"{d}/hb", ["k"], "v", buckets=8)(b, i)
-        kmv_upsert_batch(f"{d}/kl", ["k"], "v", k=16)(b, i)
-        kmv_upsert_batch(f"{d}/kb", ["k"], "v", k=16, buckets=8)(b, i)
-        cms_upsert_batch(f"{d}/cl", "k", depth=4, width=32)(b, i)
-        cms_upsert_batch(f"{d}/cb", "k", depth=4, width=32, buckets=4)(b, i)
-        rq_upsert_batch(f"{d}/rl", ["k"], "v", "seq", k=16)(b, i)
-        rq_upsert_batch(f"{d}/rb", ["k"], "v", "seq", k=16, buckets=8)(b, i)
-    assert _rows(
-        hll_estimate(spark.read.parquet(f"{d}/hl"), ["k"]),
-        ["k", "est_distinct"],
-    ) == _rows(
-        hll_estimate(read_bucketed_state(spark, f"{d}/hb"), ["k"]),
-        ["k", "est_distinct"],
-    )
-    assert _rows(
-        kmv_estimate(
-            spark.read.parquet(f"{d}/kl").drop("_last_batch_id"),
-            ["k"], k=16,
-        ),
-        ["k", "est_distinct"],
-    ) == _rows(
-        kmv_estimate(read_bucketed_state(spark, f"{d}/kb"), ["k"], k=16),
-        ["k", "est_distinct"],
-    )
-    assert _rows(spark.read.parquet(f"{d}/cl"), ["r", "bucket", "c"]) == (
-        _rows(read_bucketed_state(spark, f"{d}/cb"), ["r", "bucket", "c"])
-    )
-    assert _rows(spark.read.parquet(f"{d}/rl"), ["k", "h", "v"]) == (
-        _rows(read_bucketed_state(spark, f"{d}/rb"), ["k", "h", "v"])
-    )
-    # the layout really is partitioned by the state bucket
-    assert any(
-        p.name.startswith(f"{STATE_BUCKET_COL}=")
-        for p in (tmp_path / "hb").iterdir()
+def _moments(spark, path):
+    """A moments state's rows; the mean is rounded because a refold may
+    sum the batch in another order."""
+    return _rows(
+        read_bucketed_state(spark, path),
+        ["k", "n", F.round("mean", 6).alias("mean")],
     )
 
 
@@ -118,14 +82,19 @@ def test_bucketed_fold_sinks_equal_legacy(spark, tmp_path, batches):
         assert _rows(
             spark.read.parquet(f"{d}/{leg}").drop("_last_batch_id"), cols
         ) == _rows(read_bucketed_state(spark, f"{d}/{buc}"), cols)
+    # the layout really is partitioned by the state bucket
+    assert any(
+        p.name.startswith(f"{STATE_BUCKET_COL}=")
+        for p in (tmp_path / "mb").iterdir()
+    )
 
 
 @pytest.mark.slow
 def test_bucketed_replay_skips_nonidempotent_folds(spark, tmp_path, batches):
     """A replayed batch id leaves every fold sink's state rows unchanged,
     in both layouts: the global marker skips it (unbucketed), the
-    per-bucket stamps skip it (bucketed) — including the non-idempotent
-    moments/EWMA/decayed/CMS folds."""
+    per-bucket stamps skip it (bucketed) — the moments/EWMA/decayed
+    folds are all non-idempotent."""
     d = str(tmp_path)
     sinks = {
         "moments": lambda p, n: moments_upsert_batch(p, "k", "x", buckets=n),
@@ -134,14 +103,6 @@ def test_bucketed_replay_skips_nonidempotent_folds(spark, tmp_path, batches):
         ),
         "decayed": lambda p, n: decayed_upsert_batch(
             p, "k", "ts", "x", 3600.0, "seq", buckets=n
-        ),
-        "hll": lambda p, n: hll_upsert_batch(p, ["k"], "v", buckets=n),
-        "kmv": lambda p, n: kmv_upsert_batch(p, ["k"], "v", k=16, buckets=n),
-        "rq": lambda p, n: rq_upsert_batch(
-            p, ["k"], "v", "seq", k=16, buckets=n
-        ),
-        "cms": lambda p, n: cms_upsert_batch(
-            p, "k", depth=4, width=32, buckets=n
         ),
     }
 
@@ -162,51 +123,58 @@ def test_bucketed_replay_skips_nonidempotent_folds(spark, tmp_path, batches):
 
 def test_bucket_count_pinned_and_legacy_refused(spark, tmp_path, batches):
     d = str(tmp_path)
-    hll_upsert_batch(f"{d}/b", ["k"], "v", buckets=8)(batches[0], 0)
+    moments_upsert_batch(f"{d}/b", "k", "x", buckets=8)(batches[0], 0)
     with pytest.raises(ValueError, match="buckets=8"):
-        hll_upsert_batch(f"{d}/b", ["k"], "v", buckets=16)(batches[1], 1)
-    hll_upsert_batch(f"{d}/l", ["k"], "v")(batches[0], 0)
+        moments_upsert_batch(f"{d}/b", "k", "x", buckets=16)(batches[1], 1)
+    moments_upsert_batch(f"{d}/l", "k", "x")(batches[0], 0)
     with pytest.raises(ValueError, match="not bucketed"):
-        hll_upsert_batch(f"{d}/l", ["k"], "v", buckets=8)(batches[1], 1)
+        moments_upsert_batch(f"{d}/l", "k", "x", buckets=8)(batches[1], 1)
 
 
 def test_partial_commit_heals_on_replay(spark, tmp_path, batches):
     """Crash window: batch N committed some buckets, not others. The
     replay folds exactly the missed buckets (per-bucket stamps)."""
     d = str(tmp_path)
-    cb = cms_upsert_batch(f"{d}/c", "k", depth=4, width=32, buckets=4)
+    cb = moments_upsert_batch(f"{d}/m", "k", "x", buckets=4)
     cb(batches[0], 0)
     saved = tmp_path / "saved_bucket0"
-    shutil.copytree(f"{d}/c/{STATE_BUCKET_COL}=0", saved)
+    shutil.copytree(f"{d}/m/{STATE_BUCKET_COL}=0", saved)
     cb(batches[1], 1)
-    full = _rows(read_bucketed_state(spark, f"{d}/c"), ["r", "bucket", "c"])
+    full = _moments(spark, f"{d}/m")
     # roll bucket 0 back to its pre-batch-1 contents = the crash left it
     # unwritten while buckets 1-3 committed
-    shutil.rmtree(f"{d}/c/{STATE_BUCKET_COL}=0")
-    shutil.copytree(saved, f"{d}/c/{STATE_BUCKET_COL}=0")
+    shutil.rmtree(f"{d}/m/{STATE_BUCKET_COL}=0")
+    shutil.copytree(saved, f"{d}/m/{STATE_BUCKET_COL}=0")
     spark.catalog.clearCache()
     cb(batches[1], 1)  # checkpoint replay
-    assert _rows(
-        read_bucketed_state(spark, f"{d}/c"), ["r", "bucket", "c"]
-    ) == full
+    assert _moments(spark, f"{d}/m") == full
 
 
 @pytest.mark.slow
 def test_append_log_sinks_equal_legacy(spark, tmp_path, batches):
     """r10 append-log spelling: O(batch) writes, merge-on-read estimates
-    equal the legacy merged state exactly; replay rewrites its own
-    partition (no marker needed); merging compaction preserves the
-    estimates and shrinks the log to O(state)."""
+    equal the one-shot sketch of the union of the batches exactly;
+    replay rewrites its own partition (no marker needed); merging
+    compaction preserves the estimates and shrinks the log to
+    O(state)."""
+    import functools
     import glob
 
+    from pyspark.sql import DataFrame
     from pyspark.sql import functions as F
 
-    from ralf_spark.operators.sketches import hll_estimate, kmv_estimate
+    from ralf_spark.operators.sketches import (
+        cms_counter_update,
+        hll_distinct,
+        hll_estimate,
+        hll_register_update,
+        kmv_distinct,
+        kmv_estimate,
+        kmv_state_update,
+    )
     from ralf_spark.streaming.sinks import (
+        _append_log_batch,
         cms_log_state,
-        foreach_batch_cms_append,
-        foreach_batch_hll_append,
-        foreach_batch_kmv_append,
         hll_log_state,
         kmv_log_state,
         maintain_sketch_log,
@@ -215,13 +183,6 @@ def test_append_log_sinks_equal_legacy(spark, tmp_path, batches):
     d = str(tmp_path)
     # drive the raw callbacks directly (same ones the foreach_batch_*
     # writers wrap)
-    from ralf_spark.operators.sketches import (
-        cms_counter_update,
-        hll_register_update,
-        kmv_state_update,
-    )
-    from ralf_spark.streaming.sinks import _append_log_batch
-
     hll_cb = _append_log_batch(
         f"{d}/hl", lambda b: hll_register_update(b, ["k"], "v"))
     kmv_cb = _append_log_batch(
@@ -232,28 +193,20 @@ def test_append_log_sinks_equal_legacy(spark, tmp_path, batches):
         hll_cb(b, i)
         kmv_cb(b, i)
         cms_cb(b, i)
-        hll_upsert_batch(f"{d}/href", ["k"], "v")(b, i)
-        kmv_upsert_batch(f"{d}/kref", ["k"], "v", k=16)(b, i)
-        cms_upsert_batch(f"{d}/cref", "k", depth=4, width=32)(b, i)
+    union = functools.reduce(DataFrame.unionByName, batches)
 
-    def est_hll(src):
-        return _rows(hll_estimate(src, ["k"]), ["k", "est_distinct"])
+    def est(df):
+        return _rows(df, ["k", "est_distinct"])
 
-    assert est_hll(hll_log_state(spark, f"{d}/hl", ["k"])) == est_hll(
-        spark.read.parquet(f"{d}/href")
-    )
-    assert _rows(
-        kmv_estimate(kmv_log_state(spark, f"{d}/kl", ["k"], 16), ["k"], 16),
-        ["k", "est_distinct"],
-    ) == _rows(
-        kmv_estimate(
-            spark.read.parquet(f"{d}/kref").drop("_last_batch_id"),
-            ["k"], k=16,
-        ),
-        ["k", "est_distinct"],
-    )
+    hll_want = est(hll_distinct(union, ["k"], "v"))
+    assert est(
+        hll_estimate(hll_log_state(spark, f"{d}/hl", ["k"]), ["k"])
+    ) == hll_want
+    assert est(
+        kmv_estimate(kmv_log_state(spark, f"{d}/kl", ["k"], 16), ["k"], 16)
+    ) == est(kmv_distinct(union, ["k"], "v", k=16))
     cms_want = _rows(
-        spark.read.parquet(f"{d}/cref").select(
+        cms_counter_update(union, "k", 4, 32).select(
             "r", "bucket", F.col("c").cast("long").alias("c")
         ),
         ["r", "bucket", "c"],
@@ -298,9 +251,9 @@ def test_append_log_sinks_equal_legacy(spark, tmp_path, batches):
         ),
     )
     assert out2 is not None
-    assert est_hll(hll_log_state(spark, f"{d}/hl", ["k"])) == est_hll(
-        spark.read.parquet(f"{d}/href")
-    )
+    assert est(
+        hll_estimate(hll_log_state(spark, f"{d}/hl", ["k"]), ["k"])
+    ) == hll_want
 
 
 def test_publish_crash_recovers_from_staged_swap(spark, tmp_path, batches):
@@ -316,30 +269,28 @@ def test_publish_crash_recovers_from_staged_swap(spark, tmp_path, batches):
     from ralf_spark.streaming.sinks import _PUBLISH_MANIFEST_NAME
 
     d = str(tmp_path)
-    cb = cms_upsert_batch(f"{d}/c", "k", depth=4, width=32, buckets=4)
+    cb = moments_upsert_batch(f"{d}/m", "k", "x", buckets=4)
     cb(batches[0], 0)
     cb(batches[1], 1)
-    full = _rows(read_bucketed_state(spark, f"{d}/c"), ["r", "bucket", "c"])
+    full = _moments(spark, f"{d}/m")
 
     # reconstruct the crash: bucket 0's post-batch-1 dir is "the staged
     # copy", its final dir deleted mid-swap, manifest naming the swap
-    staging = f"{d}/c/.staging_b1"
+    staging = f"{d}/m/.staging_b1"
     shutil.copytree(
-        f"{d}/c/{STATE_BUCKET_COL}=0", f"{staging}/{STATE_BUCKET_COL}=0"
+        f"{d}/m/{STATE_BUCKET_COL}=0", f"{staging}/{STATE_BUCKET_COL}=0"
     )
-    shutil.rmtree(f"{d}/c/{STATE_BUCKET_COL}=0")
-    with open(f"{d}/c/{_PUBLISH_MANIFEST_NAME}", "w") as f:
+    shutil.rmtree(f"{d}/m/{STATE_BUCKET_COL}=0")
+    with open(f"{d}/m/{_PUBLISH_MANIFEST_NAME}", "w") as f:
         json.dump({"staging": ".staging_b1", "buckets": [0], "batch": 1}, f)
     spark.catalog.clearCache()
 
     cb(batches[1], 1)  # checkpoint replay after the crash
-    assert _rows(
-        read_bucketed_state(spark, f"{d}/c"), ["r", "bucket", "c"]
-    ) == full
+    assert _moments(spark, f"{d}/m") == full
     import os
 
     assert not os.path.exists(staging)
-    assert not os.path.exists(f"{d}/c/{_PUBLISH_MANIFEST_NAME}")
+    assert not os.path.exists(f"{d}/m/{_PUBLISH_MANIFEST_NAME}")
 
 
 def test_publish_sweeps_premanifest_staging_garbage(spark, tmp_path, batches):
@@ -367,12 +318,12 @@ def test_heal_refuses_inconsistent_bucket_count(spark, tmp_path, batches):
     import os
 
     d = str(tmp_path)
-    hll_upsert_batch(f"{d}/b", ["k"], "v", buckets=8)(batches[0], 0)
+    moments_upsert_batch(f"{d}/b", "k", "x", buckets=8)(batches[0], 0)
     os.remove(f"{d}/b/_ralf_state_meta.json")  # simulate pre-r11 crash
     with pytest.raises(ValueError, match="inconsistent"):
-        hll_upsert_batch(f"{d}/b", ["k"], "v", buckets=4)(batches[1], 1)
+        moments_upsert_batch(f"{d}/b", "k", "x", buckets=4)(batches[1], 1)
     # a CONSISTENT count heals (observed ids all < buckets)
-    hll_upsert_batch(f"{d}/b", ["k"], "v", buckets=8)(batches[1], 1)
+    moments_upsert_batch(f"{d}/b", "k", "x", buckets=8)(batches[1], 1)
     assert os.path.exists(f"{d}/b/_ralf_state_meta.json")
 
 
@@ -435,22 +386,21 @@ def test_corrupt_publish_manifest_rolls_back(spark, tmp_path, batches):
     from ralf_spark.streaming.sinks import _PUBLISH_MANIFEST_NAME
 
     d = str(tmp_path)
-    cb = cms_upsert_batch(f"{d}/c", "k", depth=4, width=32, buckets=4)
+    cb = moments_upsert_batch(f"{d}/m", "k", "x", buckets=4)
     cb(batches[0], 0)
-    before = _rows(read_bucketed_state(spark, f"{d}/c"), ["r", "bucket", "c"])
-    os.makedirs(f"{d}/c/.staging_b1/{STATE_BUCKET_COL}=1")
-    with open(f"{d}/c/{_PUBLISH_MANIFEST_NAME}", "w") as f:
+    before = _moments(spark, f"{d}/m")
+    os.makedirs(f"{d}/m/.staging_b1/{STATE_BUCKET_COL}=1")
+    with open(f"{d}/m/{_PUBLISH_MANIFEST_NAME}", "w") as f:
         f.write('{"staging": ".staging_b1", "buck')  # truncated mid-write
     spark.catalog.clearCache()
     cb(batches[1], 1)  # replay after the crash
-    assert not os.path.exists(f"{d}/c/.staging_b1")
-    assert not os.path.exists(f"{d}/c/{_PUBLISH_MANIFEST_NAME}")
-    after = _rows(read_bucketed_state(spark, f"{d}/c"), ["r", "bucket", "c"])
-    assert after != before  # batch 1 folded exactly once
+    assert not os.path.exists(f"{d}/m/.staging_b1")
+    assert not os.path.exists(f"{d}/m/{_PUBLISH_MANIFEST_NAME}")
+    after = _moments(spark, f"{d}/m")
+    # batch 1 folded exactly once: every key's count grew by its 15 rows
+    assert [r[1] for r in after] == [r[1] + 15 for r in before]
     cb(batches[1], 1)  # and a further replay is a per-bucket no-op
-    assert _rows(
-        read_bucketed_state(spark, f"{d}/c"), ["r", "bucket", "c"]
-    ) == after
+    assert _moments(spark, f"{d}/m") == after
 
 
 def test_second_concurrent_writer_refused(spark, tmp_path, batches, monkeypatch):
@@ -462,24 +412,18 @@ def test_second_concurrent_writer_refused(spark, tmp_path, batches, monkeypatch)
     from ralf_spark.connectors import ConcurrentWriterError
 
     d = str(tmp_path)
-    # writer A commits batch 0 on a bucketed sketch store
-    hll_upsert_batch(f"{d}/hb", ["k"], "v", buckets=8)(batches[0], 0)
+    # writer A commits batch 0 on a bucketed fold store
+    moments_upsert_batch(f"{d}/mb", "k", "x", buckets=8)(batches[0], 0)
+    before = _moments(spark, f"{d}/mb")
     # a different PROCESS (fresh writer id) interleaves -> refused
     monkeypatch.setattr(connectors, "_PROCESS_WRITER_ID", "writer-b")
     with pytest.raises(ConcurrentWriterError, match="held by writer"):
-        hll_upsert_batch(f"{d}/hb", ["k"], "v", buckets=8)(batches[1], 1)
+        moments_upsert_batch(f"{d}/mb", "k", "x", buckets=8)(batches[1], 1)
     # the store is untouched by the refused write: batch 0 state intact
-    est0 = _rows(
-        hll_estimate(
-            read_bucketed_state(spark, f"{d}/hb").drop(STATE_BUCKET_COL),
-            ["k"],
-        ),
-        ["k", "est_distinct"],
-    )
-    assert len(est0) == 200
+    assert _moments(spark, f"{d}/mb") == before and len(before) == 200
     # writer A crashed: its lease expires, writer B steals and proceeds
     monkeypatch.setattr(connectors, "WRITER_LEASE_TTL_SEC", 0.0)
-    hll_upsert_batch(f"{d}/hb", ["k"], "v", buckets=8)(batches[1], 1)
+    moments_upsert_batch(f"{d}/mb", "k", "x", buckets=8)(batches[1], 1)
 
 
 def test_concurrent_writer_refused_everywhere(spark, tmp_path, batches,
@@ -545,11 +489,11 @@ def test_writer_lease_clean_release_hands_off_immediately(
     )
 
     d = str(tmp_path)
-    hll_upsert_batch(f"{d}/hb", ["k"], "v", buckets=8)(batches[0], 0)
-    release_writer_lease(spark, f"{d}/hb")  # clean shutdown of writer A
+    moments_upsert_batch(f"{d}/mb", "k", "x", buckets=8)(batches[0], 0)
+    release_writer_lease(spark, f"{d}/mb")  # clean shutdown of writer A
     monkeypatch.setattr(connectors, "_PROCESS_WRITER_ID", "writer-b")
     # no TTL wait needed: the lease is gone
-    hll_upsert_batch(f"{d}/hb", ["k"], "v", buckets=8)(batches[1], 1)
+    moments_upsert_batch(f"{d}/mb", "k", "x", buckets=8)(batches[1], 1)
 
 
 def test_foreign_maintain_refused_against_live_writer(spark, tmp_path,

@@ -222,6 +222,30 @@ def test_kv_roundtrips_timestamp_state(spark):
     assert prow.ts == dt.datetime(2024, 5, 1, 12, 0, 0, 123456)
 
 
+@pytest.mark.parametrize("kind", ["sqlite", "kv"])
+def test_connector_roundtrips_timestamp_ntz(spark, tmp_path, kind):
+    """A TIMESTAMP_NTZ column survives save/load through the epoch-micros
+    encoding: NULL, pre-1970 (negative micros) and sub-second values."""
+    import datetime as dt
+
+    if kind == "sqlite":
+        con = SqliteStateConnector(str(tmp_path / "ntz.db"), "s", key="k")
+    else:
+        con = KVStateConnector(InMemoryKVClient(), "s", key="k")
+    rows = [
+        (1, None),
+        (2, dt.datetime(1969, 12, 31, 23, 59, 59, 999999)),
+        (3, dt.datetime(1900, 1, 1, 0, 0, 0, 1)),
+        (4, dt.datetime(2024, 5, 1, 12, 0, 0, 123456)),
+    ]
+    con.save(FeatureTable(
+        spark.createDataFrame(rows, "k long, ts timestamp_ntz"), key="k"
+    ))
+    t = con.load(spark)
+    assert dict(t.df.dtypes)["ts"] == "timestamp_ntz"
+    assert sorted(tuple(r) for r in t.df.collect()) == rows
+
+
 def test_kv_upsert_keeps_absent_keys_serving(spark):
     """upsert (the streaming edge) must NOT evict keys missing from the
     batch — unlike save, which is a full refresh."""

@@ -23,6 +23,17 @@ from ralf_spark.table import FeatureTable
 from tests.conftest import SF_DIR
 
 
+def test_star_import_resolves_every_export():
+    """``from ralf_spark.streaming import *`` binds every ``__all__``
+    name, so an export a deletion left dangling fails here."""
+    import ralf_spark.streaming as streaming
+
+    ns: dict = {}
+    exec("from ralf_spark.streaming import *", ns)
+    assert streaming.__all__
+    assert [n for n in streaming.__all__ if n not in ns] == []
+
+
 @pytest.fixture()
 def events_dir(spark, tmp_path):
     """events fixture split into 3 files so multi-batch replay is real."""
@@ -1604,20 +1615,45 @@ def test_streaming_ivf_ingest_equals_batch_add(spark, tmp_path):
     assert got == [4, 1, 2]  # cell-0 members, cosine order
 
 
+def _replay_last_batch(spark, run, ck, log):
+    """Checkpoint replay of a finished bounded run: drop the newest
+    commit, so the restart re-runs that batch (same id, same input) into
+    the append log at ``log``; asserts it really rewrote its partition."""
+    import glob
+    import os
+
+    last = max(int(n) for n in os.listdir(f"{ck}/commits") if n.isdigit())
+    for f in (f"{ck}/commits/{last}", f"{ck}/commits/.{last}.crc"):
+        if os.path.exists(f):
+            os.remove(f)
+    files = lambda: set(glob.glob(f"{log}/_batch=b{last}/*.parquet"))  # noqa: E731
+    before = files()
+    run()
+    spark.catalog.clearCache()
+    after = files()
+    assert before and after and before != after
+
+
 @pytest.mark.slow
 def test_streaming_hll_state_merge_and_replay(spark, tmp_path):
-    """r7 HLL state sink: any micro-batching converges on the identical
-    register table (merge = register-wise max, order/partition
-    invariant), a replayed batch id is skipped, and even a FORCED
-    re-merge of already-folded rows cannot change the registers
-    (idempotent by algebra, not just by marker)."""
-    from ralf_spark.operators.sketches import hll_distinct, hll_estimate
+    """r7 HLL state sink (an append log since r10): any micro-batching
+    converges on the identical register table (merge on read =
+    register-wise max, order/partition invariant), a checkpoint replay
+    rewrites its own batch partition, and even a FORCED re-append of
+    already-logged rows under a new batch id cannot change the registers
+    (idempotent by algebra, not just by layout)."""
+    from ralf_spark.operators.sketches import (
+        hll_distinct,
+        hll_estimate,
+        hll_register_update,
+    )
     from ralf_spark.streaming import (
         file_events,
-        hll_upsert_batch,
+        foreach_batch_hll_append,
+        hll_log_state,
         run_bounded,
     )
-    from ralf_spark.streaming.sinks import foreach_batch_hll_upsert
+    from ralf_spark.streaming.sinks import _append_log_batch
 
     ev = load_fixture(spark, "events", SF_DIR).df.select(
         "event_type", "event_id"
@@ -1628,45 +1664,50 @@ def test_streaming_hll_state_merge_and_replay(spark, tmp_path):
     }
     src = str(tmp_path / "src")
     ev.repartition(4).write.parquet(src)
-    state = str(tmp_path / "state")
-    stream = file_events(
-        spark, src, schema="event_type string, event_id long",
-        max_files_per_trigger=1,
-    )
-    run_bounded(
-        foreach_batch_hll_upsert(stream, state, ["event_type"], "event_id"),
-        checkpoint=str(tmp_path / "ck"),
-        shuffle_partitions=4,
-    )
-    got = {
-        r.event_type: r.est_distinct
-        for r in hll_estimate(
-            spark.read.parquet(state), ["event_type"]
-        ).collect()
-    }
-    assert got == want and len(got) > 0
+    state, ck = str(tmp_path / "state"), str(tmp_path / "ck")
 
-    cb = hll_upsert_batch(state, ["event_type"], "event_id")
-    cb(ev, 0)  # replayed batch id -> marker skip
-    cb(ev.limit(50), 10**6)  # NEW id, already-seen rows -> max() no-op
-    again = {
-        r.event_type: r.est_distinct
-        for r in hll_estimate(
-            spark.read.parquet(state), ["event_type"]
-        ).collect()
-    }
-    assert again == want
+    def run():
+        stream = file_events(
+            spark, src, schema="event_type string, event_id long",
+            max_files_per_trigger=1,
+        )
+        run_bounded(
+            foreach_batch_hll_append(
+                stream, state, ["event_type"], "event_id"
+            ),
+            checkpoint=ck,
+            shuffle_partitions=4,
+        )
+
+    def estimate():
+        return {
+            r.event_type: r.est_distinct
+            for r in hll_estimate(
+                hll_log_state(spark, state, ["event_type"]), ["event_type"]
+            ).collect()
+        }
+
+    run()
+    assert estimate() == want and len(want) > 0
+    _replay_last_batch(spark, run, ck, state)
+    assert estimate() == want
+    # NEW id, already-seen rows -> max() no-op
+    _append_log_batch(
+        state, lambda b: hll_register_update(b, ["event_type"], "event_id")
+    )(ev.limit(50), 10**6)
+    assert estimate() == want
 
 
 def test_streaming_cms_state_merge_and_replay(spark, tmp_path):
-    """r7 CMS state sink: counter sums are micro-batching-invariant, and
-    a replayed batch id is skipped via the in-table marker (sums would
-    double-count — the marker is load-bearing here, unlike HLL)."""
+    """r7 CMS state sink (an append log since r10): counter sums are
+    micro-batching-invariant, and a checkpoint replay of a batch
+    rewrites that batch's own partition (sums would double-count — the
+    per-batch partition is load-bearing here, unlike HLL)."""
     from ralf_spark.operators.sketches import cms_counter_update
     from ralf_spark.streaming import (
-        cms_upsert_batch,
+        cms_log_state,
         file_events,
-        foreach_batch_cms_upsert,
+        foreach_batch_cms_append,
         run_bounded,
     )
 
@@ -1677,44 +1718,51 @@ def test_streaming_cms_state_merge_and_replay(spark, tmp_path):
     }
     src = str(tmp_path / "src")
     ev.repartition(4).write.parquet(src)
-    state = str(tmp_path / "state")
-    stream = file_events(
-        spark, src, schema="user_id long", max_files_per_trigger=1
-    )
-    run_bounded(
-        foreach_batch_cms_upsert(stream, state, "user_id", 4, 64),
-        checkpoint=str(tmp_path / "ck"),
-        shuffle_partitions=4,
-    )
+    state, ck = str(tmp_path / "state"), str(tmp_path / "ck")
+
+    def run():
+        stream = file_events(
+            spark, src, schema="user_id long", max_files_per_trigger=1
+        )
+        run_bounded(
+            foreach_batch_cms_append(stream, state, "user_id", 4, 64),
+            checkpoint=ck,
+            shuffle_partitions=4,
+        )
 
     def read_state():
         return {
             (r.r, r.bucket): r.c
-            for r in spark.read.parquet(state)
+            for r in cms_log_state(spark, state)
             .select("r", "bucket", "c")
             .collect()
         }
 
+    run()
     assert read_state() == want and len(want) > 0
-    # replayed batch id: a double-count would inflate every cell; the
-    # marker skip must make it a no-op
-    cb = cms_upsert_batch(state, "user_id", 4, 64)
-    cb(ev, 0)
+    # a double-count would inflate the replayed batch's cells
+    _replay_last_batch(spark, run, ck, state)
     assert read_state() == want
 
 
 @pytest.mark.slow
 def test_streaming_kmv_state_merge_and_replay(spark, tmp_path):
-    """r7 KMV state sink: min-k merge is idempotent by algebra — forced
-    re-merge of already-seen values cannot change the k-smallest set —
-    and any micro-batching converges on the identical estimate."""
-    from ralf_spark.operators.sketches import kmv_distinct, kmv_estimate
+    """r7 KMV state sink (an append log since r10): min-k merge is
+    idempotent by algebra — a forced re-append of already-seen values
+    cannot change the k-smallest set — and any micro-batching converges
+    on the identical estimate."""
+    from ralf_spark.operators.sketches import (
+        kmv_distinct,
+        kmv_estimate,
+        kmv_state_update,
+    )
     from ralf_spark.streaming import (
         file_events,
-        foreach_batch_kmv_upsert,
-        kmv_upsert_batch,
+        foreach_batch_kmv_append,
+        kmv_log_state,
         run_bounded,
     )
+    from ralf_spark.streaming.sinks import _append_log_batch
 
     ev = load_fixture(spark, "events", SF_DIR).df.select(
         "event_type", "user_id"
@@ -1731,7 +1779,7 @@ def test_streaming_kmv_state_merge_and_replay(spark, tmp_path):
         max_files_per_trigger=1,
     )
     run_bounded(
-        foreach_batch_kmv_upsert(stream, state, ["event_type"], "user_id",
+        foreach_batch_kmv_append(stream, state, ["event_type"], "user_id",
                                  k=16),
         checkpoint=str(tmp_path / "ck"),
         shuffle_partitions=4,
@@ -1741,15 +1789,16 @@ def test_streaming_kmv_state_merge_and_replay(spark, tmp_path):
         return {
             r.event_type: r.est_distinct
             for r in kmv_estimate(
-                spark.read.parquet(state).drop("_last_batch_id"),
+                kmv_log_state(spark, state, ["event_type"], k=16),
                 ["event_type"], k=16,
             ).collect()
         }
 
     assert estimate() == want and len(want) > 0
-    cb = kmv_upsert_batch(state, ["event_type"], "user_id", 16)
-    cb(ev, 0)             # replayed id -> marker skip
-    cb(ev.limit(100), 9)  # NEW id, seen values -> min-k no-op by algebra
+    # NEW id, seen values -> min-k no-op by algebra
+    _append_log_batch(
+        state, lambda b: kmv_state_update(b, ["event_type"], "user_id", 16)
+    )(ev.limit(100), 9)
     assert estimate() == want
 
 
@@ -2437,21 +2486,22 @@ def test_streaming_gram_dedup_matches_sequential_contract(spark, tmp_path):
 
 @pytest.mark.slow
 def test_streaming_rq_state_merge_and_replay(spark, tmp_path):
-    """r14 quantile-sketch state sink: the bottom-k merge is idempotent
-    by algebra — forced re-merge of already-seen rows cannot change the
-    k-smallest-by-hash set — and any micro-batching converges on the
-    identical estimate (bucketed layout exercised)."""
+    """r14 quantile-sketch state sink (an append log): the bottom-k
+    merge is idempotent by algebra — a forced re-append of already-seen
+    rows cannot change the k-smallest-by-hash set — and any
+    micro-batching converges on the identical estimate."""
     from ralf_spark.operators.sketches import (
         reservoir_quantile,
         rq_quantiles,
+        rq_state_update,
     )
     from ralf_spark.streaming import (
         file_events,
-        foreach_batch_rq_upsert,
-        read_bucketed_state,
+        foreach_batch_rq_append,
+        rq_log_state,
         run_bounded,
     )
-    from ralf_spark.streaming.sinks import rq_upsert_batch
+    from ralf_spark.streaming.sinks import _append_log_batch
 
     ev = load_fixture(spark, "events", SF_DIR).df.select(
         "event_type", "event_id", "value"
@@ -2471,9 +2521,8 @@ def test_streaming_rq_state_merge_and_replay(spark, tmp_path):
         max_files_per_trigger=1,
     )
     run_bounded(
-        foreach_batch_rq_upsert(
-            stream, state, ["event_type"], "value", "event_id",
-            k=32, buckets=4,
+        foreach_batch_rq_append(
+            stream, state, ["event_type"], "value", "event_id", k=32,
         ),
         checkpoint=str(tmp_path / "ck"),
         shuffle_partitions=4,
@@ -2483,13 +2532,15 @@ def test_streaming_rq_state_merge_and_replay(spark, tmp_path):
         return sorted(
             tuple(r)
             for r in rq_quantiles(
-                read_bucketed_state(spark, state),
+                rq_log_state(spark, state, ["event_type"], k=32),
                 ["event_type"], qs=(0.5, 0.9),
             ).collect()
         )
 
     assert estimate() == want and want
-    cb = rq_upsert_batch(state, ["event_type"], "value", "event_id", 32,
-                         buckets=4)
-    cb(ev.limit(500), 99)  # NEW id, seen rows -> bottom-k no-op by algebra
+    # NEW id, seen rows -> bottom-k no-op by algebra
+    _append_log_batch(
+        state,
+        lambda b: rq_state_update(b, ["event_type"], "value", "event_id", 32),
+    )(ev.limit(500), 99)
     assert estimate() == want
